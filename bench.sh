@@ -13,5 +13,9 @@
 set -e
 cd "$(dirname "$0")"
 SUMMARY="${SPARK_GRAFT_BENCH_SUMMARY:-BENCH_SUMMARY.json}"
-sbt -batch 'runMain graft.Bench'
+# graft.Bench exits non-zero when a gate failed (its name is in the
+# summary's "failed" list); the summary still goes out, then that status
+status=0
+sbt -batch 'runMain graft.Bench' || status=$?
 cat "$SUMMARY"
+exit "$status"

@@ -198,18 +198,28 @@ object Bench {
     // a local-iteration knob (perf work on one family without paying the
     // full suite); the driver never sets it, so the contract is unchanged
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
+    // a gate that throws is listed under "failed", never timed: its
+    // elapsed seconds would read as a fast gate in the map and the total
+    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
     val results = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.exists(name.startsWith)) }
-      .map { case (name, fn) =>
+      .flatMap { case (name, fn) =>
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        name -> (System.nanoTime() - t0) / 1e9
+        try {
+          fn(spark, sfDir).count()
+          Some(name -> (System.nanoTime() - t0) / 1e9)
+        } catch {
+          case e: Throwable =>
+            System.err.println(s"[bench] $name failed: $e")
+            failed += name
+            None
+        }
       }
     def fmt(v: Double, dp: Int): String = {
       val s = java.util.Locale.ROOT
       String.format(s, s"%.${dp}f", Double.box(v))
     }
-    def jsonFor(qs: Iterable[(String, Double)], qdp: Int): String = {
+    def jsonFor(qs: Iterable[(String, Double)], qdp: Int, fs: Seq[String]): String = {
       val qj = qs.map { case (k, v) => "\"" + k + "\":" + fmt(v, qdp) }
         .mkString("{", ",", "}")
       val total = if (results.nonEmpty) results.values.sum else 0.0
@@ -217,7 +227,9 @@ object Bench {
         s""""queries":$qj,"sf":"$sfDir",""" +
         s""""build_docs_per_sec":${fmt(docsPerSec, 1)},"n_docs":$nDocs,""" +
         s""""bm25_top10_p50_ms":${fmt(p50Ms, 1)},"bm25_top10_p95_ms":${fmt(p95Ms, 1)},""" +
-        s""""grammar_top10_p50_ms":${fmt(grammarP50Ms, 1)}}"""
+        s""""grammar_top10_p50_ms":${fmt(grammarP50Ms, 1)},""" +
+        s""""n_failed":${failed.size},""" +
+        s""""failed":${fs.map("\"" + _ + "\"").mkString("[", ",", "]")}}"""
     }
     // The one-line JSON contract, two sinks with ONE deliberate size
     // difference: the FILE (BENCH_LOCAL.json) carries the full per-query
@@ -226,9 +238,12 @@ object Bench {
     // a bounded tail capture (~2.3 KB) clips its FRONT -- losing `metric`
     // and `value` and failing the parse -- so the stdout line must stay
     // well under any plausible tail window (~700 bytes with 10 entries).
-    val fullLine = jsonFor(results, 1)
+    // failed gates likewise: all of them in the file, the first 10 by
+    // name on stdout (n_failed counts them all)
+    val fullLine = jsonFor(results, 1, failed.sorted.toSeq)
     val summaryLine =
-      jsonFor(results.toSeq.sortBy { case (k, v) => (-v, k) }.take(10), 1)
+      jsonFor(results.toSeq.sortBy { case (k, v) => (-v, k) }.take(10), 1,
+        failed.sorted.take(10).toSeq)
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LOCAL.json")
     scala.util.Try(java.nio.file.Files.writeString(
       java.nio.file.Paths.get(outFile), fullLine + "\n"))
@@ -237,9 +252,10 @@ object Bench {
         sys.env.getOrElse("SPARK_GRAFT_BENCH_SUMMARY", "BENCH_SUMMARY.json")),
       summaryLine + "\n"))
     // stop() can throw on executor shutdown races; the contract line must
-    // still go out (all measurements already succeeded)
+    // still go out, and a failed gate turns into the exit status after it
     scala.util.Try(spark.stop())
     println(summaryLine)
     System.out.flush()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

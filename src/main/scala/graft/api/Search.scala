@@ -1,7 +1,7 @@
 package graft.api
 
 import graft.query.{Excerpts, Executor, QueryParser}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 
 /** One hit; url comes from the docs store / a corpus `url` column when
   * present (reference: hits carry title+url from docs.DB,
@@ -77,13 +77,15 @@ object Search {
     */
   def search(corpus: DataFrame, query: String, k: Int = 10,
              completionsK: Int = 10, excerptRadius: Int = 2,
-             params: graft.query.QueryParams = graft.query.QueryParams.Default): SearchResult =
-    assemble(query, k, completionsK,
-      Executor.hits(corpus, query, k, params),
-      Executor.completions(corpus, query, completionsK, params),
-      (hits, ex, pf) =>
-        Excerpts.generateAll(corpus, hits, ex, pf, excerptRadius, params.excerptsPerHit),
-      hits => if (corpus.columns.contains("url")) urlsOf(corpus, hits) else Map.empty)
+             params: graft.query.QueryParams = graft.query.QueryParams.Default): SearchResult = {
+    val hits = Executor.hits(corpus, query, k, params).collect().toSeq
+    lazy val hitsDf = localRelation(corpus.sparkSession, hits)
+    assemble(query, hits,
+      Executor.completions(corpus, query, completionsK, params).collect().toSeq,
+      (exact, prefixes) => pairs(Excerpts.generateAll(corpus, hitsDf, exact, prefixes,
+        excerptRadius, params.excerptsPerHit)),
+      if (corpus.columns.contains("url")) urlsOf(corpus, hitsDf) else Map.empty)
+  }
 
   /** Physical-path variant: hits/completions from the block index, excerpt
     * text from its docs store; the corpus is never read. With `cache`, a
@@ -108,61 +110,60 @@ object Search {
                   completionsK: Int, excerptRadius: Int,
                   cache: Option[graft.query.IndexQueryCache],
                   params: graft.query.QueryParams): SearchResult = {
-    // serve* facades: the driver-resident grammar path under its guards
-    // (zero Spark jobs warm), the distributed plans past them
-    val topk = graft.query.IndexExecutor.serveHits(reader, query, k, params, cache)
-    // stays by-name through assemble: completions plan (and its candidate
-    // round-trips) only builds when the last part is a prefix
-    def compl = graft.query.IndexExecutor.serveCompletions(
+    import graft.query.{IndexExecutor, LocalServe}
+    // driver rows through the serving seam: the driver-resident grammar
+    // path's page as held (zero Spark jobs and zero Dataset actions warm),
+    // the distributed plan collected once past its guards
+    val hits = IndexExecutor.serveHitRows(reader, query, k, params, cache)
+    // stays by-name through assemble: completions (and the distributed
+    // plan's candidate round-trips) only run when the last part is a prefix
+    def compl = IndexExecutor.serveCompletionRows(
       reader, query, completionsK, params, cache)
-    assemble(query, k, completionsK, topk, compl,
-      (hits, ex, pf) =>
-        // no docs store built next to this index -> hits without excerpts
-        // (the reference server likewise needs docs.DB for excerpts)
-        if (reader.hasDocsStore)
-          // locally-served hits read texts from the driver docs LRU (zero
-          // jobs warm); distributed hits keep the semi-join
-          graft.query.LocalServe.excerptsAll(reader, hits, ex, pf,
-            excerptRadius, params.excerptsPerHit).getOrElse(
-            Excerpts.generateAll(reader.docs, hits, ex, pf, excerptRadius,
-              params.excerptsPerHit))
-        else hits.sparkSession.emptyDataFrame
-          .select(org.apache.spark.sql.functions.lit(0L).as("doc_id"),
-            org.apache.spark.sql.functions.lit("").as("excerpt"))
-          .limit(0),
-      hits =>
-        if (reader.hasDocsStore)
-          graft.query.LocalServe.urls(reader, hits)
-            .getOrElse(urlsOf(reader.docs, hits))
-        else Map.empty)
+    val ids = hits.map(_.getLong(0))
+    // the hit rows as a relation, for the distributed semi-joins only
+    lazy val hitsDf = localRelation(reader.spark, hits)
+    // no docs store built next to this index -> hits without excerpts or
+    // urls (the reference server likewise needs docs.DB for excerpts);
+    // otherwise both come from the driver docs LRU, keyed by the hit ids
+    // (zero jobs warm), or from semi-joins with local serving switched off
+    assemble(query, hits, compl,
+      (exact, prefixes) =>
+        if (!reader.hasDocsStore) Map.empty
+        else LocalServe.excerptsOf(reader, ids, exact, prefixes, excerptRadius,
+          params.excerptsPerHit).getOrElse(pairs(Excerpts.generateAll(
+            reader.docs, hitsDf, exact, prefixes, excerptRadius, params.excerptsPerHit))),
+      if (!reader.hasDocsStore) Map.empty
+      else LocalServe.urlsOf(reader, ids).getOrElse(urlsOf(reader.docs, hitsDf)))
   }
+
+  /** k hit rows re-exposed as a (doc_id, score) LocalRelation. */
+  private def localRelation(spark: org.apache.spark.sql.SparkSession,
+                            hits: Seq[Row]): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(
+      hits.map(r => Row(r.getLong(0), r.getDouble(1))): _*),
+      graft.query.LocalServe.HitSchema)
+
+  private def pairs(df: DataFrame): Map[Long, String] =
+    df.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
 
   /** Hit urls from a (doc_id, url, ...) relation: broadcast semi-join on
     * the k hit ids, one k-sized driver round-trip.
     */
   private def urlsOf(docs: DataFrame, hits: DataFrame): Map[Long, String] = {
     import org.apache.spark.sql.functions.col
-    docs.join(hits.select(col("doc_id")).distinct(), Seq("doc_id"), "left_semi")
-      .select(col("doc_id"), col("url"))
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    pairs(docs.join(hits.select(col("doc_id")).distinct(), Seq("doc_id"), "left_semi")
+      .select(col("doc_id"), col("url")))
   }
 
-  private def assemble(query: String, k: Int, completionsK: Int,
-                       hitsDf0: DataFrame, completionsDf: => DataFrame,
-                       excerptsFor: (DataFrame, Seq[String], Seq[String]) => DataFrame,
-                       urlsFor: DataFrame => Map[Long, String]): SearchResult = {
-    // Execute the top-k plan ONCE and re-expose the k rows as a
-    // LocalRelation: the excerpt join, the url join and the final hit
-    // assembly below all consume the hits, and a distributed-fallback plan
-    // (over-budget postings, fuzzy best-match) would otherwise run end-to-end
-    // for EACH consumer. A LocalRelation also satisfies the
-    // LocalServe.excerptsAll guard, so fallback hits still serve excerpts
-    // and urls from the driver docs LRU (one pruned scan cold, zero jobs
-    // warm) instead of two per-request semi-joins. For the warm serving
-    // path the hits are already a (cached) LocalRelation and this collect
-    // runs no jobs.
-    val hitsDf = hitsDf0.sparkSession.createDataFrame(
-      java.util.Arrays.asList(hitsDf0.collect(): _*), hitsDf0.schema)
+  /** One assembly for both paths, over driver rows: hits (doc_id, score)
+    * and completions (term, score, dc, oc) as collected or served, the
+    * excerpts for the query's highlight words and the urls keyed by hit
+    * id. Every plan behind these runs at most once per request: the hits
+    * arrive collected, so no consumer re-runs a distributed top-k plan.
+    */
+  private def assemble(query: String, hitRows: Seq[Row], completionRows: => Seq[Row],
+                       excerptsFor: (Seq[String], Seq[String]) => Map[Long, String],
+                       urls: Map[Long, String]): SearchResult = {
     val parsed = QueryParser.parse(query)
     // highlight terms: exact words + prefixes of the query
     val words = parsed.parts.map(_.atom).collect {
@@ -174,14 +175,12 @@ object Search {
     }
     val exact = words.filterNot(_.prefix).map(_.text)
     val prefixes = words.filter(_.prefix).map(_.text)
-    val excerpts = excerptsFor(hitsDf, exact, prefixes)
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    val urls = urlsFor(hitsDf)
+    val excerpts = excerptsFor(exact, prefixes)
 
-    val hits = hitsDf.collect().map { r =>
+    val hits = hitRows.map { r =>
       Hit(r.getLong(0), r.getDouble(1), excerpts.getOrElse(r.getLong(0), ""),
         urls.getOrElse(r.getLong(0), ""))
-    }.toSeq
+    }
 
     val lastIsPrefix = parsed.parts.last.atom match {
       case w: QueryParser.Word => w.prefix
@@ -189,9 +188,9 @@ object Search {
     }
     val comps =
       if (!lastIsPrefix) Seq.empty
-      else completionsDf.collect().map { r =>
+      else completionRows.map { r =>
         Completion(r.getString(0), r.getDouble(1), r.getLong(2), r.getLong(3))
-      }.toSeq
+      }
 
     SearchResult(query, hits, comps)
   }

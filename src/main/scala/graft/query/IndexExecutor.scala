@@ -303,19 +303,47 @@ object IndexExecutor {
   def serveHits(reader: IndexReader, query: String, k: Int,
                 params: QueryParams = QueryParams.Default,
                 cache: Option[IndexQueryCache] = None): DataFrame =
-    LocalServe.hits(reader, query, k, params).getOrElse(cache match {
-      case Some(c) => hits(reader, query, k, params, c)
-      case None => hits(reader, query, k, params)
-    })
+    LocalServe.hits(reader, query, k, params)
+      .getOrElse(distributedHits(reader, query, k, params, cache))
+
+  /** [[serveHits]] as driver rows: the local page as held, or the
+    * distributed plan collected once.
+    */
+  def serveHitRows(reader: IndexReader, query: String, k: Int,
+                   params: QueryParams = QueryParams.Default,
+                   cache: Option[IndexQueryCache] = None): Seq[Row] =
+    LocalServe.hitRows(reader, query, k, params)
+      .getOrElse(distributedHits(reader, query, k, params, cache).collect().toSeq)
 
   /** Completions through the local/distributed serving seam. */
   def serveCompletions(reader: IndexReader, query: String, k: Int,
                        params: QueryParams = QueryParams.Default,
                        cache: Option[IndexQueryCache] = None): DataFrame =
-    LocalServe.completions(reader, query, k, params).getOrElse(cache match {
+    LocalServe.completions(reader, query, k, params)
+      .getOrElse(distributedCompletions(reader, query, k, params, cache))
+
+  /** [[serveCompletions]] as driver rows. */
+  def serveCompletionRows(reader: IndexReader, query: String, k: Int,
+                          params: QueryParams = QueryParams.Default,
+                          cache: Option[IndexQueryCache] = None): Seq[Row] =
+    LocalServe.completionRows(reader, query, k, params)
+      .getOrElse(distributedCompletions(reader, query, k, params, cache).collect().toSeq)
+
+  private def distributedHits(reader: IndexReader, query: String, k: Int,
+                              params: QueryParams,
+                              cache: Option[IndexQueryCache]): DataFrame =
+    cache match {
+      case Some(c) => hits(reader, query, k, params, c)
+      case None => hits(reader, query, k, params)
+    }
+
+  private def distributedCompletions(reader: IndexReader, query: String, k: Int,
+                                     params: QueryParams,
+                                     cache: Option[IndexQueryCache]): DataFrame =
+    cache match {
       case Some(c) => completions(reader, query, k, params, c)
       case None => completions(reader, query, k, params)
-    })
+    }
 
   def completions(reader: IndexReader, query: String, k: Int,
                   params: QueryParams): DataFrame =

@@ -2,8 +2,9 @@ package graft.query
 
 import graft.core.Analysis
 import graft.index.{Codec, IndexReader}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 import QueryParser._
 
 /** Driver-resident GRAMMAR serving -- the local/distributed seam of
@@ -20,7 +21,7 @@ import QueryParser._
   * atoms' decoded scored postings are fetched ONCE (one pruned collect per
   * cold atom, LRU-bounded) and the whole part chain -- aggregation
   * algebra, window matching, NOT, top-k -- runs as in-process array
-  * arithmetic returning a LocalRelation: ZERO Spark jobs warm.
+  * arithmetic returning driver rows: ZERO Spark jobs warm.
   *
   * Parity is the contract (spec: LocalServeSpec runs both paths over every
   * grammar shape): same BM25 operand order as [[Analysis.bm25Col]], same
@@ -189,7 +190,7 @@ object LocalServe {
     * candidate set's segments.
     */
   private def buildAtom(reader: IndexReader, byId: Map[Long, (String, Long)],
-                        segs: Array[org.apache.spark.sql.Row]): LocalAtom = {
+                        segs: Array[Row]): LocalAtom = {
     val hasPos = reader.hasPositions
     val n = segs.iterator.map(_.getInt(2)).sum
     val terms = new Array[String](n)
@@ -539,25 +540,40 @@ object LocalServe {
   // string, re-used only when the request parameters are compatible
   // (History.h:25-110; CompleterBase.cpp:1125-1139). The local twin: a
   // per-reader LRU of (epoch, kind, query, k, params) -> the final page
-  // rows. Pages are k-sized, so the entry cap bounds memory at a few MB;
-  // a warm repeated query costs a map lookup + LocalRelation build.
+  // held as plain driver rows. Pages are k-sized, so the entry cap bounds
+  // memory at a few MB; a warm repeated query costs a map lookup. The
+  // row path ([[hitRows]], [[completionRows]]) hands the rows out as they
+  // are -- no Catalyst analysis, planning or Dataset action per request;
+  // only the DataFrame facades ([[hits]], [[completions]]) build the
+  // page's LocalRelation, once, on first use.
+
+  /** One history page: its rows, and the LocalRelation over them, built on
+    * first request and memoized (its QueryExecution memoizes too, so a
+    * repeated DataFrame-facade hit re-collects a planned relation).
+    */
+  private final class Page(spark: org.apache.spark.sql.SparkSession,
+                           val rows: Seq[Row], schema: StructType) {
+    lazy val df: DataFrame =
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+  }
 
   private final class ResultCache {
     private val lru = new java.util.LinkedHashMap[
-      (Long, String, String, Int, QueryParams), AnyRef](16, 0.75f, true) {
+      (Long, String, String, Int, QueryParams), Page](16, 0.75f, true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[(Long, String, String, Int, QueryParams), AnyRef]): Boolean =
+          e: java.util.Map.Entry[(Long, String, String, Int, QueryParams), Page]): Boolean =
         size > LocalServe.ResultCacheMaxEntries
     }
-    def get(k: (Long, String, String, Int, QueryParams)): AnyRef =
+    def get(k: (Long, String, String, Int, QueryParams)): Page =
       synchronized(lru.get(k))
-    def put(k: (Long, String, String, Int, QueryParams), v: AnyRef): Unit =
+    def put(k: (Long, String, String, Int, QueryParams), v: Page): Unit =
       synchronized { lru.put(k, v); () }
     def count: Int = synchronized(lru.size)
   }
 
-  /** Result-history entry cap (pages are k-sized rows, so this bounds the
-    * cache at a few MB -- the reference's History byte budget role).
+  /** Result-history entry cap, in pages (pages are k-sized rows, so this
+    * bounds the cache at a few MB -- the reference's History byte budget
+    * role).
     */
   val ResultCacheMaxEntries: Int = 4096
 
@@ -577,6 +593,32 @@ object LocalServe {
   private[graft] def cachedResultCount(reader: IndexReader): Int =
     resultCacheFor(reader).count
 
+  /** Row shape of a hits page: (doc_id, score). */
+  private[graft] val HitSchema: StructType = StructType(Seq(
+    StructField("doc_id", LongType, nullable = false),
+    StructField("score", DoubleType, nullable = false)))
+
+  /** Row shape of a completions page: (term, score, dc, oc). */
+  private val CompletionSchema: StructType = StructType(Seq(
+    StructField("term", StringType), StructField("score", DoubleType, nullable = false),
+    StructField("dc", LongType, nullable = false),
+    StructField("oc", LongType, nullable = false)))
+
+  /** The history page under `key`, or the one `compute` builds (stored);
+    * None when `compute` leaves the query to the distributed plans.
+    */
+  private def historyPage(reader: IndexReader,
+                          key: (Long, String, String, Int, QueryParams),
+                          schema: StructType)(compute: => Option[Seq[Row]]): Option[Page] = {
+    val cached = if (resultHistoryEnabled) resultCacheFor(reader).get(key) else null
+    if (cached != null) return Some(cached)
+    compute.map { rows =>
+      val p = new Page(reader.spark, rows, schema)
+      resultCacheFor(reader).put(key, p)
+      p
+    }
+  }
+
   // ---- top-k / completions facades -------------------------------------------
 
   private def round4(x: Double): Double =
@@ -588,15 +630,26 @@ object LocalServe {
     * is rounded: rounding is monotone and moves a value <= 5e-5, so only
     * docs within 1e-4 of the boundary's raw score can cross it -- the same
     * argument [[IndexReader.serveTopKOr]]'s spec pins.
+    *
+    * Rows of [[HitSchema]]; None -> the caller runs the distributed plans.
     */
+  def hitRows(reader: IndexReader, query: String, k: Int,
+              params: QueryParams): Option[Seq[Row]] =
+    hitPage(reader, query, k, params).map(_.rows)
+
+  /** [[hitRows]] as a (doc_id, score) LocalRelation. */
   def hits(reader: IndexReader, query: String, k: Int,
-           params: QueryParams): Option[DataFrame] = {
-    if (!IndexReader.localServeEnabled) return None
-    val spark = reader.spark
-    import spark.implicits._
-    val histKey = (reader.indexEpoch, "h", query, k, params)
-    val cached = if (resultHistoryEnabled) resultCacheFor(reader).get(histKey) else null
-    if (cached != null) return Some(cached.asInstanceOf[DataFrame])
+           params: QueryParams): Option[DataFrame] =
+    hitPage(reader, query, k, params).map(_.df)
+
+  private def hitPage(reader: IndexReader, query: String, k: Int,
+                      params: QueryParams): Option[Page] =
+    if (!IndexReader.localServeEnabled) None
+    else historyPage(reader, (reader.indexEpoch, "h", query, k, params), HitSchema)(
+      evalHits(reader, query, k, params))
+
+  private def evalHits(reader: IndexReader, query: String, k: Int,
+                       params: QueryParams): Option[Seq[Row]] = {
     val parsed = QueryParser.parse(query, params.normalizeWords)
     val src = new IndexAtomSource(reader)
     evalDocsLocal(reader, src, parsed, params).map { rel =>
@@ -634,26 +687,31 @@ object LocalServe {
             else rounded.sortBy { case (doc, sc) => (-sc, doc) }
           sorted.slice(params.firstHit, n).toSeq
       }
-      // cache the DataFrame itself: its QueryExecution memoizes, so a
-      // history hit re-collects the planned LocalRelation (sub-ms) instead
-      // of re-running analysis + planning (~10 ms) on fresh page rows
-      val df = page.toDF("doc_id", "score")
-      resultCacheFor(reader).put(histKey, df)
-      df
+      page.map { case (doc, sc) => Row(doc, sc) }
     }
   }
 
   /** The local twin of [[Eval.completions]]: the last part's terms within
     * the matching docs, scored under the word-side knobs, ranked by `rw=`.
+    * Rows of [[CompletionSchema]]; None -> the distributed plans.
     */
+  def completionRows(reader: IndexReader, query: String, k: Int,
+                     params: QueryParams): Option[Seq[Row]] =
+    completionPage(reader, query, k, params).map(_.rows)
+
+  /** [[completionRows]] as a (term, score, dc, oc) LocalRelation. */
   def completions(reader: IndexReader, query: String, k: Int,
-                  params: QueryParams): Option[DataFrame] = {
-    if (!IndexReader.localServeEnabled) return None
-    val spark = reader.spark
-    import spark.implicits._
-    val histKey = (reader.indexEpoch, "c", query, k, params)
-    val cached = if (resultHistoryEnabled) resultCacheFor(reader).get(histKey) else null
-    if (cached != null) return Some(cached.asInstanceOf[DataFrame])
+                  params: QueryParams): Option[DataFrame] =
+    completionPage(reader, query, k, params).map(_.df)
+
+  private def completionPage(reader: IndexReader, query: String, k: Int,
+                             params: QueryParams): Option[Page] =
+    if (!IndexReader.localServeEnabled) None
+    else historyPage(reader, (reader.indexEpoch, "c", query, k, params), CompletionSchema)(
+      evalCompletions(reader, query, k, params))
+
+  private def evalCompletions(reader: IndexReader, query: String, k: Int,
+                              params: QueryParams): Option[Seq[Row]] = {
     val parsed = QueryParser.parse(query, params.normalizeWords)
     // completions over a trailing join block are not part of the grammar
     // (the distributed path rejects the block atom); fall back so the
@@ -702,10 +760,7 @@ object LocalServe {
           if (params.sortWordsAsc.getOrElse(false)) rows.sortBy(r => (r._2, r._1))
           else rows.sortBy(r => (-r._2, r._1))
       }
-      val page = ordered.take(k).toSeq
-      val df = page.toDF("term", "score", "dc", "oc")
-      resultCacheFor(reader).put(histKey, df)
-      df
+      ordered.take(k).map { case (t, s, dc, oc) => Row(t, s, dc, oc) }.toSeq
     }
   }
 
@@ -717,14 +772,13 @@ object LocalServe {
   // The reference serves excerpt text from a memory-mapped docs.DB record
   // fetch per hit (ExcerptsGenerator.cpp; docs.DB built offline). The
   // distributed twin is a semi-join over the docs parquet per request --
-  // correct at any scale but 1-2 jobs per query. When the HITS side is
-  // already a LocalRelation (the grammar path above), hit texts come from
-  // a per-reader byte-budgeted LRU instead (one pruned scan per cold doc
-  // set), and excerpt generation runs the exact Excerpts.generateAll
-  // algorithm in-process: a warm full search -- hits, completions,
-  // excerpts, urls -- runs ZERO Spark jobs. Interactive typing chains
-  // (`a`, `aa`, `aal`) re-rank the same top docs, so the LRU hit rate is
-  // the autocompletion hit rate.
+  // correct at any scale but 1-2 jobs per query. Hit ids already on the
+  // driver read their texts from a per-reader byte-budgeted LRU instead
+  // (one pruned scan per cold doc set), and excerpt generation runs the
+  // exact Excerpts.generateAll algorithm in-process: a warm full search --
+  // hits, completions, excerpts, urls -- runs ZERO Spark jobs. Interactive
+  // typing chains (`a`, `aa`, `aal`) re-rank the same top docs, so the LRU
+  // hit rate is the autocompletion hit rate.
 
   private final class DocsCache {
     private val lru = new java.util.LinkedHashMap[Long, (String, String)](16, 0.75f, true)
@@ -792,6 +846,10 @@ object LocalServe {
     df.queryExecution.analyzed.collectLeaves().forall(
       _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
 
+  /** Local docs serving applies: the seam is on and a docs store exists. */
+  private def docsLocal(reader: IndexReader): Boolean =
+    IndexReader.localServeEnabled && reader.hasDocsStore
+
   /** The exact [[Excerpts.generateAll]] algorithm in-process, using the
     * same lowercase code path Catalyst's `lower` uses (UTF8String), the
     * same separator regex and window arithmetic -- spec-pinned identical.
@@ -815,29 +873,41 @@ object LocalServe {
     windows.mkString(" ... ")
   }
 
-  /** Driver-resident excerpts for an already-local hits relation: Some of
-    * a (doc_id, excerpt) LocalRelation when both the hits and the doc
-    * texts are served locally; None -> caller keeps the distributed
-    * semi-join ([[Excerpts.generateAll]]).
+  /** Driver-resident excerpts for hit ids already on the driver: doc_id ->
+    * excerpt for every id present in the docs store (absent ids get no
+    * entry). None -> the caller keeps the distributed semi-join
+    * ([[Excerpts.generateAll]]).
+    */
+  def excerptsOf(reader: IndexReader, ids: Seq[Long], exact: Seq[String],
+                 prefixes: Seq[String], er: Int, en: Int): Option[Map[Long, String]] =
+    if (!docsLocal(reader)) None
+    else Some(docTexts(reader, ids).map { case (id, (_, text)) =>
+      id -> generateAllLocal(text, exact, prefixes, er, en)
+    })
+
+  /** Driver-resident urls for hit ids already on the driver (the
+    * [[graft.api.Search]] urlsOf twin); absent ids get no entry.
+    */
+  def urlsOf(reader: IndexReader, ids: Seq[Long]): Option[Map[Long, String]] =
+    if (!docsLocal(reader)) None
+    else Some(docTexts(reader, ids).map { case (id, (url, _)) => id -> url })
+
+  /** [[excerptsOf]] for an already-local hits relation, as a
+    * (doc_id, excerpt) LocalRelation in hit order.
     */
   def excerptsAll(reader: IndexReader, hits: DataFrame, exact: Seq[String],
                   prefixes: Seq[String], er: Int, en: Int): Option[DataFrame] = {
-    if (!IndexReader.localServeEnabled || !reader.hasDocsStore ||
-        !isLocalRelation(hits)) return None
+    if (!docsLocal(reader) || !isLocalRelation(hits)) return None
     val spark = reader.spark
     import spark.implicits._
     val ids = hits.collect().map(_.getLong(0)).toSeq
-    val texts = docTexts(reader, ids)
-    Some(ids.flatMap(id => texts.get(id).map(t =>
-      (id, generateAllLocal(t._2, exact, prefixes, er, en))))
-      .toDF("doc_id", "excerpt"))
+    excerptsOf(reader, ids, exact, prefixes, er, en).map(ex =>
+      ids.flatMap(id => ex.get(id).map(id -> _)).toDF("doc_id", "excerpt"))
   }
 
-  /** Driver-resident hit urls (the [[graft.api.Search]] urlsOf twin). */
+  /** [[urlsOf]] for an already-local hits relation. */
   def urls(reader: IndexReader, hits: DataFrame): Option[Map[Long, String]] = {
-    if (!IndexReader.localServeEnabled || !reader.hasDocsStore ||
-        !isLocalRelation(hits)) return None
-    val ids = hits.collect().map(_.getLong(0)).toSeq
-    Some(docTexts(reader, ids).map { case (id, (url, _)) => id -> url })
+    if (!docsLocal(reader) || !isLocalRelation(hits)) return None
+    urlsOf(reader, hits.collect().map(_.getLong(0)).toSeq)
   }
 }

@@ -78,7 +78,10 @@ object QueryParser {
   def parse(q: String, normalizeWords: Boolean): ParsedQuery = {
     val trimmed = q.trim
     require(trimmed.nonEmpty, "empty query")
-    val pq = ParsedQuery(splitParts(trimmed))
+    val parts = splitParts(trimmed)
+    // separator-only input (`.`, `=`, `.,,.`) has no word to evaluate
+    require(parts.nonEmpty, "query has no parts")
+    val pq = ParsedQuery(parts)
     if (normalizeWords)
       ParsedQuery(pq.parts.map(p => Part(rewriteForNorm(p.atom), p.sep)))
     else pq
@@ -166,8 +169,12 @@ object QueryParser {
       return JoinBlock(pieces.map(parse))
     }
     // '|' binds LOOSER than '--': `a--b|c*` is (range a--b) OR (prefix c)
-    if (s.contains('|'))
-      return OrAtoms(s.split('\\' + "|").toSeq.map(parseAlternative))
+    if (s.contains('|')) {
+      // `|` and `||` split to no alternatives at all
+      val alts = s.split('\\' + "|").toSeq
+      require(alts.nonEmpty, s"OR without alternatives: $s")
+      return OrAtoms(alts.map(parseAlternative))
+    }
     parseAlternative(s)
   }
 

@@ -26,8 +26,20 @@ import org.apache.spark.sql.SparkSession
   * serving-session history ([[graft.query.IndexQueryCache]]), so a typing
   * stream of prefixes extends cached relations instead of re-scanning
   * blocks.
+  *
+  * Replies go out with TCP_NODELAY. The JDK server writes a reply's headers
+  * and body as two TCP segments; under Nagle's algorithm the body waits
+  * for the client's delayed ACK of the headers, about 40 ms on Linux, on
+  * every keep-alive reply -- longer than a warm keystroke's whole work.
+  * The switch is the JVM-wide system property
+  * `sun.net.httpserver.nodelay`, which the JDK reads once, when its first
+  * HttpServer is set up; this object sets it on initialization, before
+  * [[start]] creates a server. Every JDK HttpServer of the process answers
+  * with TCP_NODELAY from then on.
   */
 object CompletionServer {
+
+  System.setProperty("sun.net.httpserver.nodelay", "true")
 
   /** Request-handler threads (reference: StartCompletionServer `-m`
     * threads, thread-per-request forking): concurrent autocomplete

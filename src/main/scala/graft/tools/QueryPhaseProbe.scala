@@ -8,6 +8,12 @@ import org.apache.spark.sql.SparkSession
   * Answers "is the per-gate floor plan-time or run-time?" for the
   * optimization round's 'Not yet optimized' accounting.
   *
+  * A Dataset analyzes its plan when it is constructed, so `build=`
+  * includes analysis (the tracker's `analysis=` phase shows its share).
+  * `exec(noop)=` runs the plan into the noop sink [[graft.BenchExtra]]
+  * times with: every column of every row, no output cost -- `count()`
+  * would let Catalyst prune columns and understate execution.
+  *
   *   SPARK_GRAFT_ONLY=dd_jaccard_pairs SPARK_GRAFT_CPUS=32 \
   *   sbt "runMain graft.tools.QueryPhaseProbe"
   */
@@ -36,7 +42,7 @@ object QueryPhaseProbe {
 
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPEATS", "2").toInt
-    SparkEntryAccess.queries
+    graft.SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.exists(name.startsWith)) }
       .foreach { case (name, fn) =>
         for (rep <- 1 to reps) {
@@ -45,23 +51,16 @@ object QueryPhaseProbe {
           }
           val (df, tBuild) = ms(fn(spark, sfDir))
           val qe = df.queryExecution
-          val (_, tAnalyze) = ms(qe.analyzed)
           val (_, tOptimize) = ms(qe.optimizedPlan)
           val (_, tPhysical) = ms(qe.executedPlan)
-          val (_, tExec) = ms(df.count())
+          val (_, tExec) = ms(df.write.format("noop").mode("overwrite").save())
           val tracker = qe.tracker.phases.map { case (k, v) =>
             f"$k=${v.durationMs}ms"
           }.mkString(" ")
-          println(f"[phase] $name rep=$rep build=$tBuild%.0f analyze=$tAnalyze%.0f " +
-            f"optimize=$tOptimize%.0f physical=$tPhysical%.0f exec(count)=$tExec%.0f ms | $tracker")
+          println(f"[phase] $name rep=$rep build=$tBuild%.0f " +
+            f"optimize=$tOptimize%.0f physical=$tPhysical%.0f exec(noop)=$tExec%.0f ms | $tracker")
         }
       }
     scala.util.Try(spark.stop())
   }
-}
-
-/** SparkEntry.queries is package-private-friendly access from tools. */
-private object SparkEntryAccess {
-  def queries: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)] =
-    graft.SparkEntry.queries.toSeq.sortBy(_._1)
 }

@@ -162,7 +162,10 @@ class IndexExecutorSpec extends AnyFunSuite {
           .openConnection().asInstanceOf[java.net.HttpURLConnection]
         val code = conn.getResponseCode
         val is = if (code >= 400) conn.getErrorStream else conn.getInputStream
-        val body = scala.io.Source.fromInputStream(is, "UTF-8").mkString
+        // read to the end and close: the connection goes back to the
+        // client's keep-alive cache
+        val body = try scala.io.Source.fromInputStream(is, "UTF-8").mkString
+          finally is.close()
         (code, body)
       }
       val (code, body) = get("/?q=babbeln%20ba*&h=5&c=5")
@@ -205,12 +208,28 @@ class IndexExecutorSpec extends AnyFunSuite {
       assert(get("/?q=aal&f=-1")._1 === 400) // negative offset -> client error
       // malformed GRAMMAR (join block without '#') is a 400, not a fake 500
       assert(get("/?q=%5Baal%20aachen%5D&h=5")._1 === 400)
+      // separator-only queries and OR without alternatives: no part or no
+      // alternative to evaluate -> client error
+      for (q <- Seq(".", "..", "=", ";", ",", ".,,.", "|", "||", " | ", "a-~^.|;")) {
+        val enc = java.net.URLEncoder.encode(q, java.nio.charset.StandardCharsets.UTF_8)
+        assert(get(s"/?q=$enc")._1 === 400, s"q=$q")
+      }
       // format=xml: the reference's default wire format on request
       val (xc, xb) = get("/?q=babbeln%20ba*&format=xml")
       assert(xc === 200 && xb.startsWith("<?xml"))
       assert(xb === graft.api.Search.searchIndex(reader, "babbeln ba*").toXml())
       assert(get("/?q=aal&format=weird")._1 === 400)
       assert(get("/?q=aal&format=jsonp")._1 === 400) // jsonp needs callback=
+      // a warm keystroke over a keep-alive connection costs its work, not
+      // a delayed-ACK wait (~40 ms a reply without TCP_NODELAY)
+      val warmPath = "/?q=babbeln%20ba*&h=5&c=5"
+      val replyMs = (1 to 20).map { _ =>
+        val t0 = System.nanoTime()
+        assert(get(warmPath)._1 === 200)
+        (System.nanoTime() - t0) / 1e6
+      }.sorted
+      assert(replyMs(replyMs.length / 2) < 20.0,
+        s"median warm keep-alive reply ${replyMs(replyMs.length / 2)} ms: $replyMs")
       // concurrent serving: parallel keystrokes across the handler pool
       // must all answer correctly through the ONE shared history
       val paths = Seq("/?q=aal", "/?q=aa*", "/?q=babbeln%20ba*", "/?q=aachen%20aal",

@@ -215,13 +215,31 @@ class LocalServeSpec extends AnyFunSuite {
           j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         jobs.incrementAndGet()
     }
+    // Dataset actions (collect/count/...) fire a QueryExecutionListener
+    // even over a LocalRelation: each one is analysis, planning and an
+    // SQL-execution event the warm row path must not pay
+    val actions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val qeListener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        actions.add(funcName)
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit =
+        actions.add(funcName)
+    }
+    Thread.sleep(500) // the cold pass's events leave the async bus first
     spark.sparkContext.addSparkListener(listener)
+    spark.listenerManager.register(qeListener)
     try {
       val again = run()
       assert(again.toJson === warm.toJson, "warm result must be identical")
       Thread.sleep(500) // listener bus is async
       assert(jobs.get() === 0, "warm full search must run no Spark jobs")
-    } finally spark.sparkContext.removeSparkListener(listener)
+      assert(actions.isEmpty, s"warm full search must run no Dataset actions: $actions")
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      spark.listenerManager.unregister(qeListener)
+    }
   }
 
   test("fallback search executes the hits plan once; excerpts/urls add no jobs") {

@@ -99,6 +99,32 @@ class QueryParserSpec extends AnyFunSuite {
       case other => fail(s"expected join block, got $other")
     }
   }
+
+  test("any input over the grammar alphabet parses to >= 1 part with no empty OR, or is rejected") {
+    import org.scalacheck.{Gen, Prop, Test}
+    // every grammar character, plus a non-ASCII letter
+    val query = Gen.listOf(Gen.oneOf("ab |*-$~^[]#.,;=é".toSeq)).map(_.mkString)
+    def wellFormed(pq: ParsedQuery): Boolean = pq.parts.nonEmpty && pq.parts.forall {
+      _.atom match {
+        case OrAtoms(alts) => alts.nonEmpty
+        case JoinBlock(ps) => ps.forall(wellFormed)
+        case _ => true
+      }
+    }
+    for (norm <- Seq(false, true)) {
+      val prop = Prop.forAll(query) { q =>
+        try wellFormed(QueryParser.parse(q, norm))
+        catch { case _: IllegalArgumentException => true } // the server's 400
+      }
+      val result = Test.check(Test.Parameters.default.withMinSuccessfulTests(3000), prop)
+      assert(result.passed,
+        s"normalizeWords=$norm: ${org.scalacheck.util.Pretty.pretty(result)}")
+    }
+    // separator-only input and OR without alternatives, inside a join
+    // block too
+    for (q <- Seq(".", "..", "=", ";", ",", ".,,.", "|", "||", " | ", "a-~^.|;", "[.#a]"))
+      assertThrows[IllegalArgumentException](QueryParser.parse(q))
+  }
 }
 
 class ExecutorSpec extends AnyFunSuite {
