@@ -13,9 +13,15 @@
 set -e
 cd "$(dirname "$0")"
 SUMMARY="${SPARK_GRAFT_BENCH_SUMMARY:-BENCH_SUMMARY.json}"
+# a summary left by an earlier run must never pass as this run's result
+rm -f "$SUMMARY"
 # graft.Bench exits non-zero when a gate failed (its name is in the
 # summary's "failed" list); the summary still goes out, then that status
 status=0
 sbt -batch 'runMain graft.Bench' || status=$?
+if [ ! -f "$SUMMARY" ]; then
+  echo "bench.sh: graft.Bench wrote no $SUMMARY (exit $status)" >&2
+  exit "$(( status == 0 ? 1 : status ))"
+fi
 cat "$SUMMARY"
 exit "$status"

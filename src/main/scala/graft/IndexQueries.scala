@@ -1,7 +1,7 @@
 package graft
 
 import graft.core.WebCorpus
-import graft.index.{FuzzyIndex, IndexBuilder, IndexReader}
+import graft.index.{FuzzyIndex, IndexBuilder, IndexReader, MetricsCheck}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -573,12 +573,19 @@ object IndexQueries {
   def completions(spark: SparkSession, sfDir: String): DataFrame =
     reader(spark, sfDir).topKCompletions("s", 10)
 
-  /** Build lineage/metrics summary (rows-only check: not SQL-expressible). */
+  /** Build lineage/metrics summary. Not SQL-expressible, so instead of an
+    * oracle the gate checks the table against the index itself
+    * ([[MetricsCheck]]: postings and block sums, skew >= 1): it throws on
+    * any broken invariant, and every output row carries the checked figures.
+    */
   def buildMetrics(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = indexDir(spark, sfDir)
-    spark.read.parquet(s"$dir/metrics")
+    val check = MetricsCheck.of(reader(spark, sfDir))
+    if (check.violations.nonEmpty)
+      throw new IllegalStateException(
+        s"build metrics inconsistent: ${check.violations.mkString("; ")}")
+    spark.read.parquet(s"${indexDir(spark, sfDir)}/metrics")
       .select(col("shard"), col("build_partition"), col("n_blocks"),
-        col("n_postings"), col("bytes_encoded"))
+        col("n_postings"), col("bytes_encoded"), lit(check.summary).as("check"))
       .orderBy(col("shard"), col("build_partition"))
   }
 }

@@ -224,95 +224,57 @@ class IndexReader(val spark: SparkSession, val dir: String,
 
   def idf(df: Long): Double = math.log((nDocs - df + 0.5) / (df + 0.5) + 1.0)
 
-  /** Driver-side vocabulary memo (the reference holds its whole vocabulary
-    * in RAM, Vocabulary.h): term -> (term_id, df) and prefix -> id range
-    * resolve through a bounded in-JVM map, so a WARM serving session pays
-    * ZERO dictionary jobs per query. Safe because a reader's dictionary is
-    * immutable: streaming delta shards reuse the batch dictionary (unseen
-    * terms are dropped and counted as drift), and rebuilds into the same
-    * dir are a new reader (indexEpoch). Negative answers memoize too --
-    * repeated misses (typos, drift terms) are the common case in serving.
-    * On overflow the maps reset wholesale; bound is entries, not bytes
-    * (keys are query-sized strings).
+  /** The dictionary as driver-resident packed arrays ([[Vocabulary]]),
+    * loaded with one Spark job on first use and held for the reader's
+    * life: every exact, prefix and range lookup below is then an in-process
+    * binary search, so no serving request pays a dictionary job. Driver
+    * cost: the terms' UTF-8 bytes plus 12 bytes per term, the same
+    * per-term cost the reference pays for its in-RAM vocabulary. Safe to
+    * hold because a reader's dictionary is immutable: streaming delta
+    * shards reuse the batch dictionary (unseen terms are dropped and
+    * counted as drift), and a rebuild into the same dir is a new reader
+    * (indexEpoch). Transient: a reader captured in a task closure does not
+    * ship the arrays.
     */
-  private val VocabMemoMax = 1 << 20
-  private val termInfoMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Option[(Long, Long)]]()
-  private val prefixRangeMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Option[(Long, Long)]]()
+  @transient lazy val vocabulary: Vocabulary = Vocabulary.load(dictionary)
+
+  /** Distinct query-term sets the WAND block-count memo holds before a
+    * wholesale reset.
+    */
+  private val BlockCountMemoMax = 1 << 20
   private val blockCountMemo =
     new java.util.concurrent.ConcurrentHashMap[Seq[Long], java.lang.Long]()
-  private val vocabSliceMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Option[Array[(Long, String, Long)]]]()
 
-  /** term -> (term_id, df); driver-side lookup of a handful of terms.
-    * Memoized per reader; only uncached terms touch the dictionary.
-    */
-  def termInfo(terms: Seq[String]): Map[String, (Long, Long)] = {
-    val hits = scala.collection.mutable.Map.empty[String, (Long, Long)]
-    val misses = scala.collection.mutable.ArrayBuffer.empty[String]
-    terms.distinct.foreach { t =>
-      termInfoMemo.get(t) match {
-        case null => misses += t
-        case cached => cached.foreach(v => hits(t) = v)
-      }
-    }
-    if (misses.nonEmpty) {
-      if (termInfoMemo.size() > VocabMemoMax) termInfoMemo.clear()
-      val found = dictionary.filter(col("term").isin(misses.toSeq: _*))
-        .select(col("term"), col("term_id"), col("df"))
-        .collect()
-        .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2)))
-        .toMap
-      misses.foreach { t =>
-        termInfoMemo.put(t, found.get(t))
-        found.get(t).foreach(v => hits(t) = v)
-      }
-    }
-    hits.toMap
-  }
+  /** term -> (term_id, df) for the terms that are in the vocabulary. */
+  def termInfo(terms: Seq[String]): Map[String, (Long, Long)] =
+    terms.distinct.flatMap { t =>
+      val id = vocabulary.idOf(t)
+      if (id < 0) None else Some(t -> ((id.toLong, vocabulary.df(id))))
+    }.toMap
 
   /** prefix -> contiguous term_id range [lo, hi] (prefixToRange analog,
     * CompleterBase.cpp:2505-2636; dense lexicographic ids make any prefix
-    * a contiguous id range). Memoized per reader.
+    * a contiguous id range).
     */
-  def prefixRange(prefix: String): Option[(Long, Long)] = {
-    val cached = prefixRangeMemo.get(prefix)
-    if (cached != null) return cached
-    if (prefixRangeMemo.size() > VocabMemoMax) prefixRangeMemo.clear()
-    val r = dictionary.filter(col("term").startsWith(prefix))
-      .agg(min(col("term_id")), max(col("term_id"))).head()
-    val res = if (r.isNullAt(0)) None else Some((r.getLong(0), r.getLong(1)))
-    prefixRangeMemo.put(prefix, res)
-    res
-  }
+  def prefixRange(prefix: String): Option[(Long, Long)] =
+    vocabulary.prefixRange(prefix).map { case (lo, hi) => (lo.toLong, hi.toLong) }
 
-  /** Driver-held (term_id, term, df) slice of a prefix's id range,
-    * memoized when the range is small enough: the reference holds its
-    * WHOLE vocabulary in RAM (Vocabulary.h); we hold the warm prefixes'
-    * slices, so a warm prefix query attaches term/df through a local
-    * relation -- no dictionary-scan broadcast-build job per query. Ranges
-    * beyond [[IndexReader.MaxSliceTerms]] return None (the caller keeps
-    * the broadcast join; a hot `a*` on a 100M-term vocabulary must not be
-    * pulled onto the driver). The first call pays the same one collect job
-    * the broadcast build used to pay; every later call pays zero.
+  /** The (term_id, term, df) rows of the id range [lo, hi] as a local
+    * relation, so a prefix query attaches term/df without a dictionary
+    * scan. None past [[IndexReader.MaxSliceTerms]] ids: a hot `a*` on a
+    * 100M-term vocabulary keeps the broadcast join instead of a
+    * literal-sized plan.
     */
-  private def vocabSlice(prefix: String, lo: Long, hi: Long): Option[DataFrame] =
-    vocabSliceRows(prefix, lo, hi).map(rows => rows.toSeq.toDF("term_id", "term", "df"))
+  private def vocabSlice(lo: Long, hi: Long): Option[DataFrame] =
+    vocabSliceRows(lo, hi).map(rows => rows.toSeq.toDF("term_id", "term", "df"))
 
-  /** The raw memoized slice rows behind [[vocabSlice]] -- also the per-term
-    * df source for the driver-resident prefix serving path.
+  /** The rows behind [[vocabSlice]] -- also the per-term df source for the
+    * driver-resident prefix serving path.
     */
-  private def vocabSliceRows(prefix: String, lo: Long,
-                             hi: Long): Option[Array[(Long, String, Long)]] = {
-    if (hi - lo + 1 > IndexReader.MaxSliceTerms) return None
-    if (vocabSliceMemo.size() > IndexReader.MaxSlicePrefixes) vocabSliceMemo.clear()
-    vocabSliceMemo.computeIfAbsent(prefix, _ =>
-      Some(dictionary.filter(col("term_id").between(lo, hi))
-        .select(col("term_id"), col("term"), col("df"))
-        .collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getLong(2)))))
-  }
+  private def vocabSliceRows(lo: Long, hi: Long): Option[Array[(Long, String, Long)]] =
+    if (hi - lo + 1 > IndexReader.MaxSliceTerms) None
+    else Some((lo.toInt to hi.toInt).map(i =>
+      (i.toLong, vocabulary.term(i), vocabulary.df(i))).toArray)
 
   /** Pruned block scan for a term-id range. */
   def blocksForRange(lo: Long, hi: Long): DataFrame =
@@ -455,7 +417,7 @@ class IndexReader(val spark: SparkSession, val dir: String,
       case None => spark.range(0).select(col("id").cast("string").as("term"),
         lit(0.0).as("score"), col("id").as("dc"), col("id").as("oc"))
       case Some((lo, hi)) =>
-        val dfTbl = vocabSlice(prefix, lo, hi).getOrElse(
+        val dfTbl = vocabSlice(lo, hi).getOrElse(
           dictionary.filter(col("term_id").between(lo, hi))
             .select(col("term_id"), col("term"), col("df")))
         decode(blocksForRange(lo, hi))
@@ -492,14 +454,13 @@ class IndexReader(val spark: SparkSession, val dir: String,
     // frozen per reader (cached at first scan; delta shards appear to a
     // NEW reader), so a warm repeated query skips the job entirely.
     val qBlocks = blocksForIds(ids)
-    // same wholesale reset discipline as the vocab memos: distinct term-id
-    // SETS are unbounded over a serving session (every new keyword
-    // combination adds a key), unlike distinct terms. The count job runs
+    // wholesale reset: distinct term-id SETS are unbounded over a serving
+    // session (every new keyword combination adds a key). The count job runs
     // OUTSIDE the map (get / compute / putIfAbsent, not computeIfAbsent):
     // a cold multi-second count inside the CHM bin lock would stall
     // unrelated queries hashing to the same bin -- the same
     // miss-must-not-serialize discipline as the query caches.
-    if (blockCountMemo.size() > VocabMemoMax) blockCountMemo.clear()
+    if (blockCountMemo.size() > BlockCountMemoMax) blockCountMemo.clear()
     val memoKey = ids.sorted
     val memoized = blockCountMemo.get(memoKey)
     val totalBlocks =
@@ -598,7 +559,7 @@ class IndexReader(val spark: SparkSession, val dir: String,
     prefixRange(prefix) match {
       case None => spark.range(0).select(col("id").as("doc_id"), lit(0.0).as("score"))
       case Some((lo, hi)) =>
-        val dfTbl = vocabSlice(prefix, lo, hi)
+        val dfTbl = vocabSlice(lo, hi)
           .map(_.select(col("term_id"), col("df")))
           .getOrElse(dictionary.filter(col("term_id").between(lo, hi))
             .select(col("term_id"), col("df")))
@@ -746,9 +707,9 @@ class IndexReader(val spark: SparkSession, val dir: String,
   }
 
   /** Serving facade for prefix top-k docs: driver-resident when the
-    * prefix's vocabulary slice is memoizable AND its posting volume fits
-    * the budget; `topKPrefixDocs` otherwise (a hot `a*` on a web-scale
-    * index stays distributed).
+    * prefix spans at most [[IndexReader.MaxSliceTerms]] terms AND its
+    * posting volume fits the budget; `topKPrefixDocs` otherwise (a hot `a*`
+    * on a web-scale index stays distributed).
     */
   def servePrefixDocs(prefix: String, k: Int,
                       maxLocalPostings: Long = IndexReader.MaxLocalPostingsPerQuery): DataFrame =
@@ -756,7 +717,7 @@ class IndexReader(val spark: SparkSession, val dir: String,
       case None => emptyHits
       case Some((lo, hi)) =>
         val sliceOpt =
-          if (IndexReader.localServeEnabled) vocabSliceRows(prefix, lo, hi) else None
+          if (IndexReader.localServeEnabled) vocabSliceRows(lo, hi) else None
         sliceOpt match {
           case Some(slice) if slice.iterator.map(_._3).sum <= maxLocalPostings =>
             val lists = slice.toSeq.map { case (tid, _, df) => (df, localList(tid, df)) }
@@ -799,16 +760,13 @@ object IndexReader {
     */
   val MaxDfLiterals: Int = 256
 
-  /** A prefix whose id range spans more terms than this is never pulled
-    * onto the driver by [[IndexReader!.vocabSlice]] -- a hot `a*` on a
-    * 100M-term vocabulary keeps the distributed broadcast join.
+  /** Plan-size bound: a prefix whose id range spans more terms than this
+    * attaches term/df with a broadcast join over the dictionary instead of
+    * a local relation of its slice, and stays off the driver-resident
+    * prefix path -- a hot `a*` on a 100M-term vocabulary keeps the
+    * distributed plan.
     */
   val MaxSliceTerms: Long = 4096L
-
-  /** Distinct prefixes the slice memo holds before a wholesale reset
-    * (bounds driver memory at MaxSlicePrefixes * MaxSliceTerms tuples).
-    */
-  val MaxSlicePrefixes: Int = 512
 
   /** Driver-resident serving guards: a term with more postings than this
     * never comes onto the driver (head terms stay distributed)...

@@ -229,18 +229,6 @@ object Eval {
     *    (QueryParameters.cpp:12-13).
     */
   def evalDocs(src: AtomSource, q: ParsedQuery, params: QueryParams): DataFrame = {
-    // cold plain words across the whole query (join-block sub-queries
-    // included) resolve their candidate info with ONE batched dictionary
-    // lookup instead of one driver round-trip per atom; warm atoms are
-    // memo hits either way
-    def atomsOf(pq: ParsedQuery): Seq[Atom] = pq.parts.flatMap(_.atom match {
-      case JoinBlock(ps) => ps.flatMap(atomsOf)
-      case a => Seq(a)
-    })
-    src match {
-      case s: IndexAtomSource => s.prefetchPlainWords(atomsOf(q))
-      case _ => ()
-    }
     // rel: (doc_id, score[, mpos]) -- mpos (present iff hasPos) is the most
     // recent non-NOT part's MATCHED positions in the doc, as an array column
     case class State(rel: DataFrame, hasPos: Boolean)

@@ -35,7 +35,9 @@ class IndexAtomSource(reader: IndexReader) extends AtomSource {
     * through the FastSS deletion-neighborhood index when built (candidates
     * = variant-IN-list lookups, edit distance verified on candidates only);
     * other atoms (and fuzzy without the index, or beyond its built
-    * distance) are vocab-sized dictionary predicates.
+    * distance) are vocab-sized dictionary predicates. Scanned only to
+    * resolve fuzzy atoms and as the broadcast side of hull-sized candidate
+    * sets; every other candidate set comes from the resident vocabulary.
     */
   private def candidates(atom: Atom): DataFrame = (atom match {
     case w: Word if w.fuzzy =>
@@ -56,25 +58,21 @@ class IndexAtomSource(reader: IndexReader) extends AtomSource {
 
   def atomScored(atom: Atom): DataFrame = {
     import reader.spark.implicits._
-    val cand = candidates(atom)
-    // one bounded driver round-trip per atom (memoized per index + atom --
-    // a serving session answers repeated shapes with zero extra jobs): the
-    // candidate term-id set as CONTIGUOUS RUNS. The reference fetches
+    // the candidate term-id set as CONTIGUOUS RUNS. The reference fetches
     // blocks per word range / per term (block locate,
     // HYBCompleter.cpp:661-746; INVCompleter.h:94-130) -- never the
     // [min, max] hull of a scattered set, which for a synonym group like
     // `merge, join` would decode every block in between. Dense
-    // lexicographic ids make a prefix ONE run (identical to the old hull),
-    // while synonym/fuzzy/OR candidates become per-cluster runs; sets
-    // beyond MaxExactIds fall back to the hull (a vocab that large is
-    // range-shaped in practice). The broadcast join below still applies
-    // the exact candidate set after decode. The same round-trip carried the
-    // candidates' (term, df) -- when it did (non-hull), the broadcast side
-    // is that driver-held slice (a LocalRelation), not a second dictionary
-    // scan per query (the reference's in-RAM vocabulary, Vocabulary.h).
-    val (runs, slice) = candidateInfo(atom, cand)
+    // lexicographic ids make a prefix ONE run, while synonym/fuzzy/OR
+    // candidates become per-cluster runs; sets beyond MaxExactIds fall back
+    // to the hull (a vocab that large is range-shaped in practice). The
+    // broadcast join below still applies the exact candidate set after
+    // decode; its build side is the driver-held (term, df) slice (a
+    // LocalRelation) whenever the set is not hull-sized.
+    val (runs, slice) = candidateInfo(atom)
     if (runs.isEmpty) return emptyScored
-    val candSide = slice.map(_.toSeq.toDF("term_id", "term", "df")).getOrElse(cand)
+    val candSide = slice.map(_.toSeq.toDF("term_id", "term", "df"))
+      .getOrElse(candidates(atom))
     reader.decodeWithPositions(reader.blocksForIdRuns(runs))
       .join(broadcast(candSide), "term_id")
       .select(col("doc_id"), col("term"), col("tf"), col("positions"),
@@ -84,14 +82,67 @@ class IndexAtomSource(reader: IndexReader) extends AtomSource {
           lit(1), col("df"), col("dl")).as("score1"))
   }
 
-  /** Runs plus, for non-hull candidate sets, the driver-held
-    * (term_id, term, df) slice -- both from ONE collect. The slice memo is
-    * bounded separately ([[IndexAtomSource.SliceCacheMax]] atoms of at most
-    * [[IndexAtomSource.MaxExactIds]] tuples); runs stay memoized at the
-    * larger [[IndexAtomSource.RangeCacheMax]] because they are a few longs.
-    * Hull atoms memoize `None` -- known too big, never re-collected.
+  /** Runs plus, for candidate sets of at most [[IndexAtomSource.MaxExactIds]]
+    * ids, the (term_id, term, df) slice in id order; the hull and `None`
+    * past that. Non-fuzzy atoms resolve in-process from the resident
+    * vocabulary, per call (microseconds); fuzzy atoms (and OR sets with a
+    * fuzzy alternative) pay one dictionary round-trip, memoized per
+    * (dir, epoch, atom).
     */
-  private def candidateInfo(atom: Atom, cand: DataFrame):
+  private def candidateInfo(atom: Atom):
+      (Seq[(Long, Long)], Option[Array[(Long, String, Long)]]) =
+    residentRanges(atom) match {
+      case Some(ranges) => fromRanges(ranges)
+      case None => scannedInfo(atom)
+    }
+
+  /** The atom's candidate term ids as id ranges, from binary searches over
+    * [[IndexReader.vocabulary]] -- exactly the ids
+    * `dictionary.filter(CorpusAtomSource.atomPredicate(atom))` selects (the
+    * ordering argument is on [[graft.index.Vocabulary]]). None for an atom
+    * with a fuzzy word, whose candidates need an edit-distance scan.
+    */
+  private def residentRanges(atom: Atom): Option[Seq[(Long, Long)]] = {
+    val v = reader.vocabulary
+    def one(id: Int): Seq[(Long, Long)] = if (id < 0) Nil else Seq((id.toLong, id.toLong))
+    def block(r: Option[(Int, Int)]): Seq[(Long, Long)] =
+      r.map { case (lo, hi) => (lo.toLong, hi.toLong) }.toSeq
+    atom match {
+      case w: Word if w.fuzzy => None
+      case w: Word if w.prefix => Some(block(v.prefixRange(w.text)))
+      case w: Word if w.synonym =>
+        Some(Executor.synonymsOf(w.text).toSeq.flatMap(t => one(v.idOf(t))))
+      case w: Word => Some(one(v.idOf(w.text)))
+      case WordRange(lo, hi) => Some(block(v.range(lo, hi)))
+      case OrAtoms(alts) =>
+        val perAlt = alts.map(residentRanges)
+        if (perAlt.exists(_.isEmpty)) None else Some(perAlt.flatMap(_.get))
+      case _: JoinBlock =>
+        throw new IllegalArgumentException("join block handled separately")
+    }
+  }
+
+  /** Id ranges (any order, may overlap) -> merged runs and, within
+    * [[IndexAtomSource.MaxExactIds]] distinct ids, the slice.
+    */
+  private def fromRanges(ranges: Seq[(Long, Long)]):
+      (Seq[(Long, Long)], Option[Array[(Long, String, Long)]]) = {
+    val runs = IndexAtomSource.mergeRuns(ranges)
+    if (runs.isEmpty) (Seq.empty, None)
+    else if (runs.iterator.map { case (lo, hi) => hi - lo + 1 }.sum > IndexAtomSource.MaxExactIds)
+      (Seq((runs.head._1, runs.last._2)), None) // hull
+    else {
+      val v = reader.vocabulary
+      val slice = runs.iterator.flatMap { case (lo, hi) => lo.toInt to hi.toInt }
+        .map(i => (i.toLong, v.term(i), v.df(i))).toArray
+      (runs, Some(slice))
+    }
+  }
+
+  /** [[candidateInfo]] of a fuzzy atom: one collect of its candidate
+    * relation, memoized. Hull atoms memoize the hull, never re-collected.
+    */
+  private def scannedInfo(atom: Atom):
       (Seq[(Long, Long)], Option[Array[(Long, String, Long)]]) = {
     val key = (reader.dir, reader.indexEpoch, atom)
     val runs0 = IndexAtomSource.rangeCache.get(key)
@@ -101,8 +152,8 @@ class IndexAtomSource(reader: IndexReader) extends AtomSource {
       IndexAtomSource.rangeCache.clear() // crude bound; entries are cheap to recompute
     if (IndexAtomSource.sliceCache.size() > IndexAtomSource.SliceCacheMax)
       IndexAtomSource.sliceCache.clear()
-    val rows = cand.select(col("term_id"), col("term"), col("df"))
-      .orderBy(col("term_id"))
+    val cand = candidates(atom)
+    val rows = cand.orderBy(col("term_id"))
       .limit(IndexAtomSource.MaxExactIds + 1)
       .collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
@@ -118,60 +169,28 @@ class IndexAtomSource(reader: IndexReader) extends AtomSource {
     (runs, slice)
   }
 
-  /** One vocabulary term iff the memoized candidate slice has exactly one
-    * entry -- known from the round-trip every atom already pays, so the
-    * Eval fast path (projection instead of per-part groupBy) costs zero
-    * extra jobs. Hull-sized candidate sets answer false.
+  /** One vocabulary term iff the candidate slice has exactly one entry --
+    * so the Eval fast path (projection instead of per-part groupBy) costs
+    * no extra job. Hull-sized candidate sets answer false.
     */
   override def singleTerm(atom: Atom): Boolean =
-    candidateInfo(atom, candidates(atom))._2.exists(_.length == 1)
+    candidateInfo(atom)._2.exists(_.length == 1)
 
   /** Candidate id runs + driver-held slice for an atom -- the resolution
     * the driver-resident grammar path ([[LocalServe]]) shares with the
-    * distributed plans (one memoized round-trip either way).
+    * distributed plans.
     */
-  private[query] def candidateRunsSlice(atom: Atom):
+  private[graft] def candidateRunsSlice(atom: Atom):
       (Seq[(Long, Long)], Option[Array[(Long, String, Long)]]) =
-    candidateInfo(atom, candidates(atom))
-
-  /** Batch-resolve the COLD plain-word atoms of a query with ONE
-    * vocabulary lookup ([[IndexReader.termInfo]] batches its misses),
-    * filling the runs/slice memos [[candidateInfo]] reads -- so a cold
-    * k-word query pays one dictionary job, not k. Exact-word resolution is
-    * `term === text` (CorpusAtomSource.wordPredicate), which is precisely
-    * a termInfo row; prefix/range/fuzzy/synonym atoms keep their own
-    * bounded path. The reference's analog is its wholly RAM-resident
-    * vocabulary (Vocabulary.h) -- zero lookups per query; one batched job
-    * is the distributed floor.
-    */
-  private[query] def prefetchPlainWords(atoms: Seq[Atom]): Unit = {
-    val cold = atoms.distinct.collect {
-      case w: Word if !w.prefix && !w.fuzzy && !w.synonym &&
-          IndexAtomSource.rangeCache.get((reader.dir, reader.indexEpoch, w)) == null => w
-    }
-    if (cold.length < 2) return // one cold word costs one job either way
-    val info = reader.termInfo(cold.map(_.text))
-    cold.foreach { w =>
-      val key = (reader.dir, reader.indexEpoch, w)
-      info.get(w.text) match {
-        case Some((id, df)) =>
-          IndexAtomSource.rangeCache.put(key, IndexAtomSource.toRuns(Array(id)))
-          IndexAtomSource.sliceCache.put(key, Some(Array((id, w.text, df))))
-        case None => // unknown word: same memo rows candidateInfo writes
-          IndexAtomSource.rangeCache.put(key, Seq.empty)
-          IndexAtomSource.sliceCache.put(key, None)
-      }
-    }
-  }
+    candidateInfo(atom)
 
   /** Pruned block relation for an atom (spec hook). */
   private[graft] def prunedBlocks(atom: Atom): Option[DataFrame] = {
-    val runs = candidateInfo(atom, candidates(atom))._1
+    val runs = candidateInfo(atom)._1
     if (runs.isEmpty) None else Some(reader.blocksForIdRuns(runs))
   }
 
-  protected def vocabContains(w: String): Boolean =
-    reader.termInfo(Seq(w)).contains(w) // per-reader vocab memo: warm = 0 jobs
+  protected def vocabContains(w: String): Boolean = reader.vocabulary.idOf(w) >= 0
 
   protected def closestVocabWord(w: String, thr: Int): Option[String] =
     reader.dictionary
@@ -182,17 +201,17 @@ class IndexAtomSource(reader: IndexReader) extends AtomSource {
 }
 
 object IndexAtomSource {
-  /** (index dir, index epoch, atom) -> candidate term-id runs; atoms
-    * repeat across a serving session and runs are immutable per built
-    * index -- the epoch key makes a rebuild into the same dir a different
-    * cache row, and the size bound keeps an adversarial atom stream from
-    * growing the map without limit.
+  /** (index dir, index epoch, fuzzy atom) -> candidate term-id runs;
+    * atoms repeat across a serving session and runs are immutable per
+    * built index -- the epoch key makes a rebuild into the same dir a
+    * different cache row, and the size bound keeps an adversarial atom
+    * stream from growing the map without limit.
     */
   private[query] val RangeCacheMax = 65536
   private[query] val rangeCache =
     new java.util.concurrent.ConcurrentHashMap[(String, Long, Atom), Seq[(Long, Long)]]()
 
-  /** (index dir, epoch, atom) -> driver-held candidate slice, or None for
+  /** (index dir, epoch, fuzzy atom) -> driver-held candidate slice, or None for
     * hull-sized sets. Bounded tighter than the runs memo: a slice is up to
     * [[MaxExactIds]] (term_id, term, df) tuples.
     */
@@ -208,18 +227,19 @@ object IndexAtomSource {
   private[graft] val MaxExactIds = 4096
 
   /** Sorted distinct ids -> contiguous [lo, hi] runs. */
-  private[graft] def toRuns(sorted: Array[Long]): Seq[(Long, Long)] = {
+  private[graft] def toRuns(sorted: Array[Long]): Seq[(Long, Long)] =
+    mergeRuns(sorted.toSeq.map(id => (id, id)))
+
+  /** Id ranges in any order, overlapping or not -> the sorted disjoint
+    * runs covering them, adjacent ranges joined.
+    */
+  private[graft] def mergeRuns(ranges: Seq[(Long, Long)]): Seq[(Long, Long)] = {
     val runs = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    var lo = sorted(0)
-    var hi = sorted(0)
-    var i = 1
-    while (i < sorted.length) {
-      val id = sorted(i)
-      if (id == hi || id == hi + 1) hi = id
-      else { runs += ((lo, hi)); lo = id; hi = id }
-      i += 1
+    ranges.sortBy(_._1).foreach { case (lo, hi) =>
+      if (runs.nonEmpty && lo <= runs.last._2 + 1)
+        runs(runs.length - 1) = (runs.last._1, math.max(runs.last._2, hi))
+      else runs += ((lo, hi))
     }
-    runs += ((lo, hi))
     runs.toSeq
   }
 }

@@ -127,8 +127,10 @@ object LocalServe {
     * duplication), an atom's candidate runs cover every segment of its
     * candidate term ids, and each atom keeps only its own candidate set's
     * rows. None when any atom must stay distributed (hull-sized candidate
-    * set or over-budget posting volume) -- decided BEFORE any fetch, so a
-    * fallback query no longer pays partial fetch jobs.
+    * set or over-budget posting volume) -- decided BEFORE any fetch, from
+    * the resident vocabulary, so a fallback query pays no job here. A cold
+    * query without fuzzy atoms thus runs exactly one job: the postings
+    * collect.
     */
   private def localAtoms(reader: IndexReader, src: IndexAtomSource,
                          wanted: Seq[Atom]): Option[java.util.HashMap[Atom, LocalAtom]] = {
@@ -136,7 +138,6 @@ object LocalServe {
     val atoms = new java.util.HashMap[Atom, LocalAtom]()
     val colds = new scala.collection.mutable.ArrayBuffer[
       (Atom, Seq[(Long, Long)], Array[(Long, String, Long)])]
-    src.prefetchPlainWords(wanted) // cold plain words: ONE dictionary job
     for (a <- wanted.distinct) {
       val hit = cache.get(reader.indexEpoch, a)
       if (hit != null) atoms.put(a, hit)
@@ -375,7 +376,7 @@ object LocalServe {
 
     def damp(a: Atom): Double =
       if (isFuzzy(a) && params.fuzzyDamping < 1.0) params.fuzzyDamping else 1.0
-    /** best-match word resolved with driver-memoized vocab lookups only;
+    /** best-match word resolved from the resident vocabulary only;
       * a fuzzy best-match needs a distributed closest-word scan -> None
       * (whole query falls back). Some(None) = resolved, no best match.
       */
@@ -383,7 +384,7 @@ object LocalServe {
       if (bm == 0.0) Some(None)
       else a match {
         case w: Word if w.prefix =>
-          Some(Some(w.text).filter(t => reader.termInfo(Seq(t)).contains(t)))
+          Some(Some(w.text).filter(reader.vocabulary.idOf(_) >= 0))
         case w: Word if w.fuzzy => None
         case _ => Some(None)
       }

@@ -95,7 +95,9 @@ object CompletionServer {
             normalizeWords: Boolean = false)
       : com.sun.net.httpserver.HttpServer = {
     val reader = new IndexReader(spark, indexDir)
-    reader.dictionary.count() // warm the dictionary before the first request
+    // load the resident vocabulary (caching the dictionary on the way)
+    // before the first request
+    reader.vocabulary.size
     def preRun(qs: Seq[String], what: String): Unit = qs.foreach { q =>
       // a bad startup query must not keep the server from starting; warm
       // under the SERVER's params (normalize-words changes the parsed

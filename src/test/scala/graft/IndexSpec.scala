@@ -1,7 +1,7 @@
 package graft
 
 import graft.core.{Analysis, WebCorpus}
-import graft.index.{IndexBuilder, IndexReader}
+import graft.index.{IndexBuilder, IndexReader, MetricsCheck}
 import graft.query.Engine
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -212,5 +212,23 @@ class IndexSpec extends AnyFunSuite {
     val total = m.agg(sum(col("n_postings"))).head().getLong(0)
     val expected = Analysis.stats(corpus).n_postings
     assert(total === expected)
+  }
+
+  test("build metrics consistency check holds and catches any sum off by one") {
+    val check = MetricsCheck.of(reader)
+    assert(check.violations.isEmpty, check.violations.toString)
+    assert(check.partitionPostings === Analysis.stats(corpus).n_postings)
+    assert(check.shardBlocks.size === 2 && check.skewRatios.size === 2)
+    def plusOne(m: Map[String, Long], k: String): Map[String, Long] = m.updated(k, m(k) + 1)
+    val broken = Seq(
+      check.copy(partitionPostings = check.partitionPostings + 1),
+      check.copy(decodedPostings = check.decodedPostings + 1),
+      check.copy(statsPostings = check.statsPostings + 1),
+      check.copy(decodedWordPostings = check.decodedWordPostings - 1)) ++
+      check.shardBlocks.keys.toSeq.flatMap(s => Seq(
+        check.copy(shardBlocks = plusOne(check.shardBlocks, s)),
+        check.copy(blockRows = plusOne(check.blockRows, s)),
+        check.copy(skewRatios = check.skewRatios.updated(s, 0.999))))
+    broken.foreach(b => assert(b.violations.size === 1, b.toString))
   }
 }

@@ -278,39 +278,88 @@ class LocalServeSpec extends AnyFunSuite {
       s"full search ran $full jobs vs $hitsOnly for the bare hits plan")
   }
 
-  test("cold multi-atom query fetches all cold atoms in ONE postings collect") {
-    def jobs(f: => Unit): Int = {
-      val n = new java.util.concurrent.atomic.AtomicInteger()
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          n.incrementAndGet()
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try { f; Thread.sleep(500) } // listener bus is async
-      finally spark.sparkContext.removeSparkListener(listener)
-      n.get()
+  /** Jobs started, and SQL executions that scan the dictionary but no
+    * blocks (dictionary lookups), while `f` runs.
+    */
+  private def watch(f: => Unit): (Int, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val lookups = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
     }
-    // fresh reader instances over the same index: per-instance atom/vocab
-    // caches are COLD; an unrelated first query pays the reader's metadata
-    // jobs so the measured difference isolates per-atom cost
+    val qeListener = new org.apache.spark.sql.util.QueryExecutionListener {
+      private def see(qe: org.apache.spark.sql.execution.QueryExecution): Unit = {
+        val plan = qe.executedPlan.toString
+        if (plan.contains("/dictionary") && !plan.contains("/blocks")) lookups.incrementAndGet()
+      }
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit = see(qe)
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = see(qe)
+    }
+    Thread.sleep(500) // earlier events leave the async bus first
+    spark.sparkContext.addSparkListener(listener)
+    spark.listenerManager.register(qeListener)
+    try { f; Thread.sleep(500) } // listener bus is async
+    finally {
+      spark.sparkContext.removeSparkListener(listener)
+      spark.listenerManager.unregister(qeListener)
+    }
+    (jobs.get(), lookups.get())
+  }
+
+  test("cold multi-atom query fetches all cold atoms in ONE postings collect") {
+    // a fresh reader over a fresh COPY of the index: no cache keyed by the
+    // reader or its directory holds anything; the vocabulary is loaded and
+    // an unrelated first query pays the reader's metadata jobs, so what is
+    // measured is the request alone
     def coldJobs(q: String): Int = {
-      val r = new IndexReader(spark, reader.dir)
+      val src = java.nio.file.Paths.get(reader.dir)
+      val copy = java.nio.file.Files.createTempDirectory("graft_localserve_cold")
+      val walk = java.nio.file.Files.walk(src)
+      try walk.forEach(p => if (p != src)
+        java.nio.file.Files.copy(p, copy.resolve(src.relativize(p))))
+      finally walk.close()
+      val r = new IndexReader(spark, copy.toString)
+      r.vocabulary.size
       LocalServe.hits(r, "zebra", 5, QueryParams.Default).get.collect()
       val expected = hitsRows(IndexExecutor.topK(reader, q, 5))
-      jobs {
+      watch {
         assert(hitsRows(LocalServe.hits(r, q, 5, QueryParams.Default).get)
           === expected)
-      }
+      }._1
     }
-    val single = coldJobs("aachen")
-    val triple = coldJobs("aachen aal aargau")
-    // postings for ALL cold atoms arrive via one batched pruned collect
-    // and their vocabulary rows via one batched termInfo lookup: a cold
-    // query's job count does not scale with its word count (pre-batch a
-    // 3-word query paid 2 extra candidate jobs + 2 extra postings jobs)
-    assert(triple <= single,
-      s"cold 3-atom query ran $triple jobs vs $single for 1 atom")
+    // candidates resolve in-process from the resident vocabulary and the
+    // postings of ALL cold atoms arrive via one batched pruned collect:
+    // exactly one job whatever the shape
+    for (q <- Seq("aachen aal aargau", "aachen ba*", "aargau|babylonisch aal",
+        "aal--aargau", "[aachen aa*#merge aa*]"))
+      assert(coldJobs(q) === 1, s"cold query: $q")
+  }
+
+  test("a hull-sized candidate set falls back without a dictionary lookup") {
+    // 5,000 terms under `h`, past IndexAtomSource.MaxExactIds
+    val dir = java.nio.file.Files.createTempDirectory("graft_localserve_hull").toString
+    val docs = (0 until 50).map(i => (i.toLong, "wort " +
+      (0 until 100).map(j => f"h${i * 100 + j}%04d").mkString(" "))).toDF("doc_id", "text")
+    IndexBuilder.build(spark, docs, dir, numShards = 1)
+    val r = new IndexReader(spark, dir)
+    r.vocabulary.size
+    LocalServe.hits(r, "wort", 5, QueryParams.Default).get.collect()
+    val q = "wort h*"
+    val (jobs, lookups) = watch {
+      assert(LocalServe.hits(r, q, 5, QueryParams.Default).isEmpty,
+        "a hull-sized candidate set must fall back")
+    }
+    assert(jobs === 0 && lookups === 0,
+      s"the fallback decision ran $jobs jobs, $lookups dictionary lookups")
+    val expected = hitsRows(IndexExecutor.topK(r, q, 5))
+    val (_, fallbackLookups) = watch {
+      assert(hitsRows(IndexExecutor.serveHits(r, q, 5)) === expected)
+    }
+    assert(fallbackLookups === 0, "the distributed fallback ran a dictionary lookup")
   }
 
   test("warm grammar queries run ZERO Spark jobs") {

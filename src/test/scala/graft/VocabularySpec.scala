@@ -1,0 +1,124 @@
+package graft
+
+import graft.core.DenseRank
+import graft.index.{IndexReader, Vocabulary}
+import graft.query.{CorpusAtomSource, Executor, IndexAtomSource}
+import graft.query.QueryParser._
+import org.apache.spark.sql.functions.col
+import org.scalatest.funsuite.AnyFunSuite
+
+/** The resident vocabulary must resolve every non-fuzzy atom to exactly
+  * the term ids the dictionary predicate selects, including where UTF-16
+  * `String.compareTo` and Spark's UTF-8 byte order disagree.
+  */
+class VocabularySpec extends AnyFunSuite {
+  lazy val spark = SparkTestSession.spark
+  import spark.implicits._
+
+  // 'ﬁ' (U+FB01) sorts after '😀' (U+1F600) in UTF-16 and before it in UTF-8
+  private val alphabet = Seq("a", "s", "t", "z", "é", "ß", "ﬁ", "中", "😀", "🚀")
+
+  private val fixed = Seq("ﬁx", "😀x", "st", "str", "stream", "streams", "strength",
+    "merge", "fast", "quick", "a", "zzzz", "é", "😀")
+
+  lazy val terms: Seq[String] = {
+    val rng = new scala.util.Random(17)
+    val random = Seq.fill(700)(Seq.fill(1 + rng.nextInt(4))(
+      alphabet(rng.nextInt(alphabet.length))).mkString)
+    (fixed ++ random).distinct
+  }
+
+  /** A dictionary-only index dir: ids from the build's DenseRank. */
+  lazy val reader: IndexReader = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_vocab").toString
+    val rng = new scala.util.Random(5)
+    DenseRank.withDenseIdByPrefix(terms.map(t => (t, 1L + rng.nextInt(50)))
+        .toDF("term", "df"), "term", "term_id")
+      .select(col("term_id"), col("term"), col("df"))
+      .write.parquet(s"$dir/dictionary")
+    new IndexReader(spark, dir)
+  }
+
+  private def viaScan(atom: Atom): Seq[(Long, String, Long)] =
+    reader.dictionary.filter(CorpusAtomSource.atomPredicate(atom))
+      .select(col("term_id"), col("term"), col("df"))
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
+      .toSeq.sortBy(_._1)
+
+  private def assertExact(atom: Atom): Unit = {
+    val want = viaScan(atom)
+    val (runs, slice) = new IndexAtomSource(reader).candidateRunsSlice(atom)
+    if (want.isEmpty) assert(runs.isEmpty && slice.isEmpty, s"atom $atom")
+    else {
+      assert(want.length <= IndexAtomSource.MaxExactIds, s"test atom too wide: $atom")
+      assert(slice.map(_.toSeq) === Some(want), s"atom $atom")
+      assert(runs.flatMap { case (lo, hi) => lo to hi } === want.map(_._1), s"runs of $atom")
+    }
+  }
+
+  test("the two orders disagree on the test terms, and the ids follow UTF-8") {
+    assert("ﬁx".compareTo("😀x") > 0, "UTF-16 order puts ﬁx after 😀x")
+    val ids = reader.dictionary.collect().map(r =>
+      r.getAs[String]("term") -> r.getAs[Long]("term_id")).toMap
+    assert(ids("ﬁx") < ids("😀x"), "UTF-8 byte order puts ﬁx first")
+    assert(reader.vocabulary.size === terms.size)
+  }
+
+  test("boundary atoms resolve exactly like the dictionary predicate") {
+    val syn = Executor.synonymsOf("quick")
+    assert(syn.size > 2 && syn.exists(t => !terms.contains(t)),
+      "precondition: a synonym group with members missing from the vocabulary")
+    Seq[Atom](
+      Word("st", prefix = true), // a prefix that is itself a term
+      Word("str", prefix = true),
+      Word("🚀🚀🚀🚀🚀", prefix = true), // past the last term
+      Word("ﬁ", prefix = true), Word("😀", prefix = true),
+      Word("\uD83D", prefix = true), // a lone surrogate encodes as '?'
+      Word("", prefix = true),
+      Word("nosuchword"), Word("stream"), Word("😀x"), Word("ﬁx", not = true),
+      Word("stream", exact = true),
+      WordRange("z", "a"), // lo > hi
+      WordRange("ﬁ", "😀"), WordRange("a", "a"), WordRange("st", "stream"),
+      WordRange("", "b"), WordRange("😀", ""),
+      Word("quick", synonym = true), Word("merge", synonym = true),
+      Word("nosuchword", synonym = true),
+      OrAtoms(Seq(Word("st", prefix = true), Word("stream"))), // overlapping
+      OrAtoms(Seq(WordRange("s", "t"), Word("😀", prefix = true), Word("nosuchword"))),
+      OrAtoms(Seq(Word("a"), Word("a")))
+    ).foreach(assertExact)
+  }
+
+  test("randomized atoms resolve exactly like the dictionary predicate") {
+    val rng = new scala.util.Random(42)
+    def cps(s: String): Seq[String] =
+      s.codePoints().toArray.toSeq.map(cp => new String(Character.toChars(cp)))
+    def someTerm(): String = terms(rng.nextInt(terms.length))
+    def mutate(t: String): String = rng.nextInt(4) match {
+      case 0 => t
+      case 1 => cps(t).take(rng.nextInt(cps(t).length + 1)).mkString
+      case 2 => t + alphabet(rng.nextInt(alphabet.length))
+      case _ => Seq.fill(1 + rng.nextInt(3))(alphabet(rng.nextInt(alphabet.length))).mkString
+    }
+    def word(): Atom = rng.nextInt(3) match {
+      case 0 => Word(mutate(someTerm()))
+      case 1 => Word(mutate(someTerm()), prefix = true)
+      case _ => WordRange(mutate(someTerm()), mutate(someTerm()))
+    }
+    val atoms = Seq.fill(150)(
+      if (rng.nextInt(4) == 0) OrAtoms(Seq.fill(2 + rng.nextInt(2))(word())) else word())
+    atoms.foreach(assertExact)
+  }
+
+  test("the load refuses ids that are not dense or not in UTF-8 byte order") {
+    def load(rows: Seq[(Long, String, Long)]): Vocabulary =
+      Vocabulary.load(rows.toDF("term_id", "term", "df"))
+    assert(load(Seq((1L, "😀x", 1L), (0L, "ﬁx", 2L))).idOf("😀x") === 1)
+    // ids in UTF-16 order: refused
+    assert(intercept[IllegalStateException](
+      load(Seq((0L, "😀x", 1L), (1L, "ﬁx", 2L)))).getMessage.contains("byte order"))
+    assert(intercept[IllegalStateException](
+      load(Seq((0L, "a", 1L), (2L, "b", 1L)))).getMessage.contains("dense"))
+    assert(intercept[IllegalStateException](
+      load(Seq((0L, "a", 1L), (0L, "b", 1L)))).getMessage.contains("dense"))
+  }
+}
