@@ -2,7 +2,7 @@
 # Bench wrapper with a machine-parseable tail: runs graft.Bench under sbt
 # (which appends its own "[success] ..." noise after the program's stdout),
 # then cats the benchmark's SUMMARY JSON so the one-line contract is the
-# true last line of this script's stdout AND small enough (~700 bytes)
+# true last line of this script's stdout AND small enough (~1 KB)
 # that a bounded tail capture cannot clip its front.
 #
 #   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 ./bench.sh

@@ -165,6 +165,29 @@ class IndexReader(val spark: SparkSession, val dir: String,
 
   private def emptyHits: DataFrame =
     spark.range(0).select(col("id").as("doc_id"), lit(0.0).as("score"))
+
+  /** The dirs the postings live in, from [[censusSnapshot]] (the SAME
+    * snapshot the epoch hashed): the visible shard dirs, hiding shards
+    * merged by a committed compaction whose dirs the GC has not removed
+    * yet and half-written `compact-*` shards whose commit never landed (a
+    * torn file in a crashed shard must not even be footered). The blocks
+    * root only for a NON-SHARDED layout (present empty) -- an all-hidden
+    * dir must not have its merged/torn shards read whole. Both the
+    * [[blocks]] relation and the [[points]] reader read exactly these.
+    */
+  private def blockDirs: Seq[String] = {
+    val census = censusSnapshot
+    if (census.present.isEmpty) Seq(s"$dir/blocks")
+    else if (census.visible.isEmpty)
+      // every present shard is hidden (merged by a committed compaction
+      // whose output dir is gone, or uncommitted crash debris): the
+      // postings are unreachable -- fail loudly rather than read merged
+      // or torn shards whole
+      throw new IllegalStateException(
+        s"$dir/blocks has shards but none are visible (lost compaction output?)")
+    else census.visible.map(s => s"$dir/blocks/shard=$s")
+  }
+
   /** Block segments. Cached by default for a query-serving session (the
     * in-memory relation still skips batches via min/max stats); pass
     * cacheBlocks=false for one-shot scans. Caching auto-disables above
@@ -173,13 +196,6 @@ class IndexReader(val spark: SparkSession, val dir: String,
     * pulled through the block cache by a naive caller.
     */
   lazy val blocks: DataFrame = {
-    // compaction visibility (frozen at first scan, like the shard list
-    // itself): hide shards merged by a committed compaction whose dirs
-    // the GC has not removed yet, and half-written `compact-*` shards
-    // whose commit never landed. The common case -- nothing hidden --
-    // reads the dir whole; otherwise only the visible shard dirs are
-    // listed (a torn file in a crashed shard must not even be footered).
-    val census = censusSnapshot // the SAME snapshot the epoch hashed
     // ALWAYS read via the explicit visible shard paths, never the dir
     // root: Spark's cache manager substitutes semantically-equal plans,
     // and a parquet relation canonicalizes by its ROOT PATHS (InMemoryFileIndex
@@ -187,20 +203,10 @@ class IndexReader(val spark: SparkSession, val dir: String,
     // post-append reader's recomputed atom plan silently resolve to a
     // PRE-append persisted relation. Explicit shard paths make the plan
     // identity follow the visible layout: same layout shares cache
-    // entries, a changed layout cannot. Root-path fallback only for a
-    // NON-SHARDED layout (present empty) -- an all-hidden dir must not
-    // have its merged/torn shards read whole.
+    // entries, a changed layout cannot.
     val b =
-      if (census.present.isEmpty) spark.read.parquet(s"$dir/blocks")
-      else if (census.visible.isEmpty)
-        // every present shard is hidden (merged by a committed compaction
-        // whose output dir is gone, or uncommitted crash debris): the
-        // postings are unreachable -- fail loudly rather than read merged
-        // or torn shards whole
-        throw new IllegalStateException(
-          s"$dir/blocks has shards but none are visible (lost compaction output?)")
-      else spark.read.option("basePath", s"$dir/blocks")
-        .parquet(census.visible.map(s => s"$dir/blocks/shard=$s"): _*)
+      if (censusSnapshot.present.isEmpty) spark.read.parquet(blockDirs: _*)
+      else spark.read.option("basePath", s"$dir/blocks").parquet(blockDirs: _*)
     val maxBytes = spark.conf.getOption("graft.index.cacheBlocksMaxBytes")
       .map(_.toLong).getOrElse(IndexReader.CacheBlocksMaxBytes)
     // size through the Hadoop FileSystem API, so hdfs:// and s3a:// indexes
@@ -221,6 +227,13 @@ class IndexReader(val spark: SparkSession, val dir: String,
         .longValue()
     if (cacheBlocks && dirBytes <= maxBytes) b.cache() else b
   }
+
+  /** Driver-side point reads of the block files [[blocks]] reads and of
+    * the docs store ([[PointReader]]): the serving paths' cold postings
+    * and docs fetches, with no Spark job. Transient like [[vocabulary]].
+    */
+  @transient lazy val points: PointReader =
+    new PointReader(spark.sessionState.newHadoopConf(), blockDirs, s"$dir/docs", bucketOf)
 
   def idf(df: Long): Double = math.log((nDocs - df + 0.5) / (df + 0.5) + 1.0)
 
@@ -580,8 +593,8 @@ class IndexReader(val spark: SparkSession, val dir: String,
   // CompleterBase intersects in-process arrays). The Spark analog: when a
   // query's total posting volume is SMALL (torso/tail terms -- the vast
   // majority of interactive queries), decode its lists ONCE onto the
-  // driver (one pruned scan job per cold term, LRU-bounded), and answer
-  // score+top-k as plain in-process arithmetic -- ZERO Spark jobs warm.
+  // driver (one point read per cold term, no job, LRU-bounded), and answer
+  // score+top-k as plain in-process arithmetic -- ZERO Spark jobs.
   // Head terms and big prefixes exceed the guards and keep the distributed
   // plan, so at 10^12 docs the driver never holds more than the postings
   // budget: the same local/distributed split every production engine
@@ -599,8 +612,8 @@ class IndexReader(val spark: SparkSession, val dir: String,
   /** spec hooks */
   private[graft] def localListCount: Int = localListLru.synchronized(localListLru.size)
 
-  /** The term's decoded list from the driver LRU, fetching (one pruned
-    * collect job) and decoding on miss; None when the term's df exceeds
+  /** The term's decoded list from the driver LRU, fetching (one
+    * [[points]] read, no job) and decoding on miss; None when the term's df exceeds
     * the per-term guard. The fetch+decode runs OUTSIDE the lock (the
     * IndexQueryCache lesson: a miss must not serialize other threads'
     * hits); concurrent misses of one term race benignly, the loser's
@@ -612,24 +625,18 @@ class IndexReader(val spark: SparkSession, val dir: String,
       val hit = localListLru.get(termId)
       if (hit != null) return Some(hit)
     }
-    val segs = blocksForIds(Seq(termId))
-      .select(col("first_doc_id"), col("n_docs"), col("doc_deltas"),
-        col("tfs"), col("dls"))
-      .collect()
-      .sortBy(_.getLong(0))
-    val n = segs.map(_.getInt(1)).sum
+    val segs = points.blocks(Seq((termId, termId)), withPositions = false)
+      .sortBy(_.firstDocId)
+    val n = segs.map(_.nDocs).sum
     val docIds = new Array[Long](n)
     val tfs = new Array[Long](n)
     val dls = new Array[Long](n)
     var off = 0
-    segs.foreach { r =>
-      val m = r.getInt(1)
-      System.arraycopy(Codec.decodeDeltas(doclistCodec, r.getAs[Array[Byte]](2), m),
-        0, docIds, off, m)
-      System.arraycopy(Codec.decodeLongs(doclistCodec, r.getAs[Array[Byte]](3), m),
-        0, tfs, off, m)
-      System.arraycopy(Codec.decodeLongs(doclistCodec, r.getAs[Array[Byte]](4), m),
-        0, dls, off, m)
+    segs.foreach { s =>
+      val m = s.nDocs
+      System.arraycopy(Codec.decodeDeltas(doclistCodec, s.docDeltas, m), 0, docIds, off, m)
+      System.arraycopy(Codec.decodeLongs(doclistCodec, s.tfs, m), 0, tfs, off, m)
+      System.arraycopy(Codec.decodeLongs(doclistCodec, s.dls, m), 0, dls, off, m)
       off += m
     }
     val list = LocalList(docIds, tfs, dls)
@@ -754,6 +761,19 @@ object IndexReader {
     * plan size).
     */
   val MaxBucketLiterals: Long = 256L
+
+  /** Id ranges in any order, overlapping or not -> the sorted disjoint
+    * runs covering them, adjacent ranges joined.
+    */
+  private[graft] def mergeRuns(ranges: Seq[(Long, Long)]): Seq[(Long, Long)] = {
+    val runs = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+    ranges.sortBy(_._1).foreach { case (lo, hi) =>
+      if (runs.nonEmpty && lo <= runs.last._2 + 1)
+        runs(runs.length - 1) = (runs.last._1, math.max(runs.last._2, hi))
+      else runs += ((lo, hi))
+    }
+    runs.toSeq
+  }
 
   /** Above this many query terms the per-term df lookup switches from a
     * literal-map expression back to a broadcast join (bounded plan size).

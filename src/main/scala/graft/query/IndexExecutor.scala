@@ -127,7 +127,7 @@ class IndexAtomSource(reader: IndexReader) extends AtomSource {
     */
   private def fromRanges(ranges: Seq[(Long, Long)]):
       (Seq[(Long, Long)], Option[Array[(Long, String, Long)]]) = {
-    val runs = IndexAtomSource.mergeRuns(ranges)
+    val runs = IndexReader.mergeRuns(ranges)
     if (runs.isEmpty) (Seq.empty, None)
     else if (runs.iterator.map { case (lo, hi) => hi - lo + 1 }.sum > IndexAtomSource.MaxExactIds)
       (Seq((runs.head._1, runs.last._2)), None) // hull
@@ -228,20 +228,7 @@ object IndexAtomSource {
 
   /** Sorted distinct ids -> contiguous [lo, hi] runs. */
   private[graft] def toRuns(sorted: Array[Long]): Seq[(Long, Long)] =
-    mergeRuns(sorted.toSeq.map(id => (id, id)))
-
-  /** Id ranges in any order, overlapping or not -> the sorted disjoint
-    * runs covering them, adjacent ranges joined.
-    */
-  private[graft] def mergeRuns(ranges: Seq[(Long, Long)]): Seq[(Long, Long)] = {
-    val runs = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    ranges.sortBy(_._1).foreach { case (lo, hi) =>
-      if (runs.nonEmpty && lo <= runs.last._2 + 1)
-        runs(runs.length - 1) = (runs.last._1, math.max(runs.last._2, hi))
-      else runs += ((lo, hi))
-    }
-    runs.toSeq
-  }
+    IndexReader.mergeRuns(sorted.toSeq.map(id => (id, id)))
 }
 
 /** [[IndexAtomSource]] with the serving-session history in front: atoms

@@ -1,9 +1,8 @@
 package graft.query
 
 import graft.core.Analysis
-import graft.index.{Codec, IndexReader}
+import graft.index.{Codec, IndexReader, PointReader}
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 import QueryParser._
 
@@ -18,10 +17,11 @@ import QueryParser._
   * are the 10^12-doc path and stay pinned by every correctness gate; this
   * object is the serving fast path in front of them: when every atom of a
   * parsed query resolves to a driver-budget-sized posting volume, the
-  * atoms' decoded scored postings are fetched ONCE (one pruned collect per
-  * cold atom, LRU-bounded) and the whole part chain -- aggregation
-  * algebra, window matching, NOT, top-k -- runs as in-process array
-  * arithmetic returning driver rows: ZERO Spark jobs warm.
+  * atoms' decoded scored postings are fetched ONCE (one driver-side point
+  * read of the block files per cold request, LRU-bounded) and the whole
+  * part chain -- aggregation algebra, window matching, NOT, top-k -- runs
+  * as in-process array arithmetic returning driver rows: ZERO Spark jobs,
+  * cold or warm.
   *
   * Parity is the contract (spec: LocalServeSpec runs both paths over every
   * grammar shape): same BM25 operand order as [[Analysis.bm25Col]], same
@@ -98,39 +98,17 @@ object LocalServe {
 
   // ---- atom resolution ------------------------------------------------------
 
-  /** The atom's decoded scored rows, from the reader's LRU or one pruned
-    * collect; None when the atom cannot come onto the driver (hull-sized
-    * candidate set, or posting volume past the per-query budget).
-    */
-  private def localAtom(reader: IndexReader, src: IndexAtomSource,
-                        atom: Atom): Option[LocalAtom] = {
-    val cache = cacheFor(reader)
-    val hit = cache.get(reader.indexEpoch, atom)
-    if (hit != null) return Some(hit)
-    val (runs, slice) = src.candidateRunsSlice(atom)
-    if (runs.isEmpty) return Some(EmptyAtom) // unknown word: empty, still local
-    slice match {
-      case None => None // hull-sized candidate set: stays distributed
-      case Some(cand) =>
-        if (cand.iterator.map(_._3).sum > IndexReader.MaxLocalPostingsPerQuery)
-          return None // head atom: stays distributed
-        Some(cache.put(reader.indexEpoch, atom, fetchAtom(reader, runs, cand)))
-    }
-  }
-
-  /** Resolve every distinct atom of a part chain; all COLD atoms are
-    * fetched with ONE pruned collect over the union of their block runs
-    * (a cold k-atom query costs one Spark job for postings, not k -- the
-    * reference likewise answers one query with one pass over its words'
-    * block fetches, HYBCompleter.cpp:661-746). Correctness is unchanged:
-    * [[IndexReader.blocksForIdRuns]] is a single OR-predicate scan (no row
-    * duplication), an atom's candidate runs cover every segment of its
-    * candidate term ids, and each atom keeps only its own candidate set's
-    * rows. None when any atom must stay distributed (hull-sized candidate
-    * set or over-budget posting volume) -- decided BEFORE any fetch, from
-    * the resident vocabulary, so a fallback query pays no job here. A cold
-    * query without fuzzy atoms thus runs exactly one job: the postings
-    * collect.
+  /** Resolve every distinct atom of a part chain from the reader's LRU;
+    * all COLD atoms are fetched with ONE point read over the union of their
+    * block runs ([[IndexReader.points]]: the block files' filtered row
+    * groups, read on the driver with no Spark job -- the reference's block
+    * locate, HYBCompleter.cpp:661-746). The read returns exactly the rows of
+    * [[IndexReader.blocksForIdRuns]] (PointReaderSpec), an atom's candidate
+    * runs cover every segment of its candidate term ids, and each atom
+    * keeps only its own candidate set's rows. None when any atom must stay
+    * distributed (hull-sized candidate set or over-budget posting volume)
+    * -- decided BEFORE any fetch, from the resident vocabulary. A cold
+    * query without fuzzy atoms thus runs no Spark job at all.
     */
   private def localAtoms(reader: IndexReader, src: IndexAtomSource,
                          wanted: Seq[Atom]): Option[java.util.HashMap[Atom, LocalAtom]] = {
@@ -154,46 +132,27 @@ object LocalServe {
       }
     }
     if (colds.nonEmpty) {
-      val rows = reader.blocksForIdRuns(colds.iterator.flatMap(_._2).toSeq)
-        .select(blockCols(reader).map(col): _*)
-        .collect()
+      val segs = reader.points.blocks(colds.iterator.flatMap(_._2).toSeq, reader.hasPositions)
       for ((a, _, cand) <- colds) {
         val byId = cand.iterator.map(c => c._1 -> ((c._2, c._3))).toMap
-        val segs = rows.filter(r => byId.contains(r.getLong(0)))
-          .sortBy(r => (r.getLong(0), r.getLong(1)))
-        atoms.put(a, cache.put(reader.indexEpoch, a, buildAtom(reader, byId, segs)))
+        val own = segs.filter(s => byId.contains(s.termId))
+          .sortBy(s => (s.termId, s.firstDocId))
+        atoms.put(a, cache.put(reader.indexEpoch, a, buildAtom(reader, byId, own)))
       }
     }
     Some(atoms)
   }
 
-  private def blockCols(reader: IndexReader): Seq[String] =
-    Seq("term_id", "first_doc_id", "n_docs", "doc_deltas", "tfs",
-      "dls") ++ (if (reader.hasPositions) Seq("positions") else Nil)
-
-  /** One collect over the pruned block scan, decoded driver-side with the
-    * same [[Codec]] the distributed Generator uses and scored with the
-    * exact [[Analysis.bm25Col]] operand order (spec-pinned double parity).
-    */
-  private def fetchAtom(reader: IndexReader, runs: Seq[(Long, Long)],
-                        cand: Array[(Long, String, Long)]): LocalAtom = {
-    val byId = cand.iterator.map(c => c._1 -> ((c._2, c._3))).toMap
-    val segs = reader.blocksForIdRuns(runs)
-      .select(blockCols(reader).map(col): _*)
-      .collect()
-      .filter(r => byId.contains(r.getLong(0))) // exact candidate set only
-      .sortBy(r => (r.getLong(0), r.getLong(1)))
-    buildAtom(reader, byId, segs)
-  }
-
-  /** Decode + score collected block segments into a [[LocalAtom]]. `segs`
+  /** Decode + score stored block segments into a [[LocalAtom]], with the
+    * same [[Codec]] the distributed Generator uses and the exact
+    * [[Analysis.bm25Col]] operand order (spec-pinned double parity). `segs`
     * must be (term_id, first_doc_id)-sorted and contain exactly the
     * candidate set's segments.
     */
   private def buildAtom(reader: IndexReader, byId: Map[Long, (String, Long)],
-                        segs: Array[Row]): LocalAtom = {
+                        segs: Array[PointReader.BlockSeg]): LocalAtom = {
     val hasPos = reader.hasPositions
-    val n = segs.iterator.map(_.getInt(2)).sum
+    val n = segs.iterator.map(_.nDocs).sum
     val terms = new Array[String](n)
     val docIds = new Array[Long](n)
     val tfs = new Array[Long](n)
@@ -201,14 +160,13 @@ object LocalServe {
     val score1s = new Array[Double](n)
     val positions = new Array[Array[Int]](n)
     var off = 0
-    segs.foreach { r =>
-      val (term, df) = byId(r.getLong(0))
-      val m = r.getInt(2)
-      val ds = Codec.decodeDeltas(reader.doclistCodec, r.getAs[Array[Byte]](3), m)
-      val tf = Codec.decodeLongs(reader.doclistCodec, r.getAs[Array[Byte]](4), m)
-      val dl = Codec.decodeLongs(reader.doclistCodec, r.getAs[Array[Byte]](5), m)
-      val pos = if (hasPos)
-        Codec.decodePositions(reader.doclistCodec, r.getAs[Array[Byte]](6), tf)
+    segs.foreach { sg =>
+      val (term, df) = byId(sg.termId)
+      val m = sg.nDocs
+      val ds = Codec.decodeDeltas(reader.doclistCodec, sg.docDeltas, m)
+      val tf = Codec.decodeLongs(reader.doclistCodec, sg.tfs, m)
+      val dl = Codec.decodeLongs(reader.doclistCodec, sg.dls, m)
+      val pos = if (hasPos) Codec.decodePositions(reader.doclistCodec, sg.positions, tf)
       else null
       val idfV = reader.idf(df)
       var i = 0
@@ -320,8 +278,9 @@ object LocalServe {
         case Some(r) => r
         case None => return None
       }
-      val la = localAtom(reader, src, pq.parts.last.atom) match {
-        case Some(l) => l
+      val last = pq.parts.last.atom
+      val la = localAtoms(reader, src, Seq(last)) match {
+        case Some(m) => m.get(last)
         case None => return None
       }
       val docSet = new java.util.HashSet[java.lang.Long](math.max(16, rel.docIds.length))
@@ -719,9 +678,10 @@ object LocalServe {
     // behavior stays the distributed path's, not a silent variant
     if (parsed.parts.last.atom.isInstanceOf[JoinBlock]) return None
     val src = new IndexAtomSource(reader)
+    val last = parsed.parts.last.atom
     for {
       rel <- evalDocsLocal(reader, src, parsed, params)
-      la <- localAtom(reader, src, parsed.parts.last.atom)
+      la <- localAtoms(reader, src, Seq(last)).map(_.get(last))
     } yield {
       val docSet = new java.util.HashSet[java.lang.Long](math.max(16, rel.docIds.length))
       rel.docIds.foreach(docSet.add(_))
@@ -775,7 +735,7 @@ object LocalServe {
   // distributed twin is a semi-join over the docs parquet per request --
   // correct at any scale but 1-2 jobs per query. Hit ids already on the
   // driver read their texts from a per-reader byte-budgeted LRU instead
-  // (one pruned scan per cold doc set), and excerpt generation runs the
+  // (one driver-side point read per cold doc set, no job), and excerpt generation runs the
   // exact Excerpts.generateAll algorithm in-process: a warm full search --
   // hits, completions, excerpts, urls -- runs ZERO Spark jobs. Interactive
   // typing chains (`a`, `aa`, `aal`) re-rank the same top docs, so the LRU
@@ -815,8 +775,8 @@ object LocalServe {
     docsCacheFor(reader).count
 
   /** (url, text) for each hit id present in the docs store, misses fetched
-    * in ONE pruned scan (doc_id IN-list reaches the parquet row-group
-    * stats); warm ids run zero jobs.
+    * in ONE point read of the docs files ([[IndexReader.points]]: the doc_id
+    * set prunes row groups and pages, no Spark job).
     */
   private def docTexts(reader: IndexReader,
                        ids: Seq[Long]): Map[Long, (String, String)] = {
@@ -828,14 +788,10 @@ object LocalServe {
       if (hit != null) out(id) = hit else misses += id
     }
     if (misses.nonEmpty) {
-      reader.docs.filter(col("doc_id").isin(misses.toSeq: _*))
-        .select(col("doc_id"), col("url"), col("text"))
-        .collect()
-        .foreach { r =>
-          val v = (r.getString(1), r.getString(2))
-          cache.put(r.getLong(0), v)
-          out(r.getLong(0)) = v
-        }
+      reader.points.docs(misses.toSeq).foreach { case (id, url, text) =>
+        cache.put(id, (url, text))
+        out(id) = (url, text)
+      }
     }
     out.toMap
   }

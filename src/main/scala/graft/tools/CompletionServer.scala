@@ -98,6 +98,10 @@ object CompletionServer {
     // load the resident vocabulary (caching the dictionary on the way)
     // before the first request
     reader.vocabulary.size
+    // fill the blocks cache the distributed fallbacks read: local requests
+    // read the block files directly and never fill it, so the first
+    // fallback would otherwise pay the fill inside its query timeout
+    if (reader.blocks.storageLevel.useMemory) reader.blocks.count()
     def preRun(qs: Seq[String], what: String): Unit = qs.foreach { q =>
       // a bad startup query must not keep the server from starting; warm
       // under the SERVER's params (normalize-words changes the parsed

@@ -278,12 +278,13 @@ class LocalServeSpec extends AnyFunSuite {
       s"full search ran $full jobs vs $hitsOnly for the bare hits plan")
   }
 
-  /** Jobs started, and SQL executions that scan the dictionary but no
-    * blocks (dictionary lookups), while `f` runs.
+  /** Jobs started, SQL executions that scan the dictionary but no blocks
+    * (dictionary lookups), and SQL executions of any kind, while `f` runs.
     */
-  private def watch(f: => Unit): (Int, Int) = {
+  private def watch(f: => Unit): (Int, Int, Int) = {
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
     val lookups = new java.util.concurrent.atomic.AtomicInteger()
+    val executions = new java.util.concurrent.atomic.AtomicInteger()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
@@ -291,6 +292,7 @@ class LocalServeSpec extends AnyFunSuite {
     }
     val qeListener = new org.apache.spark.sql.util.QueryExecutionListener {
       private def see(qe: org.apache.spark.sql.execution.QueryExecution): Unit = {
+        executions.incrementAndGet()
         val plan = qe.executedPlan.toString
         if (plan.contains("/dictionary") && !plan.contains("/blocks")) lookups.incrementAndGet()
       }
@@ -307,36 +309,59 @@ class LocalServeSpec extends AnyFunSuite {
       spark.sparkContext.removeSparkListener(listener)
       spark.listenerManager.unregister(qeListener)
     }
-    (jobs.get(), lookups.get())
+    (jobs.get(), lookups.get(), executions.get())
   }
 
-  test("cold multi-atom query fetches all cold atoms in ONE postings collect") {
-    // a fresh reader over a fresh COPY of the index: no cache keyed by the
-    // reader or its directory holds anything; the vocabulary is loaded and
-    // an unrelated first query pays the reader's metadata jobs, so what is
-    // measured is the request alone
-    def coldJobs(q: String): Int = {
-      val src = java.nio.file.Paths.get(reader.dir)
-      val copy = java.nio.file.Files.createTempDirectory("graft_localserve_cold")
-      val walk = java.nio.file.Files.walk(src)
-      try walk.forEach(p => if (p != src)
-        java.nio.file.Files.copy(p, copy.resolve(src.relativize(p))))
-      finally walk.close()
-      val r = new IndexReader(spark, copy.toString)
-      r.vocabulary.size
-      LocalServe.hits(r, "zebra", 5, QueryParams.Default).get.collect()
-      val expected = hitsRows(IndexExecutor.topK(reader, q, 5))
-      watch {
-        assert(hitsRows(LocalServe.hits(r, q, 5, QueryParams.Default).get)
-          === expected)
-      }._1
-    }
+  /** A fresh reader over a fresh COPY of the index: no cache keyed by the
+    * reader or its directory holds anything; the vocabulary is loaded and
+    * an unrelated hits-only query pays the reader's metadata jobs (stats),
+    * so what a later watch measures is the request alone. Its docs LRU is
+    * empty.
+    */
+  private def coldReader(): IndexReader = {
+    val src = java.nio.file.Paths.get(reader.dir)
+    val copy = java.nio.file.Files.createTempDirectory("graft_localserve_cold")
+    val walk = java.nio.file.Files.walk(src)
+    try walk.forEach(p => if (p != src)
+      java.nio.file.Files.copy(p, copy.resolve(src.relativize(p))))
+    finally walk.close()
+    val r = new IndexReader(spark, copy.toString)
+    r.vocabulary.size
+    LocalServe.hits(r, "zebra", 5, QueryParams.Default).get.collect()
+    assert(LocalServe.cachedDocCount(r) === 0)
+    r
+  }
+
+  test("cold multi-atom query fetches all cold atoms with ZERO Spark jobs") {
     // candidates resolve in-process from the resident vocabulary and the
-    // postings of ALL cold atoms arrive via one batched pruned collect:
-    // exactly one job whatever the shape
+    // postings of ALL cold atoms arrive via one driver-side point read of
+    // the block files: no job whatever the shape
     for (q <- Seq("aachen aal aargau", "aachen ba*", "aargau|babylonisch aal",
-        "aal--aargau", "[aachen aa*#merge aa*]"))
-      assert(coldJobs(q) === 1, s"cold query: $q")
+        "aal--aargau", "[aachen aa*#merge aa*]")) {
+      val r = coldReader()
+      val expected = hitsRows(IndexExecutor.topK(reader, q, 5))
+      val (jobs, _, _) = watch {
+        assert(hitsRows(LocalServe.hits(r, q, 5, QueryParams.Default).get) === expected)
+      }
+      assert(jobs === 0, s"cold query: $q")
+    }
+  }
+
+  test("cold full search over docs not in the docs LRU runs ZERO jobs and ZERO SQL executions") {
+    import graft.api.Search
+    // hits, completions, excerpts and urls: postings and docs both arrive
+    // by point reads, and the row path runs no Dataset action
+    for (q <- Seq("aachen aa*", "babbeln ba*", "zebra pad")) {
+      val expected = Search.searchIndex(reader, q, 5)
+      assert(expected.hits.nonEmpty && expected.hits.forall(_.url.nonEmpty), q)
+      val r = coldReader()
+      val (jobs, _, executions) = watch {
+        assert(Search.searchIndex(r, q, 5).toJson === expected.toJson, q)
+      }
+      assert(LocalServe.cachedDocCount(r) > 0, "the docs came from the docs store")
+      assert(jobs === 0 && executions === 0,
+        s"cold full search ran $jobs jobs, $executions SQL executions: $q")
+    }
   }
 
   test("a hull-sized candidate set falls back without a dictionary lookup") {
@@ -349,14 +374,14 @@ class LocalServeSpec extends AnyFunSuite {
     r.vocabulary.size
     LocalServe.hits(r, "wort", 5, QueryParams.Default).get.collect()
     val q = "wort h*"
-    val (jobs, lookups) = watch {
+    val (jobs, lookups, _) = watch {
       assert(LocalServe.hits(r, q, 5, QueryParams.Default).isEmpty,
         "a hull-sized candidate set must fall back")
     }
     assert(jobs === 0 && lookups === 0,
       s"the fallback decision ran $jobs jobs, $lookups dictionary lookups")
     val expected = hitsRows(IndexExecutor.topK(r, q, 5))
-    val (_, fallbackLookups) = watch {
+    val (_, fallbackLookups, _) = watch {
       assert(hitsRows(IndexExecutor.serveHits(r, q, 5)) === expected)
     }
     assert(fallbackLookups === 0, "the distributed fallback ran a dictionary lookup")
