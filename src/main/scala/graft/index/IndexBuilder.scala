@@ -396,6 +396,16 @@ object IndexBuilder {
     * generation reads the index directory, never the corpus. A separate
     * step, like the reference's separate tool -- index builds that never
     * serve excerpts skip the write. Idempotent via the _SUCCESS marker.
+    *
+    * Laid out for point reads (the reference reads one docs.DB record at
+    * a known offset): each file is sorted by `doc_id` and its pages hold
+    * at most [[DocsPageRows]] rows, so a [[PointReader.docs]] read decodes
+    * the few pages whose column-index range holds an id. The sort is
+    * within partitions -- narrow, the text is never shuffled; ingest's
+    * `zipWithIndex` ids make input partitions contiguous id ranges, so
+    * footer statistics skip whole files too. A store written before this
+    * layout answers identically, reading every page of every file its
+    * footer admits; delete its `docs/` dir and rerun this to rebuild it.
     */
   def buildDocsStore(spark: SparkSession, corpus: DataFrame, outDir: String): Unit = {
     val done = java.nio.file.Files.exists(
@@ -405,9 +415,19 @@ object IndexBuilder {
       val base = corpus.select(col("doc_id").cast("long").as("doc_id"),
         (if (cols.contains("url")) col("url") else lit("")).as("url"),
         col("text"))
-      base.write.mode(SaveMode.Overwrite).parquet(s"$outDir/docs")
+      // the row check interval must not exceed the cap, or pages run past it
+      base.sortWithinPartitions(col("doc_id")).write.mode(SaveMode.Overwrite)
+        .option("parquet.page.row.count.limit", DocsPageRows.toString)
+        .option("parquet.page.size.row.check.min", DocsPageRows.toString)
+        .parquet(s"$outDir/docs")
     }
   }
+
+  /** Rows per docs-store page: what one excerpt miss decodes per file.
+    * 16/32/64-row pages read 10 ids in 3.3/3.4/4.2 ms p50 on a 3,000-doc
+    * store (4-core host); an unpaged store took 10-15 ms.
+    */
+  val DocsPageRows: Int = 32
 
   /** Minor compaction of delta shards (LSM-style): merge every VISIBLE
     * `stream-*` / `compact-*` shard into one new batch-shaped

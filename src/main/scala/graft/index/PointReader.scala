@@ -4,7 +4,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.filter2.compat.{FilterCompat, RowGroupFilter}
-import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
+import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate, Operators}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -92,13 +92,8 @@ final class PointReader(conf: Configuration, blockDirs: Seq[String], docsDir: St
       out.result()
     }.distinct
     val files = buckets.flatMap(b => bucketFiles.computeIfAbsent(b, leafFiles(_)))
-    val pred = orTree(los.indices.map { i =>
-      if (los(i) == his(i)) FilterApi.eq(TermId, java.lang.Long.valueOf(los(i)))
-      else FilterApi.and(FilterApi.gtEq(TermId, java.lang.Long.valueOf(los(i))),
-        FilterApi.ltEq(TermId, java.lang.Long.valueOf(his(i))))
-    })
     val cols = BlockCols ++ (if (withPositions) Seq("positions") else Nil)
-    scan(files, cols, pred) { r =>
+    scan(files, cols, runsPredicate(TermId, merged)) { r =>
       val t = r(0).asInstanceOf[Long]
       val i = IndexBuilder.upperBound(los, t) - 1
       i >= 0 && t <= his(i)
@@ -109,14 +104,31 @@ final class PointReader(conf: Configuration, blockDirs: Seq[String], docsDir: St
 
   /** (doc_id, url, text) of every docs-store row whose `doc_id` is in
     * `ids`, in no particular order; absent ids have no row.
+    *
+    * The predicate is the ids merged into runs, as a balanced OR of
+    * `eq` / range -- the shape [[blocks]] uses -- and not `FilterApi.in`:
+    * parquet's statistics and column-index filters judge an `in` by the
+    * hull [min id, max id] of its set, so a spread id set kept every page
+    * of every file its hull touched. Over a store that
+    * [[IndexBuilder.buildDocsStore]] writes (each file sorted by `doc_id`,
+    * pages of [[IndexBuilder.DocsPageRows]] rows) a read materializes the
+    * pages that hold the ids; an older store (unsorted, one page per
+    * column chunk) answers the same rows through the same code, at the
+    * old cost, until it is rebuilt.
     */
   def docs(ids: Seq[Long]): Array[(Long, String, String)] = {
     if (ids.isEmpty) return Array.empty
     val set = new java.util.HashSet[java.lang.Long]()
     ids.foreach(id => set.add(id))
-    scan(docsFiles, DocCols, FilterApi.in(DocId, set))(r => set.contains(r(0)))
+    val runs = IndexReader.mergeRuns(ids.distinct.map(id => (id, id)))
+    scan(docsFiles, DocCols, runsPredicate(DocId, runs))(r => set.contains(r(0)))
       .map(r => (r(0).asInstanceOf[Long], r(1).asInstanceOf[String], r(2).asInstanceOf[String]))
   }
+
+  /** Rows decoded by this reader's scans, kept or not (spec hook: what a
+    * point read costs, in rows).
+    */
+  private[graft] val rowsMaterialized = new java.util.concurrent.atomic.AtomicLong()
 
   private def footerOf(file: HadoopInputFile): ParquetMetadata = {
     val hit = footers.get(file.getPath)
@@ -164,6 +176,7 @@ final class PointReader(conf: Configuration, blockDirs: Seq[String], docsDir: St
               if (keep(r)) out += r
               i += 1
             }
+            rowsMaterialized.addAndGet(pages.getRowCount)
             pages = reader.readNextFilteredRowGroup()
           }
         } finally reader.close()
@@ -190,7 +203,19 @@ object PointReader {
     !((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
       name.endsWith("._COPYING_"))
 
-  /** Balanced disjunction (depth log2(n) at any run count). */
+  /** `column` in one of the non-empty `runs` (inclusive): a balanced OR
+    * (depth log2(n) at any run count) of `eq` for a one-value run and a
+    * `gtEq`/`ltEq` range otherwise -- predicates parquet's statistics and
+    * column-index filters both prune by.
+    */
+  private def runsPredicate(column: Operators.LongColumn,
+                            runs: Seq[(Long, Long)]): FilterPredicate =
+    orTree(runs.map { case (lo, hi) =>
+      if (lo == hi) FilterApi.eq(column, java.lang.Long.valueOf(lo))
+      else FilterApi.and(FilterApi.gtEq(column, java.lang.Long.valueOf(lo)),
+        FilterApi.ltEq(column, java.lang.Long.valueOf(hi)))
+    })
+
   private def orTree(ps: Seq[FilterPredicate]): FilterPredicate =
     if (ps.length == 1) ps.head
     else { val (a, b) = ps.splitAt(ps.length / 2); FilterApi.or(orTree(a), orTree(b)) }

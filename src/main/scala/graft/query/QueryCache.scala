@@ -397,6 +397,15 @@ class IndexQueryCache(maxEntries: Int = 200,
     n
   }
 
+  /** Number of entries some request still holds in flight (spec hook):
+    * 0 whenever no request is running, timed-out ones included.
+    */
+  def inflightCount: Int = synchronized {
+    var n = 0
+    lru.values().forEach(e => if (e.inflight.get() > 0) n += 1)
+    n
+  }
+
   var hits = 0L
   var filteredHits = 0L
   var misses = 0L

@@ -252,24 +252,26 @@ class IndexExecutorSpec extends AnyFunSuite {
     } finally server.stop(0)
   }
 
+  /** (status, body) of a GET against a running completion server. */
+  private def httpGet(server: com.sun.net.httpserver.HttpServer, path: String): (Int, String) = {
+    val conn = new java.net.URL(
+      s"http://127.0.0.1:${server.getAddress.getPort}$path")
+      .openConnection().asInstanceOf[java.net.HttpURLConnection]
+    val code = conn.getResponseCode
+    val is = if (code >= 400) conn.getErrorStream else conn.getInputStream
+    val body = try scala.io.Source.fromInputStream(is, "UTF-8").mkString finally is.close()
+    (code, body)
+  }
+
   test("completion server: query timeout cancels the request, session survives") {
     import graft.tools.CompletionServer
-    def get(server: com.sun.net.httpserver.HttpServer, path: String): (Int, String) = {
-      val conn = new java.net.URL(
-        s"http://127.0.0.1:${server.getAddress.getPort}$path")
-        .openConnection().asInstanceOf[java.net.HttpURLConnection]
-      val code = conn.getResponseCode
-      val is = if (code >= 400) conn.getErrorStream else conn.getInputStream
-      val body = scala.io.Source.fromInputStream(is, "UTF-8").mkString
-      (code, body)
-    }
     // 1 ms deadline: the watchdog cancels the request's job group (current
     // AND future jobs) before any Spark job can finish -> typed 503, the
     // reference's query-timeout answer (-o, Globals.cpp:24)
     val strict = CompletionServer.start(spark, reader.dir, port = 0,
       queryTimeoutMs = 1L)
     try {
-      val (code, body) = get(strict, "/?q=babbeln%20ba*&h=5")
+      val (code, body) = httpGet(strict, "/?q=babbeln%20ba*&h=5")
       assert(code === 503, body)
       assert(body.contains("query timeout after 1ms"))
     } finally strict.stop(0)
@@ -277,10 +279,44 @@ class IndexExecutorSpec extends AnyFunSuite {
     // answers normally afterwards (no poisoned caches, no leaked group)
     val normal = CompletionServer.start(spark, reader.dir, port = 0)
     try {
-      val (code, body) = get(normal, "/?q=babbeln%20ba*&h=5")
+      val (code, body) = httpGet(normal, "/?q=babbeln%20ba*&h=5")
       assert(code === 200)
       assert(body === graft.api.Search.searchIndex(reader, "babbeln ba*",
         k = 5).toJson)
+    } finally normal.stop(0)
+  }
+
+  test("completion server: a timed-out fallback leaves no borrowed history entry in flight") {
+    import graft.tools.CompletionServer
+    // 5,000 terms under `h`, past IndexAtomSource.MaxExactIds: `wort h*`
+    // is a hull-sized candidate set, answered by the distributed fallback
+    val dir = java.nio.file.Files.createTempDirectory("graft_timeout_hull").toString
+    val docs = (0 until 50).map(i => (i.toLong, "wort " +
+      (0 until 100).map(j => f"h${i * 100 + j}%04d").mkString(" "))).toDF("doc_id", "text")
+    IndexBuilder.build(spark, docs, dir, numShards = 1)
+    IndexBuilder.buildDocsStore(spark, docs, dir)
+    val cache = new graft.query.IndexQueryCache()
+    val path = "/?q=wort%20h*&h=5"
+    // the warm-up puts the `h*` and `wort` atom relations in the history;
+    // the request borrows both, then its first job is cancelled at the
+    // 1 ms deadline
+    val strict = CompletionServer.start(spark, dir, port = 0, queryTimeoutMs = 1L,
+      warmQueries = Seq("h* wort"), cache = cache)
+    try {
+      assert(cache.misses > 0 && cache.inflightCount === 0)
+      val hitsBefore = cache.hits
+      val (code, body) = httpGet(strict, path)
+      assert(code === 503, body)
+      assert(cache.hits > hitsBefore, "the timed-out request borrowed no history entry")
+      assert(cache.inflightCount === 0, "a timed-out request left history entries in flight")
+    } finally strict.stop(0)
+    val normal = CompletionServer.start(spark, dir, port = 0, cache = cache)
+    try {
+      val (code, body) = httpGet(normal, path)
+      assert(code === 200, body)
+      assert(body === graft.api.Search.searchIndex(new IndexReader(spark, dir), "wort h*",
+        k = 5).toJson)
+      assert(cache.inflightCount === 0)
     } finally normal.stop(0)
   }
 

@@ -1,8 +1,10 @@
 package graft
 
-import graft.index.{IndexBuilder, IndexReader}
+import graft.index.{IndexBuilder, IndexReader, PointReader}
 import graft.query.{LocalServe, QueryParams}
 import graft.streaming.StreamingIndexer
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
@@ -203,4 +205,157 @@ class PointReaderSpec extends AnyFunSuite {
 
   private def causes(e: Throwable): Seq[Throwable] =
     Iterator.iterate(e)(_.getCause).takeWhile(_ != null).toSeq
+
+  // ---- docs store: page-addressed point reads ----
+
+  /** 600 docs in 4 input partitions of 150 contiguous ids (as ingest's
+    * `zipWithIndex` ids give), texts of 5-104 words, every seventh url
+    * missing.
+    */
+  private lazy val docsCorpus = {
+    val rnd = new scala.util.Random(61)
+    spark.sparkContext.parallelize((0 until 600).map { i =>
+      (i.toLong, Seq.fill(5 + rnd.nextInt(100))(vocab(rnd.nextInt(vocab.length))).mkString(" "),
+        if (i % 7 == 3) None else Some(s"http://d/$i"))
+    }, 4).toDF("doc_id", "text", "url")
+  }
+
+  private def docsOnly(dir: String): PointReader =
+    new PointReader(spark.sessionState.newHadoopConf(), Nil, s"$dir/docs", (b: Long) => b)
+
+  /** One docs-store data file: its doc ids in file order and, per row
+    * group, the row count of every page of every column (offset index).
+    */
+  private case class DocsFile(ids: Seq[Long], pageRows: Seq[Int])
+
+  private def docsFiles(dir: String): Seq[DocsFile] = {
+    val conf = spark.sessionState.newHadoopConf()
+    dataFiles(s"$dir/docs").map { p =>
+      val path = new org.apache.hadoop.fs.Path(p.toUri)
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf))
+      val pageRows = try reader.getFooter.getBlocks.asScala.toSeq.flatMap { b =>
+        b.getColumns.asScala.toSeq.flatMap { c =>
+          val oi = reader.readOffsetIndex(c)
+          assert(oi != null, s"$p: no offset index for ${c.getPath}")
+          (0 until oi.getPageCount).map(i =>
+            (oi.getLastRowIndex(i, b.getRowCount) - oi.getFirstRowIndex(i) + 1).toInt)
+        }
+      } finally reader.close()
+      DocsFile(spark.read.parquet(p.toString).select("doc_id").as[Long].collect().toSeq,
+        pageRows)
+    }
+  }
+
+  private def sparkDocs(dir: String, ids: Seq[Long]): Seq[(Long, String, String)] =
+    spark.read.parquet(s"$dir/docs").filter(col("doc_id").isin(ids: _*))
+      .select("doc_id", "url", "text").collect()
+      .map(x => (x.getLong(0), x.getString(1), x.getString(2))).toSeq.sortBy(_._1)
+
+  /** Id sets at the pages' edges of `files` (each page's first and last
+    * row, one id per page), with duplicates, absent ids (negative, past
+    * the end), randomized sets and the empty set.
+    */
+  private def edgeIdSets(files: Seq[DocsFile]): Seq[Seq[Long]] = {
+    val cap = IndexBuilder.DocsPageRows
+    val firsts = files.flatMap(f => f.ids.indices.by(cap).map(f.ids(_)))
+    val lasts = files.flatMap(f => f.ids.indices.drop(cap - 1).by(cap).map(f.ids(_)) :+ f.ids.last)
+    val all = files.flatMap(_.ids)
+    val rnd = new scala.util.Random(62)
+    Seq(firsts, lasts, firsts ++ lasts, firsts.take(3) ++ firsts.take(3) ++ lasts.take(2),
+      Seq(-1L, -40L, all.max + 1, all.max + 500), Seq(all.min, -1L, all.max, all.max + 1),
+      Seq.empty[Long]) ++
+      Seq.fill(12)(Seq.fill(1 + rnd.nextInt(20))(rnd.nextInt(all.length + 40).toLong - 20))
+  }
+
+  private lazy val pagedDocs: String = {
+    val d = tmp("graft_points_docs")
+    IndexBuilder.buildDocsStore(spark, docsCorpus, d)
+    d
+  }
+
+  test("docs store layout: doc_id ascends per file, pages capped, rows = corpus projection, no Exchange") {
+    val d = tmp("graft_points_docs_layout")
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
+    }
+    // contiguous id ranges, each out of id order inside
+    val corpus = docsCorpus.sortWithinPartitions(col("text"))
+    Thread.sleep(500) // earlier events leave the async bus first
+    spark.listenerManager.register(listener)
+    try { IndexBuilder.buildDocsStore(spark, corpus, d); Thread.sleep(500) }
+    finally spark.listenerManager.unregister(listener)
+    val writes = plans.asScala.filter(_.contains("InsertIntoHadoopFsRelation")).toSeq
+    assert(writes.size === 1, plans.asScala.mkString("\n"))
+    assert(writes.head.contains("Sort [doc_id") && !writes.head.contains("Exchange"),
+      writes.head)
+
+    val files = docsFiles(d)
+    assert(files.size === 4)
+    val cap = IndexBuilder.DocsPageRows
+    files.foreach { f =>
+      assert(f.ids === f.ids.sorted, "doc_id must ascend within a docs file")
+      assert(f.pageRows.forall(_ <= cap), f.pageRows)
+      // every column chunk is cut into full pages: ceil(rows / cap) each
+      assert(f.pageRows.size === 3 * ((f.ids.length + cap - 1) / cap), f.pageRows)
+    }
+    val rows = spark.read.parquet(s"$d/docs").collect()
+      .map(r => (r.getAs[Long]("doc_id"), r.getAs[String]("url"), r.getAs[String]("text")))
+    val want = docsCorpus.collect().map(r =>
+      (r.getAs[Long]("doc_id"), r.getAs[String]("url"), r.getAs[String]("text")))
+    assert(rows.sortBy(_._1).toSeq === want.sortBy(_._1).toSeq)
+  }
+
+  test("docs point reads equal docs.filter(isin) at page edges, on a paged and a legacy store") {
+    val pagedFiles = docsFiles(pagedDocs)
+    assert(pagedFiles.forall(_.pageRows.size > 3), "the store must span several pages per file")
+    val legacy = tmp("graft_points_docs_legacy")
+    // the store as written before the page-addressed layout: a plain
+    // write of the projection, rows in no id order, one page per column
+    // chunk
+    val rnd = new scala.util.Random(63)
+    val shuffled = rnd.shuffle(docsCorpus.collect().toSeq)
+      .map(r => (r.getAs[Long]("doc_id"), r.getAs[String]("url"), r.getAs[String]("text")))
+    shuffled.toDF("doc_id", "url", "text").repartition(3)
+      .write.parquet(s"$legacy/docs")
+    val legacyFiles = docsFiles(legacy)
+    assert(legacyFiles.exists(f => f.ids !== f.ids.sorted))
+    assert(legacyFiles.forall(_.pageRows.size === 3), "one page per column chunk")
+    val paged = docsOnly(pagedDocs)
+    val old = docsOnly(legacy)
+    edgeIdSets(pagedFiles).foreach { ids =>
+      val want = sparkDocs(pagedDocs, ids)
+      assert(paged.docs(ids).toSeq.sortBy(_._1) === want, s"ids $ids")
+      assert(sparkDocs(legacy, ids) === want)
+      assert(old.docs(ids).toSeq.sortBy(_._1) === want, s"legacy store, ids $ids")
+    }
+  }
+
+  test("a docs point read materializes at most one capped page per file whose range holds an id") {
+    val files = docsFiles(pagedDocs)
+    val cap = IndexBuilder.DocsPageRows
+    val points = docsOnly(pagedDocs)
+    def cost(ids: Seq[Long]): Long = {
+      val before = points.rowsMaterialized.get()
+      points.docs(ids)
+      points.rowsMaterialized.get() - before
+    }
+    def admitting(id: Long): Int = files.count(f => f.ids.min <= id && id <= f.ids.max)
+    val all = files.flatMap(_.ids)
+    val probes = Seq(all.min, all.max, -5L, all.max + 9) ++
+      files.flatMap(f => Seq(f.ids.head, f.ids(f.ids.length / 2), f.ids.last))
+    probes.foreach { id =>
+      val n = cost(Seq(id))
+      assert(n <= cap.toLong * admitting(id), s"id $id materialized $n rows")
+    }
+    // the first and last ids of one file: two pages, not the file
+    files.foreach { f =>
+      val n = cost(Seq(f.ids.head, f.ids.last))
+      assert(n <= 2L * cap && n < f.ids.length, s"edge ids of a ${f.ids.length}-row file: $n rows")
+    }
+  }
 }
