@@ -1,7 +1,7 @@
 package graft.query
 
 import graft.core.Analysis
-import graft.index.IndexReader
+import graft.index.{IndexReader, Vocabulary}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -82,45 +82,35 @@ class IndexAtomSource(reader: IndexReader) extends AtomSource {
           lit(1), col("df"), col("dl")).as("score1"))
   }
 
-  /** Runs plus, for candidate sets of at most [[IndexAtomSource.MaxExactIds]]
-    * ids, the (term_id, term, df) slice in id order; the hull and `None`
-    * past that. Non-fuzzy atoms resolve in-process from the resident
-    * vocabulary, per call (microseconds); fuzzy atoms (and OR sets with a
-    * fuzzy alternative) pay one dictionary round-trip, memoized per
-    * (dir, epoch, atom).
+  /** The distributed plans' resolution: runs plus, for candidate sets of
+    * at most [[IndexAtomSource.MaxExactIds]] ids, the (term_id, term, df)
+    * slice in id order (the broadcast side of [[atomScored]]); the hull and
+    * `None` past that. Non-fuzzy atoms resolve in-process from the
+    * resident vocabulary, per call (microseconds); fuzzy atoms (and OR sets
+    * with a fuzzy alternative) pay one dictionary round-trip, memoized per
+    * (dir, epoch, atom). Driver serving resolves through [[exactRuns]].
     */
   private def candidateInfo(atom: Atom):
       (Seq[(Long, Long)], Option[Array[(Long, String, Long)]]) =
-    residentRanges(atom) match {
+    IndexAtomSource.residentRanges(reader.vocabulary, atom) match {
       case Some(ranges) => fromRanges(ranges)
       case None => scannedInfo(atom)
     }
 
-  /** The atom's candidate term ids as id ranges, from binary searches over
-    * [[IndexReader.vocabulary]] -- exactly the ids
-    * `dictionary.filter(CorpusAtomSource.atomPredicate(atom))` selects (the
-    * ordering argument is on [[graft.index.Vocabulary]]). None for an atom
-    * with a fuzzy word, whose candidates need an edit-distance scan.
+  /** The atom's exact candidate id runs for driver serving
+    * ([[LocalServe]]), whatever their count: the merged resident ranges,
+    * or a fuzzy atom's scanned runs. Builds no slice -- the driver path
+    * reads term and df by id from [[IndexReader.vocabulary]]. None only
+    * when a fuzzy scan passed [[IndexAtomSource.MaxExactIds]] candidates
+    * and kept just their hull, which is not the candidate set.
     */
-  private def residentRanges(atom: Atom): Option[Seq[(Long, Long)]] = {
-    val v = reader.vocabulary
-    def one(id: Int): Seq[(Long, Long)] = if (id < 0) Nil else Seq((id.toLong, id.toLong))
-    def block(r: Option[(Int, Int)]): Seq[(Long, Long)] =
-      r.map { case (lo, hi) => (lo.toLong, hi.toLong) }.toSeq
-    atom match {
-      case w: Word if w.fuzzy => None
-      case w: Word if w.prefix => Some(block(v.prefixRange(w.text)))
-      case w: Word if w.synonym =>
-        Some(Executor.synonymsOf(w.text).toSeq.flatMap(t => one(v.idOf(t))))
-      case w: Word => Some(one(v.idOf(w.text)))
-      case WordRange(lo, hi) => Some(block(v.range(lo, hi)))
-      case OrAtoms(alts) =>
-        val perAlt = alts.map(residentRanges)
-        if (perAlt.exists(_.isEmpty)) None else Some(perAlt.flatMap(_.get))
-      case _: JoinBlock =>
-        throw new IllegalArgumentException("join block handled separately")
+  private[graft] def exactRuns(atom: Atom): Option[Seq[(Long, Long)]] =
+    IndexAtomSource.residentRanges(reader.vocabulary, atom) match {
+      case Some(ranges) => Some(IndexReader.mergeRuns(ranges))
+      case None =>
+        val (runs, slice) = scannedInfo(atom)
+        if (runs.nonEmpty && slice.isEmpty) None else Some(runs)
     }
-  }
 
   /** Id ranges (any order, may overlap) -> merged runs and, within
     * [[IndexAtomSource.MaxExactIds]] distinct ids, the slice.
@@ -176,9 +166,8 @@ class IndexAtomSource(reader: IndexReader) extends AtomSource {
   override def singleTerm(atom: Atom): Boolean =
     candidateInfo(atom)._2.exists(_.length == 1)
 
-  /** Candidate id runs + driver-held slice for an atom -- the resolution
-    * the driver-resident grammar path ([[LocalServe]]) shares with the
-    * distributed plans.
+  /** Candidate id runs + driver-held slice for an atom as the distributed
+    * plans resolve it ([[candidateInfo]]; spec hook).
     */
   private[graft] def candidateRunsSlice(atom: Atom):
       (Seq[(Long, Long)], Option[Array[(Long, String, Long)]]) =
@@ -220,11 +209,40 @@ object IndexAtomSource {
     new java.util.concurrent.ConcurrentHashMap[(String, Long, Atom),
       Option[Array[(Long, String, Long)]]]()
 
-  /** Candidate sets up to this size prune blocks by their EXACT id runs;
-    * larger sets use the [min, max] hull. Bounded so the driver round-trip
-    * and the pushed predicate stay small.
+  /** Plan-size bound of the DISTRIBUTED plans only: candidate sets up to
+    * this size prune blocks by their EXACT id runs and broadcast their
+    * (term_id, term, df) slice; larger sets push the [min, max] hull and
+    * broadcast a dictionary filter. Bounded so the driver round-trip, the
+    * pushed predicate and the broadcast stay small. Driver serving is not
+    * gated by it: [[LocalServe]] takes an atom's exact runs at any count
+    * and bounds it by posting volume ([[LocalServe.overBudget]]).
     */
   private[graft] val MaxExactIds = 4096
+
+  /** The atom's candidate term ids as id ranges, from binary searches over
+    * the resident vocabulary `v` -- exactly the ids
+    * `dictionary.filter(CorpusAtomSource.atomPredicate(atom))` selects (the
+    * ordering argument is on [[graft.index.Vocabulary]]). None for an atom
+    * with a fuzzy word, whose candidates need an edit-distance scan.
+    */
+  private[graft] def residentRanges(v: Vocabulary, atom: Atom): Option[Seq[(Long, Long)]] = {
+    def one(id: Int): Seq[(Long, Long)] = if (id < 0) Nil else Seq((id.toLong, id.toLong))
+    def block(r: Option[(Int, Int)]): Seq[(Long, Long)] =
+      r.map { case (lo, hi) => (lo.toLong, hi.toLong) }.toSeq
+    atom match {
+      case w: Word if w.fuzzy => None
+      case w: Word if w.prefix => Some(block(v.prefixRange(w.text)))
+      case w: Word if w.synonym =>
+        Some(Executor.synonymsOf(w.text).toSeq.flatMap(t => one(v.idOf(t))))
+      case w: Word => Some(one(v.idOf(w.text)))
+      case WordRange(lo, hi) => Some(block(v.range(lo, hi)))
+      case OrAtoms(alts) =>
+        val perAlt = alts.map(residentRanges(v, _))
+        if (perAlt.exists(_.isEmpty)) None else Some(perAlt.flatMap(_.get))
+      case _: JoinBlock =>
+        throw new IllegalArgumentException("join block handled separately")
+    }
+  }
 
   /** Sorted distinct ids -> contiguous [lo, hi] runs. */
   private[graft] def toRuns(sorted: Array[Long]): Seq[(Long, Long)] =

@@ -1,7 +1,7 @@
 package graft.query
 
 import graft.core.Analysis
-import graft.index.{Codec, IndexReader, PointReader}
+import graft.index.{Codec, IndexReader, PointReader, Vocabulary}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 import QueryParser._
@@ -28,18 +28,21 @@ import QueryParser._
   * 4dp HALF_UP rounding applied BEFORE ordering (Spark round semantics),
   * same total orders, same partial/empty semantics. Join blocks
   * `[q1#q2#...]` evaluate locally too (sub-queries recurse under default
-  * params, the distributed twin's contract). Queries past the guards --
-  * head atoms over [[IndexReader.MaxLocalPostingsPerQuery]], hull-sized
-  * candidate sets, a fuzzy best-match resolution -- return None and the
-  * caller falls back to the distributed plans, so at web scale the
-  * driver never holds more than the postings budget.
+  * params, the distributed twin's contract). Locality is decided by
+  * posting volume alone: an atom of any term count serves here while its
+  * postings fit [[IndexReader.MaxLocalPostingsPerQuery]]. Queries past the
+  * guards ([[Fallback]]: an over-budget atom or query, a fuzzy atom whose
+  * scan kept only the hull, a fuzzy best-match resolution, completions
+  * over a trailing join block) return None and the caller falls back to
+  * the distributed plans, so at web scale the driver never holds more
+  * than the postings budget.
   */
 object LocalServe {
 
   /** One atom's decoded scored postings, driver-resident: parallel arrays,
     * one entry per (term, doc) pair, grouped by term and doc-sorted within
     * a term (the per-(doc, term) row shape of [[AtomSource.atomScored]]).
-    * `terms` holds shared references into the candidate slice, not copies.
+    * `terms` holds one String per term id, shared by that term's rows.
     */
   final case class LocalAtom(terms: Array[String], docIds: Array[Long],
                              tfs: Array[Long], scores: Array[Double],
@@ -96,6 +99,81 @@ object LocalServe {
   private[graft] def cachedAtomCount(reader: IndexReader): Int =
     cacheFor(reader).count
 
+  /** The guard that sent a request to the distributed plans. */
+  private[graft] sealed trait Fallback
+  private[graft] object Fallback {
+    /** One atom's postings pass [[IndexReader.MaxLocalPostingsPerQuery]]. */
+    case object AtomOverBudget extends Fallback
+    /** The query's atoms together pass the same budget. */
+    case object QueryOverBudget extends Fallback
+    /** A fuzzy scan passed [[IndexAtomSource.MaxExactIds]] candidates and
+      * kept only their hull.
+      */
+    case object FuzzyHull extends Fallback
+    /** A best-match bonus on a fuzzy word needs a closest-word scan. */
+    case object FuzzyBestMatch extends Fallback
+    /** Completions over a trailing join block (the distributed path
+      * rejects them).
+      */
+    case object TrailingJoinBlock extends Fallback
+    /** A windowed separator on a positions-off index (Eval raises the
+      * error).
+      */
+    case object PositionlessWindow extends Fallback
+    val all: Seq[Fallback] = Seq(AtomOverBudget, QueryOverBudget, FuzzyHull,
+      FuzzyBestMatch, TrailingJoinBlock, PositionlessWindow)
+  }
+
+  private val fallbackCounts = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[IndexReader,
+      Map[Fallback, java.util.concurrent.atomic.LongAdder]]())
+
+  private def countsFor(reader: IndexReader) = fallbackCounts.computeIfAbsent(
+    reader, _ => Fallback.all.map(_ -> new java.util.concurrent.atomic.LongAdder).toMap)
+
+  /** Requests on this reader that `cause` sent to the distributed plans. */
+  private[graft] def fallbackCount(reader: IndexReader, cause: Fallback): Long =
+    countsFor(reader)(cause).sum
+
+  /** Count a fallback under its cause; the None the caller returns. */
+  private def fallback(reader: IndexReader, cause: Fallback): None.type = {
+    countsFor(reader)(cause).increment()
+    None
+  }
+
+  /** The volume guard: true iff the atom with candidate id `runs` has more
+    * postings than [[IndexReader.MaxLocalPostingsPerQuery]], summing its
+    * terms' df from the resident vocabulary (one posting per (term, doc)).
+    * An atom within the budget decodes at most that many rows on the
+    * driver, whatever its term count. Cost: every df is at least 1, so
+    * [[postingVolume]] visits at most budget + 1 ids -- a one-letter prefix
+    * over millions of terms costs no more than the budget. The term count
+    * is no guard here: [[IndexAtomSource.MaxExactIds]] bounds the
+    * distributed plans' pushed predicate and broadcast, while the driver
+    * path reads term and df by id and needs neither, so its cost follows
+    * postings, not terms.
+    */
+  private[graft] def overBudget(v: Vocabulary, runs: Seq[(Long, Long)]): Boolean =
+    postingVolume(v, runs, IndexReader.MaxLocalPostingsPerQuery) >
+      IndexReader.MaxLocalPostingsPerQuery
+
+  /** The df sum over `runs`, or the first partial sum past `limit`. */
+  private[graft] def postingVolume(v: Vocabulary, runs: Seq[(Long, Long)],
+                                   limit: Long): Long = {
+    var sum = 0L
+    val it = runs.iterator
+    while (it.hasNext) {
+      val (lo, hi) = it.next()
+      var id = lo
+      while (id <= hi) {
+        sum += v.df(id.toInt)
+        if (sum > limit) return sum
+        id += 1
+      }
+    }
+    sum
+  }
+
   // ---- atom resolution ------------------------------------------------------
 
   /** Resolve every distinct atom of a part chain from the reader's LRU;
@@ -103,53 +181,63 @@ object LocalServe {
     * block runs ([[IndexReader.points]]: the block files' filtered row
     * groups, read on the driver with no Spark job -- the reference's block
     * locate, HYBCompleter.cpp:661-746). The read returns exactly the rows of
-    * [[IndexReader.blocksForIdRuns]] (PointReaderSpec), an atom's candidate
-    * runs cover every segment of its candidate term ids, and each atom
-    * keeps only its own candidate set's rows. None when any atom must stay
-    * distributed (hull-sized candidate set or over-budget posting volume)
-    * -- decided BEFORE any fetch, from the resident vocabulary. A cold
-    * query without fuzzy atoms thus runs no Spark job at all.
+    * [[IndexReader.blocksForIdRuns]] (PointReaderSpec), an atom's exact
+    * candidate runs ([[IndexAtomSource.exactRuns]], any term count) cover
+    * every segment of its candidate term ids, and each atom keeps only the
+    * rows inside its own runs. None when any atom must stay distributed --
+    * postings past the volume guard ([[overBudget]]) or a fuzzy scan
+    * that kept only the hull -- decided BEFORE any fetch, from the resident
+    * vocabulary. A cold query without fuzzy atoms thus runs no Spark job
+    * at all.
     */
   private def localAtoms(reader: IndexReader, src: IndexAtomSource,
                          wanted: Seq[Atom]): Option[java.util.HashMap[Atom, LocalAtom]] = {
     val cache = cacheFor(reader)
     val atoms = new java.util.HashMap[Atom, LocalAtom]()
-    val colds = new scala.collection.mutable.ArrayBuffer[
-      (Atom, Seq[(Long, Long)], Array[(Long, String, Long)])]
+    val colds = new scala.collection.mutable.ArrayBuffer[(Atom, Seq[(Long, Long)])]
     for (a <- wanted.distinct) {
       val hit = cache.get(reader.indexEpoch, a)
       if (hit != null) atoms.put(a, hit)
-      else {
-        val (runs, slice) = src.candidateRunsSlice(a)
-        if (runs.isEmpty) atoms.put(a, EmptyAtom) // unknown word: empty, local
-        else slice match {
-          case None => return None // hull-sized candidate set: distributed
-          case Some(cand) =>
-            if (cand.iterator.map(_._3).sum > IndexReader.MaxLocalPostingsPerQuery)
-              return None // head atom: stays distributed
-            colds += ((a, runs, cand))
-        }
+      else src.exactRuns(a) match {
+        case None => return fallback(reader, Fallback.FuzzyHull)
+        case Some(runs) if runs.isEmpty => atoms.put(a, EmptyAtom) // unknown word: empty, local
+        case Some(runs) =>
+          if (overBudget(reader.vocabulary, runs))
+            return fallback(reader, Fallback.AtomOverBudget) // head atom: stays distributed
+          colds += ((a, runs))
       }
     }
     if (colds.nonEmpty) {
       val segs = reader.points.blocks(colds.iterator.flatMap(_._2).toSeq, reader.hasPositions)
-      for ((a, _, cand) <- colds) {
-        val byId = cand.iterator.map(c => c._1 -> ((c._2, c._3))).toMap
-        val own = segs.filter(s => byId.contains(s.termId))
+      for ((a, runs) <- colds) {
+        val sorted = runs.toIndexedSeq
+        val own = segs.filter(s => inRuns(sorted, s.termId))
           .sortBy(s => (s.termId, s.firstDocId))
-        atoms.put(a, cache.put(reader.indexEpoch, a, buildAtom(reader, byId, own)))
+        atoms.put(a, cache.put(reader.indexEpoch, a, buildAtom(reader, own)))
       }
     }
     Some(atoms)
+  }
+
+  /** True iff `id` lies in one of the sorted, disjoint `runs`. */
+  private def inRuns(runs: IndexedSeq[(Long, Long)], id: Long): Boolean = {
+    var a = 0
+    var b = runs.length
+    while (a < b) { // first run whose hi >= id
+      val mid = (a + b) >>> 1
+      if (runs(mid)._2 < id) a = mid + 1 else b = mid
+    }
+    a < runs.length && runs(a)._1 <= id
   }
 
   /** Decode + score stored block segments into a [[LocalAtom]], with the
     * same [[Codec]] the distributed Generator uses and the exact
     * [[Analysis.bm25Col]] operand order (spec-pinned double parity). `segs`
     * must be (term_id, first_doc_id)-sorted and contain exactly the
-    * candidate set's segments.
+    * candidate set's segments; term and df come from the resident
+    * vocabulary, one String per term id.
     */
-  private def buildAtom(reader: IndexReader, byId: Map[Long, (String, Long)],
+  private def buildAtom(reader: IndexReader,
                         segs: Array[PointReader.BlockSeg]): LocalAtom = {
     val hasPos = reader.hasPositions
     val n = segs.iterator.map(_.nDocs).sum
@@ -159,16 +247,23 @@ object LocalServe {
     val scores = new Array[Double](n)
     val score1s = new Array[Double](n)
     val positions = new Array[Array[Int]](n)
+    val v = reader.vocabulary
     var off = 0
+    var termId = -1L
+    var term: String = null
+    var idfV = 0.0
     segs.foreach { sg =>
-      val (term, df) = byId(sg.termId)
+      if (sg.termId != termId) {
+        termId = sg.termId
+        term = v.term(termId.toInt)
+        idfV = reader.idf(v.df(termId.toInt))
+      }
       val m = sg.nDocs
       val ds = Codec.decodeDeltas(reader.doclistCodec, sg.docDeltas, m)
       val tf = Codec.decodeLongs(reader.doclistCodec, sg.tfs, m)
       val dl = Codec.decodeLongs(reader.doclistCodec, sg.dls, m)
       val pos = if (hasPos) Codec.decodePositions(reader.doclistCodec, sg.positions, tf)
       else null
-      val idfV = reader.idf(df)
       var i = 0
       while (i < m) {
         terms(off) = term
@@ -331,7 +426,8 @@ object LocalServe {
     // a windowed separator on a positions-off index must fail with Eval's
     // error, not silently fall back -- refuse the local path, Eval throws
     if (!reader.hasPositions &&
-        parts.exists(_.sep.flatMap(windowOf).isDefined)) return None
+        parts.exists(_.sep.flatMap(windowOf).isDefined))
+      return fallback(reader, Fallback.PositionlessWindow)
 
     def damp(a: Atom): Double =
       if (isFuzzy(a) && params.fuzzyDamping < 1.0) params.fuzzyDamping else 1.0
@@ -344,7 +440,7 @@ object LocalServe {
       else a match {
         case w: Word if w.prefix =>
           Some(Some(w.text).filter(reader.vocabulary.idOf(_) >= 0))
-        case w: Word if w.fuzzy => None
+        case w: Word if w.fuzzy => fallback(reader, Fallback.FuzzyBestMatch)
         case _ => Some(None)
       }
     def combineParts(s1: Double, s2: Double, bonus: Double): Double =
@@ -366,7 +462,8 @@ object LocalServe {
     }
     var totalRows = 0L
     atoms.values.forEach(la => totalRows += la.nRows)
-    if (totalRows > IndexReader.MaxLocalPostingsPerQuery) return None
+    if (totalRows > IndexReader.MaxLocalPostingsPerQuery)
+      return fallback(reader, Fallback.QueryOverBudget)
 
     val first = parts.head
     require(!isNot(first.atom), "query cannot start with a NOT part")
@@ -676,7 +773,8 @@ object LocalServe {
     // completions over a trailing join block are not part of the grammar
     // (the distributed path rejects the block atom); fall back so the
     // behavior stays the distributed path's, not a silent variant
-    if (parsed.parts.last.atom.isInstanceOf[JoinBlock]) return None
+    if (parsed.parts.last.atom.isInstanceOf[JoinBlock])
+      return fallback(reader, Fallback.TrailingJoinBlock)
     val src = new IndexAtomSource(reader)
     val last = parsed.parts.last.atom
     for {

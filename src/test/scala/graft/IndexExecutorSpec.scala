@@ -288,13 +288,13 @@ class IndexExecutorSpec extends AnyFunSuite {
 
   test("completion server: a timed-out fallback leaves no borrowed history entry in flight") {
     import graft.tools.CompletionServer
-    // 5,000 terms under `h`, past IndexAtomSource.MaxExactIds: `wort h*`
-    // is a hull-sized candidate set, answered by the distributed fallback
-    val dir = java.nio.file.Files.createTempDirectory("graft_timeout_hull").toString
-    val docs = (0 until 50).map(i => (i.toLong, "wort " +
-      (0 until 100).map(j => f"h${i * 100 + j}%04d").mkString(" "))).toDF("doc_id", "text")
-    IndexBuilder.build(spark, docs, dir, numShards = 1)
-    IndexBuilder.buildDocsStore(spark, docs, dir)
+    // `h*` matches 270,000 postings, past IndexReader.MaxLocalPostingsPerQuery:
+    // `wort h*` is answered by the distributed fallback
+    import graft.query.{LocalServe, QueryParams}
+    val dir = OverBudgetIndex.dir
+    val probe = new IndexReader(spark, dir)
+    assert(LocalServe.hits(probe, "wort h*", 5, QueryParams.Default).isEmpty)
+    assert(LocalServe.fallbackCount(probe, LocalServe.Fallback.AtomOverBudget) === 1)
     val cache = new graft.query.IndexQueryCache()
     val path = "/?q=wort%20h*&h=5"
     // the warm-up puts the `h*` and `wort` atom relations in the history;

@@ -167,6 +167,10 @@ class IndexSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](r.proximityDocs("batch", "batch", 1, 1))
     intercept[IllegalArgumentException](
       graft.query.IndexExecutor.topK(r, "batch.batch", 10).collect())
+    // the serving seam leaves them to that refusal, counting the guard
+    import graft.query.{LocalServe, QueryParams}
+    assert(LocalServe.hits(r, "batch.batch", 10, QueryParams.Default).isEmpty)
+    assert(LocalServe.fallbackCount(r, LocalServe.Fallback.PositionlessWindow) === 1)
   }
 
   test("every block codec serves identical postings, positions and top-k") {

@@ -105,9 +105,19 @@ class LocalServeSpec extends AnyFunSuite {
       assert(hitsRows(local.get) === hitsRows(IndexExecutor.topK(reader, q, 10)),
         s"local vs distributed mismatch for: $q")
     }
+    val bestMatchFallbacks =
+      LocalServe.fallbackCount(reader, LocalServe.Fallback.FuzzyBestMatch)
     assert(LocalServe.hits(reader, "aachen aachan~", 10,
       QueryParams(bestMatchBonus = 2.0)).isEmpty,
       "fuzzy best-match resolution must fall back")
+    assert(LocalServe.fallbackCount(reader, LocalServe.Fallback.FuzzyBestMatch) ===
+      bestMatchFallbacks + 1)
+    // completions over a trailing join block stay the distributed path's
+    val joinFallbacks =
+      LocalServe.fallbackCount(reader, LocalServe.Fallback.TrailingJoinBlock)
+    assert(LocalServe.completions(reader, "aal [aa*#aal*]", 10, QueryParams.Default).isEmpty)
+    assert(LocalServe.fallbackCount(reader, LocalServe.Fallback.TrailingJoinBlock) ===
+      joinFallbacks + 1)
     // the serve facade answers both seams identically to the explicit path
     assert(hitsRows(IndexExecutor.serveHits(reader, "[aachen aa*#merge aa*]", 10))
       === hitsRows(IndexExecutor.topK(reader, "[aachen aa*#merge aa*]", 10)))
@@ -364,27 +374,95 @@ class LocalServeSpec extends AnyFunSuite {
     }
   }
 
-  test("a hull-sized candidate set falls back without a dictionary lookup") {
-    // 5,000 terms under `h`, past IndexAtomSource.MaxExactIds
-    val dir = java.nio.file.Files.createTempDirectory("graft_localserve_hull").toString
-    val docs = (0 until 50).map(i => (i.toLong, "wort " +
-      (0 until 100).map(j => f"h${i * 100 + j}%04d").mkString(" "))).toDF("doc_id", "text")
-    IndexBuilder.build(spark, docs, dir, numShards = 1)
-    val r = new IndexReader(spark, dir)
-    r.vocabulary.size
+  test("an over-budget prefix falls back without a dictionary lookup") {
+    // `h*` matches 270,000 postings, past IndexReader.MaxLocalPostingsPerQuery
+    val r = new IndexReader(spark, OverBudgetIndex.dir)
+    val hRuns = graft.query.IndexAtomSource.residentRanges(r.vocabulary,
+      graft.query.QueryParser.Word("h", prefix = true)).get
+    assert(LocalServe.postingVolume(r.vocabulary, hRuns, Long.MaxValue) ===
+      OverBudgetIndex.PrefixPostings)
     LocalServe.hits(r, "wort", 5, QueryParams.Default).get.collect()
     val q = "wort h*"
     val (jobs, lookups, _) = watch {
       assert(LocalServe.hits(r, q, 5, QueryParams.Default).isEmpty,
-        "a hull-sized candidate set must fall back")
+        "an over-budget atom must fall back")
     }
     assert(jobs === 0 && lookups === 0,
       s"the fallback decision ran $jobs jobs, $lookups dictionary lookups")
+    assert(LocalServe.fallbackCount(r, LocalServe.Fallback.AtomOverBudget) === 1)
     val expected = hitsRows(IndexExecutor.topK(r, q, 5))
     val (_, fallbackLookups, _) = watch {
       assert(hitsRows(IndexExecutor.serveHits(r, q, 5)) === expected)
     }
     assert(fallbackLookups === 0, "the distributed fallback ran a dictionary lookup")
+    // ten atoms of 27,000 postings each: every one within the budget, the
+    // query past it
+    val ten = (0 to 9).map(d => s"h$d*").mkString(" ")
+    assert(LocalServe.hits(r, ten, 5, QueryParams.Default).isEmpty)
+    assert(LocalServe.fallbackCount(r, LocalServe.Fallback.QueryOverBudget) === 1)
+    assert(LocalServe.hits(r, "wort h0*", 5, QueryParams.Default).isDefined)
+  }
+
+  test("a hull-sized candidate set serves locally with ZERO jobs and ZERO SQL executions") {
+    // 5,000 terms under `h`, past IndexAtomSource.MaxExactIds, which bounds
+    // only the distributed plans; 5,050 postings fit the volume guard
+    val dir = java.nio.file.Files.createTempDirectory("graft_localserve_hull").toString
+    val docs = (0 until 50).map(i => (i.toLong, "wort " +
+      (0 until 100).map(j => f"h${i * 100 + j}%015d").mkString(" "))).toDF("doc_id", "text")
+    IndexBuilder.build(spark, docs, dir, numShards = 1)
+    val r = new IndexReader(spark, dir)
+    r.vocabulary.size
+    LocalServe.hits(r, "wort", 5, QueryParams.Default).get.collect()
+    val q = "wort h*"
+    var hits: Option[Seq[org.apache.spark.sql.Row]] = None
+    var completions: Option[Seq[org.apache.spark.sql.Row]] = None
+    val (jobs, _, executions) = watch {
+      hits = LocalServe.hitRows(r, q, 10, QueryParams.Default)
+      completions = LocalServe.completionRows(r, q, 10, QueryParams.Default)
+    }
+    assert(hits.isDefined && completions.isDefined, "a hull-sized candidate set must serve locally")
+    assert(jobs === 0 && executions === 0,
+      s"the local answer ran $jobs jobs, $executions SQL executions")
+    assert(LocalServe.Fallback.all.forall(LocalServe.fallbackCount(r, _) === 0))
+    assert(hits.get.map(row => (row.getLong(0), row.getDouble(1))) ===
+      hitsRows(IndexExecutor.topK(r, q, 10)))
+    assert(completions.get.map(row =>
+      (row.getString(0), row.getDouble(1), row.getLong(2), row.getLong(3))) ===
+      complRows(IndexExecutor.completions(r, q, 10)))
+    // a fuzzy atom is the exception: all 5,000 terms lie within its 4
+    // edits, so its scan keeps only the hull and the query falls back
+    val fq = "wort h000000000000000~"
+    assert(LocalServe.hitRows(r, fq, 10, QueryParams.Default).isEmpty)
+    assert(LocalServe.fallbackCount(r, LocalServe.Fallback.FuzzyHull) === 1)
+    assert(hitsRows(IndexExecutor.serveHits(r, fq, 10)) ===
+      hitsRows(IndexExecutor.topK(r, fq, 10)))
+  }
+
+  test("volume guard: a budget-sized atom serves, budget + 1 falls back, long runs stop early") {
+    import graft.index.Vocabulary
+    import graft.query.IndexAtomSource
+    import graft.query.QueryParser.Word
+    import org.apache.spark.sql.functions.{col, format_string, lit}
+    val budget = IndexReader.MaxLocalPostingsPerQuery
+    // a synthetic dictionary, no index: a000..a255 hold exactly the budget
+    // (256 x 1,024), b000..b256 one posting more, c000000..c299999 one
+    // posting each
+    val ab = (0 until 256).map(i => (i.toLong, f"a$i%03d", 1024L)) ++
+      (0 to 256).map(i => (256L + i, f"b$i%03d", if (i == 256) 1L else 1024L))
+    val cs = spark.range(300000).select((col("id") + 513).as("term_id"),
+      format_string("c%06d", col("id")).as("term"), lit(1L).as("df"))
+    val v = Vocabulary.load(ab.toDF("term_id", "term", "df").unionByName(cs))
+    def runs(prefix: String): Seq[(Long, Long)] =
+      IndexAtomSource.residentRanges(v, Word(prefix, prefix = true)).get
+    assert(budget === 256L * 1024)
+    assert(LocalServe.postingVolume(v, runs("a"), Long.MaxValue) === budget)
+    assert(!LocalServe.overBudget(v, runs("a")), "exactly the budget: served locally")
+    assert(LocalServe.postingVolume(v, runs("b"), Long.MaxValue) === budget + 1)
+    assert(LocalServe.overBudget(v, runs("b")), "one posting past the budget: falls back")
+    // 300,000 ids of df 1: the sum stops at the first id past the budget
+    assert(LocalServe.overBudget(v, runs("c")))
+    assert(LocalServe.postingVolume(v, runs("c"), budget) === budget + 1)
+    assert(LocalServe.postingVolume(v, runs("c"), Long.MaxValue) === 300000L)
   }
 
   test("warm grammar queries run ZERO Spark jobs") {

@@ -91,6 +91,78 @@ class OpsSpec extends AnyFunSuite {
     assert(got === expected)
   }
 
+  /** [[Dedup.jaccardPairs]] computed directly in Scala: distinct n-token
+    * shingles per doc, shingles in more than `maxShingleDf` docs dropped
+    * from every set, then common / union per pair sharing a shingle,
+    * rounded to 4 dp HALF_UP from the double quotient, kept when >=
+    * `threshold`. Texts are space-separated lowercase tokens.
+    */
+  private def jaccardOracle(texts: Seq[(Long, String)], n: Int, threshold: Double,
+                            maxShingleDf: Long): Set[(Long, Long, Double)] = {
+    val sets0 = texts.map { case (id, t) =>
+      id -> t.split(" ").filter(_.nonEmpty).toSeq.sliding(n)
+        .filter(_.size == n).map(_.mkString(" ")).toSet
+    }
+    val df = sets0.flatMap(_._2).groupBy(identity).map { case (sh, xs) => sh -> xs.size }
+    val sets = sets0.map { case (id, sh) => id -> sh.filter(df(_) <= maxShingleDf) }
+    (for {
+      (a, sa) <- sets; (b, sb) <- sets if a < b
+      common = (sa intersect sb).size if common > 0
+      j = BigDecimal(common.toDouble / (sa.size + sb.size - common))
+        .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble if j >= threshold
+    } yield (a, b, j)).toSet
+  }
+
+  private def jaccardGot(texts: Seq[(Long, String)], n: Int, threshold: Double,
+                         maxShingleDf: Long): Set[(Long, Long, Double)] = {
+    import spark.implicits._
+    Dedup.jaccardPairs(texts.toDF("doc_id", "text"), n, threshold, maxShingleDf)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+  }
+
+  test("jaccard pairs: seeded random corpora match the brute-force oracle") {
+    // near-duplicate families over a small vocabulary (many shared
+    // shingles, skewed df) plus a boilerplate opening in a third of the
+    // docs, so the df cap drops shingles from some sets and not others
+    for ((seed, n, threshold, cap) <- Seq((1, 1, 0.3, 1000L), (2, 2, 0.5, 4L),
+        (3, 3, 0.2, 1000L), (4, 2, 0.4, 2L), (5, 3, 0.6, 6L), (6, 1, 0.5, 12L))) {
+      val rng = new scala.util.Random(seed)
+      val vocab = (0 until 12).map(i => s"w$i")
+      val bases = Seq.fill(4)(Seq.fill(8 + rng.nextInt(10))(vocab(rng.nextInt(vocab.size))))
+      val ids = rng.shuffle((0 until 24).map(i => 1000L + 37L * i))
+      val texts = ids.map { id =>
+        val base = bases(rng.nextInt(bases.size)).toBuffer
+        for (_ <- 0 until rng.nextInt(4)) rng.nextInt(3) match {
+          case 0 => base(rng.nextInt(base.size)) = vocab(rng.nextInt(vocab.size))
+          case 1 => base.insert(rng.nextInt(base.size + 1), vocab(rng.nextInt(vocab.size)))
+          case _ => if (base.size > 1) base.remove(rng.nextInt(base.size))
+        }
+        val boiler = if (rng.nextInt(3) == 0) Seq("legal", "header", "text") else Nil
+        id -> (boiler ++ base).mkString(" ")
+      }
+      val expected = jaccardOracle(texts, n, threshold, cap)
+      assert(expected.nonEmpty, s"seed $seed: the corpus must produce pairs")
+      assert(jaccardGot(texts, n, threshold, cap) === expected,
+        s"seed $seed n=$n threshold=$threshold maxShingleDf=$cap")
+    }
+  }
+
+  test("jaccard pairs: the 4-dp HALF_UP boundary at n = 1") {
+    // (a, b): 5,000 common of a 10,001 union = 0.49995000..., which
+    // rounds to 0.5 and is reported at threshold 0.5; (c, d): 4,999 /
+    // 10,001 rounds to 0.4999 and is not
+    def toks(p: String, r: Range): Seq[String] = r.map(i => s"$p$i")
+    val texts = Seq(
+      1L -> toks("x", 0 until 7500).mkString(" "),
+      2L -> (toks("x", 0 until 5000) ++ toks("x", 7500 to 10000)).mkString(" "),
+      3L -> toks("y", 0 until 7500).mkString(" "),
+      4L -> (toks("y", 0 until 4999) ++ toks("y", 7500 to 10000)).mkString(" "))
+    assert(5000.0 / 10001 < 0.5)
+    val expected = jaccardOracle(texts, 1, 0.5, 1000L)
+    assert(expected === Set((1L, 2L, 0.5)))
+    assert(jaccardGot(texts, 1, 0.5, 1000L) === expected)
+  }
+
   test("near-dup keep set: one canonical per component plus unpaired docs") {
     import spark.implicits._
     val d = Seq(

@@ -47,7 +47,11 @@ class VocabularySpec extends AnyFunSuite {
 
   private def assertExact(atom: Atom): Unit = {
     val want = viaScan(atom)
-    val (runs, slice) = new IndexAtomSource(reader).candidateRunsSlice(atom)
+    val src = new IndexAtomSource(reader)
+    val (runs, slice) = src.candidateRunsSlice(atom)
+    // the driver-serving resolution: the same ids, no slice
+    assert(src.exactRuns(atom).map(_.flatMap { case (lo, hi) => lo to hi }) ===
+      Some(want.map(_._1)), s"exact runs of $atom")
     if (want.isEmpty) assert(runs.isEmpty && slice.isEmpty, s"atom $atom")
     else {
       assert(want.length <= IndexAtomSource.MaxExactIds, s"test atom too wide: $atom")
