@@ -32,10 +32,8 @@ object Bench {
     // serveHits: the client surface (Search/CompletionServer route here) --
     // driver-resident grammar path + whole-result history under their
     // guards, the distributed plans past them; results are spec-pinned
-    // identical to the explicit operator paths AND to the reader-native
-    // serveTopKOr/servePrefixDocs facades. A/B knobs:
-    // SPARK_GRAFT_NO_RESULT_HISTORY=1 measures the compute path,
-    // SPARK_GRAFT_NO_LOCAL_SERVE=1 the distributed plans.
+    // identical to the explicit operator paths (IndexExecutor.topK, the
+    // reader's topKOrFull/topKPrefixDocs).
     "kw:spark" -> ((r: IndexReader) => graft.query.IndexExecutor.serveHits(r, "spark", 10)),
     "kw:merge" -> ((r: IndexReader) => graft.query.IndexExecutor.serveHits(r, "merge", 10)),
     "or3" -> ((r: IndexReader) => graft.query.IndexExecutor.serveHits(r, "spark|hash|merge", 10)),

@@ -279,15 +279,9 @@ class IndexReader(val spark: SparkSession, val dir: String,
     * literal-sized plan.
     */
   private def vocabSlice(lo: Long, hi: Long): Option[DataFrame] =
-    vocabSliceRows(lo, hi).map(rows => rows.toSeq.toDF("term_id", "term", "df"))
-
-  /** The rows behind [[vocabSlice]] -- also the per-term df source for the
-    * driver-resident prefix serving path.
-    */
-  private def vocabSliceRows(lo: Long, hi: Long): Option[Array[(Long, String, Long)]] =
     if (hi - lo + 1 > IndexReader.MaxSliceTerms) None
     else Some((lo.toInt to hi.toInt).map(i =>
-      (i.toLong, vocabulary.term(i), vocabulary.df(i))).toArray)
+      (i.toLong, vocabulary.term(i), vocabulary.df(i))).toDF("term_id", "term", "df"))
 
   /** Pruned block scan for a term-id range. */
   def blocksForRange(lo: Long, hi: Long): DataFrame =
@@ -585,154 +579,6 @@ class IndexReader(val spark: SparkSession, val dir: String,
           .limit(k)
     }
   }
-
-  // ---- Driver-resident serving fast path -----------------------------------
-  //
-  // The reference serves RAM-resident posting lists -- its whole
-  // interactivity story (README.md:16-18; History.h result cache;
-  // CompleterBase intersects in-process arrays). The Spark analog: when a
-  // query's total posting volume is SMALL (torso/tail terms -- the vast
-  // majority of interactive queries), decode its lists ONCE onto the
-  // driver (one point read per cold term, no job, LRU-bounded), and answer
-  // score+top-k as plain in-process arithmetic -- ZERO Spark jobs.
-  // Head terms and big prefixes exceed the guards and keep the distributed
-  // plan, so at 10^12 docs the driver never holds more than the postings
-  // budget: the same local/distributed split every production engine
-  // makes, with the budget as the explicit seam.
-
-  /** Decoded posting list of one term, driver-resident (sorted by doc id:
-    * per-term blocks cover disjoint docId ranges, so concatenating blocks
-    * in first_doc_id order preserves the within-block sort).
-    */
-  private case class LocalList(docIds: Array[Long], tfs: Array[Long], dls: Array[Long])
-
-  private val localListLru =
-    new java.util.LinkedHashMap[Long, LocalList](16, 0.75f, true)
-  private var localListPostings = 0L
-  /** spec hooks */
-  private[graft] def localListCount: Int = localListLru.synchronized(localListLru.size)
-
-  /** The term's decoded list from the driver LRU, fetching (one
-    * [[points]] read, no job) and decoding on miss; None when the term's df exceeds
-    * the per-term guard. The fetch+decode runs OUTSIDE the lock (the
-    * IndexQueryCache lesson: a miss must not serialize other threads'
-    * hits); concurrent misses of one term race benignly, the loser's
-    * arrays are dropped.
-    */
-  private def localList(termId: Long, df: Long): Option[LocalList] = {
-    if (df > IndexReader.MaxLocalPostingsPerTerm) return None
-    localListLru.synchronized {
-      val hit = localListLru.get(termId)
-      if (hit != null) return Some(hit)
-    }
-    val segs = points.blocks(Seq((termId, termId)), withPositions = false)
-      .sortBy(_.firstDocId)
-    val n = segs.map(_.nDocs).sum
-    val docIds = new Array[Long](n)
-    val tfs = new Array[Long](n)
-    val dls = new Array[Long](n)
-    var off = 0
-    segs.foreach { s =>
-      val m = s.nDocs
-      System.arraycopy(Codec.decodeDeltas(doclistCodec, s.docDeltas, m), 0, docIds, off, m)
-      System.arraycopy(Codec.decodeLongs(doclistCodec, s.tfs, m), 0, tfs, off, m)
-      System.arraycopy(Codec.decodeLongs(doclistCodec, s.dls, m), 0, dls, off, m)
-      off += m
-    }
-    val list = LocalList(docIds, tfs, dls)
-    localListLru.synchronized {
-      if (localListLru.get(termId) == null) {
-        localListLru.put(termId, list)
-        localListPostings += n
-        val it = localListLru.entrySet().iterator()
-        while (localListPostings > IndexReader.LocalListBudgetPostings &&
-            localListLru.size > 1 && it.hasNext) {
-          val e = it.next()
-          if (e.getKey != termId) {
-            localListPostings -= e.getValue.docIds.length
-            it.remove()
-          }
-        }
-      }
-      Some(localListLru.get(termId))
-    }
-  }
-
-  /** In-process BM25 sum + top-k over driver-resident lists -- the same
-    * formula, rounding (Spark round = BigDecimal HALF_UP) and total order
-    * (score desc, doc_id asc) as the distributed plans; the result is a
-    * LocalRelation, so collecting it runs zero jobs.
-    */
-  private def localTopK(lists: Seq[(Long, LocalList)], k: Int): DataFrame = {
-    val agg = new java.util.HashMap[java.lang.Long, java.lang.Double](1024)
-    lists.foreach { case (df, l) =>
-      val idfV = idf(df)
-      var i = 0
-      while (i < l.docIds.length) {
-        val tf = l.tfs(i).toDouble
-        val dl = l.dls(i).toDouble
-        val s = idfV * (tf * (Analysis.K1 + 1.0)) /
-          (tf + Analysis.K1 * ((1.0 - Analysis.B) + Analysis.B * dl / avgdl))
-        agg.merge(l.docIds(i), s, (a, b) => a + b)
-        i += 1
-      }
-    }
-    // top-k selection without rounding/sorting the full doc set: 4dp
-    // HALF_UP rounding is monotone and moves a value by <= 5e-5, so only
-    // docs within 1e-4 of the k-th RAW score can cross it after rounding.
-    // Select that window with a size-k min-heap, then round (the exact
-    // Spark semantics -- BigDecimal HALF_UP) and totally order only the
-    // window.
-    val heap = new java.util.PriorityQueue[java.lang.Double](math.max(k, 1))
-    agg.forEach((_, s) => {
-      if (heap.size < k) heap.add(s)
-      else if (s > heap.peek()) { heap.poll(); heap.add(s) }
-    })
-    val cut = if (heap.isEmpty) Double.NegativeInfinity else heap.peek() - 1e-4
-    val cand = new scala.collection.mutable.ArrayBuffer[(Long, Double)](2 * k)
-    agg.forEach((d, s) => if (s >= cut) cand += ((d.longValue(),
-      BigDecimal(s.doubleValue()).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble)))
-    cand.sortInPlaceBy { case (d, s) => (-s, d) }
-    cand.take(k).toSeq.toDF("doc_id", "score")
-  }
-
-  /** Serving facade for disjunctive (and single-keyword) top-k: the
-    * driver-resident path when the query's posting volume fits
-    * `maxLocalPostings`, the distributed WAND plan otherwise. Results are
-    * identical either way (spec-pinned); only the execution locus differs.
-    */
-  def serveTopKOr(terms: Seq[String], k: Int,
-                  maxLocalPostings: Long = IndexReader.MaxLocalPostingsPerQuery): DataFrame = {
-    val info = termInfo(terms)
-    if (info.isEmpty) return emptyHits
-    if (!IndexReader.localServeEnabled ||
-        info.values.map(_._2).sum > maxLocalPostings)
-      return topKOrWand(terms, k)
-    val lists = info.values.toSeq.map { case (tid, df) => (df, localList(tid, df)) }
-    if (lists.exists(_._2.isEmpty)) return topKOrWand(terms, k)
-    localTopK(lists.map { case (df, l) => (df, l.get) }, k)
-  }
-
-  /** Serving facade for prefix top-k docs: driver-resident when the
-    * prefix spans at most [[IndexReader.MaxSliceTerms]] terms AND its
-    * posting volume fits the budget; `topKPrefixDocs` otherwise (a hot `a*`
-    * on a web-scale index stays distributed).
-    */
-  def servePrefixDocs(prefix: String, k: Int,
-                      maxLocalPostings: Long = IndexReader.MaxLocalPostingsPerQuery): DataFrame =
-    prefixRange(prefix) match {
-      case None => emptyHits
-      case Some((lo, hi)) =>
-        val sliceOpt =
-          if (IndexReader.localServeEnabled) vocabSliceRows(lo, hi) else None
-        sliceOpt match {
-          case Some(slice) if slice.iterator.map(_._3).sum <= maxLocalPostings =>
-            val lists = slice.toSeq.map { case (tid, _, df) => (df, localList(tid, df)) }
-            if (lists.exists(_._2.isEmpty)) topKPrefixDocs(prefix, k)
-            else localTopK(lists.map { case (df, l) => (df, l.get) }, k)
-          case _ => topKPrefixDocs(prefix, k)
-        }
-    }
 }
 
 object IndexReader {
@@ -782,33 +628,22 @@ object IndexReader {
 
   /** Plan-size bound: a prefix whose id range spans more terms than this
     * attaches term/df with a broadcast join over the dictionary instead of
-    * a local relation of its slice, and stays off the driver-resident
-    * prefix path -- a hot `a*` on a 100M-term vocabulary keeps the
-    * distributed plan.
+    * a local relation of its slice -- a hot `a*` on a 100M-term vocabulary
+    * keeps a constant-sized plan.
     */
   val MaxSliceTerms: Long = 4096L
 
-  /** Driver-resident serving guards: a term with more postings than this
-    * never comes onto the driver (head terms stay distributed)...
-    */
-  val MaxLocalPostingsPerTerm: Long = 128L * 1024
-
-  /** ...a query whose terms' total posting volume exceeds this falls back
-    * to the distributed plan...
+  /** Driver-resident serving guard: a query whose atoms' total posting
+    * volume exceeds this falls back from [[graft.query.LocalServe]] to the
+    * distributed plans...
     */
   val MaxLocalPostingsPerQuery: Long = 256L * 1024
 
-  /** ...and the per-reader decoded-list LRU evicts past this many held
-    * postings (~24 bytes each -> ~48 MB), so an adversarial query stream
+  /** ...and LocalServe's per-reader atom LRU evicts past this much held
+    * weight (rows plus held positions), so an adversarial query stream
     * cannot grow driver memory unboundedly.
     */
   val LocalListBudgetPostings: Long = 2L * 1024 * 1024
-
-  /** A/B kill switch: SPARK_GRAFT_NO_LOCAL_SERVE=1 forces every serve*
-    * facade onto the distributed plans.
-    */
-  lazy val localServeEnabled: Boolean =
-    !sys.env.get("SPARK_GRAFT_NO_LOCAL_SERVE").contains("1")
 
   /** Shard visibility under the compaction log.
     * @param present  every `shard=` dir currently under blocks/

@@ -6,10 +6,10 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 import QueryParser._
 
-/** Driver-resident GRAMMAR serving -- the local/distributed seam of
-  * [[IndexReader.serveTopKOr]] extended to the full query grammar
-  * (phrase / near / window chains, NOT, OR, prefix, range, synonym,
-  * fuzzy, the 5-knob score algebra, pagination and rank modes).
+/** Driver-resident GRAMMAR serving: the local side of the
+  * local/distributed seam, over the full query grammar (phrase / near /
+  * window chains, NOT, OR, prefix, range, synonym, fuzzy, the 5-knob score
+  * algebra, pagination and rank modes).
   *
   * The reference answers every interactive query from RAM-resident
   * posting lists (README.md:16-18; CompleterBase intersects in-process
@@ -62,14 +62,16 @@ object LocalServe {
   private val EmptyAtom = LocalAtom(Array.empty, Array.empty, Array.empty,
     Array.empty, Array.empty, Array.empty)
 
-  /** Per-reader decoded-atom LRU, keyed by (index epoch, atom) so a rebuild
-    * into the same directory never serves stale lists; bounded by the same
-    * postings budget as the keyword-path list cache
-    * ([[IndexReader.LocalListBudgetPostings]]). Held in a weak map keyed by
-    * reader INSTANCE: the cache dies with its reader, so rebuilds /
+  /** Per-reader decoded-atom LRU -- the driver's only postings cache --
+    * keyed by (index epoch, atom) so a rebuild into the same directory
+    * never serves stale lists. Held weight ([[LocalAtom.weight]]) stays
+    * within [[IndexReader.LocalListBudgetPostings]]: an insert evicts least
+    * recently used entries until it fits, but never the entry it inserts, so
+    * a single atom over the budget is still held (alone). Held in a weak map
+    * keyed by reader INSTANCE: the cache dies with its reader, so rebuilds /
     * short-lived readers cannot accumulate driver memory.
     */
-  private final class AtomCache {
+  private[graft] final class AtomCache {
     private val lru = new java.util.LinkedHashMap[(Long, Atom), LocalAtom](16, 0.75f, true)
     private var weight = 0L
     def count: Int = synchronized(lru.size)
@@ -634,13 +636,6 @@ object LocalServe {
     */
   val ResultCacheMaxEntries: Int = 4096
 
-  /** A/B kill switch (SPARK_GRAFT_NO_RESULT_HISTORY=1): disable the
-    * whole-result page cache so latency probes can separate history-hit
-    * cost from the local compute path.
-    */
-  private lazy val resultHistoryEnabled: Boolean =
-    !sys.env.get("SPARK_GRAFT_NO_RESULT_HISTORY").contains("1")
-
   private val resultCaches = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[IndexReader, ResultCache]())
   private def resultCacheFor(reader: IndexReader): ResultCache =
@@ -667,7 +662,7 @@ object LocalServe {
   private def historyPage(reader: IndexReader,
                           key: (Long, String, String, Int, QueryParams),
                           schema: StructType)(compute: => Option[Seq[Row]]): Option[Page] = {
-    val cached = if (resultHistoryEnabled) resultCacheFor(reader).get(key) else null
+    val cached = resultCacheFor(reader).get(key)
     if (cached != null) return Some(cached)
     compute.map { rows =>
       val p = new Page(reader.spark, rows, schema)
@@ -683,10 +678,7 @@ object LocalServe {
 
   /** The local twin of [[Eval.hits]]: 4dp rounding applied BEFORE the
     * ordering (the distributed contract: evalDocs rounds, hits sorts), page
-    * [firstHit, firstHit + k) of the total order. Only a candidate window
-    * is rounded: rounding is monotone and moves a value <= 5e-5, so only
-    * docs within 1e-4 of the boundary's raw score can cross it -- the same
-    * argument [[IndexReader.serveTopKOr]]'s spec pins.
+    * [firstHit, firstHit + k) of the total order ([[roundedTop]]).
     *
     * Rows of [[HitSchema]]; None -> the caller runs the distributed plans.
     */
@@ -701,8 +693,7 @@ object LocalServe {
 
   private def hitPage(reader: IndexReader, query: String, k: Int,
                       params: QueryParams): Option[Page] =
-    if (!IndexReader.localServeEnabled) None
-    else historyPage(reader, (reader.indexEpoch, "h", query, k, params), HitSchema)(
+    historyPage(reader, (reader.indexEpoch, "h", query, k, params), HitSchema)(
       evalHits(reader, query, k, params))
 
   private def evalHits(reader: IndexReader, query: String, k: Int,
@@ -717,35 +708,55 @@ object LocalServe {
           val ids = if (asc) rel.docIds.indices else rel.docIds.indices.reverse
           ids.slice(params.firstHit, n)
             .map(i => (rel.docIds(i), round4(rel.scores(i))))
-        case _ if n == 0 => Seq.empty // k = 0: an empty page of the order
         case _ =>
-          val asc = params.sortDocsAsc.getOrElse(false)
-          val cand: Array[Int] =
-            if (n >= rel.docIds.length) rel.docIds.indices.toArray
-            else {
-              // raw boundary via a size-n heap, then the 1e-4 safety margin
-              val heap = new java.util.PriorityQueue[java.lang.Double](n,
-                if (asc) java.util.Comparator.reverseOrder[java.lang.Double]()
-                else java.util.Comparator.naturalOrder[java.lang.Double]())
-              rel.scores.foreach { v =>
-                if (heap.size < n) heap.add(v)
-                else if (if (asc) v < heap.peek() else v > heap.peek()) {
-                  heap.poll(); heap.add(v)
-                }
-              }
-              val cut = heap.peek()
-              rel.scores.indices.filter(i =>
-                if (asc) rel.scores(i) <= cut + 1e-4
-                else rel.scores(i) >= cut - 1e-4).toArray
-            }
-          val rounded = cand.map(i => (rel.docIds(i), round4(rel.scores(i))))
-          val sorted =
-            if (asc) rounded.sortBy { case (doc, sc) => (sc, doc) }
-            else rounded.sortBy { case (doc, sc) => (-sc, doc) }
-          sorted.slice(params.firstHit, n).toSeq
+          roundedTop(rel.docIds, rel.scores, n, params.sortDocsAsc.getOrElse(false))
+            .drop(params.firstHit)
       }
       page.map { case (doc, sc) => Row(doc, sc) }
     }
+  }
+
+  /** The first `n` (doc_id, score) pairs of the order (rounded score desc,
+    * or asc when `asc`; then doc_id asc), where each raw score is rounded
+    * to 4dp HALF_UP first -- Spark's `round`, as [[Eval]] applies it before
+    * ordering -- while rounding and sorting only a window of the rows.
+    *
+    * Exactness (descending; ascending mirrors it): let c be the n-th best
+    * RAW score. Rounding is monotone, so the n raw-best rows all round to
+    * >= round(c), and the n-th best ROUNDED score is >= round(c). Rounding
+    * moves a value by at most 5e-5, so a row with raw s < c - 1e-4 rounds to
+    * <= s + 5e-5 < c - 5e-5 <= round(c): strictly below n other rows,
+    * whatever its doc_id. Every row of the rounded first n therefore has
+    * raw s >= c - 1e-4, and the window {s >= c - 1e-4} ordered in full gives
+    * the same first n as ordering every row. The window may hold more than n
+    * rows -- a row just outside the raw first n can round equal to the n-th
+    * and win on doc_id -- so the window's order decides, not the raw heap.
+    */
+  private[query] def roundedTop(docIds: Array[Long], scores: Array[Double], n: Int,
+                                asc: Boolean): Seq[(Long, Double)] = {
+    if (n <= 0) return Seq.empty
+    val cand: Array[Int] =
+      if (n >= docIds.length) docIds.indices.toArray
+      else {
+        // raw boundary via a size-n heap, then the 1e-4 window
+        val heap = new java.util.PriorityQueue[java.lang.Double](n,
+          if (asc) java.util.Comparator.reverseOrder[java.lang.Double]()
+          else java.util.Comparator.naturalOrder[java.lang.Double]())
+        scores.foreach { v =>
+          if (heap.size < n) heap.add(v)
+          else if (if (asc) v < heap.peek() else v > heap.peek()) {
+            heap.poll(); heap.add(v)
+          }
+        }
+        val cut = heap.peek()
+        scores.indices.filter(i =>
+          if (asc) scores(i) <= cut + 1e-4 else scores(i) >= cut - 1e-4).toArray
+      }
+    val rounded = cand.map(i => (docIds(i), round4(scores(i))))
+    val sorted =
+      if (asc) rounded.sortBy { case (doc, sc) => (sc, doc) }
+      else rounded.sortBy { case (doc, sc) => (-sc, doc) }
+    sorted.take(n).toSeq
   }
 
   /** The local twin of [[Eval.completions]]: the last part's terms within
@@ -763,8 +774,7 @@ object LocalServe {
 
   private def completionPage(reader: IndexReader, query: String, k: Int,
                              params: QueryParams): Option[Page] =
-    if (!IndexReader.localServeEnabled) None
-    else historyPage(reader, (reader.indexEpoch, "c", query, k, params), CompletionSchema)(
+    historyPage(reader, (reader.indexEpoch, "c", query, k, params), CompletionSchema)(
       evalCompletions(reader, query, k, params))
 
   private def evalCompletions(reader: IndexReader, query: String, k: Int,
@@ -901,10 +911,6 @@ object LocalServe {
     df.queryExecution.analyzed.collectLeaves().forall(
       _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
 
-  /** Local docs serving applies: the seam is on and a docs store exists. */
-  private def docsLocal(reader: IndexReader): Boolean =
-    IndexReader.localServeEnabled && reader.hasDocsStore
-
   /** The exact [[Excerpts.generateAll]] algorithm in-process, using the
     * same lowercase code path Catalyst's `lower` uses (UTF8String), the
     * same separator regex and window arithmetic -- spec-pinned identical.
@@ -935,7 +941,7 @@ object LocalServe {
     */
   def excerptsOf(reader: IndexReader, ids: Seq[Long], exact: Seq[String],
                  prefixes: Seq[String], er: Int, en: Int): Option[Map[Long, String]] =
-    if (!docsLocal(reader)) None
+    if (!reader.hasDocsStore) None
     else Some(docTexts(reader, ids).map { case (id, (_, text)) =>
       id -> generateAllLocal(text, exact, prefixes, er, en)
     })
@@ -944,7 +950,7 @@ object LocalServe {
     * [[graft.api.Search]] urlsOf twin); absent ids get no entry.
     */
   def urlsOf(reader: IndexReader, ids: Seq[Long]): Option[Map[Long, String]] =
-    if (!docsLocal(reader)) None
+    if (!reader.hasDocsStore) None
     else Some(docTexts(reader, ids).map { case (id, (url, _)) => id -> url })
 
   /** [[excerptsOf]] for an already-local hits relation, as a
@@ -952,7 +958,7 @@ object LocalServe {
     */
   def excerptsAll(reader: IndexReader, hits: DataFrame, exact: Seq[String],
                   prefixes: Seq[String], er: Int, en: Int): Option[DataFrame] = {
-    if (!docsLocal(reader) || !isLocalRelation(hits)) return None
+    if (!reader.hasDocsStore || !isLocalRelation(hits)) return None
     val spark = reader.spark
     import spark.implicits._
     val ids = hits.collect().map(_.getLong(0)).toSeq
@@ -962,7 +968,7 @@ object LocalServe {
 
   /** [[urlsOf]] for an already-local hits relation. */
   def urls(reader: IndexReader, hits: DataFrame): Option[Map[Long, String]] = {
-    if (!docsLocal(reader) || !isLocalRelation(hits)) return None
+    if (!reader.hasDocsStore || !isLocalRelation(hits)) return None
     urlsOf(reader, hits.collect().map(_.getLong(0)).toSeq)
   }
 }

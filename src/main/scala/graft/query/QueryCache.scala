@@ -1,186 +1,7 @@
 package graft.query
 
-import graft.core.Analysis
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-
-/** Result cache / history (reference: History.h:25-110 -- byte-budgeted
-  * LRU of query -> QueryResult, plus the prefix-filtering fast path
-  * copyAndFilter, CompleterBase.cpp:2435-2504: answer `schedul*` by
-  * filtering the cached postings of `schedu*` instead of touching the
-  * index).
-  *
-  * Spark translation: an LRU of query string -> persisted Dataset, evicted
-  * by BOTH an entry cap and a byte budget (reference: HISTORY_MAX_SIZE,
-  * Globals.cpp -- the history owns a bounded number of BYTES, not entries;
-  * 200 cached `a*`-sized relations is unbounded memory at production
-  * scale). Entry sizes are measured once at insert from the materialized
-  * relation (see [[QueryHistory.estimateBytes]]). The filtering fast path
-  * re-filters the cached matched doc-term relation by the narrower term
-  * range -- no re-scan, no re-tokenize; Catalyst plans a filter over the
-  * in-memory relation.
-  */
-class QueryCache(maxEntries: Int = 200,
-                 maxBytes: Long = QueryHistory.DefaultMaxBytes) {
-
-  /** inflight counts derivations currently materializing OUTSIDE the lock
-    * from this entry's relation: eviction skips such entries, so the base
-    * of an in-flight copyAndFilter is never unpersisted mid-job (the
-    * round-3 corruption scenario) -- the recency refresh alone cannot
-    * guarantee that against an oversized insert evicting everything.
-    */
-  private case class Entry(prefix: String, matched: DataFrame, bytes: Long,
-                           inflight: java.util.concurrent.atomic.AtomicInteger =
-                             new java.util.concurrent.atomic.AtomicInteger(0))
-  private val lru = new java.util.LinkedHashMap[String, Entry](16, 0.75f, true)
-  private var totalBytes = 0L
-
-  var hits = 0L
-  var filteredHits = 0L
-  var misses = 0L
-  var evictions = 0L
-
-  /** Matched doc-term relation for a prefix query, via cache:
-    * exact hit, or filter of any cached shorter prefix, or compute+persist.
-    *
-    * The monitor guards only map lookups/puts (same discipline as
-    * [[IndexQueryCache.atomScored]]): persist and the size measurement run
-    * blocking driver jobs and must not serialize a serving session's
-    * unrelated queries behind one cold miss. Two threads missing the same
-    * prefix may both compute; the loser's handle is dropped (its
-    * semantically-equal plan shares the winner's single Spark cache entry).
-    */
-  def matchedForPrefix(corpus: DataFrame, prefix: String): DataFrame = {
-    val fast: Either[(Option[DataFrame], Option[Entry]), DataFrame] = synchronized {
-      val exact = lru.get(prefix)
-      if (exact != null) { hits += 1; Right(exact.matched) }
-      else {
-        // copyAndFilter fast path: longest cached proper prefix of `prefix`
-        val candidates = lru.entrySet().iterator()
-        var best: Entry = null
-        while (candidates.hasNext) {
-          val e = candidates.next().getValue
-          if (prefix.startsWith(e.prefix) && (best == null || e.prefix.length > best.prefix.length))
-            best = e
-        }
-        if (best != null) {
-          filteredHits += 1
-          // refresh the base entry's recency AND mark it in flight: the
-          // derived plan materializes outside the lock, and eviction must
-          // neither pick the hottest base (LRU) nor unpersist it mid-job
-          // (the inflight skip in evictOverBudget)
-          lru.get(best.prefix)
-          best.inflight.incrementAndGet()
-          Left((Some(best.matched.filter(col("term").startsWith(prefix))), Some(best)))
-        } else {
-          misses += 1
-          Left((None, None))
-        }
-      }
-    }
-    fast match {
-      case Right(df) => df
-      case Left((planOpt, baseOpt)) =>
-        // outside the lock: may run driver jobs (tokenize scan, persist
-        // materialization via the size measurement)
-        try {
-          val matched = planOpt.getOrElse(
-            Analysis.docTerms(corpus).toDF().filter(col("term").startsWith(prefix)))
-          val persisted = matched.persist()
-          val bytes = QueryHistory.estimateBytes(persisted)
-          synchronized {
-            val won = lru.get(prefix)
-            if (won != null) {
-              // lost the race. If the two plans are semantically equal they
-              // share ONE Spark cache entry, which the winner's eviction
-              // releases -- unpersisting here would yank it from under the
-              // winner's possibly in-flight query. If they are NOT equal
-              // (we scanned cold, the winner filtered a cached base), ours
-              // is a distinct entry nobody references: release it or it
-              // pins executor storage forever.
-              if (!persisted.queryExecution.analyzed
-                    .sameResult(won.matched.queryExecution.analyzed))
-                persisted.unpersist()
-              won.matched
-            } else {
-              lru.put(prefix, Entry(prefix, persisted, bytes))
-              totalBytes += bytes
-              evictOverBudget()
-              persisted
-            }
-          }
-        } finally baseOpt.foreach(_.inflight.decrementAndGet())
-    }
-  }
-
-  /** Evict least-recently-used entries while over the entry cap or byte
-    * budget; the just-inserted (youngest) entry is never the victim, so a
-    * single oversized relation stays cached alone rather than thrashing.
-    * Entries with in-flight derivations are skipped -- unpersisting a base
-    * while a filter-of-base materializes corrupted results (round 3).
-    */
-  private def evictOverBudget(): Unit = {
-    val it = lru.entrySet().iterator()
-    var seen = 0
-    val candidates = lru.size - 1 // everything but the youngest
-    while ((lru.size > maxEntries || totalBytes > maxBytes) &&
-        it.hasNext && seen < candidates) {
-      val eldest = it.next()
-      seen += 1
-      if (eldest.getValue.inflight.get() == 0) {
-        eldest.getValue.matched.unpersist()
-        totalBytes -= eldest.getValue.bytes
-        evictions += 1
-        it.remove()
-      }
-    }
-  }
-
-  /** Current estimated cached bytes (spec hook). */
-  def cachedBytes: Long = synchronized(totalBytes)
-  def size: Int = synchronized(lru.size)
-
-  /** Re-top-k from the cached matched relation under a (possibly new) k
-    * and rank mode -- the reference's History fast path when only the
-    * result window or sort changes (CompleterBase.cpp:1106-1266): the
-    * postings come from the cache, never from the index/corpus; only the
-    * aggregation + TakeOrdered re-runs.
-    */
-  def topHitsForPrefix(corpus: DataFrame, prefix: String, k: Int,
-                       rankBy: String = "score"): DataFrame = {
-    val matched = matchedForPrefix(corpus, prefix)
-    val st = Analysis.statsCached(corpus)
-    val dfTbl = matched.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val base = matched.join(broadcast(dfTbl), "term")
-      .select(col("doc_id"),
-        Analysis.bm25Col(st.n_docs, st.avgdl, col("tf"), col("df"), col("dl")).as("score"))
-      .groupBy(col("doc_id"))
-      .agg(round(sum(col("score")), 4).as("score"))
-    val ordered = rankBy match {
-      case "score" => base.orderBy(col("score").desc, col("doc_id").asc)
-      case "doc" => base.orderBy(col("doc_id").asc)
-      case "doc_desc" => base.orderBy(col("doc_id").desc)
-      case other => throw new IllegalArgumentException(s"unknown rank mode: $other")
-    }
-    ordered.limit(k)
-  }
-
-  /** Warm list (reference: --warm-history-queries, src/README.md:40-47):
-    * pre-materialize the hot prefixes so first user queries hit the cache.
-    */
-  def warm(corpus: DataFrame, prefixes: Seq[String]): Unit =
-    prefixes.foreach { p => matchedForPrefix(corpus, p).count() }
-
-  def clear(): Unit = synchronized {
-    // same in-flight discipline as eviction: a base whose derivation is
-    // materializing outside the lock is dropped from the map but NOT
-    // unpersisted (a rare bounded leak beats the mid-job unpersist)
-    lru.values().forEach(e => if (e.inflight.get() == 0) e.matched.unpersist())
-    lru.clear()
-    totalBytes = 0
-    hits = 0; filteredHits = 0; misses = 0; evictions = 0
-  }
-}
 
 /** Process-wide serving history and its helpers.
   *
@@ -306,7 +127,8 @@ class IndexQueryCache(maxEntries: Int = 200,
     * must not unpersist what another owner may still serve.
     */
   /** inflight: derivations currently materializing outside the lock from
-    * this entry's relation; eviction skips such entries (see QueryCache).
+    * this entry's relation, plus open borrow scopes holding it; eviction
+    * skips such entries (see [[evictOverBudget]]).
     */
   /** dropped: the entry left the map (clear) while references were still
     * out; the LAST reference release performs the deferred unpersist --

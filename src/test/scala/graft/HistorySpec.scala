@@ -1,7 +1,8 @@
 package graft
 
 import graft.index.{IndexBuilder, IndexReader}
-import graft.query.{CachedIndexAtomSource, Eval, IndexQueryCache, QueryHistory}
+import graft.query.{CachedCorpusAtomSource, CachedIndexAtomSource, CorpusAtomSource, Eval,
+  IndexQueryCache, QueryHistory}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The serving history's lifecycle contract (round-4 verdict items 1+2):
@@ -97,6 +98,27 @@ class HistorySpec extends AnyFunSuite {
       s"persisted relations must stay bounded by the history cap (grew by ${after - before})")
     // repeated queries were answered from the history, not recomputed
     assert(cache.hits > 0)
+    cache.clear()
+  }
+
+  test("corpus path: a prefix extension filters the cached relation, no rescan") {
+    import graft.query.QueryParser.Word
+    val c = Seq((1L, "schedule scheduling scheme"), (2L, "scheduling talk"))
+      .toDF("doc_id", "text")
+    val cache = new IndexQueryCache()
+    val src = new CachedCorpusAtomSource(c, normVariants = false, cache)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc_id", "term", "tf", "positions", "score", "score1").collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getSeq[Int](3),
+          r.getDouble(4), r.getDouble(5))).sortBy(r => (r._1, r._2)).toSeq
+    assert(rows(src.atomScored(Word("sch", prefix = true))).size === 4)
+    assert(cache.misses === 1 && cache.filteredHits === 0)
+    // `schedul*` after `sch*`: answered by filtering the cached relation
+    val narrowed = rows(src.atomScored(Word("schedul", prefix = true)))
+    assert(cache.misses === 1 && cache.filteredHits === 1)
+    assert(narrowed.size === 3)
+    assert(narrowed ===
+      rows(new CorpusAtomSource(c).atomScored(Word("schedul", prefix = true))))
     cache.clear()
   }
 

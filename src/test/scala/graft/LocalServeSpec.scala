@@ -140,15 +140,16 @@ class LocalServeSpec extends AnyFunSuite {
 
   test("serveHits equals the reader-native serving facades on their shapes") {
     // the bench QuerySet routes keyword/OR/prefix through serveHits (the
-    // client surface); the reader-native facades must agree exactly
+    // client surface); the reader's own keyword and prefix operators
+    // (topKOrFull, topKPrefixDocs) must agree exactly
     assert(hitsRows(IndexExecutor.serveHits(reader, "aachen", 10)) ===
-      hitsRows(reader.serveTopKOr(Seq("aachen"), 10)))
+      hitsRows(reader.topKOrFull(Seq("aachen"), 10)))
     assert(hitsRows(IndexExecutor.serveHits(reader, "aachen|aal|merge", 10)) ===
-      hitsRows(reader.serveTopKOr(Seq("aachen", "aal", "merge"), 10)))
+      hitsRows(reader.topKOrFull(Seq("aachen", "aal", "merge"), 10)))
     assert(hitsRows(IndexExecutor.serveHits(reader, "aa*", 10)) ===
-      hitsRows(reader.servePrefixDocs("aa", 10)))
+      hitsRows(reader.topKPrefixDocs("aa", 10)))
     assert(hitsRows(IndexExecutor.serveHits(reader, "ba*", 10)) ===
-      hitsRows(reader.servePrefixDocs("ba", 10)))
+      hitsRows(reader.topKPrefixDocs("ba", 10)))
   }
 
   test("whole-result history: repeats hit the page cache, keyed by params") {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.query.{Executor, QueryCache, QueryParser}
+import graft.query.{Executor, QueryParser}
 import graft.query.QueryParser._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -324,70 +324,5 @@ class ExcerptsSpec extends AnyFunSuite {
         exact = Seq("batch"), prefixes = Seq.empty, er = 2, en = 3)
       .collect().head.getString(1)
     assert(ex === "<hl>batch</hl> end")
-  }
-}
-
-class QueryCacheSpec extends AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
-  import spark.implicits._
-
-  test("prefix filtering fast path reuses cached relation") {
-    val corpus = Seq((1L, "schedule scheduling scheme"), (2L, "scheduling talk"))
-      .toDF("doc_id", "text")
-    val cache = new QueryCache(maxEntries = 10)
-    val a = cache.matchedForPrefix(corpus, "sch")
-    assert(a.count() === 4)
-    assert(cache.misses === 1)
-    val b = cache.matchedForPrefix(corpus, "schedul")
-    assert(b.count() === 3)
-    assert(cache.filteredHits === 1) // derived from cached "sch", no rescan
-    val c = cache.matchedForPrefix(corpus, "schedul")
-    assert(c.count() === 3)
-    assert(cache.hits === 1)
-    cache.clear()
-  }
-
-  test("warm list pre-materializes hot prefixes") {
-    val corpus = Seq((1L, "alpha alphabet beta")).toDF("doc_id", "text")
-    val cache = new QueryCache(maxEntries = 10)
-    cache.warm(corpus, Seq("al", "be"))
-    assert(cache.misses === 2)
-    cache.matchedForPrefix(corpus, "al")
-    assert(cache.hits === 1) // served from the warm list
-    cache.clear()
-  }
-
-  test("re-top-k under new k / rank mode reuses cached postings") {
-    val corpus = Seq(
-      (1L, "alpha alpha alpha beta"),
-      (2L, "alpha beta beta"),
-      (3L, "alphabet gamma")).toDF("doc_id", "text")
-    val cache = new QueryCache(maxEntries = 10)
-    val top1 = cache.topHitsForPrefix(corpus, "alpha", 1)
-    assert(top1.count() === 1)
-    // changed k and rank mode: no new miss -- postings come from the cache
-    val byDoc = cache.topHitsForPrefix(corpus, "alpha", 3, rankBy = "doc")
-      .collect().map(_.getLong(0)).toSeq
-    assert(byDoc === Seq(1L, 2L, 3L))
-    assert(cache.misses === 1)
-    assert(cache.hits === 1)
-    // scores match the engine's prefix ranking
-    val engine = graft.query.Engine.topKPrefix(corpus, "alpha", 3)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val cached = cache.topHitsForPrefix(corpus, "alpha", 3)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    assert(cached === engine)
-    cache.clear()
-  }
-
-  test("LRU evicts beyond capacity") {
-    val corpus = Seq((1L, "aa ab ac ad")).toDF("doc_id", "text")
-    val cache = new QueryCache(maxEntries = 2)
-    cache.matchedForPrefix(corpus, "aa")
-    cache.matchedForPrefix(corpus, "ab")
-    cache.matchedForPrefix(corpus, "ac")
-    cache.matchedForPrefix(corpus, "aa") // evicted -> recompute
-    assert(cache.misses === 4)
-    cache.clear()
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.index.{IndexBuilder, IndexReader}
+import graft.query.{IndexExecutor, LocalServe, QueryParams}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Block-max WAND must (a) actually prune blocks on a skewed corpus and
@@ -84,27 +85,34 @@ class WandSpec extends AnyFunSuite {
     def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Double)] =
       df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
 
-    // parity: the local path must equal the distributed operators exactly
-    // (same scores at 4dp, same total order) -- single keyword, OR, prefix
-    for (q <- Seq(Seq("gold"), Seq("gold", "web"), Seq("silver", "mining", "web")))
-      assert(rows(reader.serveTopKOr(q, 10)) === rows(reader.topKOrFull(q, 10)), q)
-    assert(rows(reader.servePrefixDocs("numbe", 10)) ===
-      rows(reader.topKPrefixDocs("numbe", 10)))
-    assert(rows(reader.servePrefixDocs("go", 10)) ===
-      rows(reader.topKPrefixDocs("go", 10)))
-    // guard fallback: a zero budget forces the distributed plan -- results
-    // identical either way
-    assert(rows(reader.serveTopKOr(Seq("gold", "web"), 10, maxLocalPostings = 0)) ===
-      rows(reader.serveTopKOr(Seq("gold", "web"), 10)))
-    assert(rows(reader.servePrefixDocs("go", 10, maxLocalPostings = 0)) ===
-      rows(reader.servePrefixDocs("go", 10)))
+    // parity: the serving facade (IndexExecutor.serveHits -> LocalServe)
+    // must equal the reader's distributed operators exactly (same scores at
+    // 4dp, same total order) -- single keyword, OR, prefix
+    for ((q, terms) <- Seq("gold" -> Seq("gold"), "gold|web" -> Seq("gold", "web"),
+        "silver|mining|web" -> Seq("silver", "mining", "web"))) {
+      assert(LocalServe.hits(reader, q, 10, QueryParams.Default).isDefined, q)
+      assert(rows(IndexExecutor.serveHits(reader, q, 10)) ===
+        rows(reader.topKOrFull(terms, 10)), q)
+    }
+    for (p <- Seq("numbe", "go")) {
+      assert(LocalServe.hits(reader, s"$p*", 10, QueryParams.Default).isDefined, p)
+      assert(rows(IndexExecutor.serveHits(reader, s"$p*", 10)) ===
+        rows(reader.topKPrefixDocs(p, 10)), p)
+    }
+    // the same shapes on the distributed Eval plans: results identical to
+    // the driver-resident path
+    for (q <- Seq("gold", "gold|web", "silver|mining|web", "numbe*", "go*",
+        "nosuchword", "gold|nosuchword"))
+      assert(rows(IndexExecutor.serveHits(reader, q, 10)) ===
+        rows(IndexExecutor.topK(reader, q, 10)), q)
     // unknown terms: same empty/partial semantics as the operator path
-    assert(rows(reader.serveTopKOr(Seq("nosuchword"), 10)).isEmpty)
-    assert(rows(reader.serveTopKOr(Seq("gold", "nosuchword"), 10)) ===
+    assert(rows(IndexExecutor.serveHits(reader, "nosuchword", 10)).isEmpty)
+    assert(rows(IndexExecutor.serveHits(reader, "gold|nosuchword", 10)) ===
       rows(reader.topKOrFull(Seq("gold", "nosuchword"), 10)))
 
-    // warm = ZERO Spark jobs: every list is now driver-resident
-    assert(reader.localListCount > 0)
+    // warm = ZERO Spark jobs: the atoms are driver-resident, so both a
+    // repeated page and a new page (k = 5) over them run none
+    assert(LocalServe.cachedAtomCount(reader) > 0)
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
@@ -113,8 +121,10 @@ class WandSpec extends AnyFunSuite {
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      rows(reader.serveTopKOr(Seq("gold", "web"), 10))
-      rows(reader.servePrefixDocs("go", 10))
+      for (k <- Seq(10, 5)) {
+        rows(IndexExecutor.serveHits(reader, "gold|web", k))
+        rows(IndexExecutor.serveHits(reader, "go*", k))
+      }
       Thread.sleep(500) // listener bus is async
       assert(jobs.get() === 0, "warm serve must run no Spark jobs")
     } finally spark.sparkContext.removeSparkListener(listener)
