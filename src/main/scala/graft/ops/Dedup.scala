@@ -1,16 +1,24 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType}
+import scala.jdk.CollectionConverters._
 
 /** Large-scale training-data deduplication operators over the documents
   * table. All hashing is md5-based so the DuckDB oracle can reproduce
   * every value bit-for-bit (no engine-private hash functions).
   *
-  * Scale notes: shingle join size is bounded by sum(df^2) over shingles;
-  * 5-token shingles keep df tiny on natural text, and [[jaccardPairs]]
-  * caps head-shingle df (`maxShingleDf`) so boilerplate shingles can't
-  * blow the self-join up quadratically.
+  * Scale notes:
+  *  - [[jaccardPairs]] is an exact prefix-filtered join: a doc pairs only
+  *    through the rarest shingles of its set (its prefix under a global
+  *    (df, shingle) order), and candidates are verified against the full
+  *    sets. Head shingles sort last, so they rarely reach a prefix, and
+  *    the `maxShingleDf` cap drops boilerplate shingles altogether. No row
+  *    holds more than one doc's shingle set.
+  *  - [[duplicateClusters]] answers on the driver (union-find) when the
+  *    pairs fit [[MaxDriverEdges]] rows, about 30 MB of driver memory, and
+  *    runs distributed min-label rounds past it.
   */
 object Dedup {
 
@@ -49,61 +57,87 @@ object Dedup {
         max(col("doc_id")).cast("long").as("max_doc_id"))
       .filter(col("n_docs") > 1)
 
-  /** Near-duplicate pairs by n-gram Jaccard >= threshold.
-    * Inverted-index self-join on shingle -> common counts; set sizes
-    * joined back; jaccard = common / (|A| + |B| - common).
+  /** Near-duplicate pairs by n-gram Jaccard: (a, b, jaccard) with a < b for
+    * every pair sharing a shingle whose jaccard = common / (|A| + |B| -
+    * common), rounded to 4 dp (HALF_UP), is >= threshold.
     *
     * maxShingleDf is the head-shingle guard (the 100 TB safety): a single
-    * boilerplate shingle shared by d docs contributes d^2 rows to the
-    * self-join, so shingles with df > maxShingleDf are dropped from the
-    * relation entirely (from both the common counts and the set sizes) --
-    * the standard near-dup approximation; pairs held together only by
-    * boilerplate are not near-duplicates worth reporting.
+    * boilerplate shingle shared by d docs would pair all d^2 of them, so
+    * shingles with df > maxShingleDf are dropped from every set (from the
+    * common counts and the set sizes alike) -- the standard near-dup
+    * approximation; pairs held together only by boilerplate are not
+    * near-duplicates worth reporting. The df pre-count aggregates counters
+    * only (map-side combined), so a shingle with df ~ 10^9 never builds a
+    * doc-id list.
+    *
+    * Exact prefix-filtered join (the AllPairs / PPJoin family): each doc's
+    * capped set is ordered by the global key (df, shingle), rarest first;
+    * two docs are a candidate only when they share one of their first
+    * p(|s|) = |s| - ceil(t' * |s|) + 1 shingles, t' = threshold - 0.00005,
+    * and every candidate is verified against the two full sets. Why no
+    * reported pair is lost:
+    *  - HALF_UP rounding moves jaccard by at most 0.00005, so a pair with
+    *    round(jaccard, 4) >= threshold has jaccard >= t';
+    *  - then common >= jaccard * |A u B| >= t' * |A|, so the pair shares at
+    *    least alpha = ceil(t' * |A|) of A's shingles (likewise for B);
+    *  - A's shingles after its prefix number alpha - 1, fewer than the
+    *    shared ones, so A's prefix holds a shared shingle, and so does B's.
+    *    Under one global order the smallest shared shingle comes first
+    *    among the shared ones in both sets, so it lies in both prefixes;
+    *  - a longer prefix only adds candidates, which verification drops, so
+    *    lengthening a prefix is always safe. The ceiling is therefore taken
+    *    of t' * |s| - PrefixSlack: the double rounding in t' and in the
+    *    product stays below 5e-7 for any array-sized |s| (< 2^31, each
+    *    error < |s| * 2^-52), so the computed ceiling is never above the
+    *    exact one -- float error can only lengthen the prefix.
+    *
+    * Scale shape: the per-doc sets (doc_id, shingles in (df, shingle)
+    * order) are materialized once per call by an eager localCheckpoint, not
+    * a cache, so no persisted relation outlives the returned plan; the
+    * prefix rows and both sides of the verification read them. No row holds
+    * more than one doc's set: candidates are (a, b) rows of an equi-join on
+    * prefix shingles, deduplicated before verification. High-df shingles
+    * sort last and rarely reach a prefix, so the join stays far below the
+    * sum(df^2) of the plain shingle self-join.
     */
   def jaccardPairs(docs: DataFrame, n: Int = 5, threshold: Double = 0.5,
                    maxShingleDf: Long = 1000L): DataFrame = {
     val sh0 = shingles(docs, n)
-    // two-phase head guard, NOT a collect-then-filter: the df pre-count
-    // aggregates counters only (map-side combined), so a pathological
-    // boilerplate shingle with df ~ 10^9 never builds a doc-id list at
-    // all -- the list aggregation below only ever sees shingles with
-    // df <= maxShingleDf, bounding its per-group buffer by the cap
-    val rare = sh0.groupBy(col("shingle")).agg(count(lit(1)).as("sdf"))
-      .filter(col("sdf") <= maxShingleDf).select(col("shingle"))
-    // per-shingle POSTING LIST (sorted doc ids), cached: both consumers
-    // (pair generation and per-doc set sizes) read this one row-per-
-    // shingle relation -- smaller than the exploded (doc, shingle)
-    // relation the old shape cached
-    val grouped = sh0.join(rare, Seq("shingle"), "left_semi")
-      .groupBy(col("shingle"))
-      .agg(sort_array(collect_list(col("doc_id"))).as("ds"))
-      .cache()
-    // candidate pairs GENERATED IN-ROW from each posting list (every
-    // (i, j>i) combination of the sorted list -- a < b for free) instead
-    // of the shingle-keyed self-join: the d^2 candidate rows come out of
-    // one codegen'd projection per shingle rather than through a second
-    // shuffle of the whole shingle relation plus join machinery; per-row
-    // transient state is bounded by maxShingleDf^2 struct entries (the
-    // head guard above). This is the reference posting-list shape: pair
-    // enumeration walks each (bounded) inverted list, never a join.
-    val common = grouped
-      .select(explode(flatten(transform(col("ds"), (x, i) =>
-        transform(slice(col("ds"), i + 2,
-            greatest(size(col("ds")) - i - 1, lit(0))),
-          y => struct(x.as("a"), y.as("b")))))).as("p"))
-      .select(col("p.a").as("a"), col("p.b").as("b"))
-      .groupBy(col("a"), col("b"))
-      .agg(count(lit(1)).as("common"))
-    val sizes = grouped.select(explode(col("ds")).as("doc_id"))
-      .groupBy(col("doc_id")).agg(count(lit(1)).as("n_shingles"))
-    common
-      .join(sizes.toDF("a", "na"), "a")
-      .join(sizes.toDF("b", "nb"), "b")
+    val df = sh0.groupBy(col("shingle")).agg(count(lit(1)).as("sdf"))
+      .filter(col("sdf") <= maxShingleDf)
+    val sets = sh0.join(df, "shingle")
+      .groupBy(col("doc_id"))
+      .agg(sort_array(collect_list(struct(col("sdf"), col("shingle")))).as("s"))
+      .select(col("doc_id"), col("s.shingle").as("s"))
+      .localCheckpoint(true)
+    val alpha = ceil(lit(threshold - RoundingSlack) * size(col("s")) - lit(PrefixSlack))
+    val prefixLen = greatest(size(col("s")) - alpha + 1, lit(0)).cast("int")
+    val prefix = sets.select(col("doc_id"),
+      explode(slice(col("s"), lit(1), prefixLen)).as("shingle"))
+    val candidates = prefix.select(col("shingle"), col("doc_id").as("a"))
+      .join(prefix.select(col("shingle"), col("doc_id").as("b")), "shingle")
+      .filter(col("a") < col("b"))
+      .select(col("a"), col("b")).distinct()
+    candidates
+      .join(sets.toDF("a", "sa"), "a")
+      .join(sets.toDF("b", "sb"), "b")
+      .select(col("a"), col("b"), size(col("sa")).as("na"), size(col("sb")).as("nb"),
+        size(array_intersect(col("sa"), col("sb"))).as("common"))
       .withColumn("jaccard",
         round(col("common") / (col("na") + col("nb") - col("common")), 4))
       .filter(col("jaccard") >= threshold)
       .select(col("a"), col("b"), col("jaccard"))
   }
+
+  /** Half a unit in the 4th decimal: how far HALF_UP rounding can lift a
+    * jaccard, so t' = threshold - RoundingSlack bounds every reported pair.
+    */
+  private val RoundingSlack = 0.00005
+
+  /** Subtracted from t' * |s| before the ceiling so double rounding can only
+    * lengthen a prefix (see [[jaccardPairs]]).
+    */
+  private val PrefixSlack = 1e-6
 
   /** The dedup OUTPUT for exact duplicates: one kept doc per distinct
     * content (the lowest doc_id -- deterministic canonical), i.e. what a
@@ -114,16 +148,37 @@ object Dedup {
       .agg(min(col("doc_id")).cast("long").as("doc_id"))
       .select(col("doc_id"))
 
+  /** Edge rows up to which [[duplicateClusters]] answers on the driver.
+    * Collected rows cost about 100 bytes an edge on the driver and the
+    * answer is a local relation of at most two rows an edge, so the bound
+    * allows roughly 10 MB of collected edges and 20 MB of local rows.
+    */
+  val MaxDriverEdges: Long = 100000L
+
   /** Near-duplicate CLUSTERS from a candidate-pair relation (a, b):
-    * connected components via iterative min-label propagation with pointer
-    * jumping -- label(x) starts as x; each round takes the min over x's
-    * neighborhood, then compresses one level through the label graph
-    * (lbl(x) := lbl(lbl(x))), so convergence is O(log diameter), not
-    * O(diameter): maxIter=10 covers components ~2^10 hops deep. Each round
-    * is a few hash-partitioned joins + aggregations -- no driver-side
-    * state, no collected edge list: the 100 TB shape for transitive dedup.
-    * Throws if maxIter rounds did not converge (a silently split component
-    * would mis-deduplicate downstream).
+    * connected components, labelled by their minimum id. Returns
+    * (doc_id, cluster) for every doc in `pairs`; cluster = min doc_id of
+    * the component.
+    *
+    * Small on the driver, large distributed -- the rule `LocalServe`
+    * applies to postings. The pair rows are materialized once (an eager
+    * localCheckpoint) and counted. When there are at most
+    * [[MaxDriverEdges]] of them, they are collected and a union-find rooted
+    * at each component's minimum id answers as one local relation with the
+    * rounds' schema. Past the bound the rounds below run; `maxIter` applies
+    * only to them.
+    *
+    * The rounds: iterative min-label propagation with pointer jumping --
+    * label(x) starts as x; each round takes the min over x's neighborhood,
+    * then compresses one level through the label graph (lbl(x) :=
+    * lbl(lbl(x))). A chain numbered in order settles in O(log diameter)
+    * rounds, but the jump only follows labels, so a chain with scattered
+    * ids can need rounds close to two thirds of its length (a 44-node
+    * chain with shuffled ids: up to 33 rounds). Each round is a few
+    * hash-partitioned joins + aggregations -- no driver-side state, no
+    * collected edge list: the 100 TB shape for transitive dedup. Throws if
+    * maxIter rounds did not converge (a silently split component would
+    * mis-deduplicate downstream).
     *
     * Every per-round relation is EAGERLY localCheckpoint'ed, not cached:
     * each round then plans against flat LogicalRDDs, so plan depth (and
@@ -138,15 +193,67 @@ object Dedup {
     * multi-executor cluster localCheckpoint trades executor-loss
     * recoverability for speed -- for multi-hour jobs swap in reliable
     * checkpoint() to the cluster FS, same shape.
-    *
-    * Returns (doc_id, cluster) for every doc in `pairs`; cluster = min
-    * doc_id of the component.
     */
-  def duplicateClusters(pairs: DataFrame, maxIter: Int = 10): DataFrame = {
-    // undirected edges, both directions
-    val edges = pairs.select(col("a").as("x"), col("b").as("y"))
-      .unionByName(pairs.select(col("b").as("x"), col("a").as("y")))
-      .distinct().localCheckpoint(true)
+  def duplicateClusters(pairs: DataFrame, maxIter: Int = 10): DataFrame =
+    duplicateClusters(pairs, maxIter, MaxDriverEdges)
+
+  /** [[duplicateClusters]] with the driver bound as an argument: 0 forces
+    * the distributed rounds.
+    */
+  private[graft] def duplicateClusters(pairs: DataFrame, maxIter: Int,
+                                       maxDriverEdges: Long): DataFrame = {
+    val pe = pairs.select(col("a").as("x"), col("b").as("y")).localCheckpoint(true)
+    // undirected edges, both directions (lazy: analysis gives the schema)
+    val sym = pe.unionByName(pe.select(col("y").as("x"), col("x").as("y")))
+    val schema = sym.groupBy(col("x")).agg(min(col("y")).as("minn"))
+      .select(col("x").as("doc_id"), least(col("x"), col("minn")).as("cluster")).schema
+    val idType = schema.head.dataType
+    val driverRows =
+      if ((idType == IntegerType || idType == LongType) &&
+          pe.queryExecution.toRdd.count() <= maxDriverEdges)
+        Some(pe.collect()).filterNot(_.exists(r => r.isNullAt(0) || r.isNullAt(1)))
+      else None
+    driverRows match {
+      case Some(rows) =>
+        val (ids, cluster) = unionFind(
+          rows.map(_.get(0).asInstanceOf[Number].longValue),
+          rows.map(_.get(1).asInstanceOf[Number].longValue))
+        val out = ids.indices.map { i =>
+          if (idType == IntegerType) Row(ids(i).toInt, cluster(i).toInt)
+          else Row(ids(i), cluster(i))
+        }
+        pairs.sparkSession.createDataFrame(out.asJava, schema)
+      case None => clusterRounds(sym.distinct().localCheckpoint(true), maxIter)
+    }
+  }
+
+  /** Connected components of the edges xs(k) -- ys(k): every distinct id,
+    * ascending, with its component's minimum id. Ids are ranked once, so
+    * index order is id order and a root that is always the smaller index
+    * is the component minimum.
+    */
+  private def unionFind(xs: Array[Long], ys: Array[Long]): (Array[Long], Array[Long]) = {
+    val ids = (xs ++ ys).distinct.sorted
+    val parent = Array.tabulate(ids.length)(identity)
+    def find(i: Int): Int = {
+      var r = i
+      while (parent(r) != r) r = parent(r)
+      var j = i
+      while (parent(j) != r) { val next = parent(j); parent(j) = r; j = next }
+      r
+    }
+    for (k <- xs.indices) {
+      val ra = find(java.util.Arrays.binarySearch(ids, xs(k)))
+      val rb = find(java.util.Arrays.binarySearch(ids, ys(k)))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    (ids, ids.indices.map(i => ids(find(i))).toArray)
+  }
+
+  /** The distributed rounds of [[duplicateClusters]] over materialized,
+    * symmetric, distinct edges (x, y).
+    */
+  private def clusterRounds(edges: DataFrame, maxIter: Int): DataFrame = {
     // round 0 derives labels directly from the edge relation (identity
     // start), so no materialized identity-label table is ever built
     var labels: DataFrame = null

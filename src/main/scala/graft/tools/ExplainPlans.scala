@@ -3,10 +3,18 @@ package graft.tools
 import graft.core.WebCorpus
 import graft.{FtQueries, IndexQueries}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Dumps formatted physical plans for the load-bearing queries so pruning /
   * pushdown / codegen claims can be inspected (dev tool, not in the driver
   * contract).
+  *
+  *   sbt "runMain graft.tools.ExplainPlans <sfDir>"          -- the fixed list
+  *   sbt "runMain graft.tools.ExplainPlans <sfDir> <gate>.." -- named gates of
+  *     `SparkEntry.queries`: every plan a gate executes, eager checkpoints
+  *     made while the DataFrame is built included, in its final adaptive
+  *     form (the gate itself runs into the noop sink)
   */
 object ExplainPlans {
   def main(args: Array[String]): Unit = {
@@ -20,6 +28,28 @@ object ExplainPlans {
       println(s"\n========== $name ==========")
       println(df.queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
+    }
+
+    if (args.length > 1) {
+      val executed = new java.util.concurrent.LinkedBlockingQueue[(String, QueryExecution)]()
+      spark.listenerManager.register(new QueryExecutionListener {
+        def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+          executed.add(funcName -> qe)
+        def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+      })
+      for (gate <- args.drop(1)) {
+        executed.clear()
+        graft.SparkEntry.queries(gate)(spark, sfDir).write.format("noop").mode("overwrite").save()
+        // listener events arrive asynchronously: drain until 5 s of quiet
+        Iterator.continually(executed.poll(5, java.util.concurrent.TimeUnit.SECONDS))
+          .takeWhile(_ != null).foreach { case (funcName, qe) =>
+            println(s"\n========== $gate: $funcName ==========")
+            println(qe.explainString(
+              org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
+          }
+      }
+      spark.stop()
+      return
     }
 
     show("ft_bm25_single (logical path)", FtQueries.bm25Single(spark, sfDir))

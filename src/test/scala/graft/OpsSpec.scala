@@ -61,10 +61,102 @@ class OpsSpec extends AnyFunSuite {
     // rounds, the round-0 join-free propagation AND the converged-after-
     // propagation early stop (r6 optimization): labels must still land on
     // the component min within the default maxIter via pointer jumping
+    // (driver bound 0: the distributed rounds, not the union-find)
     val chain = (1L until 12L).map(i => (i, i + 1)).toDF("a", "b")
-    val c = Dedup.duplicateClusters(chain).collect()
+    val c = Dedup.duplicateClusters(chain, 10, 0L).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(c === (1L to 12L).map(_ -> 1L).toMap)
+    // maxIter bounds only the rounds: one round cannot settle the chain,
+    // the driver path answers it whatever maxIter is
+    intercept[IllegalArgumentException](Dedup.duplicateClusters(chain, 1, 0L))
+    assert(Dedup.duplicateClusters(chain, 1).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap === c)
+  }
+
+  /** Connected components by breadth-first search: id -> component min. */
+  private def componentsOracle(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val adj = (edges ++ edges.map(_.swap)).groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2) }
+    adj.keys.map { start =>
+      val seen = scala.collection.mutable.Set(start)
+      var frontier = List(start)
+      while (frontier.nonEmpty) {
+        frontier = frontier.flatMap(adj).filter(seen.add)
+      }
+      start -> seen.min
+    }.toMap
+  }
+
+  /** A seeded graph over scattered ids: a chain, a star, a clique, disjoint
+    * pairs and random extra edges, with some edges repeated and some
+    * reversed.
+    */
+  private def randomGraph(seed: Int): Seq[(Long, Long)] = {
+    val rng = new scala.util.Random(seed)
+    val ids = rng.shuffle((0 until 400).map(i => 7L + 13L * i)).toIndexedSeq
+    var next = 0
+    def take(k: Int): IndexedSeq[Long] = { val xs = ids.slice(next, next + k); next += k; xs }
+    val chain = take(4 + rng.nextInt(9)).sliding(2).map(p => (p(0), p(1))).toSeq
+    val star = { val xs = take(3 + rng.nextInt(20)); xs.tail.map(x => (xs.head, x)) }
+    val clique = { val xs = take(3 + rng.nextInt(6)); for (x <- xs; y <- xs if x < y) yield (x, y) }
+    val disjoint = (0 until 1 + rng.nextInt(15)).map { _ => val p = take(2); (p(0), p(1)) }
+    val loose = take(60)
+    val extra = Seq.fill(rng.nextInt(40))((loose(rng.nextInt(60)), loose(rng.nextInt(60))))
+      .filter { case (x, y) => x != y }
+    val all = rng.shuffle(chain ++ star ++ clique ++ disjoint ++ extra)
+    val dups = all.take(rng.nextInt(10))
+    val reversed = all.takeRight(rng.nextInt(10)).map(_.swap)
+    rng.shuffle(all ++ dups ++ reversed)
+  }
+
+  /** Clusters through the driver path and through the rounds: equal rows,
+    * column names, types and nullability; returns the driver answer.
+    */
+  private def bothPaths(pairs: org.apache.spark.sql.DataFrame): Map[Long, Long] = {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    val local = Dedup.duplicateClusters(pairs)
+    // scattered ids slow min-label propagation down (a chain can take
+    // rounds near two thirds of its length), hence the generous maxIter
+    val rounds = Dedup.duplicateClusters(pairs, 60, 0L)
+    assert(local.queryExecution.analyzed.isInstanceOf[LocalRelation])
+    // (an empty input stays an empty local relation on either path)
+    if (!pairs.isEmpty) assert(!rounds.queryExecution.analyzed.isInstanceOf[LocalRelation])
+    assert(local.schema === rounds.schema)
+    val rows = local.collect()
+    assert(rows.toSet === rounds.collect().toSet)
+    rows.map(r => r.get(0).asInstanceOf[Number].longValue -> r.get(1).asInstanceOf[Number].longValue).toMap
+  }
+
+  test("duplicate clusters: driver union-find equals the distributed rounds") {
+    import spark.implicits._
+    for (seed <- 1 to 6) {
+      val g = randomGraph(seed)
+      val expected = componentsOracle(g)
+      assert(bothPaths(g.toDF("a", "b")) === expected, s"seed $seed, Long ids")
+      assert(bothPaths(g.map { case (a, b) => (a.toInt, b.toInt) }.toDF("a", "b")) === expected,
+        s"seed $seed, Int ids")
+    }
+    // nullable id columns keep their nullability on both paths
+    val g = randomGraph(7)
+    assert(bothPaths(g.map { case (a, b) => (Option(a), Option(b)) }.toDF("a", "b")) ===
+      componentsOracle(g))
+    assert(bothPaths(Seq.empty[(Long, Long)].toDF("a", "b")) === Map.empty)
+    assert(bothPaths(Seq((5L, 5L), (9L, 3L), (3L, 9L)).toDF("a", "b")) ===
+      Map(5L -> 5L, 3L -> 3L, 9L -> 3L))
+  }
+
+  test("duplicate clusters: MaxDriverEdges edges stay on the driver, one more runs the rounds") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    val n = Dedup.MaxDriverEdges
+    def pairs(k: Long) = spark.range(k).select((col("id") * 2).as("a"), (col("id") * 2 + 1).as("b"))
+    val atBound = Dedup.duplicateClusters(pairs(n))
+    val past = Dedup.duplicateClusters(pairs(n + 1))
+    assert(atBound.queryExecution.analyzed.isInstanceOf[LocalRelation])
+    assert(!past.queryExecution.analyzed.isInstanceOf[LocalRelation])
+    // every pair (2i, 2i + 1) is its own component, labelled 2i
+    for ((c, k) <- Seq(atBound -> n, past -> (n + 1))) {
+      assert(c.count() === 2 * k)
+      assert(c.filter(col("cluster") =!= col("doc_id") - col("doc_id") % 2).count() === 0)
+    }
   }
 
   test("jaccard pairs: exact counts match a brute-force shingle computation") {
@@ -161,6 +253,43 @@ class OpsSpec extends AnyFunSuite {
     val expected = jaccardOracle(texts, 1, 0.5, 1000L)
     assert(expected === Set((1L, 2L, 0.5)))
     assert(jaccardGot(texts, 1, 0.5, 1000L) === expected)
+  }
+
+  test("jaccard pairs: prefix-filter worst cases match the brute-force oracle") {
+    def toks(p: String, r: Range): Seq[String] = r.map(i => s"$p$i")
+    // tight overlap: |A| = 14, t' * 14 = 6.9993, so A pairs only through its
+    // first 14 - 7 + 1 = 8 shingles; B shares exactly ceil(t' * 14) = 7 of
+    // them, and a third doc lifts those 7 to the highest df, so they sort
+    // after A's 7 unique ones and exactly one reaches A's prefix
+    val tight = Seq(
+      1L -> (toks("u", 0 until 7) ++ toks("s", 0 until 7)).mkString(" "),
+      2L -> toks("s", 0 until 7).mkString(" "),
+      3L -> (toks("s", 0 until 7) ++ toks("v", 0 until 30)).mkString(" "))
+    val tightExpected = jaccardOracle(tight, 1, 0.5, 1000L)
+    assert(tightExpected.contains((1L, 2L, 0.5)))
+    assert(jaccardGot(tight, 1, 0.5, 1000L) === tightExpected)
+    // float boundary: (0.1438 - 0.00005) * 160 is 23 exactly, but the
+    // double product lands just above 23; a plain ceiling would give 24 and
+    // cut A's prefix to its 137 unique shingles, losing the pair sharing 23
+    // (23 / 160 = 0.14375 rounds HALF_UP to 0.1438)
+    val t = 0.1438
+    val product = (t - 0.00005) * 160
+    assert(product > 23 && product - 23 < 1e-9)
+    val edge = Seq(
+      1L -> (toks("u", 0 until 137) ++ toks("s", 0 until 23)).mkString(" "),
+      2L -> toks("s", 0 until 23).mkString(" "))
+    val edgeExpected = jaccardOracle(edge, 1, t, 1000L)
+    assert(edgeExpected === Set((1L, 2L, 0.1438)))
+    assert(jaccardGot(edge, 1, t, 1000L) === edgeExpected)
+  }
+
+  test("jaccard pairs leave no cached relation behind") {
+    import spark.implicits._
+    spark.catalog.clearCache()
+    val texts = (0L until 6L).map(i => (i, s"alpha beta gamma delta epsilon $i"))
+    assert(Dedup.jaccardPairs(texts.toDF("doc_id", "text"), n = 2, threshold = 0.3)
+      .collect().nonEmpty)
+    assert(spark.sharedState.cacheManager.isEmpty)
   }
 
   test("near-dup keep set: one canonical per component plus unpaired docs") {
