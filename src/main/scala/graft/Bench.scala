@@ -32,8 +32,8 @@ object Bench {
     // serveHits: the client surface (Search/CompletionServer route here) --
     // driver-resident grammar path + whole-result history under their
     // guards, the distributed plans past them; results are spec-pinned
-    // identical to the explicit operator paths (IndexExecutor.topK, the
-    // reader's topKOrFull/topKPrefixDocs).
+    // identical to the distributed Eval plans (IndexExecutor.topK) and,
+    // on the golden shapes, to the sequential scorer (GoldenSpec).
     "kw:spark" -> ((r: IndexReader) => graft.query.IndexExecutor.serveHits(r, "spark", 10)),
     "kw:merge" -> ((r: IndexReader) => graft.query.IndexExecutor.serveHits(r, "merge", 10)),
     "or3" -> ((r: IndexReader) => graft.query.IndexExecutor.serveHits(r, "spark|hash|merge", 10)),
@@ -68,9 +68,11 @@ object Bench {
       .repartition(spark.sparkContext.defaultParallelism * 2)
   }
 
-  /** Query names in the grammar-over-index group (parser -> Eval -> blocks);
-    * their latency is reported separately from the reader-native mix so the
-    * headline p50 stays comparable across rounds.
+  /** Query names in the multi-part grammar group (`qp:`: AND with a
+    * prefix, phrase, NOT, join block); their latency is reported
+    * separately from the keyword/OR/prefix mix so the headline p50 stays
+    * comparable across rounds. Both groups serve through the same
+    * IndexExecutor.serveHits seam.
     */
   val GrammarQueries: Set[String] = QuerySet.map(_._1).filter(_.startsWith("qp:")).toSet
 

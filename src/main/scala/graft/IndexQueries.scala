@@ -2,6 +2,7 @@ package graft
 
 import graft.core.WebCorpus
 import graft.index.{FuzzyIndex, IndexBuilder, IndexReader, MetricsCheck}
+import graft.query.{Eval, IndexAtomSource, QueryParams}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -90,7 +91,8 @@ object IndexQueries {
 
   /** Prefix top-10 from a BY_PREFIXES index (oracle: same as ix_prefix_docs). */
   def bpPrefixDocs(spark: SparkSession, sfDir: String): DataFrame =
-    cachedReader(spark, bpIndexDir(spark, sfDir)).topKPrefixDocs("st", 10)
+    Eval.topK(new IndexAtomSource(cachedReader(spark, bpIndexDir(spark, sfDir))),
+      "st*", 10, QueryParams.Default)
 
   /** Shared fixture-index builder for the file-ingest gates: render the
     * sf documents (driver-side, in doc_id order — the id-order contract
@@ -150,7 +152,8 @@ object IndexQueries {
     * prefix oracle with parquet doc ids mapped to parse positions).
     */
   def xmlPrefixDocs(spark: SparkSession, sfDir: String): DataFrame =
-    cachedReader(spark, xmlIndexDir(spark, sfDir)).topKPrefixDocs("st", 10)
+    Eval.topK(new IndexAtomSource(cachedReader(spark, xmlIndexDir(spark, sfDir))),
+      "st*", 10, QueryParams.Default)
 
   /** Index built through the CSV INGEST path (reference CsvParser.cpp):
     * the sf documents rendered as one TSV (header + one line per doc, in
@@ -179,7 +182,8 @@ object IndexQueries {
     * as [[xmlPrefixDocs]] — line numbers and parse positions coincide).
     */
   def csvPrefixDocs(spark: SparkSession, sfDir: String): DataFrame =
-    cachedReader(spark, csvIndexDir(spark, sfDir)).topKPrefixDocs("st", 10)
+    Eval.topK(new IndexAtomSource(cachedReader(spark, csvIndexDir(spark, sfDir))),
+      "st*", 10, QueryParams.Default)
 
   /** Index built through the JSONL INGEST path: docs rendered one JSON
     * object per line (strings escaped), parsed back by
@@ -209,7 +213,8 @@ object IndexQueries {
     * oracle a third time).
     */
   def jsonlPrefixDocs(spark: SparkSession, sfDir: String): DataFrame =
-    cachedReader(spark, jsonlIndexDir(spark, sfDir)).topKPrefixDocs("st", 10)
+    Eval.topK(new IndexAtomSource(cachedReader(spark, jsonlIndexDir(spark, sfDir))),
+      "st*", 10, QueryParams.Default)
 
   /** Index built from a WARC archive: the sf docs rendered as real
     * `response` records (WebCorpus html wrapper as the HTTP body, in
@@ -252,7 +257,8 @@ object IndexQueries {
     * WARC record positions are the same 1-based doc_id ranks).
     */
   def warcPrefixDocs(spark: SparkSession, sfDir: String): DataFrame =
-    cachedReader(spark, warcIndexDir(spark, sfDir)).topKPrefixDocs("st", 10)
+    Eval.topK(new IndexAtomSource(cachedReader(spark, warcIndexDir(spark, sfDir))),
+      "st*", 10, QueryParams.Default)
 
   /** BY_PREFIX_SIZE: boundaries derived as the vocabulary's distinct
     * length-2 prefixes (one bucket per prefix group) instead of a
@@ -272,7 +278,8 @@ object IndexQueries {
 
   /** Prefix top-10 from a BY_PREFIX_SIZE index (same oracle again). */
   def bpsPrefixDocs(spark: SparkSession, sfDir: String): DataFrame =
-    cachedReader(spark, bpsIndexDir(spark, sfDir)).topKPrefixDocs("st", 10)
+    Eval.topK(new IndexAtomSource(cachedReader(spark, bpsIndexDir(spark, sfDir))),
+      "st*", 10, QueryParams.Default)
 
   /** Positions-off index (IndexBuilder storePositions=false — the
     * reference's positions-off words file, WordsFile.h:44-62): doc-level
@@ -332,7 +339,8 @@ object IndexQueries {
 
   /** Querying a partial word serves the docs of its containing words. */
   def partialDocs(spark: SparkSession, sfDir: String): DataFrame =
-    cachedReader(spark, partialIndexDir(spark, sfDir)).topKAnd(Seq("tab"), 10)
+    Eval.topK(new IndexAtomSource(cachedReader(spark, partialIndexDir(spark, sfDir))),
+      "tab", 10, QueryParams.Default)
 
   /** Fuzzy word clusters off the shared index's FastSS table
     * (BuildFuzzySearchClusters analog: frequent words are cluster
@@ -487,18 +495,10 @@ object IndexQueries {
     * the `:field:source:spark` posting list, one semi-join.
     */
   def fieldWeightedIx(spark: SparkSession, sfDir: String): DataFrame = {
-    val src = new graft.query.IndexAtomSource(
-      cachedReader(spark, fieldIndexDir(spark, sfDir)))
+    val src = new IndexAtomSource(cachedReader(spark, fieldIndexDir(spark, sfDir)))
     import graft.query.QueryParser.Word
-    val base = src.atomScored(Word("spark"))
-      .groupBy(col("doc_id")).agg(sum(col("score")).as("score"))
-    val title = src.atomScored(Word(":field:source:spark"))
-      .select(col("doc_id")).distinct().withColumn("fbonus", lit(64.0))
-    base.join(title, Seq("doc_id"), "left_outer")
-      .select(col("doc_id"),
-        round(col("score") + coalesce(col("fbonus"), lit(0.0)), 4).as("score"))
-      .orderBy(col("score").desc, col("doc_id").asc)
-      .limit(10)
+    FtQueries.withFieldBonus(src.atomScored(Word("spark")),
+      src.atomScored(Word(":field:source:spark")).select(col("doc_id")), 64.0)
   }
 
   /** `:info:` namespace read back from the blocks: the index's own
@@ -506,14 +506,16 @@ object IndexQueries {
     * ordinary completions machinery.
     */
   def infoWords(spark: SparkSession, sfDir: String): DataFrame =
-    facetReader(spark, sfDir).topKCompletions(":info:", 100)
+    Eval.completions(new IndexAtomSource(facetReader(spark, sfDir)), ":info:*", 100,
+      QueryParams.Default)
       .select(col("term")).orderBy(col("term"))
 
   /** Facet value counts served from the BLOCKS: completions of the
-    * `:facet:lang:` prefix; n_docs = the dc aggregate.
+    * `:facet:lang:*` prefix; n_docs = the dc aggregate.
     */
   def facetCounts(spark: SparkSession, sfDir: String): DataFrame =
-    facetReader(spark, sfDir).topKCompletions(":facet:lang:", 100)
+    Eval.completions(new IndexAtomSource(facetReader(spark, sfDir)), ":facet:lang:*", 100,
+      QueryParams.Default)
       .select(expr(s"substring(term, ${":facet:lang:".length + 1})").as("value"),
         col("dc").as("n_docs"))
       .orderBy(col("n_docs").desc, col("value").asc)
@@ -559,19 +561,20 @@ object IndexQueries {
 
   /** Prefix top-10 docs via pruned block scan; oracle = plain SQL. */
   def prefixDocs(spark: SparkSession, sfDir: String): DataFrame =
-    reader(spark, sfDir).topKPrefixDocs("st", 10)
+    Eval.topK(new IndexAtomSource(reader(spark, sfDir)), "st*", 10, QueryParams.Default)
 
   /** Conjunctive top-10 from blocks; oracle = the logical AND SQL. */
   def andTopK(spark: SparkSession, sfDir: String): DataFrame =
-    reader(spark, sfDir).topKAnd(Seq("spark", "join"), 10)
+    Eval.topK(new IndexAtomSource(reader(spark, sfDir)), "spark join", 10, QueryParams.Default)
 
   /** Phrase matching from block-encoded positions; oracle = position SQL. */
   def phraseDocs(spark: SparkSession, sfDir: String): DataFrame =
-    reader(spark, sfDir).proximityDocs("batch", "batch", 1, 1)
+    Eval.windowMatchCounts(new IndexAtomSource(reader(spark, sfDir)),
+      "batch", "batch", 1, 1)
 
   /** Completions from blocks; oracle = the completions SQL. */
   def completions(spark: SparkSession, sfDir: String): DataFrame =
-    reader(spark, sfDir).topKCompletions("s", 10)
+    Eval.completions(new IndexAtomSource(reader(spark, sfDir)), "s*", 10, QueryParams.Default)
 
   /** Build lineage/metrics summary. Not SQL-expressible, so instead of an
     * oracle the gate checks the table against the index itself

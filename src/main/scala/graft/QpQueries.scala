@@ -48,14 +48,15 @@ object QpQueries {
     // fd=0.5: fuzzy-matched BM25 contributions damped by half
     "qp_fuzzy_damped" -> ((s, d) => Executor.topK(corpus(s, d), "spak~", 10,
       QueryParams(fuzzyDamping = 0.5))),
-    "qp_phrase_bonus" -> ((s, d) => Executor.topK(corpus(s, d), "batch.batch", 10, bonuses = true)),
+    "qp_phrase_bonus" -> ((s, d) => Executor.topK(corpus(s, d), "batch.batch", 10,
+      QueryParams(partsAgg = QueryParams.SumWithBonus))),
     // 3-part windowed chain: positions must be CONTIGUOUS across all three
     // parts (gates the matched-position carry, not just pairwise windows)
     "qp_chain3" -> ((s, d) => Executor.topK(corpus(s, d), "stream.table.hash", 10)),
     // BEST_MATCH_BONUS: docs containing the EXACT word of the last prefix
     // part get +4 (CompleterBase.cpp:723-732; bonus default 0 = off)
     "qp_bestmatch" -> ((s, d) =>
-      Executor.topK(corpus(s, d), "spark stream*", 10, bestMatchBonus = 4.0)),
+      Executor.topK(corpus(s, d), "spark stream*", 10, QueryParams(bestMatchBonus = 4.0))),
     "qp_excerpts" -> ((s, d) => {
       val c = corpus(s, d)
       val hits = Executor.topK(c, "spark st*", 10)

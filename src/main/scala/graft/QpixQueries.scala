@@ -33,10 +33,11 @@ object QpixQueries {
       QueryParams.withRankWords("1"))),
     "qpix_fuzzy_damped" -> ((s, d) => IndexExecutor.topK(rd(s, d), "spak~", 10,
       QueryParams(fuzzyDamping = 0.5))),
-    "qpix_phrase_bonus" -> ((s, d) => IndexExecutor.topK(rd(s, d), "batch.batch", 10, bonuses = true)),
+    "qpix_phrase_bonus" -> ((s, d) => IndexExecutor.topK(rd(s, d), "batch.batch", 10,
+      QueryParams(partsAgg = QueryParams.SumWithBonus))),
     "qpix_chain3" -> ((s, d) => IndexExecutor.topK(rd(s, d), "stream.table.hash", 10)),
     "qpix_bestmatch" -> ((s, d) =>
-      IndexExecutor.topK(rd(s, d), "spark stream*", 10, bestMatchBonus = 4.0)),
+      IndexExecutor.topK(rd(s, d), "spark stream*", 10, QueryParams(bestMatchBonus = 4.0))),
     // grammar JOIN block from the blocks: completions of s* common to
     // window-docs and hash-docs; docs of either side carrying a common
     // term, scores re-aggregated (CompleterBase.Join.cpp)

@@ -1,7 +1,8 @@
 package graft
 
 import graft.core.{Analysis, WebCorpus}
-import graft.query.Engine
+import graft.query.{AtomSource, CorpusAtomSource, Eval, QueryParams}
+import graft.query.QueryParser.{Atom, Word}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -40,47 +41,70 @@ object FtQueries {
     Seq((st.n_docs, st.n_postings, avgdl6)).toDF("n_docs", "n_postings", "avgdl")
   }
 
+  /** The corpus as an atom source, for the gates below to evaluate over.
+    * Not the history-backed source [[graft.query.Executor]] uses: a gate
+    * runs once, and the history's eager size job would only add to it.
+    */
+  private def atoms(spark: SparkSession, sfDir: String): AtomSource =
+    new CorpusAtomSource(corpus(spark, sfDir))
+
   def bm25Single(spark: SparkSession, sfDir: String): DataFrame =
-    Engine.topKSingle(corpus(spark, sfDir), "spark", 10)
+    Eval.topK(atoms(spark, sfDir), "spark", 10, QueryParams.Default)
 
   def bm25And(spark: SparkSession, sfDir: String): DataFrame =
-    Engine.topKAnd(corpus(spark, sfDir), Seq("spark", "join"), 10)
+    Eval.topK(atoms(spark, sfDir), "spark join", 10, QueryParams.Default)
 
   def bm25Or(spark: SparkSession, sfDir: String): DataFrame =
-    Engine.topKOr(corpus(spark, sfDir), Seq("spark", "hash"), 10)
+    Eval.topK(atoms(spark, sfDir), "spark|hash", 10, QueryParams.Default)
 
   def bm25Not(spark: SparkSession, sfDir: String): DataFrame =
-    Engine.topKNot(corpus(spark, sfDir), "spark", Seq("join"), 10)
+    Eval.topK(atoms(spark, sfDir), "spark -join", 10, QueryParams.Default)
 
   def prefixDocs(spark: SparkSession, sfDir: String): DataFrame =
-    Engine.topKPrefix(corpus(spark, sfDir), "st", 10)
+    Eval.topK(atoms(spark, sfDir), "st*", 10, QueryParams.Default)
 
   def completions(spark: SparkSession, sfDir: String): DataFrame =
-    Engine.topKCompletions(corpus(spark, sfDir), "s", 10)
+    Eval.completions(atoms(spark, sfDir), "s*", 10, QueryParams.Default)
 
   def phrase(spark: SparkSession, sfDir: String): DataFrame =
-    Engine.phraseDocs(corpus(spark, sfDir), "batch", "batch")
+    Eval.windowMatchCounts(atoms(spark, sfDir), "batch", "batch", 1, 1)
 
   def proximity(spark: SparkSession, sfDir: String): DataFrame =
-    Engine.proximityDocs(corpus(spark, sfDir), "spark", "join", -10, 10)
+    Eval.windowMatchCounts(atoms(spark, sfDir), "spark", "join", -10, 10)
 
   def wordRange(spark: SparkSession, sfDir: String): DataFrame =
-    Engine.topKWordRange(corpus(spark, sfDir), "batch", "filter", 10)
+    Eval.topK(atoms(spark, sfDir), "batch--filter", 10, QueryParams.Default)
 
   def joinBlock(spark: SparkSession, sfDir: String): DataFrame =
-    Engine.joinBlockTerms(corpus(spark, sfDir), "s", "window", "hash")
+    Eval.joinBlockTerms(atoms(spark, sfDir), "[window s*#hash s*]")
 
-  def outputAll(spark: SparkSession, sfDir: String): DataFrame =
-    Engine.outputAll(corpus(spark, sfDir), "spark", "st", 10)
+  /** OUTPUT_ALL mode (reference: Separator.h:33-47, Intersect.cpp:244-292):
+    * keep ALL docs matching the current part (here `st*`), carrying the
+    * summed score of the prior part (`spark`) where the doc matched it --
+    * a left join with coalesced scores. The grammar has no form for it
+    * (a part separator always intersects), so it composes atom relations.
+    */
+  def outputAll(spark: SparkSession, sfDir: String): DataFrame = {
+    val src = atoms(spark, sfDir)
+    def docScores(atom: Atom, name: String): DataFrame =
+      src.atomScoredCached(atom).groupBy(col("doc_id")).agg(sum(col("score")).as(name))
+    docScores(Word("st", prefix = true), "s2")
+      .join(docScores(Word("spark"), "s1"), Seq("doc_id"), "left_outer")
+      .select(col("doc_id"),
+        round(col("s2") + coalesce(col("s1"), lit(0.0)), 4).as("score"))
+      .orderBy(col("score").desc, col("doc_id").asc)
+      .limit(10)
+  }
 
   def bm25ByDoc(spark: SparkSession, sfDir: String): DataFrame =
-    Engine.topKSingleBy(corpus(spark, sfDir), "spark", 10, "doc")
+    Eval.hits(atoms(spark, sfDir), "spark", 10, QueryParams(rankDocs = "doc"))
 
   def bm25OrMax(spark: SparkSession, sfDir: String): DataFrame =
-    Engine.topKOrAgg(corpus(spark, sfDir), Seq("spark", "hash"), 10, "max")
+    Eval.topK(atoms(spark, sfDir), "spark|hash", 10,
+      QueryParams(completionsAgg = QueryParams.Max))
 
   def completionsByDc(spark: SparkSession, sfDir: String): DataFrame =
-    Engine.topKCompletionsBy(corpus(spark, sfDir), "s", 10, "dc")
+    Eval.completions(atoms(spark, sfDir), "s*", 10, QueryParams(rankWords = "dc"))
 
   def facetCounts(spark: SparkSession, sfDir: String): DataFrame =
     graft.core.Facets.facetCounts(corpus(spark, sfDir), "lang")
@@ -108,8 +132,32 @@ object FtQueries {
   def fieldWeighted(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id").cast("long").as("doc_id"), col("source"), col("text"))
-    Engine.topKFieldBonus(docs, Seq(("source", 64.0), ("text", 0.0)), "spark", 10)
+    val fielded = docs.select(col("doc_id"),
+      concat_ws(" ", col("source"), col("text")).as("text"))
+    // the title's `:field:source:<token>` words, tokenized from the title
+    // alone -- the rows the fielded index carries in its blocks
+    val titleDocs = graft.core.Facets.fieldRows(docs, "source", col("source"))
+      .filter(col("term") === ":field:source:spark").select(col("doc_id"))
+    withFieldBonus(new CorpusAtomSource(fielded).atomScored(Word("spark")),
+      titleDocs, 64.0)
   }
+
+  /** Field-weighted top-10 (reference: TITLE_MATCH_BONUS,
+    * ScoreAggregators.h:6 / Globals.h:266-301): a term's per-doc summed
+    * BM25 over the fielded text, plus `bonus` once for each doc in
+    * `bonusDocs` (the docs whose bonus field carries the term), so a title
+    * hit outranks an otherwise-equal body hit by exactly the bonus. Shared
+    * by fw_title (corpus) and fwix_title (blocks).
+    */
+  private[graft] def withFieldBonus(scored: DataFrame, bonusDocs: DataFrame,
+                                    bonus: Double): DataFrame =
+    scored.groupBy(col("doc_id")).agg(sum(col("score")).as("score"))
+      .join(bonusDocs.distinct().withColumn("fbonus", lit(bonus)),
+        Seq("doc_id"), "left_outer")
+      .select(col("doc_id"),
+        round(col("score") + coalesce(col("fbonus"), lit(0.0)), 4).as("score"))
+      .orderBy(col("score").desc, col("doc_id").asc)
+      .limit(10)
 }
 
 /** DuckDB oracle SQL mirroring each FtQueries entry. Shared CTE `toks`

@@ -170,21 +170,6 @@ object Analysis {
     idf * tfPart
   }
 
-  /** Scored doc-term relation for a set of query terms:
-    * (doc_id, term, score). df lookup is a broadcast join (the per-term df
-    * relation filtered to the query terms is tiny by construction).
-    */
-  def scoredForTerms(corpus: DataFrame, terms: Seq[String]): DataFrame = {
-    val dt = docTermsCached(corpus)
-    val st = statsCached(corpus)
-    val dfTbl = dt.filter(col("term").isin(terms: _*))
-      .groupBy(col("term")).agg(count(lit(1)).as("df"))
-    dt.filter(col("term").isin(terms: _*))
-      .join(broadcast(dfTbl), "term")
-      .select(col("doc_id"), col("term"),
-        bm25Col(st.n_docs, st.avgdl, col("tf"), col("df"), col("dl")).as("score"))
-  }
-
   /** SQL text of the BM25 score for the DuckDB oracle -- mirrors bm25Col
     * exactly (same operand order, same constants) so double results agree.
     */

@@ -272,17 +272,6 @@ class IndexReader(val spark: SparkSession, val dir: String,
   def prefixRange(prefix: String): Option[(Long, Long)] =
     vocabulary.prefixRange(prefix).map { case (lo, hi) => (lo.toLong, hi.toLong) }
 
-  /** The (term_id, term, df) rows of the id range [lo, hi] as a local
-    * relation, so a prefix query attaches term/df without a dictionary
-    * scan. None past [[IndexReader.MaxSliceTerms]] ids: a hot `a*` on a
-    * 100M-term vocabulary keeps the broadcast join instead of a
-    * literal-sized plan.
-    */
-  private def vocabSlice(lo: Long, hi: Long): Option[DataFrame] =
-    if (hi - lo + 1 > IndexReader.MaxSliceTerms) None
-    else Some((lo.toInt to hi.toInt).map(i =>
-      (i.toLong, vocabulary.term(i), vocabulary.df(i))).toDF("term_id", "term", "df"))
-
   /** Pruned block scan for a term-id range. */
   def blocksForRange(lo: Long, hi: Long): DataFrame =
     blocks.filter(col("bucket").between(bucketOf(lo), bucketOf(hi)) &&
@@ -358,86 +347,6 @@ class IndexReader(val spark: SparkSession, val dir: String,
       Analysis.bm25Col(nDocs, avgdl, col("tf"), col("df"), col("dl")))
   }
 
-  /** Exact disjunctive top-k over the physical index WITHOUT pruning
-    * (baseline for the WAND gate).
-    */
-  def topKOrFull(terms: Seq[String], k: Int): DataFrame =
-    fullWithInfo(termInfo(terms), k)
-
-  private def fullWithInfo(info: Map[String, (Long, Long)], k: Int): DataFrame = {
-    if (info.isEmpty) return emptyHits
-    val ids = info.values.map(_._1).toSeq
-    val scored = scoreDecoded(decode(blocksForIds(ids)),
-      info.values.map(v => v._1 -> v._2).toMap)
-    scored.groupBy(col("doc_id"))
-      .agg(round(sum(col("score")), 4).as("score"))
-      .orderBy(col("score").desc, col("doc_id").asc)
-      .limit(k)
-  }
-
-  /** Conjunctive (AND) top-k over the physical index: decode the query
-    * terms' blocks, docId group with HAVING count = n (same plan family as
-    * the logical engine, inputs from blocks).
-    */
-  def topKAnd(terms: Seq[String], k: Int): DataFrame = {
-    val info = termInfo(terms)
-    if (info.size < terms.distinct.size) return emptyHits
-    val ids = info.values.map(_._1).toSeq
-    scoreDecoded(decode(blocksForIds(ids)), info.values.map(v => v._1 -> v._2).toMap)
-      .groupBy(col("doc_id"))
-      .agg(round(sum(col("score")), 4).as("score"), count(lit(1)).as("n"))
-      .filter(col("n") === ids.size)
-      .select(col("doc_id"), col("score"))
-      .orderBy(col("score").desc, col("doc_id").asc)
-      .limit(k)
-  }
-
-  /** Proximity/phrase over the physical index: positions decoded from the
-    * blocks, window theta-join (Separator semantics).
-    */
-  def proximityDocs(t1: String, t2: String, lo: Int, hi: Int): DataFrame = {
-    require(hasPositions,
-      "positions-off index: windowed/phrase queries need storePositions=true")
-    val info = termInfo(Seq(t1, t2).distinct)
-    if (info.size < Seq(t1, t2).distinct.size)
-      return spark.range(0).select(col("id").as("doc_id"), lit(0L).as("n_matches"))
-    def posOf(t: String): DataFrame = {
-      val (tid, _) = info(t)
-      decodeWithPositions(blocks.filter(col("term_id") === tid &&
-          col("bucket") === bucketOf(tid)))
-        .select(col("doc_id"), explode(col("positions")).as("pos"))
-    }
-    // self-phrase (t1 == t2): decode once, self-join two aliases
-    val base = posOf(t1)
-    val p1 = base.toDF("doc_id", "p1")
-    val p2 = (if (t1 == t2) base else posOf(t2)).toDF("d2", "p2")
-    p1.join(p2, col("doc_id") === col("d2") && (col("p2") - col("p1")).between(lo, hi))
-      .groupBy(col("doc_id")).agg(count(lit(1)).as("n_matches"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** Top-k completions of a prefix from the physical index:
-    * (term, score, dc, oc) -- computeTopCompletions over blocks.
-    */
-  def topKCompletions(prefix: String, k: Int): DataFrame = {
-    prefixRange(prefix) match {
-      case None => spark.range(0).select(col("id").cast("string").as("term"),
-        lit(0.0).as("score"), col("id").as("dc"), col("id").as("oc"))
-      case Some((lo, hi)) =>
-        val dfTbl = vocabSlice(lo, hi).getOrElse(
-          dictionary.filter(col("term_id").between(lo, hi))
-            .select(col("term_id"), col("term"), col("df")))
-        decode(blocksForRange(lo, hi))
-          .join(broadcast(dfTbl), "term_id")
-          .withColumn("score", Analysis.bm25Col(nDocs, avgdl, col("tf"), col("df"), col("dl")))
-          .groupBy(col("term"))
-          .agg(round(sum(col("score")), 4).as("score"),
-            count(lit(1)).as("dc"), sum(col("tf")).as("oc"))
-          .orderBy(col("score").desc, col("term").asc)
-          .limit(k)
-    }
-  }
-
   /** WAND with pruning statistics: (result, totalBlocks, scannedBlocks). */
   def topKOrWandStats(terms: Seq[String], k: Int): (DataFrame, Long, Long) =
     wandImpl(terms, k)
@@ -452,6 +361,14 @@ class IndexReader(val spark: SparkSession, val dir: String,
     val dfByTermId = info.values.map(v => v._1 -> v._2).toMap
     val idfByTermId = dfByTermId.map { case (tid, d) => tid -> idf(d) }
     val ids = dfByTermId.keys.toSeq
+    // exact disjunctive scoring of a block subset; over all the query's
+    // blocks it is the unpruned answer the fallbacks below return
+    def scoreTopK(bs: DataFrame): DataFrame =
+      scoreDecoded(decode(bs), dfByTermId)
+        .groupBy(col("doc_id"))
+        .agg(round(sum(col("score")), 4).as("score"))
+        .orderBy(col("score").desc, col("doc_id").asc)
+        .limit(k)
 
     // All per-block state stays DISTRIBUTED throughout -- a head term at
     // 10^12 docs has millions of blocks and the driver must never see one
@@ -479,7 +396,7 @@ class IndexReader(val spark: SparkSession, val dir: String,
       }
     if (totalBlocks == 0) return (emptyHits, 0L, 0L)
     if (totalBlocks <= wandMinBlocks)
-      return (fullWithInfo(info, k), totalBlocks, totalBlocks)
+      return (scoreTopK(qBlocks), totalBlocks, totalBlocks)
 
     // Phase 1: per term, the densest blocks (by block-max, ties toward low
     // first_doc_id so the per-term doc ranges align and overlap) until
@@ -504,7 +421,7 @@ class IndexReader(val spark: SparkSession, val dir: String,
       .orderBy(col("score").desc).limit(k)
       .collect()
     val theta = if (p1Scores.length < k) 0.0 else p1Scores.last.getAs[Double]("score")
-    if (theta == 0.0) return (fullWithInfo(info, k), totalBlocks, totalBlocks)
+    if (theta == 0.0) return (scoreTopK(qBlocks), totalBlocks, totalBlocks)
 
     // Phase 2: prune block b of term t iff no doc in b can reach theta:
     //   ub(b) + sum over other terms t' of (max ub of t'-blocks OVERLAPPING
@@ -549,35 +466,9 @@ class IndexReader(val spark: SparkSession, val dir: String,
     val surviving = qBlocks.join(survivingKeys, Seq("term_id", "first_doc_id"), "left_semi")
     val scanned = surviving.count()
     if (scanned >= totalBlocks)
-      return (fullWithInfo(info, k), totalBlocks, totalBlocks)
+      return (scoreTopK(qBlocks), totalBlocks, totalBlocks)
 
-    val result = scoreDecoded(decode(surviving), dfByTermId)
-      .groupBy(col("doc_id"))
-      .agg(round(sum(col("score")), 4).as("score"))
-      .orderBy(col("score").desc, col("doc_id").asc)
-      .limit(k)
-    (result, totalBlocks, scanned)
-  }
-
-  /** Prefix top-k docs over the physical index: score = summed BM25 over
-    * all completions present (same semantics as Engine.topKPrefix).
-    */
-  def topKPrefixDocs(prefix: String, k: Int): DataFrame = {
-    prefixRange(prefix) match {
-      case None => spark.range(0).select(col("id").as("doc_id"), lit(0.0).as("score"))
-      case Some((lo, hi)) =>
-        val dfTbl = vocabSlice(lo, hi)
-          .map(_.select(col("term_id"), col("df")))
-          .getOrElse(dictionary.filter(col("term_id").between(lo, hi))
-            .select(col("term_id"), col("df")))
-        decode(blocksForRange(lo, hi))
-          .join(broadcast(dfTbl), "term_id")
-          .withColumn("score", Analysis.bm25Col(nDocs, avgdl, col("tf"), col("df"), col("dl")))
-          .groupBy(col("doc_id"))
-          .agg(round(sum(col("score")), 4).as("score"))
-          .orderBy(col("score").desc, col("doc_id").asc)
-          .limit(k)
-    }
+    (scoreTopK(surviving), totalBlocks, scanned)
   }
 }
 
@@ -625,13 +516,6 @@ object IndexReader {
     * literal-map expression back to a broadcast join (bounded plan size).
     */
   val MaxDfLiterals: Int = 256
-
-  /** Plan-size bound: a prefix whose id range spans more terms than this
-    * attaches term/df with a broadcast join over the dictionary instead of
-    * a local relation of its slice -- a hot `a*` on a 100M-term vocabulary
-    * keeps a constant-sized plan.
-    */
-  val MaxSliceTerms: Long = 4096L
 
   /** Driver-resident serving guard: a query whose atoms' total posting
     * volume exceeds this falls back from [[graft.query.LocalServe]] to the

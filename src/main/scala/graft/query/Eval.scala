@@ -85,28 +85,25 @@ class CorpusAtomSource(corpus: DataFrame, normVariants: Boolean = false)
     extends AtomSource {
 
   def atomScored(atom: Atom): DataFrame = {
-    val dt = Analysis.docTermsCached(corpus, normVariants)
+    val dt = Analysis.docTermsCached(corpus, normVariants).toDF()
     val st = Analysis.statsCached(corpus)
-    def score(matching: DataFrame, dfTbl: DataFrame): DataFrame =
-      matching.join(broadcast(dfTbl), "term")
-        .select(col("doc_id"), col("term"), col("tf"), col("positions"),
-          Analysis.bm25Col(st.n_docs, st.avgdl, col("tf"), col("df"), col("dl")).as("score"),
-          Analysis.bm25Col(st.n_docs, st.avgdl, lit(1), col("df"), col("dl")).as("score1"))
-    atom match {
-      case w: Word if w.fuzzy =>
-        // fuzzy candidates from the VOCAB-sized (term, df) relation, then a
-        // broadcast join on postings: edit distance is evaluated once per
-        // vocabulary entry, never once per posting row (reference builds a
-        // FastSS/permuted-lexicon candidate index for the same reason,
-        // fuzzysearch/FuzzySearcher.h:24-107)
-        val cands = Analysis.termDfCached(corpus, normVariants)
-          .filter(levenshtein(col("term"), lit(w.text)) <= Executor.fuzzyThreshold(w.text))
-        score(dt.toDF(), cands)
-      case _ =>
-        val matching = dt.toDF().filter(CorpusAtomSource.atomPredicate(atom))
-        val dfTbl = matching.groupBy(col("term")).agg(count(lit(1)).as("df"))
-        score(matching, dfTbl)
+    val pred = CorpusAtomSource.atomPredicate(atom)
+    // df comes from the VOCAB-sized (term, df) relation, persisted once per
+    // corpus: an atom's df is a filter over it, not an aggregation (and a
+    // shuffle) over the atom's postings
+    val cands = Analysis.termDfCached(corpus, normVariants).filter(pred)
+    // fuzzy: the broadcast join alone applies the candidates, so edit
+    // distance is evaluated once per vocabulary entry, never once per
+    // posting row (reference builds a FastSS/permuted-lexicon candidate
+    // index for the same reason, fuzzysearch/FuzzySearcher.h:24-107)
+    val postings = atom match {
+      case w: Word if w.fuzzy => dt
+      case _ => dt.filter(pred)
     }
+    postings.join(broadcast(cands), "term")
+      .select(col("doc_id"), col("term"), col("tf"), col("positions"),
+        Analysis.bm25Col(st.n_docs, st.avgdl, col("tf"), col("df"), col("dl")).as("score"),
+        Analysis.bm25Col(st.n_docs, st.avgdl, lit(1), col("df"), col("dl")).as("score1"))
   }
 
   /** An exact, non-expanding word matches `term === text` — at most ONE
@@ -207,13 +204,6 @@ object Eval {
     else base.withColumn("score", col("score") * params.fuzzyDamping)
       .withColumn("score1", col("score1") * params.fuzzyDamping)
   }
-
-  /** Back-compat entry: bonuses=true is partsAgg = SumWithBonus. */
-  def evalDocs(src: AtomSource, q: ParsedQuery, bonuses: Boolean = false,
-               bestMatchBonus: Double = 0.0): DataFrame =
-    evalDocs(src, q, QueryParams(
-      partsAgg = if (bonuses) QueryParams.SumWithBonus else QueryParams.Sum,
-      bestMatchBonus = bestMatchBonus))
 
   /** Evaluate to (doc_id, score), score rounded to 4dp, unordered, under
     * the full score-aggregation algebra ([[QueryParams]]):
@@ -360,11 +350,8 @@ object Eval {
   }
 
   /** Top-k hits: total order (score desc, doc_id asc). */
-  def topK(src: AtomSource, query: String, k: Int, bonuses: Boolean = false,
-           bestMatchBonus: Double = 0.0): DataFrame =
-    topK(src, query, k, QueryParams(
-      partsAgg = if (bonuses) QueryParams.SumWithBonus else QueryParams.Sum,
-      bestMatchBonus = bestMatchBonus))
+  def topK(src: AtomSource, query: String, k: Int): DataFrame =
+    topK(src, query, k, QueryParams.Default)
 
   def topK(src: AtomSource, query: String, k: Int, params: QueryParams): DataFrame =
     hits(src, query, k, params)
@@ -406,13 +393,11 @@ object Eval {
   def completions(src: AtomSource, query: String, k: Int,
                   params: QueryParams): DataFrame = {
     val parsed = QueryParser.parse(query, params.normalizeWords)
-    val docs = evalDocs(src, parsed, params).select(col("doc_id"))
     val perDoc =
       if (params.wordSameDocAgg == QueryParams.Max) col("score1") else col("score")
     val acrossDocs =
       if (params.wordDiffDocsAgg == QueryParams.Max) max(perDoc) else sum(perDoc)
-    val base = dampedScored(src, parsed.parts.last.atom, params)
-      .join(docs, Seq("doc_id"), "left_semi")
+    val base = withinDocs(src, parsed, dampedScored(src, parsed.parts.last.atom, params), params)
       .groupBy(col("term"))
       .agg(round(acrossDocs, 4).as("score"),
         count(lit(1)).as("dc"), sum(col("tf")).as("oc"))
@@ -435,17 +420,54 @@ object Eval {
     ordered.limit(k)
   }
 
+  /** `rows` of q's last atom, restricted to the docs matching all of q.
+    * A row of the last atom already lies in that atom's docs, so when the
+    * last part joins without a window only the earlier parts restrict it,
+    * and a one-part query restricts nothing: the restriction then skips
+    * the last part's doc aggregation, or the whole evaluation. NOT and
+    * windowed last parts filter the rows themselves and keep the full
+    * evaluation (which also refuses a query that starts with NOT).
+    */
+  private def withinDocs(src: AtomSource, q: ParsedQuery, rows: DataFrame,
+                         params: QueryParams): DataFrame = {
+    val last = q.parts.last
+    val plainLast = !isNot(last.atom) && last.sep.forall(_.window.isEmpty)
+    val restrictBy =
+      if (!plainLast) Some(q)
+      else if (q.parts.length == 1) None
+      else Some(ParsedQuery(q.parts.init))
+    restrictBy.fold(rows)(r =>
+      rows.join(evalDocs(src, r, params).select(col("doc_id")), Seq("doc_id"), "left_semi"))
+  }
+
   /** Join block [q1#q2]: completions of the two sides' last parts that
     * occur in BOTH results (CompleterBase.Join.cpp hash join); docs of
     * either side containing a common term, scores re-aggregated.
     */
   private def evalJoinBlock(src: AtomSource, parts: Seq[ParsedQuery]): DataFrame = {
-    def side(pq: ParsedQuery): DataFrame = {
-      val docs = evalDocs(src, pq).select(col("doc_id"))
-      src.atomScoredCached(pq.parts.last.atom)
-        .join(docs, Seq("doc_id"), "left_semi")
-        .select(col("doc_id"), col("term"), col("score"))
+    val (union, commonTerms) = joinBlockSides(src, parts)
+    union.join(broadcast(commonTerms), Seq("term"), "left_semi")
+      .groupBy(col("doc_id")).agg(sum(col("score")).as("score"))
+  }
+
+  /** The terms a join block keeps, `(term)` in term order: the
+    * completions common to all of `[q1#...#qn]`'s sides (the ft_joinblock
+    * shape). The same code decides the terms inside [[evalDocs]].
+    */
+  def joinBlockTerms(src: AtomSource, block: String): DataFrame =
+    QueryParser.parse(block).parts match {
+      case Seq(Part(JoinBlock(ps), _)) => joinBlockSides(src, ps)._2.orderBy(col("term"))
+      case _ => throw new IllegalArgumentException(s"not a single join block: $block")
     }
+
+  /** A join block's sides and common terms: the union of every side's
+    * (doc_id, term, score) rows -- the completions of the side's last part
+    * within the side's docs -- and the terms present on ALL sides.
+    */
+  private def joinBlockSides(src: AtomSource, parts: Seq[ParsedQuery]): (DataFrame, DataFrame) = {
+    def side(pq: ParsedQuery): DataFrame =
+      withinDocs(src, pq, src.atomScoredCached(pq.parts.last.atom), QueryParams.Default)
+        .select(col("doc_id"), col("term"), col("score"))
     require(parts.length <= 62, "join block limited to 62 parts (side bitmask)")
     // terms common to ALL parts: ONE side-tagged union aggregated by term
     // with a presence bitmask -- the reference's pairwise semi-join fold
@@ -462,7 +484,27 @@ object Eval {
       .agg(bit_or(col("side_bit")).as("mask"))
       .filter(col("mask") === fullMask)
       .select(col("term"))
-    union.join(broadcast(commonTerms), Seq("term"), "left_semi")
-      .groupBy(col("doc_id")).agg(sum(col("score")).as("score"))
+    (union, commonTerms)
+  }
+
+  /** Window match counts, `(doc_id, n_matches)` in doc_id order: per doc,
+    * the number of position pairs (p1 of word t1, p2 of word t2) with
+    * p2 - p1 in [lo, hi] -- the separator windows (phrase [1, 1], near
+    * [-10, 10], flexi [n, n]; Separator.cpp:139-159) counted rather than
+    * scored. A self-phrase (t1 == t2) pairs the word's positions with
+    * themselves; an unknown word gives no rows, same schema.
+    */
+  def windowMatchCounts(src: AtomSource, t1: String, t2: String,
+                        lo: Int, hi: Int): DataFrame = {
+    require(src.hasPositions,
+      "positions-off index: windowed/phrase separators need storePositions=true")
+    def positions(t: String, d: String, p: String): DataFrame =
+      src.atomScoredCached(Word(t))
+        .select(col("doc_id").as(d), explode(col("positions")).as(p))
+    positions(t1, "doc_id", "p1")
+      .join(positions(t2, "d2", "p2"),
+        col("doc_id") === col("d2") && (col("p2") - col("p1")).between(lo, hi))
+      .groupBy(col("doc_id")).agg(count(lit(1)).as("n_matches"))
+      .orderBy(col("doc_id"))
   }
 }

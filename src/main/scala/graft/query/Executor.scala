@@ -49,16 +49,9 @@ object Executor {
   private def src(corpus: DataFrame, normVariants: Boolean = false): AtomSource =
     new CachedCorpusAtomSource(corpus, normVariants, QueryHistory.default)
 
-  def evalDocs(corpus: DataFrame, q: ParsedQuery): DataFrame =
-    Eval.evalDocs(src(corpus), q)
-
-  def evalDocs(corpus: DataFrame, q: ParsedQuery, bonuses: Boolean): DataFrame =
-    Eval.evalDocs(src(corpus), q, bonuses)
-
   /** Top-k hits: total order (score desc, doc_id asc). */
-  def topK(corpus: DataFrame, query: String, k: Int, bonuses: Boolean = false,
-           bestMatchBonus: Double = 0.0): DataFrame =
-    Eval.topK(src(corpus), query, k, bonuses, bestMatchBonus)
+  def topK(corpus: DataFrame, query: String, k: Int): DataFrame =
+    topK(corpus, query, k, QueryParams.Default)
 
   /** Top-k under the full score-aggregation algebra / per-query knobs.
     * params.normalizeWords turns on BOTH the query rewrite and the

@@ -298,9 +298,8 @@ object IndexExecutor {
   private def defaultSrc(reader: IndexReader): AtomSource =
     new CachedIndexAtomSource(reader, QueryHistory.default)
 
-  def topK(reader: IndexReader, query: String, k: Int,
-           bonuses: Boolean = false, bestMatchBonus: Double = 0.0): DataFrame =
-    Eval.topK(defaultSrc(reader), query, k, bonuses, bestMatchBonus)
+  def topK(reader: IndexReader, query: String, k: Int): DataFrame =
+    topK(reader, query, k, QueryParams.Default)
 
   /** Top-k under the full score-aggregation algebra / per-query knobs. */
   def topK(reader: IndexReader, query: String, k: Int, params: QueryParams): DataFrame =
@@ -373,10 +372,6 @@ object IndexExecutor {
   def completions(reader: IndexReader, query: String, k: Int,
                   params: QueryParams): DataFrame =
     Eval.completions(defaultSrc(reader), query, k, params)
-
-  def evalDocs(reader: IndexReader, q: ParsedQuery,
-               bonuses: Boolean = false): DataFrame =
-    Eval.evalDocs(defaultSrc(reader), q, bonuses)
 
   /** Excerpts for the top-k hits of a query, text served from the index's
     * docs store (buildDocsDB analog) -- the corpus itself is never read.

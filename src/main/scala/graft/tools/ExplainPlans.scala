@@ -61,7 +61,8 @@ object ExplainPlans {
       val Some((lo, hi)) = rCold.prefixRange("st")
       rCold.blocksForRange(lo, hi)
     })
-    show("index: wand/full top-k", r.topKOrFull(Seq("spark", "hash"), 10))
+    show("index: OR top-k over blocks (spark|hash)",
+      graft.query.IndexExecutor.topK(r, "spark|hash", 10))
     show("corpus scan column pruning", {
       graft.core.Analysis.docTerms(WebCorpus.fromDocuments(spark, sfDir)).toDF()
     })

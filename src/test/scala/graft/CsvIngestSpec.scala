@@ -158,8 +158,14 @@ class CsvIngestSpec extends AnyFunSuite {
     val docs = spark.createDataFrame(Seq(
       (1L, "needle findings", "common words here"),
       (2L, "other title", "needle words here"))).toDF("doc_id", "title", "body")
-    val r = graft.query.Engine.topKFieldBonus(docs,
-        Seq(("title", 64.0), ("body", 0.0)), "needle", 10)
+    val fielded = docs.select(col("doc_id"),
+      org.apache.spark.sql.functions.concat_ws(" ", col("title"), col("body")).as("text"))
+    val titleDocs = graft.core.Facets.fieldRows(docs, "title", col("title"))
+      .filter(col("term") === ":field:title:needle").select(col("doc_id"))
+    val r = FtQueries.withFieldBonus(
+        new graft.query.CorpusAtomSource(fielded)
+          .atomScored(graft.query.QueryParser.Word("needle")),
+        titleDocs, 64.0)
       .collect().map(x => (x.getLong(0), x.getDouble(1)))
     assert(r.map(_._1).toSeq === Seq(1L, 2L)) // title doc first
     // both docs: tf=1, dl=5, same df -> equal BM25; delta is exactly 64
@@ -241,9 +247,13 @@ class CsvIngestSpec extends AnyFunSuite {
     val hits = graft.query.IndexExecutor.topK(r, "zauberberg", 10)
       .collect().map(_.getLong(0)).toSeq
     assert(hits === Seq(1L))
-    // facet counting = completions of the :facet: namespace
-    val fc = r.topKCompletions(":facet:Autor:", 10)
-      .collect().map(x => (x.getString(0), x.getLong(2))).toMap
+    // facet counting = the doc count per completion of the :facet:
+    // namespace; the grammar lowercases query words, so the mixed-case
+    // field is asked as a prefix atom
+    val fc = new graft.query.IndexAtomSource(r)
+      .atomScored(graft.query.QueryParser.Word(":facet:Autor:", prefix = true))
+      .groupBy("term").count()
+      .collect().map(x => (x.getString(0), x.getLong(1))).toMap
     assert(fc === Map(":facet:Autor:Mann, Thomas" -> 1L,
       ":facet:Autor:Kafka; Franz" -> 1L))
     // ordering keys are word ranges over the sortable encoding

@@ -2,12 +2,12 @@ package graft
 
 import graft.core.WebCorpus
 import graft.index.{IndexBuilder, IndexReader}
-import graft.query.{Engine, Executor}
+import graft.query.{Executor, IndexExecutor}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Rank-identity gate (north rule): the distributed engine -- logical
-  * plans, the physical block index with WAND, and the query-grammar
-  * executor -- must reproduce the committed golden files produced by the
+/** Rank-identity gate (north rule): the distributed engine -- the grammar
+  * evaluator over the corpus and over the physical block index, and block-max
+  * WAND -- must reproduce the committed golden files produced by the
   * sequential obviously-correct scorer (tools.GenerateGoldens) exactly:
   * same docIds, same 4-dp BM25 scores, same order.
   */
@@ -27,31 +27,40 @@ class GoldenSpec extends AnyFunSuite {
   private def fmt(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.collect().map(r => s"${r.getLong(0)}\t${r.getDouble(1)}").toSeq
 
+  /** Query -> golden for every committed hits golden the grammar can ask. */
+  private val hitGoldens = Seq(
+    "spark" -> "or_spark",
+    "spark|hash" -> "or_spark_hash",
+    "spark join" -> "and_spark_join",
+    "st*" -> "prefix_st",
+    "b*" -> "prefix_b")
+
+  private def fmtCompletions(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect()
+      .map(r => s"${r.getString(0)}\t${r.getDouble(1)}\t${r.getLong(2)}\t${r.getLong(3)}").toSeq
+
   test("logical engine is rank-identical to the sequential scorer") {
-    assert(fmt(Engine.topKSingle(corpus, "spark", 10)) === golden("or_spark"))
-    assert(fmt(Engine.topKOr(corpus, Seq("spark", "hash"), 10)) === golden("or_spark_hash"))
-    assert(fmt(Engine.topKAnd(corpus, Seq("spark", "join"), 10)) === golden("and_spark_join"))
-    assert(fmt(Engine.topKPrefix(corpus, "st", 10)) === golden("prefix_st"))
-    assert(fmt(Engine.topKPrefix(corpus, "b", 10)) === golden("prefix_b"))
+    for ((q, g) <- hitGoldens)
+      assert(fmt(Executor.topK(corpus, q, 10)) === golden(g), q)
   }
 
   test("physical index (incl. WAND pruning) is rank-identical") {
-    assert(fmt(reader.topKOrFull(Seq("spark"), 10)) === golden("or_spark"))
+    for ((q, g) <- hitGoldens)
+      assert(fmt(IndexExecutor.topK(reader, q, 10)) === golden(g), q)
     assert(fmt(reader.topKOrWand(Seq("spark", "hash", "merge"), 10)) ===
       golden("or_spark_hash_merge"))
-    assert(fmt(reader.topKPrefixDocs("st", 10)) === golden("prefix_st"))
   }
 
   test("query-grammar executor is rank-identical") {
-    assert(fmt(Executor.topK(corpus, "spark", 10)) === golden("or_spark"))
-    assert(fmt(Executor.topK(corpus, "spark|hash", 10)) === golden("or_spark_hash"))
-    assert(fmt(Executor.topK(corpus, "spark join", 10)) === golden("and_spark_join"))
-    assert(fmt(Executor.topK(corpus, "st*", 10)) === golden("prefix_st"))
+    // the 3-term OR golden that WAND pins, through the grammar on both sources
+    assert(fmt(Executor.topK(corpus, "spark|hash|merge", 10)) === golden("or_spark_hash_merge"))
+    assert(fmt(IndexExecutor.topK(reader, "spark|hash|merge", 10)) ===
+      golden("or_spark_hash_merge"))
   }
 
   test("completions are rank-identical") {
-    val got = Engine.topKCompletions(corpus, "s", 10).collect()
-      .map(r => s"${r.getString(0)}\t${r.getDouble(1)}\t${r.getLong(2)}\t${r.getLong(3)}").toSeq
-    assert(got === golden("completions_s"))
+    assert(fmtCompletions(Executor.completions(corpus, "s*", 10)) === golden("completions_s"))
+    assert(fmtCompletions(IndexExecutor.completions(reader, "s*", 10)) ===
+      golden("completions_s"))
   }
 }

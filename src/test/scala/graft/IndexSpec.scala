@@ -2,7 +2,7 @@ package graft
 
 import graft.core.{Analysis, WebCorpus}
 import graft.index.{IndexBuilder, IndexReader, MetricsCheck}
-import graft.query.Engine
+import graft.query.{Eval, Executor, IndexAtomSource, IndexExecutor}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -65,9 +65,9 @@ class IndexSpec extends AnyFunSuite {
     val terms = Seq("spark", "hash", "merge")
     val wand = reader.topKOrWand(terms, 10).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val full = reader.topKOrFull(terms, 10).collect()
+    val full = IndexExecutor.topK(reader, terms.mkString("|"), 10).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val logical = Engine.topKOr(corpus, terms, 10).collect()
+    val logical = Executor.topK(corpus, terms.mkString("|"), 10).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(wand === full)
     assert(wand === logical)
@@ -88,7 +88,7 @@ class IndexSpec extends AnyFunSuite {
     val viaRange = r.decode(r.blocksForRange(0L, 1000L)).count()
     val all = r.decode(r.blocks).count()
     assert(viaRange === all)
-    val hits = r.topKAnd(Seq("spark", "join"), 10).count()
+    val hits = IndexExecutor.topK(r, "spark join", 10).count()
     assert(hits > 0)
   }
 
@@ -112,9 +112,9 @@ class IndexSpec extends AnyFunSuite {
     // to bucket 2 only, and results equal the fixed-width-bucket index
     val Some((lo, hi)) = r.prefixRange("s")
     assert(r.bucketOf(lo) === 2L && r.bucketOf(hi) === 2L)
-    val a = r.topKPrefixDocs("s", 10).collect()
+    val a = IndexExecutor.topK(r, "s*", 10).collect()
       .map(x => (x.getLong(0), x.getDouble(1))).toSeq
-    val b = reader.topKPrefixDocs("s", 10).collect()
+    val b = IndexExecutor.topK(reader, "s*", 10).collect()
       .map(x => (x.getLong(0), x.getDouble(1))).toSeq
     assert(a === b)
     val ga = graft.query.IndexExecutor.topK(r, "spark st*", 10).collect()
@@ -137,9 +137,9 @@ class IndexSpec extends AnyFunSuite {
     IndexBuilder.build(spark, corpus, d, numShards = 1, blockSize = 256,
       prefixBoundaries = bs)
     val r = new IndexReader(spark, d, cacheBlocks = false)
-    val a = r.topKPrefixDocs("s", 10).collect()
+    val a = IndexExecutor.topK(r, "s*", 10).collect()
       .map(x => (x.getLong(0), x.getDouble(1))).toSeq
-    val b = reader.topKPrefixDocs("s", 10).collect()
+    val b = IndexExecutor.topK(reader, "s*", 10).collect()
       .map(x => (x.getLong(0), x.getDouble(1))).toSeq
     assert(a === b)
   }
@@ -156,17 +156,18 @@ class IndexSpec extends AnyFunSuite {
     val b = reader.topKOrWand(Seq("spark", "hash"), 10).collect()
       .map(x => (x.getLong(0), x.getDouble(1))).toSeq
     assert(a === b)
-    val ca = r.topKCompletions("s", 10).collect().map(_.toSeq).toSeq
-    val cb = reader.topKCompletions("s", 10).collect().map(_.toSeq).toSeq
+    val ca = IndexExecutor.completions(r, "s*", 10).collect().map(_.toSeq).toSeq
+    val cb = IndexExecutor.completions(reader, "s*", 10).collect().map(_.toSeq).toSeq
     assert(ca === cb)
     // positionlists shrink to near-nothing (zero gaps under the gap codec)
     def posBytes(rd: IndexReader): Long = rd.blocks
       .agg(sum(length(col("positions")))).head().getLong(0)
     assert(posBytes(r) < posBytes(reader) / 4)
     // windowed / phrase queries refuse instead of answering wrongly
-    intercept[IllegalArgumentException](r.proximityDocs("batch", "batch", 1, 1))
     intercept[IllegalArgumentException](
-      graft.query.IndexExecutor.topK(r, "batch.batch", 10).collect())
+      Eval.windowMatchCounts(new IndexAtomSource(r), "batch", "batch", 1, 1))
+    intercept[IllegalArgumentException](
+      IndexExecutor.topK(r, "batch.batch", 10).collect())
     // the serving seam leaves them to that refusal, counting the guard
     import graft.query.{LocalServe, QueryParams}
     assert(LocalServe.hits(r, "batch.batch", 10, QueryParams.Default).isEmpty)

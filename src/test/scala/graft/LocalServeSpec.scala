@@ -138,18 +138,13 @@ class LocalServeSpec extends AnyFunSuite {
     assert(past.isDefined && hitsRows(past.get).isEmpty)
   }
 
-  test("serveHits equals the reader-native serving facades on their shapes") {
+  test("serveHits equals the distributed Eval plans on the bench shapes") {
     // the bench QuerySet routes keyword/OR/prefix through serveHits (the
-    // client surface); the reader's own keyword and prefix operators
-    // (topKOrFull, topKPrefixDocs) must agree exactly
-    assert(hitsRows(IndexExecutor.serveHits(reader, "aachen", 10)) ===
-      hitsRows(reader.topKOrFull(Seq("aachen"), 10)))
-    assert(hitsRows(IndexExecutor.serveHits(reader, "aachen|aal|merge", 10)) ===
-      hitsRows(reader.topKOrFull(Seq("aachen", "aal", "merge"), 10)))
-    assert(hitsRows(IndexExecutor.serveHits(reader, "aa*", 10)) ===
-      hitsRows(reader.topKPrefixDocs("aa", 10)))
-    assert(hitsRows(IndexExecutor.serveHits(reader, "ba*", 10)) ===
-      hitsRows(reader.topKPrefixDocs("ba", 10)))
+    // client surface); the distributed plans (IndexExecutor.topK) must
+    // agree exactly
+    for (q <- Seq("aachen", "aachen|aal|merge", "aa*", "ba*"))
+      assert(hitsRows(IndexExecutor.serveHits(reader, q, 10)) ===
+        hitsRows(IndexExecutor.topK(reader, q, 10)), q)
   }
 
   test("whole-result history: repeats hit the page cache, keyed by params") {

@@ -55,22 +55,36 @@ class OpsSpec extends AnyFunSuite {
     assert(c === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 9L -> 7L))
   }
 
-  test("duplicate clusters: deep chain converges via pointer jumping + early stop") {
+  test("duplicate clusters: deep chain converges via star rounds + early stop") {
     import spark.implicits._
-    // a 12-node chain (diameter 11) exercises multiple propagation+jump
-    // rounds, the round-0 join-free propagation AND the converged-after-
-    // propagation early stop (r6 optimization): labels must still land on
-    // the component min within the default maxIter via pointer jumping
-    // (driver bound 0: the distributed rounds, not the union-find)
+    // a 12-node chain (diameter 11) needs several large-star / small-star
+    // alternations and stops at the first star forest: labels must land on
+    // the component min within the default maxIter (driver bound 0: the
+    // distributed rounds, not the union-find)
     val chain = (1L until 12L).map(i => (i, i + 1)).toDF("a", "b")
     val c = Dedup.duplicateClusters(chain, 10, 0L).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(c === (1L to 12L).map(_ -> 1L).toMap)
-    // maxIter bounds only the rounds: one round cannot settle the chain,
-    // the driver path answers it whatever maxIter is
+    // maxIter bounds only the rounds: one alternation cannot settle the
+    // chain, the driver path answers it whatever maxIter is
     intercept[IllegalArgumentException](Dedup.duplicateClusters(chain, 1, 0L))
     assert(Dedup.duplicateClusters(chain, 1).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap === c)
+  }
+
+  test("duplicate clusters: a 200-node scattered-id chain converges at the default maxIter") {
+    import spark.implicits._
+    // scattered ids along a long path: the rounds must settle within the
+    // default 10 and agree with the driver union-find
+    for (seed <- Seq(3, 11)) {
+      val ids = new scala.util.Random(seed).shuffle((0 until 200).map(i => 7L + 13L * i))
+      val chain = ids.sliding(2).map(p => (p(0), p(1))).toSeq.toDF("a", "b")
+      val rounds = Dedup.duplicateClusters(chain, 10, 0L).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(rounds === ids.map(_ -> 7L).toMap, s"seed $seed")
+      assert(rounds === Dedup.duplicateClusters(chain).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap, s"seed $seed")
+    }
   }
 
   /** Connected components by breadth-first search: id -> component min. */
@@ -114,9 +128,7 @@ class OpsSpec extends AnyFunSuite {
   private def bothPaths(pairs: org.apache.spark.sql.DataFrame): Map[Long, Long] = {
     import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
     val local = Dedup.duplicateClusters(pairs)
-    // scattered ids slow min-label propagation down (a chain can take
-    // rounds near two thirds of its length), hence the generous maxIter
-    val rounds = Dedup.duplicateClusters(pairs, 60, 0L)
+    val rounds = Dedup.duplicateClusters(pairs, 10, 0L)
     assert(local.queryExecution.analyzed.isInstanceOf[LocalRelation])
     // (an empty input stays an empty local relation on either path)
     if (!pairs.isEmpty) assert(!rounds.queryExecution.analyzed.isInstanceOf[LocalRelation])

@@ -2,6 +2,7 @@ package graft
 
 import graft.core.WebCorpus
 import graft.index.{IndexBuilder, IndexReader}
+import graft.query.IndexExecutor
 import graft.streaming.StreamingIndexer
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -38,7 +39,7 @@ class StreamingIndexSpec extends AnyFunSuite {
     val after = new IndexReader(spark, dir, cacheBlocks = false)
     val decoded = after.decode(after.blocksForRange(lo, hi))
     assert(decoded.count() === nBefore + 3) // 3 new docs contain "spark"
-    val topDocs = after.topKOrFull(Seq("spark"), 100).collect().map(_.getLong(0)).toSet
+    val topDocs = IndexExecutor.topK(after, "spark", 100).collect().map(_.getLong(0)).toSet
     assert(topDocs.contains(maxDoc + 1) && topDocs.contains(maxDoc + 2) && topDocs.contains(maxDoc + 3))
     // unseen term is skipped until the next batch rebuild (documented drift)
     assert(after.dictionary.filter(col("term") === "totallynewterm").count() === 0)
@@ -66,7 +67,7 @@ class StreamingIndexSpec extends AnyFunSuite {
       val r = new IndexReader(spark, dir, cacheBlocks = false)
       val dec = r.decode(r.blocks).select(col("term_id"), col("doc_id"), col("tf"))
         .collect().map(x => (x.getLong(0), x.getLong(1), x.getLong(2))).toSeq.sorted
-      val top = r.topKOrFull(Seq("spark", "merge"), 20)
+      val top = IndexExecutor.topK(r, "spark|merge", 20)
         .collect().map(x => (x.getLong(0), x.getDouble(1))).toSeq
       (dec, top)
     }
@@ -102,7 +103,7 @@ class StreamingIndexSpec extends AnyFunSuite {
     val after = snapshot()
     assert(after._1.size === before._1.size + 2) // spark + stream postings
     val r2 = new IndexReader(spark, dir, cacheBlocks = false)
-    assert(r2.topKOrFull(Seq("spark"), 100).collect().map(_.getLong(0)).toSet
+    assert(IndexExecutor.topK(r2, "spark", 100).collect().map(_.getLong(0)).toSet
       .contains(maxDoc + 4))
 
     // a full REBUILD at the path is a new index generation: the stale
@@ -173,7 +174,7 @@ class StreamingIndexSpec extends AnyFunSuite {
     // a default-encoded shard would decode to garbage or throw
     val r = new IndexReader(spark, dir, cacheBlocks = false)
     assert(r.doclistCodec === graft.index.Codec.Gamma)
-    val hits = r.topKOrFull(Seq("spark"), 10000).collect().map(_.getLong(0)).toSet
+    val hits = IndexExecutor.topK(r, "spark", 10000).collect().map(_.getLong(0)).toSet
     assert(hits.contains(maxDoc + 1))
   }
 

@@ -32,7 +32,7 @@ class WandSpec extends AnyFunSuite {
 
     val (wandDf, total, scanned) = reader.topKOrWandStats(Seq("gold", "filler"), 5)
     val wand = wandDf.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val full = reader.topKOrFull(Seq("gold", "filler"), 5)
+    val full = IndexExecutor.topK(reader, "gold|filler", 5)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
 
     assert(total > 10)
@@ -64,7 +64,7 @@ class WandSpec extends AnyFunSuite {
 
     val (wandDf, total, scanned) = reader.topKOrWandStats(Seq("gold", "web"), 5)
     val wand = wandDf.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val full = reader.topKOrFull(Seq("gold", "web"), 5)
+    val full = IndexExecutor.topK(reader, "gold|web", 5)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
 
     assert(total > 300, s"skew fixture should span >300 blocks, got $total")
@@ -86,29 +86,18 @@ class WandSpec extends AnyFunSuite {
       df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
 
     // parity: the serving facade (IndexExecutor.serveHits -> LocalServe)
-    // must equal the reader's distributed operators exactly (same scores at
-    // 4dp, same total order) -- single keyword, OR, prefix
-    for ((q, terms) <- Seq("gold" -> Seq("gold"), "gold|web" -> Seq("gold", "web"),
-        "silver|mining|web" -> Seq("silver", "mining", "web"))) {
+    // serves single keyword, OR and prefix locally and equals the
+    // distributed Eval plans exactly (same scores at 4dp, same total order)
+    for (q <- Seq("gold", "gold|web", "silver|mining|web", "numbe*", "go*"))
       assert(LocalServe.hits(reader, q, 10, QueryParams.Default).isDefined, q)
-      assert(rows(IndexExecutor.serveHits(reader, q, 10)) ===
-        rows(reader.topKOrFull(terms, 10)), q)
-    }
-    for (p <- Seq("numbe", "go")) {
-      assert(LocalServe.hits(reader, s"$p*", 10, QueryParams.Default).isDefined, p)
-      assert(rows(IndexExecutor.serveHits(reader, s"$p*", 10)) ===
-        rows(reader.topKPrefixDocs(p, 10)), p)
-    }
-    // the same shapes on the distributed Eval plans: results identical to
-    // the driver-resident path
     for (q <- Seq("gold", "gold|web", "silver|mining|web", "numbe*", "go*",
         "nosuchword", "gold|nosuchword"))
       assert(rows(IndexExecutor.serveHits(reader, q, 10)) ===
         rows(IndexExecutor.topK(reader, q, 10)), q)
-    // unknown terms: same empty/partial semantics as the operator path
+    // unknown terms: no hits alone, nothing added as an OR alternative
     assert(rows(IndexExecutor.serveHits(reader, "nosuchword", 10)).isEmpty)
     assert(rows(IndexExecutor.serveHits(reader, "gold|nosuchword", 10)) ===
-      rows(reader.topKOrFull(Seq("gold", "nosuchword"), 10)))
+      rows(IndexExecutor.topK(reader, "gold", 10)))
 
     // warm = ZERO Spark jobs: the atoms are driver-resident, so both a
     // repeated page and a new page (k = 5) over them run none
