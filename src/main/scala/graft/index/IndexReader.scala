@@ -1,6 +1,6 @@
 package graft.index
 
-import graft.core.Analysis
+import graft.core.{Analysis, Lru}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -216,9 +216,8 @@ class IndexReader(val spark: SparkSession, val dir: String,
     // listing, and on an object store a serving fleet's reader churn must
     // not pay it per construction (the epoch already fingerprints the
     // layout, so a changed dir cannot reuse a stale size).
-    if (IndexReader.dirBytesMemo.size() > 1024) IndexReader.dirBytesMemo.clear()
     def dirBytes: Long =
-      IndexReader.dirBytesMemo.computeIfAbsent((dir, indexEpoch), _ =>
+      IndexReader.dirBytesMemo.getOrCompute((dir, indexEpoch))(
         try {
           val p = new org.apache.hadoop.fs.Path(s"$dir/blocks")
           java.lang.Long.valueOf(p.getFileSystem(
@@ -251,12 +250,12 @@ class IndexReader(val spark: SparkSession, val dir: String,
     */
   @transient lazy val vocabulary: Vocabulary = Vocabulary.load(dictionary)
 
-  /** Distinct query-term sets the WAND block-count memo holds before a
-    * wholesale reset.
+  /** WAND block count per distinct query-term set, least recently used
+    * out past 2^20 sets: distinct term-id SETS are unbounded over a
+    * serving session (every new keyword combination adds a key).
     */
-  private val BlockCountMemoMax = 1 << 20
-  private val blockCountMemo =
-    new java.util.concurrent.ConcurrentHashMap[Seq[Long], java.lang.Long]()
+  @transient private lazy val blockCountMemo =
+    new Lru[Seq[Long], java.lang.Long]("wand block counts", maxEntries = 1 << 20)
 
   /** term -> (term_id, df) for the terms that are in the vocabulary. */
   def termInfo(terms: Seq[String]): Map[String, (Long, Long)] =
@@ -378,22 +377,10 @@ class IndexReader(val spark: SparkSession, val dir: String,
     // frozen per reader (cached at first scan; delta shards appear to a
     // NEW reader), so a warm repeated query skips the job entirely.
     val qBlocks = blocksForIds(ids)
-    // wholesale reset: distinct term-id SETS are unbounded over a serving
-    // session (every new keyword combination adds a key). The count job runs
-    // OUTSIDE the map (get / compute / putIfAbsent, not computeIfAbsent):
-    // a cold multi-second count inside the CHM bin lock would stall
-    // unrelated queries hashing to the same bin -- the same
-    // miss-must-not-serialize discipline as the query caches.
-    if (blockCountMemo.size() > BlockCountMemoMax) blockCountMemo.clear()
-    val memoKey = ids.sorted
-    val memoized = blockCountMemo.get(memoKey)
-    val totalBlocks =
-      if (memoized != null) memoized.longValue()
-      else {
-        val n = qBlocks.count()
-        blockCountMemo.putIfAbsent(memoKey, java.lang.Long.valueOf(n))
-        n
-      }
+    // the count job runs outside the memo's monitor: a cold multi-second
+    // count must not stall unrelated queries
+    val totalBlocks = blockCountMemo.getOrCompute(ids.sorted)(
+      java.lang.Long.valueOf(qBlocks.count())).longValue()
     if (totalBlocks == 0) return (emptyHits, 0L, 0L)
     if (totalBlocks <= wandMinBlocks)
       return (scoreTopK(qBlocks), totalBlocks, totalBlocks)
@@ -572,15 +559,18 @@ object IndexReader {
     */
   private[index] val MergedSidecarSentinel = "#end"
 
-  private val mergedMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), Seq[String]]()
+  /** Merged-shard names per committed commit dir; at 1,024 dirs the least
+    * recently used goes.
+    */
+  private val mergedMemo = new Lru[(String, String), Seq[String]]("merged shards",
+    maxEntries = 1024)
 
   /** blocks-dir byte size by (dir, epoch) -- see the cache-guard comment in
-    * [[IndexReader.blocks]]. Entries are 2 machine words; the clear guard
-    * only matters for pathological dir churn.
+    * [[IndexReader.blocks]]. Entries are 2 machine words; the 1,024-entry
+    * cap (least recently used out) only matters for pathological dir churn.
     */
   private[index] val dirBytesMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), java.lang.Long]()
+    new Lru[(String, Long), java.lang.Long]("blocks dir bytes", maxEntries = 1024)
 
   private[graft] def mergedShardsOf(spark: SparkSession, commitDir: String): Seq[String] = {
     val conf = spark.sparkContext.hadoopConfiguration
@@ -619,7 +609,6 @@ object IndexReader {
         .select("merged_shard").collect().map(_.getString(0)).toSeq
     }
     if (successStat != "absent") {
-      if (mergedMemo.size() > 1024) mergedMemo.clear() // unbounded dirs guard
       mergedMemo.putIfAbsent(key, names)
     }
     names

@@ -1,6 +1,6 @@
 package graft.query
 
-import graft.core.Analysis
+import graft.core.{Analysis, Lru}
 import graft.index.{IndexReader, Vocabulary}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
@@ -138,10 +138,6 @@ class IndexAtomSource(reader: IndexReader) extends AtomSource {
     val runs0 = IndexAtomSource.rangeCache.get(key)
     val slice0 = IndexAtomSource.sliceCache.get(key)
     if (runs0 != null && slice0 != null) return (runs0, slice0)
-    if (IndexAtomSource.rangeCache.size() > IndexAtomSource.RangeCacheMax)
-      IndexAtomSource.rangeCache.clear() // crude bound; entries are cheap to recompute
-    if (IndexAtomSource.sliceCache.size() > IndexAtomSource.SliceCacheMax)
-      IndexAtomSource.sliceCache.clear()
     val cand = candidates(atom)
     val rows = cand.orderBy(col("term_id"))
       .limit(IndexAtomSource.MaxExactIds + 1)
@@ -154,9 +150,8 @@ class IndexAtomSource(reader: IndexReader) extends AtomSource {
         val r = cand.agg(min(col("term_id")), max(col("term_id"))).head()
         (Seq((r.getLong(0), r.getLong(1))), None)
       } else (IndexAtomSource.toRuns(rows.map(_._1)), Some(rows))
-    IndexAtomSource.rangeCache.put(key, runs)
-    IndexAtomSource.sliceCache.put(key, slice)
-    (runs, slice)
+    (IndexAtomSource.rangeCache.putIfAbsent(key, runs),
+      IndexAtomSource.sliceCache.putIfAbsent(key, slice))
   }
 
   /** One vocabulary term iff the candidate slice has exactly one entry --
@@ -193,21 +188,21 @@ object IndexAtomSource {
   /** (index dir, index epoch, fuzzy atom) -> candidate term-id runs;
     * atoms repeat across a serving session and runs are immutable per
     * built index -- the epoch key makes a rebuild into the same dir a
-    * different cache row, and the size bound keeps an adversarial atom
-    * stream from growing the map without limit.
+    * different cache row. At the entry cap the least recently used atom
+    * goes, so an adversarial atom stream cannot grow the memo without
+    * limit.
     */
-  private[query] val RangeCacheMax = 65536
   private[query] val rangeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Atom), Seq[(Long, Long)]]()
+    new Lru[(String, Long, Atom), Seq[(Long, Long)]]("fuzzy runs", maxEntries = 65536)
 
   /** (index dir, epoch, fuzzy atom) -> driver-held candidate slice, or None for
-    * hull-sized sets. Bounded tighter than the runs memo: a slice is up to
-    * [[MaxExactIds]] (term_id, term, df) tuples.
+    * hull-sized sets; least recently used out at the cap. Capped tighter
+    * than the runs memo: a slice is up to [[MaxExactIds]]
+    * (term_id, term, df) tuples.
     */
-  private[query] val SliceCacheMax = 512
   private[query] val sliceCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Atom),
-      Option[Array[(Long, String, Long)]]]()
+    new Lru[(String, Long, Atom), Option[Array[(Long, String, Long)]]]("fuzzy slices",
+      maxEntries = 512)
 
   /** Plan-size bound of the DISTRIBUTED plans only: candidate sets up to
     * this size prune blocks by their EXACT id runs and broadcast their

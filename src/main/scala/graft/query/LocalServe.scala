@@ -1,6 +1,6 @@
 package graft.query
 
-import graft.core.Analysis
+import graft.core.{Analysis, Lru}
 import graft.index.{Codec, IndexReader, PointReader, Vocabulary}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
@@ -62,44 +62,36 @@ object LocalServe {
   private val EmptyAtom = LocalAtom(Array.empty, Array.empty, Array.empty,
     Array.empty, Array.empty, Array.empty)
 
-  /** Per-reader decoded-atom LRU -- the driver's only postings cache --
-    * keyed by (index epoch, atom) so a rebuild into the same directory
-    * never serves stale lists. Held weight ([[LocalAtom.weight]]) stays
-    * within [[IndexReader.LocalListBudgetPostings]]: an insert evicts least
-    * recently used entries until it fits, but never the entry it inserts, so
-    * a single atom over the budget is still held (alone). Held in a weak map
-    * keyed by reader INSTANCE: the cache dies with its reader, so rebuilds /
-    * short-lived readers cannot accumulate driver memory.
+  /** The decoded-atom LRU -- the driver's only postings cache -- keyed by
+    * (index epoch, atom) so a rebuild into the same directory never serves
+    * stale lists, weighed by [[LocalAtom.weight]].
     */
-  private[graft] final class AtomCache {
-    private val lru = new java.util.LinkedHashMap[(Long, Atom), LocalAtom](16, 0.75f, true)
-    private var weight = 0L
-    def count: Int = synchronized(lru.size)
-    def get(epoch: Long, atom: Atom): LocalAtom = synchronized(lru.get((epoch, atom)))
-    def put(epoch: Long, atom: Atom, la: LocalAtom): LocalAtom = synchronized {
-      val key = (epoch, atom)
-      if (lru.get(key) == null) {
-        lru.put(key, la)
-        weight += la.weight
-        val it = lru.entrySet().iterator()
-        while (weight > IndexReader.LocalListBudgetPostings && lru.size > 1 &&
-            it.hasNext) {
-          val e = it.next()
-          if (e.getKey != key) { weight -= e.getValue.weight; it.remove() }
-        }
-      }
-      lru.get(key)
-    }
+  private[graft] def atomLru(): Lru[(Long, Atom), LocalAtom] =
+    new Lru("atoms", maxWeight = IndexReader.LocalListBudgetPostings, weigher = _.weight)
+
+  /** One reader's serving state: its atom, page and docs LRUs and its
+    * fallback counts. Held in a weak map keyed by reader INSTANCE: the
+    * state dies with its reader, so rebuilds / short-lived readers cannot
+    * accumulate driver memory.
+    */
+  private final class ReaderState {
+    val atoms: Lru[(Long, Atom), LocalAtom] = atomLru()
+    val pages = new Lru[(Long, String, String, Int, QueryParams), Page]("pages",
+      maxEntries = ResultCacheMaxEntries)
+    val docs = new Lru[Long, (String, String)]("docs",
+      maxWeight = DocsCacheBudgetChars, weigher = v => v._1.length + v._2.length)
+    val fallbacks: Map[Fallback, java.util.concurrent.atomic.LongAdder] =
+      Fallback.all.map(_ -> new java.util.concurrent.atomic.LongAdder).toMap
   }
 
-  private val caches = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[IndexReader, AtomCache]())
-  private def cacheFor(reader: IndexReader): AtomCache =
-    caches.computeIfAbsent(reader, _ => new AtomCache)
+  private val states = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[IndexReader, ReaderState]())
+  private def stateOf(reader: IndexReader): ReaderState =
+    states.computeIfAbsent(reader, _ => new ReaderState)
 
   /** spec hook: decoded atoms currently held for this reader. */
   private[graft] def cachedAtomCount(reader: IndexReader): Int =
-    cacheFor(reader).count
+    stateOf(reader).atoms.size
 
   /** The guard that sent a request to the distributed plans. */
   private[graft] sealed trait Fallback
@@ -126,20 +118,13 @@ object LocalServe {
       FuzzyBestMatch, TrailingJoinBlock, PositionlessWindow)
   }
 
-  private val fallbackCounts = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[IndexReader,
-      Map[Fallback, java.util.concurrent.atomic.LongAdder]]())
-
-  private def countsFor(reader: IndexReader) = fallbackCounts.computeIfAbsent(
-    reader, _ => Fallback.all.map(_ -> new java.util.concurrent.atomic.LongAdder).toMap)
-
   /** Requests on this reader that `cause` sent to the distributed plans. */
   private[graft] def fallbackCount(reader: IndexReader, cause: Fallback): Long =
-    countsFor(reader)(cause).sum
+    stateOf(reader).fallbacks(cause).sum
 
   /** Count a fallback under its cause; the None the caller returns. */
   private def fallback(reader: IndexReader, cause: Fallback): None.type = {
-    countsFor(reader)(cause).increment()
+    stateOf(reader).fallbacks(cause).increment()
     None
   }
 
@@ -194,11 +179,11 @@ object LocalServe {
     */
   private def localAtoms(reader: IndexReader, src: IndexAtomSource,
                          wanted: Seq[Atom]): Option[java.util.HashMap[Atom, LocalAtom]] = {
-    val cache = cacheFor(reader)
+    val cache = stateOf(reader).atoms
     val atoms = new java.util.HashMap[Atom, LocalAtom]()
     val colds = new scala.collection.mutable.ArrayBuffer[(Atom, Seq[(Long, Long)])]
     for (a <- wanted.distinct) {
-      val hit = cache.get(reader.indexEpoch, a)
+      val hit = cache.get((reader.indexEpoch, a))
       if (hit != null) atoms.put(a, hit)
       else src.exactRuns(a) match {
         case None => return fallback(reader, Fallback.FuzzyHull)
@@ -215,7 +200,7 @@ object LocalServe {
         val sorted = runs.toIndexedSeq
         val own = segs.filter(s => inRuns(sorted, s.termId))
           .sortBy(s => (s.termId, s.firstDocId))
-        atoms.put(a, cache.put(reader.indexEpoch, a, buildAtom(reader, own)))
+        atoms.put(a, cache.putIfAbsent((reader.indexEpoch, a), buildAtom(reader, own)))
       }
     }
     Some(atoms)
@@ -616,34 +601,15 @@ object LocalServe {
       spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
   }
 
-  private final class ResultCache {
-    private val lru = new java.util.LinkedHashMap[
-      (Long, String, String, Int, QueryParams), Page](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(Long, String, String, Int, QueryParams), Page]): Boolean =
-        size > LocalServe.ResultCacheMaxEntries
-    }
-    def get(k: (Long, String, String, Int, QueryParams)): Page =
-      synchronized(lru.get(k))
-    def put(k: (Long, String, String, Int, QueryParams), v: Page): Unit =
-      synchronized { lru.put(k, v); () }
-    def count: Int = synchronized(lru.size)
-  }
-
   /** Result-history entry cap, in pages (pages are k-sized rows, so this
     * bounds the cache at a few MB -- the reference's History byte budget
     * role).
     */
   val ResultCacheMaxEntries: Int = 4096
 
-  private val resultCaches = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[IndexReader, ResultCache]())
-  private def resultCacheFor(reader: IndexReader): ResultCache =
-    resultCaches.computeIfAbsent(reader, _ => new ResultCache)
-
   /** spec hook */
   private[graft] def cachedResultCount(reader: IndexReader): Int =
-    resultCacheFor(reader).count
+    stateOf(reader).pages.size
 
   /** Row shape of a hits page: (doc_id, score). */
   private[graft] val HitSchema: StructType = StructType(Seq(
@@ -662,13 +628,10 @@ object LocalServe {
   private def historyPage(reader: IndexReader,
                           key: (Long, String, String, Int, QueryParams),
                           schema: StructType)(compute: => Option[Seq[Row]]): Option[Page] = {
-    val cached = resultCacheFor(reader).get(key)
+    val pages = stateOf(reader).pages
+    val cached = pages.get(key)
     if (cached != null) return Some(cached)
-    compute.map { rows =>
-      val p = new Page(reader.spark, rows, schema)
-      resultCacheFor(reader).put(key, p)
-      p
-    }
+    compute.map(rows => pages.putIfAbsent(key, new Page(reader.spark, rows, schema)))
   }
 
   // ---- top-k / completions facades -------------------------------------------
@@ -849,38 +812,12 @@ object LocalServe {
   // typing chains (`a`, `aa`, `aal`) re-rank the same top docs, so the LRU
   // hit rate is the autocompletion hit rate.
 
-  private final class DocsCache {
-    private val lru = new java.util.LinkedHashMap[Long, (String, String)](16, 0.75f, true)
-    private var chars = 0L
-    def count: Int = synchronized(lru.size)
-    def get(id: Long): (String, String) = synchronized(lru.get(id))
-    def put(id: Long, v: (String, String)): Unit = synchronized {
-      if (lru.get(id) == null) {
-        lru.put(id, v)
-        chars += v._1.length + v._2.length
-        val it = lru.entrySet().iterator()
-        while (chars > LocalServe.DocsCacheBudgetChars && lru.size > 1 && it.hasNext) {
-          val e = it.next()
-          if (e.getKey != id) {
-            chars -= e.getValue._1.length + e.getValue._2.length
-            it.remove()
-          }
-        }
-      }
-    }
-  }
-
   /** Docs-LRU byte budget (chars; ~2 bytes each -> ~64 MB). */
   val DocsCacheBudgetChars: Long = 32L * 1024 * 1024
 
-  private val docsCaches = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[IndexReader, DocsCache]())
-  private def docsCacheFor(reader: IndexReader): DocsCache =
-    docsCaches.computeIfAbsent(reader, _ => new DocsCache)
-
   /** spec hook */
   private[graft] def cachedDocCount(reader: IndexReader): Int =
-    docsCacheFor(reader).count
+    stateOf(reader).docs.size
 
   /** (url, text) for each hit id present in the docs store, misses fetched
     * in ONE point read of the docs files ([[IndexReader.points]]: the doc_id
@@ -888,7 +825,7 @@ object LocalServe {
     */
   private def docTexts(reader: IndexReader,
                        ids: Seq[Long]): Map[Long, (String, String)] = {
-    val cache = docsCacheFor(reader)
+    val cache = stateOf(reader).docs
     val out = scala.collection.mutable.Map.empty[Long, (String, String)]
     val misses = scala.collection.mutable.ArrayBuffer.empty[Long]
     ids.distinct.foreach { id =>
@@ -897,7 +834,7 @@ object LocalServe {
     }
     if (misses.nonEmpty) {
       reader.points.docs(misses.toSeq).foreach { case (id, url, text) =>
-        cache.put(id, (url, text))
+        cache.putIfAbsent(id, (url, text))
         out(id) = (url, text)
       }
     }

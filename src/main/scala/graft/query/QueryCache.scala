@@ -127,8 +127,7 @@ class IndexQueryCache(maxEntries: Int = 200,
     * must not unpersist what another owner may still serve.
     */
   /** inflight: derivations currently materializing outside the lock from
-    * this entry's relation, plus open borrow scopes holding it; eviction
-    * skips such entries (see [[evictOverBudget]]).
+    * this entry's relation, plus open borrow scopes holding it.
     */
   /** dropped: the entry left the map (clear) while references were still
     * out; the LAST reference release performs the deferred unpersist --
@@ -149,8 +148,16 @@ class IndexQueryCache(maxEntries: Int = 200,
   private def releaseRef(e: Entry): Unit =
     if (e.inflight.decrementAndGet() == 0 && e.dropped.get() && e.owned)
       e.df.unpersist()
-  private val lru = new java.util.LinkedHashMap[Key, Entry](16, 0.75f, true)
-  private var totalBytes = 0L
+
+  /** Pinned entries and bases of in-flight derivations are never victims
+    * (an unpersist under a materializing filter-of-base corrupted results
+    * -- round 3); the in-flight skip is transient. Its monitor guards every
+    * compound step below.
+    */
+  private val lru = new graft.core.Lru[Key, Entry]("history", maxEntries, maxBytes,
+    weigher = _.bytes,
+    evictable = e => !e.pinned && e.inflight.get() == 0,
+    onEvict = e => if (e.owned) e.df.unpersist())
 
   /** While true, inserts are PINNED: exempt from LRU/byte eviction for the
     * cache's lifetime (reference `--keep-in-history-queries`,
@@ -185,7 +192,7 @@ class IndexQueryCache(maxEntries: Int = 200,
     *
     * Budget bound while scopes are open: every handed-out entry is
     * inflight-pinned for the scope's duration, so under a small byte
-    * budget `evictOverBudget` may free nothing and `totalBytes` can
+    * budget eviction may free nothing and [[cachedBytes]] can
     * exceed `maxBytes` by up to ONE request's distinct-atom working set
     * per concurrently open scope. Operators sizing `maxBytes` should
     * treat the budget as advisory headroom, not a hard cap, while
@@ -213,25 +220,27 @@ class IndexQueryCache(maxEntries: Int = 200,
   }
 
   /** Number of pinned entries (spec hook). */
-  def pinnedCount: Int = synchronized {
-    var n = 0
-    lru.values().forEach(e => if (e.pinned) n += 1)
-    n
-  }
+  def pinnedCount: Int = count(_.pinned)
 
   /** Number of entries some request still holds in flight (spec hook):
     * 0 whenever no request is running, timed-out ones included.
     */
-  def inflightCount: Int = synchronized {
+  def inflightCount: Int = count(_.inflight.get() > 0)
+
+  private def count(p: Entry => Boolean): Int = {
     var n = 0
-    lru.values().forEach(e => if (e.inflight.get() > 0) n += 1)
+    lru.forEach((_, e) => if (p(e)) n += 1)
     n
   }
 
-  var hits = 0L
-  var filteredHits = 0L
-  var misses = 0L
-  var evictions = 0L
+  /** Exact hits; filtered hits (a miss on the exact key answered by
+    * filtering a cached broader prefix); misses that computed.
+    */
+  def hits: Long = lru.hits
+  def filteredHits: Long = lru.synchronized(filtered)
+  def misses: Long = lru.synchronized(lru.misses - filtered)
+  def evictions: Long = lru.evictions
+  private var filtered = 0L
 
   /** Scored relation for `atom`: exact hit, filter of a cached broader
     * prefix, or compute (+persist).
@@ -246,9 +255,9 @@ class IndexQueryCache(maxEntries: Int = 200,
   def atomScored(dir: String, epoch: Long, atom: Atom,
                  compute: Atom => DataFrame): DataFrame = {
     val key = (dir, epoch, atom)
-    val fast: Either[(Option[DataFrame], Option[Entry]), DataFrame] = synchronized {
+    val fast: Either[(Option[DataFrame], Option[Entry]), DataFrame] = lru.synchronized {
       val exact = lru.get(key)
-      if (exact != null) { hits += 1; lend(exact); Right(exact.df) }
+      if (exact != null) { lend(exact); Right(exact.df) }
       else {
         // copyAndFilter: the narrowing predicate for `atom` under a cached
         // broader prefix entry, if either is expressible (plan-only, no jobs)
@@ -275,15 +284,15 @@ class IndexQueryCache(maxEntries: Int = 200,
             // recency so the hottest base prefix is not the next LRU
             // victim, and mark it in flight so eviction cannot unpersist
             // it while the derived plan materializes outside the lock
-            lru.get((dir, epoch, broader))
+            lru.touch((dir, epoch, broader))
             entry.inflight.incrementAndGet()
             lend(entry) // base stays guarded for the caller's whole scope
             (entry.df.filter(pred), entry)
           }
         }
         narrowed match {
-          case Some((df, base)) => filteredHits += 1; Left((Some(df), Some(base)))
-          case None => misses += 1; Left((None, None))
+          case Some((df, base)) => filtered += 1; Left((Some(df), Some(base)))
+          case None => Left((None, None))
         }
       }
     }
@@ -313,9 +322,10 @@ class IndexQueryCache(maxEntries: Int = 200,
           if (owned) plan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
           else plan // arrived persisted: owned elsewhere, never unpersist it
         val bytes = QueryHistory.estimateBytes(persisted)
-        synchronized {
-          val won = lru.get(key)
-          if (won != null) {
+        lru.synchronized {
+          val e = Entry(persisted, bytes, owned, pinned = pinInserts)
+          val won = lru.putIfAbsent(key, e)
+          if (won ne e) {
             // Another thread beat us to the insert. When the two threads'
             // plans are semantically equal they share ONE Spark cache
             // entry, which the winner's eviction will release --
@@ -329,66 +339,32 @@ class IndexQueryCache(maxEntries: Int = 200,
             if (owned && !persisted.queryExecution.analyzed
                   .sameResult(won.df.queryExecution.analyzed))
               persisted.unpersist()
-            lend(won)
-            won.df
-          } else {
-            val e = Entry(persisted, bytes, owned, pinned = pinInserts)
-            lru.put(key, e)
-            totalBytes += bytes
-            lend(e) // guard our own insert before eviction can see it
-            evictOverBudget()
-            persisted
           }
+          // under the monitor the insert made: no evictor sees the entry
+          // before its borrow scope does
+          lend(won)
+          won.df
         }
         } finally baseOpt.foreach(releaseRef)
     }
   }
 
-  /** Evict least-recently-used UNPINNED entries while over the entry cap
-    * or byte budget; the just-inserted (youngest) entry is never the
-    * victim -- one oversized relation evicts the rest and stays cached
-    * alone rather than thrashing in and out. Pinned entries are skipped
-    * (never evicted), so a budget fully occupied by pins simply stops
-    * evicting -- the reference's keep-queries behave the same way.
-    */
-  private def evictOverBudget(): Unit = {
-    val it = lru.entrySet().iterator()
-    var seen = 0
-    val candidates = lru.size - 1 // everything but the youngest
-    while ((lru.size > maxEntries || totalBytes > maxBytes) &&
-        it.hasNext && seen < candidates) {
-      val eldest = it.next()
-      seen += 1
-      // skip pinned entries AND bases of in-flight derivations (an
-      // unpersist under a materializing filter-of-base corrupted results
-      // -- round 3); the in-flight skip is transient, the entry is
-      // evictable again once the derivation lands
-      if (!eldest.getValue.pinned && eldest.getValue.inflight.get() == 0) {
-        if (eldest.getValue.owned) eldest.getValue.df.unpersist()
-        totalBytes -= eldest.getValue.bytes
-        evictions += 1
-        it.remove()
-      }
-    }
-  }
-
   /** Current estimated cached bytes / entry count (spec hooks). */
-  def cachedBytes: Long = synchronized(totalBytes)
-  def size: Int = synchronized(lru.size)
+  def cachedBytes: Long = lru.weight
+  def size: Int = lru.size
 
-  def clear(): Unit = synchronized {
+  def clear(): Unit = lru.synchronized {
     // referenced entries (in-flight derivations, active borrow scopes)
     // are marked dropped instead of unpersisted here; the LAST reference
     // release performs the deferred unpersist (releaseRef) -- nothing
     // leaks, and nothing is yanked from under a materializing query
-    lru.values().forEach { e =>
+    lru.forEach { (_, e) =>
       if (e.owned) {
         e.dropped.set(true)
         if (e.inflight.get() == 0) e.df.unpersist()
       }
     }
     lru.clear()
-    totalBytes = 0
-    hits = 0; filteredHits = 0; misses = 0; evictions = 0
+    filtered = 0
   }
 }

@@ -220,6 +220,9 @@ object QueryParser {
     else if (s.endsWith("$")) { exact = true; s = s.dropRight(1) }
     else if (s.endsWith("~")) { fuzzy = true; s = s.dropRight(1) }
     else if (s.endsWith("^")) { synonym = true; s = s.dropRight(1) }
-    Word(graft.core.Tokenizer.toLowerAscii(s), prefix, not, exact, fuzzy, synonym)
+    // `:facet:Autor:` / `:filter:Autor:mann`: special words are indexed
+    // with their field name's case, so they keep it (as WordRange bounds do)
+    val text = if (s.startsWith(":")) s else graft.core.Tokenizer.toLowerAscii(s)
+    Word(text, prefix, not, exact, fuzzy, synonym)
   }
 }

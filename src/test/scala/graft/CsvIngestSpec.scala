@@ -248,14 +248,17 @@ class CsvIngestSpec extends AnyFunSuite {
       .collect().map(_.getLong(0)).toSeq
     assert(hits === Seq(1L))
     // facet counting = the doc count per completion of the :facet:
-    // namespace; the grammar lowercases query words, so the mixed-case
-    // field is asked as a prefix atom
+    // namespace, as a prefix atom and through the grammar (special words
+    // keep their case)
     val fc = new graft.query.IndexAtomSource(r)
       .atomScored(graft.query.QueryParser.Word(":facet:Autor:", prefix = true))
       .groupBy("term").count()
       .collect().map(x => (x.getString(0), x.getLong(1))).toMap
     assert(fc === Map(":facet:Autor:Mann, Thomas" -> 1L,
       ":facet:Autor:Kafka; Franz" -> 1L))
+    val viaGrammar = graft.query.IndexExecutor.completions(r, ":facet:Autor:*", 10)
+      .collect().map(_.getString(0)).toSet
+    assert(viaGrammar === Set(":facet:Autor:Mann, Thomas", ":facet:Autor:Kafka; Franz"))
     // ordering keys are word ranges over the sortable encoding
     val yr = r.dictionary.filter(
         org.apache.spark.sql.functions.col("term")

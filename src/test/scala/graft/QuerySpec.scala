@@ -54,6 +54,13 @@ class QueryParserSpec extends AnyFunSuite {
 
   test("queries are lowercased like the indexed terms") {
     assert(QueryParser.parse("SPARK").parts(0).atom === Word("spark"))
+    // special words are indexed with their field name's case and keep it
+    assert(QueryParser.parse(":facet:Autor:*").parts(0).atom ===
+      Word(":facet:Autor:", prefix = true))
+    assert(QueryParser.parse("x -:filter:Autor:mann").parts(1).atom ===
+      Word(":filter:Autor:mann", not = true))
+    assert(QueryParser.parse(":facet:lang:*").parts(0).atom ===
+      Word(":facet:lang:", prefix = true))
   }
 
   test("flexi separators: .,,. is +n, .;;. is -n (Separator.cpp:37-105)") {

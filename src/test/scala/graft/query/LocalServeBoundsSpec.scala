@@ -2,13 +2,14 @@ package graft.query
 
 import graft.index.IndexReader
 import graft.query.LocalServe.LocalAtom
-import graft.query.QueryParser.Word
+import graft.query.QueryParser.{Atom, Word}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The two bounds LocalServe's exactness and memory rest on, pinned at
   * their boundaries on synthetic inputs (no Spark): the 1e-4 rounding
   * window of [[LocalServe.roundedTop]] and the weight budget of the atom
-  * LRU ([[LocalServe.AtomCache]]).
+  * LRU ([[LocalServe.atomLru]]: the shared [[graft.core.Lru]] core under
+  * the atom weigher and [[IndexReader.LocalListBudgetPostings]]).
   */
 class LocalServeBoundsSpec extends AnyFunSuite {
 
@@ -70,8 +71,18 @@ class LocalServeBoundsSpec extends AnyFunSuite {
 
   private val Budget = IndexReader.LocalListBudgetPostings
 
+  /** The atom LRU as LocalServe builds it, keyed by (epoch, atom). */
+  private final class AtomLru {
+    private val lru = LocalServe.atomLru()
+    assert(lru.maxWeight === Budget)
+    def put(epoch: Long, atom: Atom, la: LocalAtom): LocalAtom =
+      lru.putIfAbsent((epoch, atom), la)
+    def get(epoch: Long, atom: Atom): LocalAtom = lru.get((epoch, atom))
+    def count: Int = lru.size
+  }
+
   test("atom LRU: total weight exactly at the budget keeps every entry") {
-    val cache = new LocalServe.AtomCache
+    val cache = new AtomLru
     val a = atomOfWeight(Budget / 2)
     val b = atomOfWeight(Budget - Budget / 2)
     assert(a.weight + b.weight === Budget)
@@ -82,7 +93,7 @@ class LocalServeBoundsSpec extends AnyFunSuite {
   }
 
   test("atom LRU: budget + 1 evicts the least recently used entry") {
-    val cache = new LocalServe.AtomCache
+    val cache = new AtomLru
     val a = atomOfWeight(Budget / 2)
     val b = atomOfWeight(Budget - Budget / 2)
     cache.put(0L, Word("a"), a)
@@ -96,12 +107,12 @@ class LocalServeBoundsSpec extends AnyFunSuite {
   }
 
   test("atom LRU: a single entry over the budget is kept, alone") {
-    val cache = new LocalServe.AtomCache
+    val cache = new AtomLru
     val big = atomOfWeight(Budget + 1)
     assert(cache.put(0L, Word("big"), big) eq big)
     assert(cache.count === 1)
     // inserting it next to others evicts them, never itself
-    val small = new LocalServe.AtomCache
+    val small = new AtomLru
     small.put(0L, Word("x"), atomOfWeight(10))
     small.put(0L, Word("y"), atomOfWeight(10))
     assert(small.put(0L, Word("big"), big) eq big)
