@@ -229,10 +229,12 @@ class IndexReader(val spark: SparkSession, val dir: String,
 
   /** Driver-side point reads of the block files [[blocks]] reads and of
     * the docs store ([[PointReader]]): the serving paths' cold postings
-    * and docs fetches, with no Spark job. Transient like [[vocabulary]].
+    * and docs fetches, with no Spark job, memoizing listings, footers and
+    * page indexes under [[indexEpoch]]. Transient like [[vocabulary]].
     */
   @transient lazy val points: PointReader =
-    new PointReader(spark.sessionState.newHadoopConf(), blockDirs, s"$dir/docs", bucketOf)
+    new PointReader(spark.sessionState.newHadoopConf(), blockDirs, s"$dir/docs", bucketOf,
+      indexEpoch)
 
   def idf(df: Long): Double = math.log((nDocs - df + 0.5) / (df + 0.5) + 1.0)
 

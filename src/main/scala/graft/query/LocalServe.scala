@@ -39,16 +39,26 @@ import QueryParser._
   */
 object LocalServe {
 
-  /** One atom's decoded scored postings, driver-resident: parallel arrays,
-    * one entry per (term, doc) pair, grouped by term and doc-sorted within
-    * a term (the per-(doc, term) row shape of [[AtomSource.atomScored]]).
-    * `terms` holds one String per term id, shared by that term's rows.
+  /** One atom's decoded scored postings, driver-resident: parallel row
+    * arrays, one entry per (term, doc) pair (the per-(doc, term) row shape
+    * of [[AtomSource.atomScored]]), grouped into one run per term. Term t
+    * (vocabulary id `termIds(t)`, text `terms(t)`; ids ascend) owns rows
+    * [starts(t), starts(t + 1)), sorted by doc. The kernels lean on that
+    * shape: a part folds its rows in this order (so a doc's contributions
+    * combine in ascending term order), the best-match word is a row range,
+    * and completions and join blocks merge one term run at a time against
+    * the doc-sorted result docs.
     */
-  final case class LocalAtom(terms: Array[String], docIds: Array[Long],
-                             tfs: Array[Long], scores: Array[Double],
+  final case class LocalAtom(termIds: Array[Long], terms: Array[String], starts: Array[Int],
+                             docIds: Array[Long], tfs: Array[Long], scores: Array[Double],
                              score1s: Array[Double],
                              positions: Array[Array[Int]]) {
     def nRows: Int = docIds.length
+    def nTerms: Int = terms.length
+    /** The rows grouped by doc, built on first use and held with the atom:
+      * every query over a cached atom folds its rows without regrouping.
+      */
+    private[LocalServe] lazy val byDoc: DocGroups = groupByDoc(docIds)
     /** LRU weight: row entries + held positions (both ~16-24 bytes). */
     lazy val weight: Long = {
       var w = nRows.toLong
@@ -59,8 +69,8 @@ object LocalServe {
   }
 
   private val EmptyPos = Array.empty[Int]
-  private val EmptyAtom = LocalAtom(Array.empty, Array.empty, Array.empty,
-    Array.empty, Array.empty, Array.empty)
+  private val EmptyAtom = LocalAtom(Array.empty, Array.empty, Array(0), Array.empty,
+    Array.empty, Array.empty, Array.empty, Array.empty)
 
   /** The decoded-atom LRU -- the driver's only postings cache -- keyed by
     * (index epoch, atom) so a rebuild into the same directory never serves
@@ -197,24 +207,31 @@ object LocalServe {
     if (colds.nonEmpty) {
       val segs = reader.points.blocks(colds.iterator.flatMap(_._2).toSeq, reader.hasPositions)
       for ((a, runs) <- colds) {
-        val sorted = runs.toIndexedSeq
-        val own = segs.filter(s => inRuns(sorted, s.termId))
-          .sortBy(s => (s.termId, s.firstDocId))
+        val los = runs.map(_._1).toArray
+        val his = runs.map(_._2).toArray
+        val own = segs.filter(s => inRuns(los, his, s.termId))
+        java.util.Arrays.sort(own, SegOrder)
         atoms.put(a, cache.putIfAbsent((reader.indexEpoch, a), buildAtom(reader, own)))
       }
     }
     Some(atoms)
   }
 
-  /** True iff `id` lies in one of the sorted, disjoint `runs`. */
-  private def inRuns(runs: IndexedSeq[(Long, Long)], id: Long): Boolean = {
+  /** Block segments by (term_id, first_doc_id). */
+  private val SegOrder: java.util.Comparator[PointReader.BlockSeg] = (x, y) => {
+    val c = java.lang.Long.compare(x.termId, y.termId)
+    if (c != 0) c else java.lang.Long.compare(x.firstDocId, y.firstDocId)
+  }
+
+  /** True iff `id` lies in one of the sorted, disjoint runs [los(i), his(i)]. */
+  private def inRuns(los: Array[Long], his: Array[Long], id: Long): Boolean = {
     var a = 0
-    var b = runs.length
+    var b = his.length
     while (a < b) { // first run whose hi >= id
       val mid = (a + b) >>> 1
-      if (runs(mid)._2 < id) a = mid + 1 else b = mid
+      if (his(mid) < id) a = mid + 1 else b = mid
     }
-    a < runs.length && runs(a)._1 <= id
+    a < his.length && los(a) <= id
   }
 
   /** Decode + score stored block segments into a [[LocalAtom]], with the
@@ -222,13 +239,19 @@ object LocalServe {
     * [[Analysis.bm25Col]] operand order (spec-pinned double parity). `segs`
     * must be (term_id, first_doc_id)-sorted and contain exactly the
     * candidate set's segments; term and df come from the resident
-    * vocabulary, one String per term id.
+    * vocabulary, one String per term id. A term's blocks cover disjoint,
+    * ascending doc ranges (shards split by doc range, appends add higher
+    * ids), so its rows come out doc-sorted; a run that does not is sorted
+    * here, so the [[LocalAtom]] shape holds on any layout.
     */
   private def buildAtom(reader: IndexReader,
                         segs: Array[PointReader.BlockSeg]): LocalAtom = {
     val hasPos = reader.hasPositions
     val n = segs.iterator.map(_.nDocs).sum
-    val terms = new Array[String](n)
+    val nTerms = segs.iterator.map(_.termId).distinct.size
+    val termIds = new Array[Long](nTerms)
+    val terms = new Array[String](nTerms)
+    val starts = new Array[Int](nTerms + 1)
     val docIds = new Array[Long](n)
     val tfs = new Array[Long](n)
     val scores = new Array[Double](n)
@@ -236,14 +259,15 @@ object LocalServe {
     val positions = new Array[Array[Int]](n)
     val v = reader.vocabulary
     var off = 0
-    var termId = -1L
-    var term: String = null
+    var t = -1
     var idfV = 0.0
     segs.foreach { sg =>
-      if (sg.termId != termId) {
-        termId = sg.termId
-        term = v.term(termId.toInt)
-        idfV = reader.idf(v.df(termId.toInt))
+      if (t < 0 || sg.termId != termIds(t)) {
+        t += 1
+        termIds(t) = sg.termId
+        terms(t) = v.term(sg.termId.toInt)
+        starts(t) = off
+        idfV = reader.idf(v.df(sg.termId.toInt))
       }
       val m = sg.nDocs
       val ds = Codec.decodeDeltas(reader.doclistCodec, sg.docDeltas, m)
@@ -253,19 +277,37 @@ object LocalServe {
       else null
       var i = 0
       while (i < m) {
-        terms(off) = term
         docIds(off) = ds(i)
         tfs(off) = tf(i)
         val dlD = dl(i).toDouble
         val denom = Analysis.K1 * ((1.0 - Analysis.B) + Analysis.B * dlD / reader.avgdl)
-        scores(off) = idfV * (tf(i).toDouble * (Analysis.K1 + 1.0)) / (tf(i) + denom)
-        score1s(off) = idfV * (1.0 * (Analysis.K1 + 1.0)) / (1.0 + denom)
+        scores(off) = idfV * ((tf(i).toDouble * (Analysis.K1 + 1.0)) / (tf(i) + denom))
+        score1s(off) = idfV * ((1.0 * (Analysis.K1 + 1.0)) / (1.0 + denom))
         positions(off) = if (hasPos) pos(i) else EmptyPos
         off += 1
         i += 1
       }
     }
-    LocalAtom(terms, docIds, tfs, scores, score1s, positions)
+    starts(nTerms) = n
+    val atom = LocalAtom(termIds, terms, starts, docIds, tfs, scores, score1s, positions)
+    (0 until nTerms).foreach(sortRun(atom, _))
+    atom
+  }
+
+  /** Sort term `t`'s rows by doc (stable) unless they already are. */
+  private def sortRun(a: LocalAtom, t: Int): Unit = {
+    val (s, e) = (a.starts(t), a.starts(t + 1))
+    var i = s + 1
+    while (i < e && a.docIds(i - 1) <= a.docIds(i)) i += 1
+    if (i < e) {
+      val order = (s until e).sortBy(a.docIds(_)).toArray
+      def permute[T: scala.reflect.ClassTag](xs: Array[T]): Unit = {
+        val moved = order.map(xs(_))
+        System.arraycopy(moved, 0, xs, s, moved.length)
+      }
+      permute(a.docIds); permute(a.tfs); permute(a.scores); permute(a.score1s)
+      permute(a.positions)
+    }
   }
 
   // ---- part-chain evaluation ------------------------------------------------
@@ -289,56 +331,164 @@ object LocalServe {
     case _ => false
   }
 
+  /** Rows grouped by doc: `docs` holds the distinct docs ascending, and
+    * row r's doc is docs(groupOf(r)).
+    */
+  private final class DocGroups(val docs: Array[Long], val groupOf: Array[Int])
+
+  /** [[DocGroups]] of `docIds` (any order, repeats allowed, any Long) in
+    * one pass over a primitive open-addressing table that doubles as docs
+    * arrive, then a sort of the distinct docs: O(rows + docs log docs), no
+    * boxing. A caller that then folds rows in row order combines each doc's
+    * values in row order.
+    */
+  private def groupByDoc(docIds: Array[Long]): DocGroups = {
+    val n = docIds.length
+    var mask = 63
+    var keys = new Array[Long](mask + 1)
+    var slots = new Array[Int](mask + 1) // first-seen doc number + 1; 0 = empty
+    val seen = new Array[Long](n) // distinct docs, first-seen order
+    val groupOf = new Array[Int](n)
+    var m = 0
+    var r = 0
+    while (r < n) {
+      val d = docIds(r)
+      var h = mix(d) & mask
+      while (slots(h) != 0 && keys(h) != d) h = (h + 1) & mask
+      if (slots(h) != 0) groupOf(r) = slots(h) - 1
+      else {
+        groupOf(r) = m
+        seen(m) = d
+        m += 1
+        keys(h) = d
+        slots(h) = m
+        if (2 * m > mask) { // keep the load under one half
+          mask = 2 * mask + 1
+          keys = new Array[Long](mask + 1)
+          slots = new Array[Int](mask + 1)
+          var j = 0
+          while (j < m) {
+            var h2 = mix(seen(j)) & mask
+            while (slots(h2) != 0) h2 = (h2 + 1) & mask
+            keys(h2) = seen(j)
+            slots(h2) = j + 1
+            j += 1
+          }
+        }
+      }
+      r += 1
+    }
+    val docs = java.util.Arrays.copyOf(seen, m)
+    java.util.Arrays.sort(docs)
+    val rank = new Array[Int](m) // first-seen number -> position in docs
+    var j = 0
+    while (j < m) {
+      var h = mix(docs(j)) & mask
+      while (slots(h) == 0 || keys(h) != docs(j)) h = (h + 1) & mask
+      rank(slots(h) - 1) = j
+      j += 1
+    }
+    r = 0
+    while (r < n) { groupOf(r) = rank(groupOf(r)); r += 1 }
+    new DocGroups(docs, groupOf)
+  }
+
+  /** A doc id's table hash (MurmurHash3's 64-bit finalizer, low bits used). */
+  private def mix(d: Long): Int = {
+    var x = d ^ (d >>> 33)
+    x *= 0xff51afd7ed558ccdL
+    x ^= x >>> 33
+    x *= 0xc4ceb9fe1a85ec53L
+    (x ^ (x >>> 33)).toInt
+  }
+
   /** One part's doc relation under the score algebra -- the local twin of
     * [[Eval.evalDocs]]'s partRel: per-(doc, term) contribution under
     * sameCompletionAgg, combined across the part's terms under
-    * completionsAgg, plus the best-match bonus on docs matching `bw`;
-    * positions gathered per doc when a later window chains from this part.
+    * completionsAgg, plus the best-match bonus on docs holding term id
+    * `bw` (none when negative); positions gathered per doc when a later
+    * window chains from this part. Rows fold in stored order, so a doc's
+    * contributions combine in ascending term order and the raw scores are
+    * the same bits whatever the grouping.
     */
   private def partRel(la: LocalAtom, params: QueryParams, damping: Double,
-                      bw: Option[String], bm: Double, withPos: Boolean): Rel = {
-    val termMax = params.sameCompletionAgg == QueryParams.Max
+                      bw: Long, bm: Double, withPos: Boolean): Rel = {
+    val c = if (params.sameCompletionAgg == QueryParams.Max) la.score1s else la.scores
     val complMax = params.completionsAgg == QueryParams.Max
-    val idx = new java.util.HashMap[java.lang.Long, Integer](
-      math.max(16, la.nRows))
-    val docs = new scala.collection.mutable.ArrayBuffer[Long]
-    val scores = new scala.collection.mutable.ArrayBuffer[Double]
-    val bmHit = new scala.collection.mutable.ArrayBuffer[Boolean]
-    val posBufs =
-      if (withPos) new scala.collection.mutable.ArrayBuffer[scala.collection.mutable.ArrayBuffer[Int]]
-      else null
-    var i = 0
-    while (i < la.nRows) {
-      val d = la.docIds(i)
-      val c = (if (termMax) la.score1s(i) else la.scores(i)) * damping
-      var j = idx.get(d)
-      if (j == null) {
-        j = docs.length
-        idx.put(d, j)
-        docs += d
-        scores += c
-        bmHit += false
-        if (withPos) posBufs += new scala.collection.mutable.ArrayBuffer[Int]
-      } else if (complMax) {
-        if (c > scores(j)) scores(j) = c
-      } else scores(j) += c
-      if (bw.isDefined && bw.get == la.terms(i)) bmHit(j) = true
-      if (withPos) posBufs(j) ++= la.positions(i)
-      i += 1
-    }
-    val order = docs.indices.sortBy(docs(_)).toArray
-    val outD = new Array[Long](order.length)
-    val outS = new Array[Double](order.length)
-    val outP = if (withPos) new Array[Array[Int]](order.length) else null
+    val bwTerm = if (bw < 0) -1 else java.util.Arrays.binarySearch(la.termIds, bw)
+    val (bwLo, bwHi) = if (bwTerm < 0) (0, 0) else (la.starts(bwTerm), la.starts(bwTerm + 1))
+    val g = la.byDoc
+    val m = g.docs.length
+    val outS = new Array[Double](m)
+    val started = new Array[Boolean](m)
+    val hit = new Array[Boolean](m)
     var r = 0
-    while (r < order.length) {
-      val j = order(r)
-      outD(r) = docs(j)
-      outS(r) = if (bmHit(j)) scores(j) + bm else scores(j)
-      if (withPos) outP(r) = posBufs(j).toArray
+    while (r < la.nRows) {
+      val k = g.groupOf(r)
+      val v = c(r) * damping
+      if (!started(k)) { started(k) = true; outS(k) = v }
+      else if (complMax) { if (v > outS(k)) outS(k) = v }
+      else outS(k) += v
+      if (r >= bwLo && r < bwHi) hit(k) = true
       r += 1
     }
-    Rel(outD, outS, outP)
+    var k = 0
+    while (k < m) { if (hit(k)) outS(k) += bm; k += 1 }
+    Rel(g.docs, outS, if (withPos) positionsByDoc(la, g) else null)
+  }
+
+  /** Each doc's positions: its rows' position lists concatenated in row
+    * order.
+    */
+  private def positionsByDoc(la: LocalAtom, g: DocGroups): Array[Array[Int]] = {
+    val m = g.docs.length
+    val fill = new Array[Int](m)
+    var r = 0
+    while (r < la.nRows) { fill(g.groupOf(r)) += la.positions(r).length; r += 1 }
+    val out = new Array[Array[Int]](m)
+    var k = 0
+    while (k < m) { out(k) = new Array[Int](fill(k)); fill(k) = 0; k += 1 }
+    r = 0
+    while (r < la.nRows) {
+      val (p, k2) = (la.positions(r), g.groupOf(r))
+      System.arraycopy(p, 0, out(k2), fill(k2), p.length)
+      fill(k2) += p.length
+      r += 1
+    }
+    out
+  }
+
+  /** First index at or after `from` of ascending `a` whose value is >= `v`
+    * (a.length if none): a doubling probe, then a binary search -- a merge
+    * that skips ahead in log time when the other side is sparse.
+    */
+  private def gallop(a: Array[Long], from: Int, v: Long): Int = {
+    if (from >= a.length || a(from) >= v) return from
+    var lo = from // a(lo) < v
+    var step = 1
+    var hi = from + 1
+    while (hi < a.length && a(hi) < v) { lo = hi; step <<= 1; hi = lo + step }
+    if (hi > a.length) hi = a.length
+    var l = lo + 1
+    while (l < hi) {
+      val m = (l + hi) >>> 1
+      if (a(m) < v) l = m + 1 else hi = m
+    }
+    l
+  }
+
+  /** The rows of term `t`'s run whose doc is in ascending `docs`, visited
+    * in row order: one galloping merge of the two doc-sorted lists.
+    */
+  private def foreachMember(la: LocalAtom, t: Int, docs: Array[Long])(f: Int => Unit): Unit = {
+    var j = 0
+    var r = la.starts(t)
+    val end = la.starts(t + 1)
+    while (r < end && j < docs.length) {
+      j = gallop(docs, j, la.docIds(r))
+      if (j < docs.length && docs(j) == la.docIds(r)) f(r)
+      r += 1
+    }
   }
 
   /** Evaluate the part chain to raw (unrounded) doc scores; None when any
@@ -365,37 +515,40 @@ object LocalServe {
         case Some(m) => m.get(last)
         case None => return None
       }
-      val docSet = new java.util.HashSet[java.lang.Long](math.max(16, rel.docIds.length))
-      rel.docIds.foreach(docSet.add(_))
-      (la, docSet)
+      (la, rel.docIds)
     }
-    // terms common to ALL sides (the reference's hash join / our bitmask
-    // agg, CompleterBase.Join.cpp) -- a side contributes a term iff one of
-    // its result docs holds it
-    val common = sides.map { case (la, docSet) =>
-      val ts = new java.util.HashSet[String]()
-      var i = 0
-      while (i < la.nRows) {
-        if (docSet.contains(la.docIds(i))) ts.add(la.terms(i))
-        i += 1
-      }
-      ts
-    }.reduce { (a, b) => a.retainAll(b); a }
-    // docs of either side containing a common term, scores re-aggregated
-    val acc = new java.util.TreeMap[Long, java.lang.Double]()
-    sides.foreach { case (la, docSet) =>
-      var i = 0
-      while (i < la.nRows) {
-        if (docSet.contains(la.docIds(i)) && common.contains(la.terms(i)))
-          acc.merge(la.docIds(i), la.scores(i), (x, y) => x + y)
-        i += 1
+    // term ids common to ALL sides (the reference's hash join / our
+    // bitmask agg, CompleterBase.Join.cpp) -- a side contributes a term iff
+    // one of its result docs holds it; ids ascend, so the sets merge
+    val common = sides.map { case (la, docs) =>
+      (0 until la.nTerms).filter { t =>
+        var held = false
+        foreachMember(la, t, docs)(_ => held = true)
+        held
+      }.map(la.termIds).toArray
+    }.reduce((a, b) => a.filter(java.util.Arrays.binarySearch(b, _) >= 0))
+    // docs of any side holding a common term, their rows' scores summed in
+    // side order, then row order
+    val n = sides.map(_._1.nRows).sum
+    val docIds = new Array[Long](n)
+    val scores = new Array[Double](n)
+    var o = 0
+    sides.foreach { case (la, docs) =>
+      (0 until la.nTerms).foreach { t =>
+        if (java.util.Arrays.binarySearch(common, la.termIds(t)) >= 0)
+          foreachMember(la, t, docs) { r => docIds(o) = la.docIds(r); scores(o) = la.scores(r); o += 1 }
       }
     }
-    val outD = new Array[Long](acc.size)
-    val outS = new Array[Double](acc.size)
-    var r = 0
-    acc.forEach { (d, s) => outD(r) = d; outS(r) = s; r += 1 }
-    Some(Rel(outD, outS, null))
+    val g = groupByDoc(java.util.Arrays.copyOf(docIds, o))
+    val outS = new Array[Double](g.docs.length)
+    val started = new Array[Boolean](g.docs.length)
+    var i = 0
+    while (i < o) {
+      val k = g.groupOf(i)
+      if (started(k)) outS(k) += scores(i) else { started(k) = true; outS(k) = scores(i) }
+      i += 1
+    }
+    Some(Rel(g.docs, outS, null))
   }
 
   private def evalDocsLocal(reader: IndexReader, src: IndexAtomSource,
@@ -418,17 +571,16 @@ object LocalServe {
 
     def damp(a: Atom): Double =
       if (isFuzzy(a) && params.fuzzyDamping < 1.0) params.fuzzyDamping else 1.0
-    /** best-match word resolved from the resident vocabulary only;
-      * a fuzzy best-match needs a distributed closest-word scan -> None
-      * (whole query falls back). Some(None) = resolved, no best match.
+    /** best-match word's term id, resolved from the resident vocabulary
+      * only; a fuzzy best-match needs a distributed closest-word scan ->
+      * None (whole query falls back). Some(-1) = resolved, no best match.
       */
-    def bestMatch(a: Atom, bm: Double): Option[Option[String]] =
-      if (bm == 0.0) Some(None)
+    def bestMatch(a: Atom, bm: Double): Option[Long] =
+      if (bm == 0.0) Some(-1L)
       else a match {
-        case w: Word if w.prefix =>
-          Some(Some(w.text).filter(reader.vocabulary.idOf(_) >= 0))
+        case w: Word if w.prefix => Some(reader.vocabulary.idOf(w.text).toLong)
         case w: Word if w.fuzzy => fallback(reader, Fallback.FuzzyBestMatch)
-        case _ => Some(None)
+        case _ => Some(-1L)
       }
     def combineParts(s1: Double, s2: Double, bonus: Double): Double =
       params.partsAgg match {
@@ -477,21 +629,16 @@ object LocalServe {
       val window = if (positionless) None else p.sep.flatMap(windowOf)
       if (isNot(p.atom)) {
         // NOT: anti-join; positions (if any) ride through
-        val neg = atoms.get(p.atom)
-        val negSet = new java.util.HashSet[java.lang.Long](math.max(16, neg.nRows))
-        var i = 0
-        while (i < neg.nRows) { negSet.add(neg.docIds(i)); i += 1 }
-        val keep = state.docIds.indices.filter(i => !negSet.contains(state.docIds(i)))
-        state = Rel(keep.map(state.docIds).toArray, keep.map(state.scores).toArray,
-          if (state.hasPos) keep.map(state.mpos).toArray else null)
+        val neg = atoms.get(p.atom).docIds.clone()
+        java.util.Arrays.sort(neg)
+        state = antiJoin(state, neg)
       } else if (window.isEmpty) {
         // plain AND: doc equi-join, scores combined under partsAgg
         val cur = part(idx, nextWindowed(idx)) match {
           case Some(r) => r
           case None => return None
         }
-        val (d, s, m) = mergeAnd(state, cur, combineParts(_, _, 0.0))
-        state = Rel(d, s, m)
+        state = mergeAnd(state, cur, combineParts(_, _, 0.0))
       } else {
         // windowed AND: current part's positions within [lo, hi] of a
         // previously matched position; the next window chains only from
@@ -512,14 +659,44 @@ object LocalServe {
     Some(state)
   }
 
+  /** The first `n` entries of a relation's presized arrays. */
+  private def trimmed(d: Array[Long], s: Array[Double], m: Array[Array[Int]], n: Int): Rel =
+    Rel(java.util.Arrays.copyOf(d, n), java.util.Arrays.copyOf(s, n),
+      if (m == null) null else java.util.Arrays.copyOf(m, n))
+
+  /** `a`'s docs that are not in ascending `neg` (repeats allowed), positions
+    * riding through.
+    */
+  private def antiJoin(a: Rel, neg: Array[Long]): Rel = {
+    val n = a.docIds.length
+    val d = new Array[Long](n)
+    val s = new Array[Double](n)
+    val m = if (a.hasPos) new Array[Array[Int]](n) else null
+    var o = 0
+    var i = 0
+    var j = 0
+    while (i < n) {
+      j = gallop(neg, j, a.docIds(i))
+      if (j == neg.length || neg(j) != a.docIds(i)) {
+        d(o) = a.docIds(i)
+        s(o) = a.scores(i)
+        if (m != null) m(o) = a.mpos(i)
+        o += 1
+      }
+      i += 1
+    }
+    trimmed(d, s, m, o)
+  }
+
   /** Sorted-array doc equi-join; keeps the RIGHT side's positions when
     * present (the AND branch's `cur.hasPos`).
     */
-  private def mergeAnd(a: Rel, b: Rel, combine: (Double, Double) => Double):
-      (Array[Long], Array[Double], Array[Array[Int]]) = {
-    val d = new scala.collection.mutable.ArrayBuffer[Long]
-    val s = new scala.collection.mutable.ArrayBuffer[Double]
-    val m = if (b.hasPos) new scala.collection.mutable.ArrayBuffer[Array[Int]] else null
+  private def mergeAnd(a: Rel, b: Rel, combine: (Double, Double) => Double): Rel = {
+    val cap = math.min(a.docIds.length, b.docIds.length)
+    val d = new Array[Long](cap)
+    val s = new Array[Double](cap)
+    val m = if (b.hasPos) new Array[Array[Int]](cap) else null
+    var o = 0
     var i = 0
     var j = 0
     while (i < a.docIds.length && j < b.docIds.length) {
@@ -527,14 +704,15 @@ object LocalServe {
       if (cmp < 0) i += 1
       else if (cmp > 0) j += 1
       else {
-        d += a.docIds(i)
-        s += combine(a.scores(i), b.scores(j))
-        if (m != null) m += b.mpos(j)
+        d(o) = a.docIds(i)
+        s(o) = combine(a.scores(i), b.scores(j))
+        if (m != null) m(o) = b.mpos(j)
+        o += 1
         i += 1
         j += 1
       }
     }
-    (d.toArray, s.toArray, if (m == null) null else m.toArray)
+    trimmed(d, s, m, o)
   }
 
   /** Windowed doc join: keep b's positions p2 with some previously matched
@@ -544,9 +722,11 @@ object LocalServe {
     */
   private def mergeWindow(a: Rel, b: Rel, lo: Int, hi: Int,
                           combine: (Double, Double) => Double): Rel = {
-    val d = new scala.collection.mutable.ArrayBuffer[Long]
-    val s = new scala.collection.mutable.ArrayBuffer[Double]
-    val m = new scala.collection.mutable.ArrayBuffer[Array[Int]]
+    val cap = math.min(a.docIds.length, b.docIds.length)
+    val d = new Array[Long](cap)
+    val s = new Array[Double](cap)
+    val m = new Array[Array[Int]](cap)
+    var o = 0
     var i = 0
     var j = 0
     while (i < a.docIds.length && j < b.docIds.length) {
@@ -567,15 +747,16 @@ object LocalServe {
           lo2 < prev.length && prev(lo2) <= p2 - lo
         }
         if (kept.nonEmpty) {
-          d += a.docIds(i)
-          s += combine(a.scores(i), b.scores(j))
-          m += kept
+          d(o) = a.docIds(i)
+          s(o) = combine(a.scores(i), b.scores(j))
+          m(o) = kept
+          o += 1
         }
         i += 1
         j += 1
       }
     }
-    Rel(d.toArray, s.toArray, m.toArray)
+    trimmed(d, s, m, o)
   }
 
   // ---- whole-result history ---------------------------------------------------
@@ -635,6 +816,14 @@ object LocalServe {
   }
 
   // ---- top-k / completions facades -------------------------------------------
+
+  /** spec hook: the doc-sorted raw (unrounded) doc scores of `query`, or
+    * None when it falls back.
+    */
+  private[graft] def rawDocScores(reader: IndexReader, query: String,
+                                  params: QueryParams): Option[(Array[Long], Array[Double])] =
+    evalDocsLocal(reader, new IndexAtomSource(reader),
+      QueryParser.parse(query, params.normalizeWords), params).map(r => (r.docIds, r.scores))
 
   private def round4(x: Double): Double =
     BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
@@ -754,30 +943,25 @@ object LocalServe {
       rel <- evalDocsLocal(reader, src, parsed, params)
       la <- localAtoms(reader, src, Seq(last)).map(_.get(last))
     } yield {
-      val docSet = new java.util.HashSet[java.lang.Long](math.max(16, rel.docIds.length))
-      rel.docIds.foreach(docSet.add(_))
       val damping = damp0(parsed.parts.last.atom, params)
-      val perDocMax = params.wordSameDocAgg == QueryParams.Max
+      val c = if (params.wordSameDocAgg == QueryParams.Max) la.score1s else la.scores
       val acrossMax = params.wordDiffDocsAgg == QueryParams.Max
-      // per-term accumulators, keyed by shared term reference
-      val accS = new java.util.LinkedHashMap[String, java.lang.Double]()
-      val accDc = new java.util.HashMap[String, java.lang.Long]()
-      val accOc = new java.util.HashMap[String, java.lang.Long]()
-      var i = 0
-      while (i < la.nRows) {
-        if (docSet.contains(la.docIds(i))) {
-          val t = la.terms(i)
-          val c = (if (perDocMax) la.score1s(i) else la.scores(i)) * damping
-          val prev = accS.get(t)
-          if (prev == null) accS.put(t, c)
-          else accS.put(t, if (acrossMax) math.max(prev, c) else prev + c)
-          accDc.merge(t, 1L, (a, b) => a + b)
-          accOc.merge(t, la.tfs(i), (a, b) => a + b)
-        }
-        i += 1
-      }
+      // one term run at a time: its rows in the result docs, in doc order
       val rows = new scala.collection.mutable.ArrayBuffer[(String, Double, Long, Long)]
-      accS.forEach((t, s) => rows += ((t, round4(s), accDc.get(t), accOc.get(t))))
+      var t = 0
+      while (t < la.nTerms) {
+        var s = 0.0
+        var dc = 0L
+        var oc = 0L
+        foreachMember(la, t, rel.docIds) { r =>
+          val v = c(r) * damping
+          s = if (dc == 0) v else if (acrossMax) math.max(s, v) else s + v
+          dc += 1
+          oc += la.tfs(r)
+        }
+        if (dc > 0) rows += ((la.terms(t), round4(s), dc, oc))
+        t += 1
+      }
       val ordered = params.rankWords match {
         case "dc" =>
           if (params.sortWordsAsc.getOrElse(false)) rows.sortBy(r => (r._3, r._1))

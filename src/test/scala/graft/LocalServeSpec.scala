@@ -127,6 +127,57 @@ class LocalServeSpec extends AnyFunSuite {
         QueryParams(bestMatchBonus = 2.0))))
   }
 
+  test("prefix atom with several of its terms per doc: term-order sums, Sum/Max parity with a best match and a later window") {
+    // raw scores: each doc's contributions summed in ascending term order,
+    // bit for bit -- the order the atom stores its rows in. 80 docs of 3-7
+    // of a prefix's words, tf 1-4: sums whose order shows in the last bits
+    val rnd = new scala.util.Random(71)
+    val words = Seq("qa", "qab", "qac", "qad", "qae", "qaf", "qag")
+    val mixed = (1L to 80L).map { d =>
+      (d, rnd.shuffle(words).take(3 + rnd.nextInt(5))
+        .flatMap(w => Seq.fill(1 + rnd.nextInt(4))(w)).mkString(" ") + " filler" * rnd.nextInt(9))
+    }.toDF("doc_id", "text")
+    val mixDir = java.nio.file.Files.createTempDirectory("graft_localserve_mix").toString
+    IndexBuilder.build(spark, mixed, mixDir, numShards = 2, blockSize = 4)
+    val mix = new IndexReader(spark, mixDir)
+    val atom = graft.query.QueryParser.parse("qa*", false).parts.head.atom
+    val byDoc = new graft.query.IndexAtomSource(mix).atomScored(atom)
+      .select("doc_id", "term", "score").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getDouble(2)))
+      .groupBy(_._1).map { case (d, rs) => d -> rs.sortBy(_._2).map(_._3).toSeq }
+    val want = byDoc.map { case (d, cs) => d -> cs.reduceLeft(_ + _) }
+    // the fixture tells summation orders apart: reversed and rotated
+    assert(byDoc.exists { case (d, cs) => cs.reverse.reduceLeft(_ + _) != want(d) })
+    assert(byDoc.exists { case (d, cs) => (cs.tail :+ cs.head).reduceLeft(_ + _) != want(d) })
+    val (docs, raw) = LocalServe.rawDocScores(mix, "qa*", QueryParams.Default).get
+    assert(docs.toSeq === want.keys.toSeq.sorted)
+    docs.zip(raw).foreach { case (d, s) =>
+      assert(java.lang.Double.doubleToLongBits(s) === java.lang.Double.doubleToLongBits(want(d)),
+        s"doc $d: $s vs ${want(d)}")
+    }
+    // parity: the prefix as the best-match part, and chained into a window
+    val queries = Seq("aal*", "aachen aal*", "aa*..aargau", "aa*..aargau aal*", "aachen.aal*")
+    for (a <- Seq(QueryParams.Sum, QueryParams.Max); b <- Seq(QueryParams.Sum, QueryParams.Max)) {
+      val p = QueryParams(sameCompletionAgg = a, completionsAgg = b, wordSameDocAgg = a,
+        wordDiffDocsAgg = b, bestMatchBonus = 3.0)
+      queries.foreach { q =>
+        val local = LocalServe.hits(reader, q, 10, p)
+        assert(local.isDefined, s"expected local serve: $q / $p")
+        assert(hitsRows(local.get) === hitsRows(IndexExecutor.hits(reader, q, 10, p)),
+          s"query: $q params: $p")
+        val compl = LocalServe.completions(reader, q, 10, p)
+        assert(compl.isDefined, s"expected local completions: $q / $p")
+        assert(complRows(compl.get) === complRows(IndexExecutor.completions(reader, q, 10, p)),
+          s"completions of: $q params: $p")
+      }
+    }
+    // the bonus lands: "aal" docs outscore the same query without it
+    val plain = hitsRows(LocalServe.hits(reader, "aal*", 10, QueryParams.Default).get).toMap
+    val bonus = hitsRows(LocalServe.hits(reader, "aal*", 10,
+      QueryParams(bestMatchBonus = 3.0)).get).toMap
+    assert(bonus.keySet === plain.keySet && bonus.forall { case (d, s) => s > plain(d) })
+  }
+
   test("k = 0 and page-past-the-end serve empty pages like the distributed path") {
     for (p <- Seq(QueryParams(firstHit = 0), QueryParams(firstHit = 5),
         QueryParams(rankDocs = "doc"))) {

@@ -358,4 +358,50 @@ class PointReaderSpec extends AnyFunSuite {
       assert(n <= 2L * cap && n < f.ids.length, s"edge ids of a ${f.ids.length}-row file: $n rows")
     }
   }
+
+  test("key-first decode: optional columns holding nulls, null keys included, equal the Spark rows") {
+    val d = tmp("graft_points_nulls")
+    // nulls in every column, interleaved with kept and skipped rows
+    val rows = (0 until 300).map { i =>
+      (if (i % 13 == 5) None else Some(i.toLong),
+        if (i % 3 == 1) None else Some(s"http://n/$i"),
+        if (i % 5 == 2) None else Some(Seq.fill(1 + i % 9)(vocab(i % vocab.length)).mkString(" ")))
+    }
+    spark.sparkContext.parallelize(rows, 3).toDF("doc_id", "url", "text")
+      .sortWithinPartitions("doc_id").write.option("parquet.page.row.count.limit", "16")
+      .parquet(s"$d/docs")
+    val points = docsOnly(d)
+    val rnd = new scala.util.Random(64)
+    val idSets = Seq((0L until 300L).toSeq, (0L until 300L by 2).toSeq, Seq(5L, 18L, 31L, 2L, 7L)) ++
+      Seq.fill(10)(Seq.fill(1 + rnd.nextInt(30))(rnd.nextInt(320).toLong - 10))
+    idSets.foreach { ids =>
+      val want = sparkDocs(d, ids)
+      assert(want.exists(_._2 == null) || ids.size < 10)
+      assert(points.docs(ids).toSeq.sortBy(_._1) === want, s"ids $ids")
+    }
+  }
+
+  test("page indexes are read once per epoch: a second cold read of the same files reads none") {
+    val files = docsFiles(pagedDocs)
+    val conf = spark.sessionState.newHadoopConf()
+    def at(epoch: Long) = new PointReader(conf, Nil, s"$pagedDocs/docs", (b: Long) => b, epoch)
+    val firsts = files.map(_.ids.head)
+    val middles = files.map(f => f.ids(f.ids.length / 2))
+    val epoch = System.nanoTime()
+    val first = at(epoch)
+    assert(first.docs(firsts).length === firsts.size)
+    val read = first.indexReads.get()
+    assert(read >= files.size * 2, "one offset index per column and the key's column index")
+    // cold ids, same files: every page is located from the memo
+    assert(first.docs(middles).toSeq.sortBy(_._1) === sparkDocs(pagedDocs, middles))
+    assert(first.indexReads.get() === read)
+    // another reader of the same epoch shares the memo
+    val same = at(epoch)
+    assert(same.docs(middles).toSeq.sortBy(_._1) === sparkDocs(pagedDocs, middles))
+    assert(same.indexReads.get() === 0)
+    // a new epoch reads them again
+    val next = at(epoch + 1)
+    assert(next.docs(middles).toSeq.sortBy(_._1) === sparkDocs(pagedDocs, middles))
+    assert(next.indexReads.get() === read)
+  }
 }

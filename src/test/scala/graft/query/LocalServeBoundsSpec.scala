@@ -66,7 +66,7 @@ class LocalServeBoundsSpec extends AnyFunSuite {
 
   /** One row holding `weight - 1` positions: LRU weight exactly `weight`. */
   private def atomOfWeight(weight: Long): LocalAtom =
-    LocalAtom(Array("t"), Array(1L), Array(1L), Array(1.0), Array(1.0),
+    LocalAtom(Array(0L), Array("t"), Array(0, 1), Array(1L), Array(1L), Array(1.0), Array(1.0),
       Array(new Array[Int]((weight - 1).toInt)))
 
   private val Budget = IndexReader.LocalListBudgetPostings
