@@ -3,23 +3,18 @@ package graft.index
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** FastSS deletion-neighborhood fuzzy candidate index (reference:
-  * fuzzysearch/FastSS.cpp, FuzzySearcher.h:24-107 -- the reference builds
-  * cluster/candidate structures precisely so fuzzy queries never scan the
-  * vocabulary, let alone the postings).
+/** FastSS deletion-neighborhood index for fuzzy word clustering
+  * (reference: fuzzysearch/FastSS.cpp, BuildFuzzySearchClusters.cpp).
   *
   * Principle (Bocek et al., "Fast Similarity Search in Large Dictionaries"):
   * if ed(a, b) <= d then the deletion neighborhoods Dd(a) and Dd(b)
   * intersect, where Dd(x) = all strings obtained from x by deleting up to d
   * characters. So: index every vocabulary term under each of its deletion
-  * variants (one narrow vocab-sized flatMap, written once); a query word w
-  * looks up its own (tiny, driver-side) variant set and edit distance is
-  * verified ONLY on the candidate terms that share a variant. The variant
-  * IN-list is pushed down to the parquet scan.
-  *
-  * Candidates are a superset of the true matches (the theorem gives
-  * necessity), and the final levenshtein filter runs on candidates only --
-  * exactness is preserved, cost drops from O(vocab) to O(|Dd(w)|) lookups.
+  * variants (one narrow vocab-sized flatMap, written once); a self-join on
+  * the variant gives every candidate pair, and edit distance is verified
+  * on candidates only ([[wordClusters]]). Fuzzy query atoms do not use it:
+  * they resolve from the resident vocabulary
+  * ([[Vocabulary.withinEdits]]).
   */
 object FuzzyIndex {
 
@@ -38,8 +33,8 @@ object FuzzyIndex {
 
   /** Build the (variant, term_id) table next to an index; idempotent.
     * meta is written BEFORE variants: variants/_SUCCESS is the existence
-    * marker, so a crash between the writes can never leave an index where
-    * exists() is true but the meta read throws.
+    * marker, so a crash between the writes can never leave an index with
+    * variants whose meta read throws.
     */
   def build(spark: SparkSession, dir: String, maxDeletes: Int = 2): Unit = {
     import spark.implicits._
@@ -56,33 +51,9 @@ object FuzzyIndex {
       .write.mode(SaveMode.Overwrite).parquet(s"$dir/fuzzy/variants")
   }
 
-  def exists(dir: String): Boolean =
-    java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir/fuzzy/variants/_SUCCESS"))
-
-  // (dir, variants commit mtime) -> built distance; the lookup is on the
-  // per-atom serving hot path and the meta is immutable per built index
-  private val metaCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), Int]()
-
-  def maxDeletes(spark: SparkSession, dir: String): Int = {
-    val mtime = new java.io.File(s"$dir/fuzzy/variants/_SUCCESS").lastModified()
-    metaCache.computeIfAbsent((dir, mtime), _ =>
-      spark.read.parquet(s"$dir/fuzzy/meta").head().getInt(0))
-  }
-
-  /** Candidate (term_id) relation for query word `w` at edit distance
-    * <= `thr`: variant IN-list lookup (pushed to the scan) + exact
-    * levenshtein verification against the dictionary terms.
-    */
-  def candidates(spark: SparkSession, dir: String, dictionary: DataFrame,
-                 w: String, thr: Int): DataFrame = {
-    val qvars = deletions(w, thr).toSeq
-    spark.read.parquet(s"$dir/fuzzy/variants")
-      .filter(col("variant").isin(qvars: _*))
-      .select(col("term_id")).distinct()
-      .join(dictionary, "term_id")
-      .filter(levenshtein(col("term"), lit(w)) <= thr)
-  }
+  /** The distance the variants table was built for. */
+  def maxDeletes(spark: SparkSession, dir: String): Int =
+    spark.read.parquet(s"$dir/fuzzy/meta").head().getInt(0)
 
   /** Fuzzy word clustering (reference: BuildFuzzySearchClusters.cpp +
     * WordClusteringBuilder, mode "only frequent words are cluster

@@ -514,7 +514,11 @@ object IndexReader {
 
   /** ...and LocalServe's per-reader atom LRU evicts past this much held
     * weight (rows plus held positions), so an adversarial query stream
-    * cannot grow driver memory unboundedly.
+    * cannot grow driver memory unboundedly. A row unit costs 40-64 bytes
+    * plus ~64 per term run, a position unit 4
+    * ([[graft.query.LocalServe.LocalAtom.weight]]): ~128 MB when the
+    * budget is rows of multi-doc terms, up to ~256 MB when every term has
+    * one row.
     */
   val LocalListBudgetPostings: Long = 2L * 1024 * 1024
 

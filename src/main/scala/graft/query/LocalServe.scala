@@ -31,11 +31,10 @@ import QueryParser._
   * params, the distributed twin's contract). Locality is decided by
   * posting volume alone: an atom of any term count serves here while its
   * postings fit [[IndexReader.MaxLocalPostingsPerQuery]]. Queries past the
-  * guards ([[Fallback]]: an over-budget atom or query, a fuzzy atom whose
-  * scan kept only the hull, a fuzzy best-match resolution, completions
-  * over a trailing join block) return None and the caller falls back to
-  * the distributed plans, so at web scale the driver never holds more
-  * than the postings budget.
+  * guards ([[Fallback]]: an over-budget atom or query, completions over a
+  * trailing join block, a window on a positions-off index) return None
+  * and the caller falls back to the distributed plans, so at web scale
+  * the driver never holds more than the postings budget.
   */
 object LocalServe {
 
@@ -59,7 +58,14 @@ object LocalServe {
       * every query over a cached atom folds its rows without regrouping.
       */
     private[LocalServe] lazy val byDoc: DocGroups = groupByDoc(docIds)
-    /** LRU weight: row entries + held positions (both ~16-24 bytes). */
+    /** LRU weight: rows + held positions, one unit each. A row holds four
+      * 8-byte values (doc id, tf, score, score1), a 4-byte positions
+      * reference (compressed oops) and a 4-byte [[byDoc]] slot: 40 bytes,
+      * plus up to 8 for its doc's [[byDoc]] entry and, on a positions
+      * index, a 16-byte array header -- 40-64 bytes. Each term run (at
+      * least one row) adds its id, start and String, ~64 bytes for a short
+      * term. A held position is a 4-byte int.
+      */
     lazy val weight: Long = {
       var w = nRows.toLong
       var i = 0
@@ -110,12 +116,6 @@ object LocalServe {
     case object AtomOverBudget extends Fallback
     /** The query's atoms together pass the same budget. */
     case object QueryOverBudget extends Fallback
-    /** A fuzzy scan passed [[IndexAtomSource.MaxExactIds]] candidates and
-      * kept only their hull.
-      */
-    case object FuzzyHull extends Fallback
-    /** A best-match bonus on a fuzzy word needs a closest-word scan. */
-    case object FuzzyBestMatch extends Fallback
     /** Completions over a trailing join block (the distributed path
       * rejects them).
       */
@@ -124,8 +124,8 @@ object LocalServe {
       * error).
       */
     case object PositionlessWindow extends Fallback
-    val all: Seq[Fallback] = Seq(AtomOverBudget, QueryOverBudget, FuzzyHull,
-      FuzzyBestMatch, TrailingJoinBlock, PositionlessWindow)
+    val all: Seq[Fallback] = Seq(AtomOverBudget, QueryOverBudget, TrailingJoinBlock,
+      PositionlessWindow)
   }
 
   /** Requests on this reader that `cause` sent to the distributed plans. */
@@ -181,11 +181,9 @@ object LocalServe {
     * [[IndexReader.blocksForIdRuns]] (PointReaderSpec), an atom's exact
     * candidate runs ([[IndexAtomSource.exactRuns]], any term count) cover
     * every segment of its candidate term ids, and each atom keeps only the
-    * rows inside its own runs. None when any atom must stay distributed --
-    * postings past the volume guard ([[overBudget]]) or a fuzzy scan
-    * that kept only the hull -- decided BEFORE any fetch, from the resident
-    * vocabulary. A cold query without fuzzy atoms thus runs no Spark job
-    * at all.
+    * rows inside its own runs. None when any atom's postings pass the
+    * volume guard ([[overBudget]]) -- decided BEFORE any fetch, from the
+    * resident vocabulary. Any cold query thus runs no Spark job at all.
     */
   private def localAtoms(reader: IndexReader, src: IndexAtomSource,
                          wanted: Seq[Atom]): Option[java.util.HashMap[Atom, LocalAtom]] = {
@@ -195,13 +193,12 @@ object LocalServe {
     for (a <- wanted.distinct) {
       val hit = cache.get((reader.indexEpoch, a))
       if (hit != null) atoms.put(a, hit)
-      else src.exactRuns(a) match {
-        case None => return fallback(reader, Fallback.FuzzyHull)
-        case Some(runs) if runs.isEmpty => atoms.put(a, EmptyAtom) // unknown word: empty, local
-        case Some(runs) =>
-          if (overBudget(reader.vocabulary, runs))
-            return fallback(reader, Fallback.AtomOverBudget) // head atom: stays distributed
-          colds += ((a, runs))
+      else {
+        val runs = src.exactRuns(a)
+        if (runs.isEmpty) atoms.put(a, EmptyAtom) // unknown word: empty, local
+        else if (overBudget(reader.vocabulary, runs))
+          return fallback(reader, Fallback.AtomOverBudget) // head atom: stays distributed
+        else colds += ((a, runs))
       }
     }
     if (colds.nonEmpty) {
@@ -571,17 +568,13 @@ object LocalServe {
 
     def damp(a: Atom): Double =
       if (isFuzzy(a) && params.fuzzyDamping < 1.0) params.fuzzyDamping else 1.0
-    /** best-match word's term id, resolved from the resident vocabulary
-      * only; a fuzzy best-match needs a distributed closest-word scan ->
-      * None (whole query falls back). Some(-1) = resolved, no best match.
+    /** The term id of the distributed path's best-match word
+      * ([[AtomSource.bestMatchWord]], resolved from the resident
+      * vocabulary); -1 = no best match.
       */
-    def bestMatch(a: Atom, bm: Double): Option[Long] =
-      if (bm == 0.0) Some(-1L)
-      else a match {
-        case w: Word if w.prefix => Some(reader.vocabulary.idOf(w.text).toLong)
-        case w: Word if w.fuzzy => fallback(reader, Fallback.FuzzyBestMatch)
-        case _ => Some(-1L)
-      }
+    def bestMatch(a: Atom, bm: Double): Long =
+      if (bm == 0.0) -1L
+      else src.bestMatchWord(a).fold(-1L)(reader.vocabulary.idOf(_).toLong)
     def combineParts(s1: Double, s2: Double, bonus: Double): Double =
       params.partsAgg match {
         case QueryParams.Max => math.max(s1, s2)
@@ -611,8 +604,7 @@ object LocalServe {
       // partRel; its result carries no positions
       case JoinBlock(ps) => evalJoinBlockLocal(reader, src, ps)
       case a =>
-        bestMatch(a, bmFor(i)).map(bw =>
-          partRel(atoms.get(a), params, damp(a), bw, bmFor(i), withPos))
+        Some(partRel(atoms.get(a), params, damp(a), bestMatch(a, bmFor(i)), bmFor(i), withPos))
     }
     var state = part(0, nextWindowed(0)) match {
       case Some(r) => r

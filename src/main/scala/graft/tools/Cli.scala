@@ -243,10 +243,8 @@ object AnswerQueriesMain {
     reader.dictionary.count()
     val cache =
       if (flags("-H")) None else Some(new graft.query.IndexQueryCache())
-    def answer(q: String): Long = cache match {
-      case Some(c) => graft.query.IndexExecutor.topK(reader, q, k, c).count()
-      case None => graft.query.IndexExecutor.topK(reader, q, k).count()
-    }
+    def answer(q: String): Long = graft.query.IndexExecutor.topK(reader, q, k,
+      cache = cache.getOrElse(graft.query.QueryHistory.default)).count()
     val queries = scala.io.Source.fromFile(queriesFile).getLines().filter(_.nonEmpty).toSeq
     // -p simulates typing for GRAMMAR lines only; the or:/prefix: special
     // syntaxes are not queries a user types incrementally

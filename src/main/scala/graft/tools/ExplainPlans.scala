@@ -68,8 +68,8 @@ object ExplainPlans {
     })
     show("qpix: grammar atom over blocks (prefix st*, uncached reader)",
       graft.query.IndexExecutor.topK(rCold, "spark st*", 10))
-    show("qpix: fuzzy via FastSS variants (pushed IN-list)",
-      graft.index.FuzzyIndex.candidates(spark, rCold.dir, rCold.dictionary, "spak", 1))
+    show("qpix: fuzzy atom over blocks (spak~, resident candidates)",
+      graft.query.IndexExecutor.topK(rCold, "spak~", 10))
 
     // round 3: scattered candidate set -> exact-run pruning (bucket IN-list
     // + per-run BETWEEN disjunction reach the scan; the [min,max] hull of
@@ -88,9 +88,9 @@ object ExplainPlans {
     // round 3: serving-session history -- schedul*-after-schedu* pattern:
     // the narrower prefix plans as a Filter over the cached atom relation
     val cache = new graft.query.IndexQueryCache()
-    graft.query.IndexExecutor.topK(rCold, "st*", 10, cache).collect()
+    graft.query.IndexExecutor.topK(rCold, "st*", 10, cache = cache).collect()
     show("qpix: history filter (sta* after st*) -- no block scan below the filter",
-      graft.query.IndexExecutor.topK(rCold, "sta*", 10, cache))
+      graft.query.IndexExecutor.topK(rCold, "sta*", 10, cache = cache))
 
     // round 4: f= pagination -- sort + offset + limit must fold into ONE
     // TakeOrdered of (firstHit + k) rows, not a global sort

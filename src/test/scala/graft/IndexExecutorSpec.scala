@@ -113,20 +113,20 @@ class IndexExecutorSpec extends AnyFunSuite {
   test("serving-session history: prefix extensions filter the cache, zero new block scans") {
     import graft.query.{IndexExecutor, IndexQueryCache}
     val cache = new IndexQueryCache()
-    val r1 = IndexExecutor.topK(reader, "aa*", 10, cache).collect()
+    val r1 = IndexExecutor.topK(reader, "aa*", 10, cache = cache).collect()
       .map(x => (x.getLong(0), x.getDouble(1))).toSeq
     assert(cache.misses === 1 && cache.filteredHits === 0)
     // extend the prefix (the typing pattern): answered by FILTERING the
     // cached relation -- miss count must not move
-    val r2 = IndexExecutor.topK(reader, "aal*", 10, cache).collect()
+    val r2 = IndexExecutor.topK(reader, "aal*", 10, cache = cache).collect()
       .map(x => (x.getLong(0), x.getDouble(1))).toSeq
     assert(cache.misses === 1 && cache.filteredHits === 1)
     // exact word under the cached prefix: also a filter, not a scan
-    val r3 = IndexExecutor.topK(reader, "aalglatt", 10, cache).collect()
+    val r3 = IndexExecutor.topK(reader, "aalglatt", 10, cache = cache).collect()
       .map(x => (x.getLong(0), x.getDouble(1))).toSeq
     assert(cache.misses === 1 && cache.filteredHits === 2)
     // repeated query: pure hit
-    IndexExecutor.topK(reader, "aal*", 10, cache).collect()
+    IndexExecutor.topK(reader, "aal*", 10, cache = cache).collect()
     assert(cache.hits >= 1)
     // results identical to the uncached path
     assert(r2 === IndexExecutor.topK(reader, "aal*", 10).collect()
@@ -399,25 +399,23 @@ class IndexExecutorSpec extends AnyFunSuite {
     assert(ex(6L).contains("<hl>zebra</hl>"))
   }
 
-  test("FastSS deletion neighborhood: candidates equal the vocab scan, exactly") {
+  test("resident fuzzy candidates equal the vocab scan, exactly") {
     import graft.index.FuzzyIndex
-    // deletion-neighborhood basics
+    // deletion-neighborhood basics (the FastSS table behind word clusters)
     assert(FuzzyIndex.deletions("abc", 1) === Set("abc", "bc", "ac", "ab"))
     assert(FuzzyIndex.deletions("ab", 2).contains(""))
 
-    FuzzyIndex.build(spark, reader.dir, maxDeletes = 2)
-    // every vocab term, several thresholds: FastSS candidates == brute force
+    // every vocab term, several thresholds: resident candidates == brute force
     val vocab = reader.dictionary.select("term").collect().map(_.getString(0))
     for (w <- Seq("aal", "aalglat", "babyboo", "merge", "zzz"); thr <- Seq(1, 2)) {
       val brute = vocab.filter { t =>
         org.apache.commons.text.similarity.LevenshteinDistance.getDefaultInstance
           .apply(t, w) <= thr
       }.toSet
-      val fast = FuzzyIndex.candidates(spark, reader.dir, reader.dictionary, w, thr)
-        .select("term").collect().map(_.getString(0)).toSet
-      assert(fast === brute, s"w=$w thr=$thr")
+      val resident = reader.vocabulary.withinEdits(w, thr)._1.map(reader.vocabulary.term).toSet
+      assert(resident === brute, s"w=$w thr=$thr")
     }
-    // the grammar path over the FastSS index matches the logical path
+    // the grammar path over the resident candidates matches the logical path
     assert(ix("aachan~") === lg("aachan~"))
   }
 
@@ -479,8 +477,9 @@ class IndexExecutorSpec extends AnyFunSuite {
     // and the grammar result is unchanged
     assert(ix("aachen|zebra") === lg("aachen|zebra"))
     // contiguous sets (prefixes with dense ids) stay a single run
-    assert(IndexAtomSource.toRuns(Array(3L, 4L, 5L)) === Seq((3L, 5L)))
-    assert(IndexAtomSource.toRuns(Array(1L, 3L, 4L, 9L)) === Seq((1L, 1L), (3L, 4L), (9L, 9L)))
+    def runs(ids: Long*): Seq[(Long, Long)] = IndexReader.mergeRuns(ids.map(id => (id, id)))
+    assert(runs(3L, 4L, 5L) === Seq((3L, 5L)))
+    assert(runs(1L, 3L, 4L, 9L) === Seq((1L, 1L), (3L, 4L), (9L, 9L)))
   }
 
   test("each atom resolves to ONE persisted relation per query (decode-once)") {

@@ -41,7 +41,7 @@ class LocalServeSpec extends AnyFunSuite {
   private val shapes = Seq(
     "aachen", "aachen aargau", "aachen -aargau", "aargau|babylonisch",
     "ba*", "aal--aargau", "aal.aalglatt", "aal..aalglatt", "aachen=aachen",
-    "aachan~", "merge^", "babbeln.baby.babyboom", "aachen.,,.aal",
+    "aachan~", "aal|aachan~", "merge^", "babbeln.baby.babyboom", "aachen.,,.aal",
     "aal -zebra aachen", "aachen -nosuchword", "nosuchword",
     "aal aalglatt.aargau") // window chaining after a plain AND
 
@@ -96,7 +96,7 @@ class LocalServeSpec extends AnyFunSuite {
     both("aal -zebra aa*", QueryParams.Default)
   }
 
-  test("join blocks serve locally; fuzzy best-match stays distributed") {
+  test("join blocks and a fuzzy best-match serve locally") {
     // join blocks joined the local grammar: chained, leading, n-ary
     for (q <- Seq("[aachen aa*#merge aa*]", "aal [aa*#aal*]",
         "[aa*#aal*] zebra", "[aa*#aal*#aal aa*]")) {
@@ -105,13 +105,16 @@ class LocalServeSpec extends AnyFunSuite {
       assert(hitsRows(local.get) === hitsRows(IndexExecutor.topK(reader, q, 10)),
         s"local vs distributed mismatch for: $q")
     }
-    val bestMatchFallbacks =
-      LocalServe.fallbackCount(reader, LocalServe.Fallback.FuzzyBestMatch)
-    assert(LocalServe.hits(reader, "aachen aachan~", 10,
-      QueryParams(bestMatchBonus = 2.0)).isEmpty,
-      "fuzzy best-match resolution must fall back")
-    assert(LocalServe.fallbackCount(reader, LocalServe.Fallback.FuzzyBestMatch) ===
-      bestMatchFallbacks + 1)
+    // the closest word of a fuzzy atom resolves from the resident
+    // vocabulary: a fuzzy best-match serves locally, cold with no job
+    val fp = QueryParams(bestMatchBonus = 2.0)
+    val cold = coldReader()
+    var fuzzy: Option[Seq[org.apache.spark.sql.Row]] = None
+    val (jobs, _, executions) = watch { fuzzy = LocalServe.hitRows(cold, "aachen aachan~", 10, fp) }
+    assert(fuzzy.isDefined, "a fuzzy best-match must serve locally")
+    assert(jobs === 0 && executions === 0, s"cold fuzzy best-match ran $jobs jobs")
+    assert(fuzzy.get.map(row => (row.getLong(0), row.getDouble(1))) ===
+      hitsRows(IndexExecutor.topK(reader, "aachen aachan~", 10, fp)))
     // completions over a trailing join block stay the distributed path's
     val joinFallbacks =
       LocalServe.fallbackCount(reader, LocalServe.Fallback.TrailingJoinBlock)
@@ -301,15 +304,17 @@ class LocalServeSpec extends AnyFunSuite {
 
   test("fallback search executes the hits plan once; excerpts/urls add no jobs") {
     import graft.api.Search
-    // a fuzzy best-match resolution is a documented local-serve fallback:
-    // the hits come back from the DISTRIBUTED plan even warm
+    // an over-budget atom is a documented local-serve fallback: the hits
+    // come back from the DISTRIBUTED plan even warm (the last part is no
+    // prefix, so the search computes no completions)
+    val reader = new IndexReader(spark, OverBudgetIndex.dir)
     val fp = QueryParams(bestMatchBonus = 2.0)
-    val q = "aal aachan~"
+    val q = "h* wort"
     assert(LocalServe.hits(reader, q, 5, fp).isEmpty,
       "precondition: this query must take the distributed fallback")
     val cold = Search.searchIndex(reader, q, 5, params = fp)
     assert(cold.hits.nonEmpty && cold.hits.forall(h =>
-      h.url.nonEmpty && h.excerpt.contains("<hl>aal</hl>")))
+      h.url.nonEmpty && h.excerpt.contains("<hl>wort</hl>")))
     def countJobs(f: => Unit): Int = {
       val jobs = new java.util.concurrent.atomic.AtomicInteger()
       val listener = new org.apache.spark.scheduler.SparkListener {
@@ -394,7 +399,7 @@ class LocalServeSpec extends AnyFunSuite {
     // postings of ALL cold atoms arrive via one driver-side point read of
     // the block files: no job whatever the shape
     for (q <- Seq("aachen aal aargau", "aachen ba*", "aargau|babylonisch aal",
-        "aal--aargau", "[aachen aa*#merge aa*]")) {
+        "aal--aargau", "[aachen aa*#merge aa*]", "aachen aachan~", "aal|aachan~")) {
       val r = coldReader()
       val expected = hitsRows(IndexExecutor.topK(reader, q, 5))
       val (jobs, _, _) = watch {
@@ -425,7 +430,7 @@ class LocalServeSpec extends AnyFunSuite {
     // `h*` matches 270,000 postings, past IndexReader.MaxLocalPostingsPerQuery
     val r = new IndexReader(spark, OverBudgetIndex.dir)
     val hRuns = graft.query.IndexAtomSource.residentRanges(r.vocabulary,
-      graft.query.QueryParser.Word("h", prefix = true)).get
+      graft.query.QueryParser.Word("h", prefix = true))
     assert(LocalServe.postingVolume(r.vocabulary, hRuns, Long.MaxValue) ===
       OverBudgetIndex.PrefixPostings)
     LocalServe.hits(r, "wort", 5, QueryParams.Default).get.collect()
@@ -476,12 +481,18 @@ class LocalServeSpec extends AnyFunSuite {
     assert(completions.get.map(row =>
       (row.getString(0), row.getDouble(1), row.getLong(2), row.getLong(3))) ===
       complRows(IndexExecutor.completions(r, q, 10)))
-    // a fuzzy atom is the exception: all 5,000 terms lie within its 4
-    // edits, so its scan keeps only the hull and the query falls back
+    // a fuzzy atom with all 5,000 terms within its 4 edits serves the same
+    // way: its candidates come from the resident vocabulary
     val fq = "wort h000000000000000~"
-    assert(LocalServe.hitRows(r, fq, 10, QueryParams.Default).isEmpty)
-    assert(LocalServe.fallbackCount(r, LocalServe.Fallback.FuzzyHull) === 1)
-    assert(hitsRows(IndexExecutor.serveHits(r, fq, 10)) ===
+    var fuzzy: Option[Seq[org.apache.spark.sql.Row]] = None
+    val (fuzzyJobs, _, fuzzyExecutions) = watch {
+      fuzzy = LocalServe.hitRows(r, fq, 10, QueryParams.Default)
+    }
+    assert(fuzzy.isDefined, "a hull-sized fuzzy atom must serve locally")
+    assert(fuzzyJobs === 0 && fuzzyExecutions === 0,
+      s"the local fuzzy answer ran $fuzzyJobs jobs, $fuzzyExecutions SQL executions")
+    assert(LocalServe.Fallback.all.forall(LocalServe.fallbackCount(r, _) === 0))
+    assert(fuzzy.get.map(row => (row.getLong(0), row.getDouble(1))) ===
       hitsRows(IndexExecutor.topK(r, fq, 10)))
   }
 
@@ -500,7 +511,7 @@ class LocalServeSpec extends AnyFunSuite {
       format_string("c%06d", col("id")).as("term"), lit(1L).as("df"))
     val v = Vocabulary.load(ab.toDF("term_id", "term", "df").unionByName(cs))
     def runs(prefix: String): Seq[(Long, Long)] =
-      IndexAtomSource.residentRanges(v, Word(prefix, prefix = true)).get
+      IndexAtomSource.residentRanges(v, Word(prefix, prefix = true))
     assert(budget === 256L * 1024)
     assert(LocalServe.postingVolume(v, runs("a"), Long.MaxValue) === budget)
     assert(!LocalServe.overBudget(v, runs("a")), "exactly the budget: served locally")

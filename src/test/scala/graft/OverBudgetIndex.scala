@@ -10,7 +10,8 @@ import graft.index.IndexBuilder
   * df 270 and `h*` matches 270,000 postings, past
   * [[graft.index.IndexReader.MaxLocalPostingsPerQuery]] (262,144). Each of `h0*` ..
   * `h9*` matches 27,000 postings, so one of them serves locally while all
-  * ten together pass the per-query budget. Has a docs store.
+  * ten together pass the per-query budget. Has a docs store with urls
+  * (`u<doc_id>`).
   */
 object OverBudgetIndex {
   val Docs = 2700
@@ -24,7 +25,9 @@ object OverBudgetIndex {
       (0 until 100).map(j => f"h${(i + 10 * j) % 1000}%03d").mkString(" ")))
       .toDF("doc_id", "text")
     IndexBuilder.build(spark, docs, d, numShards = 1)
-    IndexBuilder.buildDocsStore(spark, docs, d)
+    IndexBuilder.buildDocsStore(spark,
+      docs.withColumn("url", org.apache.spark.sql.functions.concat(
+        org.apache.spark.sql.functions.lit("u"), $"doc_id")), d)
     d
   }
 }

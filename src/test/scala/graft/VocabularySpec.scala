@@ -4,12 +4,13 @@ import graft.core.DenseRank
 import graft.index.{IndexReader, Vocabulary}
 import graft.query.{CorpusAtomSource, Executor, IndexAtomSource}
 import graft.query.QueryParser._
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, levenshtein, lit}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The resident vocabulary must resolve every non-fuzzy atom to exactly
-  * the term ids the dictionary predicate selects, including where UTF-16
-  * `String.compareTo` and Spark's UTF-8 byte order disagree.
+/** The resident vocabulary must resolve every atom to exactly the term
+  * ids the dictionary predicate selects, including where UTF-16
+  * `String.compareTo` and Spark's UTF-8 byte order disagree and where
+  * code points take several UTF-8 bytes.
   */
 class VocabularySpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -19,7 +20,7 @@ class VocabularySpec extends AnyFunSuite {
   private val alphabet = Seq("a", "s", "t", "z", "é", "ß", "ﬁ", "中", "😀", "🚀")
 
   private val fixed = Seq("ﬁx", "😀x", "st", "str", "stream", "streams", "strength",
-    "merge", "fast", "quick", "a", "zzzz", "é", "😀")
+    "merge", "fast", "quick", "a", "zzzz", "é", "😀", "spark", "stak", "spaké")
 
   lazy val terms: Seq[String] = {
     val rng = new scala.util.Random(17)
@@ -50,8 +51,8 @@ class VocabularySpec extends AnyFunSuite {
     val src = new IndexAtomSource(reader)
     val (runs, slice) = src.candidateRunsSlice(atom)
     // the driver-serving resolution: the same ids, no slice
-    assert(src.exactRuns(atom).map(_.flatMap { case (lo, hi) => lo to hi }) ===
-      Some(want.map(_._1)), s"exact runs of $atom")
+    assert(src.exactRuns(atom).flatMap { case (lo, hi) => lo to hi } === want.map(_._1),
+      s"exact runs of $atom")
     if (want.isEmpty) assert(runs.isEmpty && slice.isEmpty, s"atom $atom")
     else {
       assert(want.length <= IndexAtomSource.MaxExactIds, s"test atom too wide: $atom")
@@ -111,6 +112,60 @@ class VocabularySpec extends AnyFunSuite {
     val atoms = Seq.fill(150)(
       if (rng.nextInt(4) == 0) OrAtoms(Seq.fill(2 + rng.nextInt(2))(word())) else word())
     atoms.foreach(assertExact)
+  }
+
+  /** (term_id) of `dictionary.filter(levenshtein(term, w) <= thr)`, ascending. */
+  private def fuzzyViaScan(w: String, thr: Int): Seq[Long] =
+    reader.dictionary.filter(levenshtein(col("term"), lit(w)) <= thr)
+      .select(col("term_id")).collect().map(_.getLong(0)).toSeq.sorted
+
+  /** The distributed plans' closest word: `orderBy(d, term).limit(1)`. */
+  private def closestViaScan(w: String, thr: Int): Option[String] =
+    reader.dictionary.filter(levenshtein(col("term"), lit(w)) <= thr)
+      .select(col("term"), levenshtein(col("term"), lit(w)).as("d"))
+      .orderBy(col("d"), col("term")).limit(1)
+      .collect().headOption.map(_.getString(0))
+
+  test("fuzzy words resolve exactly like levenshtein over the dictionary") {
+    val v = reader.vocabulary
+    def ids(w: String, thr: Int): Seq[Long] = v.withinEdits(w, thr)._1.toSeq.map(_.toLong)
+    def idOf(t: String): Long = v.idOf(t).toLong
+    // multi-byte code points count as one edit: `stream` is 1 edit from
+    // `str😀am` (in at thr 1), `streams` 2 (out at thr 1, in at 2), though
+    // their byte lengths differ by 3 and 2
+    assert(ids("str😀am", 1).contains(idOf("stream")))
+    assert(!ids("str😀am", 1).contains(idOf("streams")))
+    assert(ids("str😀am", 2).contains(idOf("streams")))
+    assert(ids("ﬁ😀", 1).contains(idOf("ﬁx")) && !ids("ﬁ😀", 1).contains(idOf("😀x")))
+    assert(ids("spak", 1).contains(idOf("spaké")) && !ids("spak", 0).contains(idOf("spaké")))
+    val words = Seq("str😀am", "ﬁ😀", "spak", "sta", "é", "😀", "😀😀", "ée", "ﬁ",
+      "streamé", "\uD83D", "", "nosuchword", "zzz")
+    for (w <- words; thr <- 0 to 3)
+      assert(ids(w, thr) === fuzzyViaScan(w, thr), s"w=$w thr=$thr")
+    // the closest word: least distance, ties to the smaller term (`st` and
+    // `stak` are among the terms 1 edit from `sta`, none is 0)
+    assert(v.idOf("sta") < 0 && reader.dictionary
+      .filter(levenshtein(col("term"), lit("sta")) === 1).count() > 1, "precondition: a tie")
+    for (w <- words; thr <- 0 to 2) {
+      val c = v.withinEdits(w, thr)._2
+      assert((if (c < 0) None else Some(v.term(c))) === closestViaScan(w, thr), s"w=$w thr=$thr")
+    }
+    assert(new IndexAtomSource(reader).bestMatchWord(Word("sta", fuzzy = true)) ===
+      closestViaScan("sta", Executor.fuzzyThreshold("sta")))
+  }
+
+  test("fuzzy atoms and fuzzy OR alternatives resolve exactly like the dictionary predicate") {
+    // `stak` matches both alternatives: the OR resolves it once
+    val or = OrAtoms(Seq(Word("st", prefix = true), Word("spak", fuzzy = true)))
+    assert(viaScan(Word("st", prefix = true)).exists(_._2 == "stak") &&
+      viaScan(Word("spak", fuzzy = true)).exists(_._2 == "stak"))
+    assertExact(or)
+    Seq[Atom](Word("spak", fuzzy = true), Word("str😀am", fuzzy = true),
+      Word("😀😀", fuzzy = true), Word("nosuchword", fuzzy = true),
+      OrAtoms(Seq(Word("ﬁ", fuzzy = true), Word("😀", fuzzy = true)))).foreach(assertExact)
+    val rng = new scala.util.Random(23)
+    Seq.fill(40)(terms(rng.nextInt(terms.length)) + alphabet(rng.nextInt(alphabet.length)))
+      .foreach(w => assertExact(Word(w, fuzzy = true)))
   }
 
   test("the load refuses ids that are not dense or not in UTF-8 byte order") {
