@@ -76,17 +76,22 @@ object Bench {
     */
   val GrammarQueries: Set[String] = QuerySet.map(_._1).filter(_.startsWith("qp:")).toSet
 
+  /** A fresh index scratch directory, on tmpfs when available: the shared
+    * disk is a serial resource that distorts throughput (see BENCH.md).
+    */
+  def scratchDir(prefix: String): String = {
+    val shm = java.nio.file.Paths.get("/dev/shm")
+    (if (java.nio.file.Files.isWritable(shm))
+      java.nio.file.Files.createTempDirectory(shm, prefix)
+    else java.nio.file.Files.createTempDirectory(prefix)).toString
+  }
+
   def buildAndMeasure(spark: SparkSession, sfDir: String, reps: Int = 3,
                       replDefault: Int = 10): (Double, Double, Double, Double, Long, String) = {
     val repl = sys.env.getOrElse("SPARK_GRAFT_REPL", replDefault.toString).toInt
     val corpus = replicatedCorpus(spark, sfDir, repl).cache()
     val nDocs = corpus.count()
-    // index scratch on tmpfs when available: the shared disk is a serial
-    // resource that distorts throughput comparisons (see BENCH.md)
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    val dir = (if (java.nio.file.Files.isWritable(shm))
-      java.nio.file.Files.createTempDirectory(shm, "graft_bench_ix")
-    else java.nio.file.Files.createTempDirectory("graft_bench_ix")).toString
+    val dir = scratchDir("graft_bench_ix")
     val t0 = System.nanoTime()
     IndexBuilder.build(spark, corpus, dir, numShards = 1)
     val buildSec = (System.nanoTime() - t0) / 1e9
@@ -132,8 +137,12 @@ object Bench {
       nDocs, java.lang.Long.toHexString(sig))
   }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+  /** The benchmark session (`SPARK_GRAFT_CPUS` cores, default 4): the
+    * one builder [[Bench]], [[graft.tools.Measure]] and
+    * [[graft.tools.ExplainPlans]] share, so what they measure and print
+    * runs under the same configuration.
+    */
+  def session(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val builder = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -144,18 +153,29 @@ object Bench {
       // partitions), while big shuffles still get full parallelism from
       // the 64MB advisory size -- the scale-correct AQE setting
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      // A/B knob: constraint propagation is O(constraints^2) during
-      // optimization and the deep union/join grammar plans pay it on every
-      // cold gate; measured NEUTRAL on the qp_ family (both orders, see
-      // BENCH.md) so the default stays on -- knob kept for re-measurement
-      .config("spark.sql.constraintPropagation.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_CONSTRAINT_PROP", "true"))
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
     val spark = (if (java.nio.file.Files.isWritable(java.nio.file.Paths.get("/dev/shm")))
       builder.config("spark.local.dir", s"/dev/shm/graft-bench-local")
     else builder).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** Absorbs first-job session costs (shuffle-exchange init, codegen,
+    * documents-parquet listing), 2-7 s that whichever gate runs first would
+    * otherwise pay (the first gate's cold run in `Measure gates` shows it).
+    */
+  def absorbSessionCosts(spark: SparkSession, sfDir: String): Unit =
+    scala.util.Try {
+      val wdocs = spark.read.parquet(s"$sfDir/documents.parquet")
+      wdocs.join(org.apache.spark.sql.functions.broadcast(
+        wdocs.groupBy("source").count()), "source").count()
+    }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark = session()
 
     // SPARK_GRAFT_SKIP_BUILD=1: skip the build + latency phases (zeros in
     // the JSON) -- pairs with SPARK_GRAFT_ONLY for focused perf iteration
@@ -191,16 +211,8 @@ object Bench {
           s"pay the build cost in-loop): $e"))
     }
 
-    // Absorb first-job session costs (shuffle-exchange init, codegen,
-    // documents-parquet listing) OUTSIDE the per-gate numbers -- same
-    // reasoning as the index pre-warm above: whichever gate happens to
-    // iterate first otherwise pays 2-7 s that belongs to the session,
-    // not the query (measured via tools/ThresholdsProbe).
-    scala.util.Try {
-      val wdocs = spark.read.parquet(s"$sfDir/documents.parquet")
-      wdocs.join(org.apache.spark.sql.functions.broadcast(
-        wdocs.groupBy("source").count()), "source").count()
-    }
+    // same reasoning as the index pre-warm above, for the session
+    absorbSessionCosts(spark, sfDir)
 
     // SPARK_GRAFT_ONLY=<prefix>[,<prefix>...] restricts the gated loop --
     // a local-iteration knob (perf work on one family without paying the

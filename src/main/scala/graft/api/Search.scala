@@ -119,21 +119,17 @@ object Search {
     // plan's candidate round-trips) only run when the last part is a prefix
     def compl = IndexExecutor.serveCompletionRows(
       reader, query, completionsK, params, cache)
-    val ids = hits.map(_.getLong(0))
-    // the hit rows as a relation, for the distributed semi-joins only
-    lazy val hitsDf = localRelation(reader.spark, hits)
     // no docs store built next to this index -> hits without excerpts or
     // urls (the reference server likewise needs docs.DB for excerpts);
-    // otherwise both come from the driver docs LRU, keyed by the hit ids
-    // (zero jobs warm), or from semi-joins with local serving switched off
+    // otherwise both come from one driver docs-LRU lookup keyed by the hit
+    // ids (zero jobs warm)
+    val docs =
+      if (!reader.hasDocsStore) Map.empty[Long, (String, String)]
+      else LocalServe.docTexts(reader, hits.map(_.getLong(0)))
     assemble(query, hits, compl,
       (exact, prefixes) =>
-        if (!reader.hasDocsStore) Map.empty
-        else LocalServe.excerptsOf(reader, ids, exact, prefixes, excerptRadius,
-          params.excerptsPerHit).getOrElse(pairs(Excerpts.generateAll(
-            reader.docs, hitsDf, exact, prefixes, excerptRadius, params.excerptsPerHit))),
-      if (!reader.hasDocsStore) Map.empty
-      else LocalServe.urlsOf(reader, ids).getOrElse(urlsOf(reader.docs, hitsDf)))
+        LocalServe.excerptsOf(docs, exact, prefixes, excerptRadius, params.excerptsPerHit),
+      docs.map { case (id, (url, _)) => id -> url })
   }
 
   /** k hit rows re-exposed as a (doc_id, score) LocalRelation. */

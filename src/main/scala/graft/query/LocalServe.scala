@@ -997,10 +997,11 @@ object LocalServe {
 
   /** (url, text) for each hit id present in the docs store, misses fetched
     * in ONE point read of the docs files ([[IndexReader.points]]: the doc_id
-    * set prunes row groups and pages, no Spark job).
+    * set prunes row groups and pages, no Spark job). The caller checks
+    * [[IndexReader.hasDocsStore]] first.
     */
-  private def docTexts(reader: IndexReader,
-                       ids: Seq[Long]): Map[Long, (String, String)] = {
+  private[graft] def docTexts(reader: IndexReader,
+                              ids: Seq[Long]): Map[Long, (String, String)] = {
     val cache = stateOf(reader).docs
     val out = scala.collection.mutable.Map.empty[Long, (String, String)]
     val misses = scala.collection.mutable.ArrayBuffer.empty[Long]
@@ -1047,27 +1048,16 @@ object LocalServe {
     windows.mkString(" ... ")
   }
 
-  /** Driver-resident excerpts for hit ids already on the driver: doc_id ->
-    * excerpt for every id present in the docs store (absent ids get no
-    * entry). None -> the caller keeps the distributed semi-join
-    * ([[Excerpts.generateAll]]).
+  /** Driver-resident excerpts for docs already fetched by [[docTexts]]:
+    * doc_id -> excerpt for every doc given.
     */
-  def excerptsOf(reader: IndexReader, ids: Seq[Long], exact: Seq[String],
-                 prefixes: Seq[String], er: Int, en: Int): Option[Map[Long, String]] =
-    if (!reader.hasDocsStore) None
-    else Some(docTexts(reader, ids).map { case (id, (_, text)) =>
-      id -> generateAllLocal(text, exact, prefixes, er, en)
-    })
-
-  /** Driver-resident urls for hit ids already on the driver (the
-    * [[graft.api.Search]] urlsOf twin); absent ids get no entry.
-    */
-  def urlsOf(reader: IndexReader, ids: Seq[Long]): Option[Map[Long, String]] =
-    if (!reader.hasDocsStore) None
-    else Some(docTexts(reader, ids).map { case (id, (url, _)) => id -> url })
+  def excerptsOf(docs: Map[Long, (String, String)], exact: Seq[String],
+                 prefixes: Seq[String], er: Int, en: Int): Map[Long, String] =
+    docs.map { case (id, (_, text)) => id -> generateAllLocal(text, exact, prefixes, er, en) }
 
   /** [[excerptsOf]] for an already-local hits relation, as a
-    * (doc_id, excerpt) LocalRelation in hit order.
+    * (doc_id, excerpt) LocalRelation in hit order; None without a docs
+    * store or for a distributed relation.
     */
   def excerptsAll(reader: IndexReader, hits: DataFrame, exact: Seq[String],
                   prefixes: Seq[String], er: Int, en: Int): Option[DataFrame] = {
@@ -1075,13 +1065,16 @@ object LocalServe {
     val spark = reader.spark
     import spark.implicits._
     val ids = hits.collect().map(_.getLong(0)).toSeq
-    excerptsOf(reader, ids, exact, prefixes, er, en).map(ex =>
-      ids.flatMap(id => ex.get(id).map(id -> _)).toDF("doc_id", "excerpt"))
+    val ex = excerptsOf(docTexts(reader, ids), exact, prefixes, er, en)
+    Some(ids.flatMap(id => ex.get(id).map(id -> _)).toDF("doc_id", "excerpt"))
   }
 
-  /** [[urlsOf]] for an already-local hits relation. */
+  /** Hit urls for an already-local hits relation; None without a docs
+    * store or for a distributed relation.
+    */
   def urls(reader: IndexReader, hits: DataFrame): Option[Map[Long, String]] = {
     if (!reader.hasDocsStore || !isLocalRelation(hits)) return None
-    urlsOf(reader, hits.collect().map(_.getLong(0)).toSeq)
+    Some(docTexts(reader, hits.collect().map(_.getLong(0)).toSeq)
+      .map { case (id, (url, _)) => id -> url })
   }
 }

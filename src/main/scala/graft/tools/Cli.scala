@@ -382,23 +382,3 @@ object BuildFromDatabaseMain {
     spark.stop()
   }
 }
-
-/** Print the formatted physical plan of any `SparkEntry` gate query —
-  * the evidence tool behind PLANS.md (pushed filters, pruned columns,
-  * broadcast vs shuffle joins, WholeStageCodegen spans).
-  *
-  * args: <queryName> [sfDir]      (default sfDir /root/testdata/sf0.001)
-  */
-object PlanDumpMain {
-  def main(args: Array[String]): Unit = {
-    require(args.nonEmpty, "usage: PlanDumpMain <queryName> [sfDir]")
-    val name = args(0)
-    val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
-    val spark = Cli.session("graft-plan-dump")
-    val fn = graft.SparkEntry.queries.getOrElse(name,
-      sys.error(s"unknown query '$name'; known: ${graft.SparkEntry.queries.keys.toSeq.sorted.mkString(", ")}"))
-    println(fn(spark, sfDir).queryExecution.explainString(
-      org.apache.spark.sql.execution.FormattedMode))
-    spark.stop()
-  }
-}

@@ -22,10 +22,13 @@ import org.apache.spark.sql.SparkSession
   * `en=` excerpts per hit, `er=` excerpt radius, `fd=` fuzzy damping in
   * [0.01, 1], `s=` the four score-aggregation knobs (e.g. `s=SMSM`),
   * `n=a..b` the `..` neighbourhood override.
-  * Queries run the FULL grammar off the block index through the
-  * serving-session history ([[graft.query.IndexQueryCache]]), so a typing
-  * stream of prefixes extends cached relations instead of re-scanning
-  * blocks.
+  * Queries run the FULL grammar off the block index. A query within the
+  * driver's postings budget is answered in-process by
+  * [[graft.query.LocalServe]] from its per-reader LRUs (atoms, result
+  * pages, docs), with no Spark job. Only a distributed fallback past that
+  * budget goes through the serving-session history
+  * ([[graft.query.IndexQueryCache]]), where a typing stream of prefixes
+  * extends cached relations instead of re-scanning blocks.
   *
   * Replies go out with TCP_NODELAY. The JDK server writes a reply's headers
   * and body as two TCP segments; under Nagle's algorithm the body waits
@@ -74,11 +77,13 @@ object CompletionServer {
     * next request, Spark's partial-cache contract).
     *
     * `warmQueries` (reference `--warm-history-queries`/`-I`): each query
-    * runs through the serving history BEFORE the socket accepts requests,
-    * so the first real keystrokes hit warm relations. `keepQueries`
-    * (reference `--keep-in-history-queries`/`-A`) additionally PINS its
-    * queries' relations -- they never leave the history under LRU/byte
-    * pressure (the classic use: the expensive one-letter prefixes).
+    * is answered once BEFORE the socket accepts requests, so the first
+    * real keystrokes find warm caches. `keepQueries` (reference
+    * `--keep-in-history-queries`/`-A`) are answered the same way with
+    * history inserts pinned: a keep query that falls back to the
+    * distributed path keeps its relations in the history under LRU/byte
+    * pressure; one served locally lands in [[graft.query.LocalServe]]'s
+    * LRUs, which pin nothing, and stays warm only until evicted.
     * `enableCors` (reference `--enable-cors`/`-O`) adds
     * `Access-Control-Allow-Origin: *` for browser frontends on other
     * origins. `normalizeWords` (reference `--normalize-words`/`-N`) makes
@@ -300,7 +305,7 @@ object CompletionServerMain {
     println(s"graft completion server listening on port " +
       s"${server.getAddress.getPort} ($threads handler threads, " +
       s"query timeout ${timeoutMs}ms, ${warmQueries.size} warm + " +
-      s"${keepQueries.size} pinned queries" +
+      s"${keepQueries.size} keep queries" +
       s"${if (enableCors) ", CORS" else ""}; GET /?q=<query>&h=10&c=10)")
     Thread.currentThread().join() // serve until killed
   }

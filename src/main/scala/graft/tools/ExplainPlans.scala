@@ -2,54 +2,24 @@ package graft.tools
 
 import graft.core.WebCorpus
 import graft.{FtQueries, IndexQueries}
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.QueryExecution
-import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Dumps formatted physical plans for the load-bearing queries so pruning /
   * pushdown / codegen claims can be inspected (dev tool, not in the driver
-  * contract).
+  * contract), on [[graft.Bench.session]]. The plans a gate of
+  * `SparkEntry.queries` executes come from `Measure gates <gate> --plans
+  * <dir>`.
   *
-  *   sbt "runMain graft.tools.ExplainPlans <sfDir>"          -- the fixed list
-  *   sbt "runMain graft.tools.ExplainPlans <sfDir> <gate>.." -- named gates of
-  *     `SparkEntry.queries`: every plan a gate executes, eager checkpoints
-  *     made while the DataFrame is built included, in its final adaptive
-  *     form (the gate itself runs into the noop sink)
+  *   sbt "runMain graft.tools.ExplainPlans <sfDir>"
   */
 object ExplainPlans {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Bench.session()
 
     def show(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
       println(s"\n========== $name ==========")
       println(df.queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
-    }
-
-    if (args.length > 1) {
-      val executed = new java.util.concurrent.LinkedBlockingQueue[(String, QueryExecution)]()
-      spark.listenerManager.register(new QueryExecutionListener {
-        def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-          executed.add(funcName -> qe)
-        def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
-      })
-      for (gate <- args.drop(1)) {
-        executed.clear()
-        graft.SparkEntry.queries(gate)(spark, sfDir).write.format("noop").mode("overwrite").save()
-        // listener events arrive asynchronously: drain until 5 s of quiet
-        Iterator.continually(executed.poll(5, java.util.concurrent.TimeUnit.SECONDS))
-          .takeWhile(_ != null).foreach { case (funcName, qe) =>
-            println(s"\n========== $gate: $funcName ==========")
-            println(qe.explainString(
-              org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
-          }
-      }
-      spark.stop()
-      return
     }
 
     show("ft_bm25_single (logical path)", FtQueries.bm25Single(spark, sfDir))
