@@ -297,8 +297,7 @@ object IndexBuilder {
 
     // BY_PREFIXES boundaries -> cut term-ids (one vocab-sized agg job;
     // dense lexicographic ids make each boundary ONE min). Idempotent.
-    val boundariesDone = java.nio.file.Files.exists(
-      java.nio.file.Paths.get(s"$outDir/boundaries/_SUCCESS"))
+    val boundariesDone = IndexMeta.exists(spark, s"$outDir/boundaries/_SUCCESS")
     if (prefixBoundaries.nonEmpty && !boundariesDone) {
       val bs = prefixBoundaries.distinct.sorted
       val row = timed("boundary_cuts")(dict.select(
@@ -310,25 +309,11 @@ object IndexBuilder {
       cuts.toDF("boundary", "cut_id")
         .write.mode(SaveMode.Overwrite).parquet(s"$outDir/boundaries")
     }
-    val cutIds: Option[Array[Long]] =
-      if (prefixBoundaries.nonEmpty || boundariesDone)
-        Some(spark.read.parquet(s"$outDir/boundaries")
-          .select(col("cut_id")).as[Long].collect().sorted)
-      else None
-
-    val statsRow = spark.read.parquet(s"$outDir/stats").head()
-    val avgdl = statsRow.getAs[Double]("avgdl")
-    val nDocs = statsRow.getAs[Long]("n_docs")
-    // resumed builds MUST keep the committed codec, whatever the caller
-    // passed -- shards of one index may never mix codecs
-    val codecId = Codec.idOf(
-      if (statsRow.schema.fieldNames.contains("doclist_codec"))
-        statsRow.getAs[String]("doclist_codec")
-      else "varint")
-    val vocabSize =
-      if (statsRow.schema.fieldNames.contains("vocab_size"))
-        statsRow.getAs[Long]("vocab_size")
-      else dict.count() // pre-round-2 index layout
+    // the committed stats and cuts (the reader's and the delta writer's
+    // [[IndexMeta]]): resumed builds MUST keep the committed codec,
+    // whatever the caller passed -- shards of one index may never mix codecs
+    val meta = new IndexMeta(spark, outDir)
+    val vocabSize = meta.vocabSize.getOrElse(dict.count()) // pre-round-2 index layout
 
     // Shard by docId range: independent, resumable jobs. Single-shard
     // builds skip the max-doc-id scan entirely.
@@ -352,9 +337,9 @@ object IndexBuilder {
         val shardDt = if (storePositions) shardDt0
           else shardDt0.withColumn("positions",
             expr("array_repeat(0, cast(tf as int))"))
-        val blocks = buildShard(spark, shardDt, dict, vocabSize, avgdl,
-          blockSize, bucketFn(bucketSize.toLong, cutIds), buildPartitions,
-          codecId).persist()
+        val blocks = buildShard(spark, shardDt, dict, vocabSize, meta.avgdl,
+          blockSize, bucketFn(bucketSize.toLong, meta.prefixCuts), buildPartitions,
+          meta.doclistCodec).persist()
         timed(s"shard${shard}_encode_write") {
           blocks.write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(shardDir)
         }
@@ -464,12 +449,12 @@ object IndexBuilder {
     val deltas = census.visible.filter(s =>
       s.startsWith("stream-") || s.startsWith("compact-"))
     if (deltas.size < 2) return None
-    val r = new IndexReader(spark, indexDir, cacheBlocks = false)
+    val meta = new IndexMeta(spark, indexDir)
     val blocks = spark.read.option("basePath", s"$indexDir/blocks")
       .parquet(deltas.map(s => s"$indexDir/blocks/shard=$s"): _*)
     val decoded = blocks.select(col("term_id"),
       PostingsDecode.postingsDecodeWithPositions(col("n_docs"), col("doc_deltas"),
-        col("tfs"), col("dls"), col("positions"), r.doclistCodec))
+        col("tfs"), col("dls"), col("positions"), meta.doclistCodec))
     val sorted = decoded
       .select(col("term_id"), col("doc_id"), col("tf"), col("positions"), col("dl"))
       .repartitionByRange(
@@ -478,8 +463,8 @@ object IndexBuilder {
       .sortWithinPartitions(col("term_id"), col("doc_id"))
       .as[(Long, Long, Long, Array[Int], Long)]
     val newName = s"compact-${census.nextCompactId}"
-    encodeBlocks(sorted, r.avgdl, DefaultBlockSize,
-      bucketFn(r.bucketSize, r.prefixCuts), r.doclistCodec)
+    encodeBlocks(sorted, meta.avgdl, DefaultBlockSize,
+      bucketFn(meta.bucketSize, meta.prefixCuts), meta.doclistCodec)
       .write.mode(SaveMode.Overwrite).partitionBy("bucket")
       .parquet(s"$indexDir/blocks/shard=$newName")
     deltas.map(s => (newName, s)).toDF("new_shard", "merged_shard")

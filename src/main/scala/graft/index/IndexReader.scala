@@ -108,51 +108,18 @@ class IndexReader(val spark: SparkSession, val dir: String,
     */
   @volatile private var docsStoreSeen = false
   def hasDocsStore: Boolean = docsStoreSeen || {
-    val present =
-      try {
-        val p = new org.apache.hadoop.fs.Path(s"$dir/docs")
-        p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-      } catch { case _: Throwable => false }
+    val present = IndexMeta.exists(spark, s"$dir/docs")
     if (present) docsStoreSeen = true
     present
   }
-  private lazy val statsRow = spark.read.parquet(s"$dir/stats").head()
-  lazy val nDocs: Long = statsRow.getAs[Long]("n_docs")
-  lazy val avgdl: Double = statsRow.getAs[Double]("avgdl")
-  /** bucket width the index was built with (persisted in stats). */
-  lazy val bucketSize: Long =
-    if (statsRow.schema.fieldNames.contains("bucket_size"))
-      statsRow.getAs[Long]("bucket_size")
-    else IndexBuilder.DefaultBucketSize.toLong
-  /** Compression codec the index was built with (persisted in stats;
-    * pre-codec-family indexes are varint).
-    */
-  lazy val doclistCodec: Int = Codec.idOf(
-    if (statsRow.schema.fieldNames.contains("doclist_codec"))
-      statsRow.getAs[String]("doclist_codec")
-    else "varint")
-
-  /** false = positions-off index (IndexBuilder storePositions=false):
-    * doc-level queries are untouched; windowed/phrase queries refuse.
-    */
-  lazy val hasPositions: Boolean =
-    !statsRow.schema.fieldNames.contains("store_positions") ||
-      statsRow.getAs[Boolean]("store_positions")
-
-  /** BY_PREFIXES boundary cut ids, when the index was built with
-    * prefix-boundary block formation (HYBIndex.cpp:247-264 analog): sorted
-    * first-term-ids of each boundary group, loaded once (tiny).
-    */
-  lazy val prefixCuts: Option[Array[Long]] = {
-    val present =
-      try {
-        val p = new org.apache.hadoop.fs.Path(s"$dir/boundaries/_SUCCESS")
-        p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-      } catch { case _: Throwable => false }
-    if (!present) None
-    else Some(spark.read.parquet(s"$dir/boundaries")
-      .select(col("cut_id")).as[Long].collect().sorted)
-  }
+  /** The build's stats and boundary cuts, each read on first use. */
+  private val meta = new IndexMeta(spark, dir)
+  def nDocs: Long = meta.nDocs
+  def avgdl: Double = meta.avgdl
+  def bucketSize: Long = meta.bucketSize
+  def doclistCodec: Int = meta.doclistCodec
+  def hasPositions: Boolean = meta.hasPositions
+  def prefixCuts: Option[Array[Long]] = meta.prefixCuts
 
   /** Bucket of a term id under the index's block-formation mode; MONOTONE
     * in term_id in both modes, so contiguous id ranges map to contiguous

@@ -96,6 +96,7 @@ final class Vocabulary private (bytes: Array[Byte], offsets: Array[Int],
     * verified by the same distance (q-grams or deletion neighbourhoods).
     */
   def withinEdits(w: String, thr: Int): (Array[Int], Int) = {
+    editScans.incrementAndGet()
     val key = UTF8String.fromString(w)
     val minLen = math.max(key.numChars - thr, key.numBytes - 4 * thr)
     val maxLen = key.numBytes + 4 * thr
@@ -117,6 +118,9 @@ final class Vocabulary private (bytes: Array[Byte], offsets: Array[Int],
     }
     (ids.result(), closest)
   }
+
+  /** [[withinEdits]] passes over this vocabulary (spec hook). */
+  private[graft] val editScans = new java.util.concurrent.atomic.AtomicLong()
 
   /** Unsigned byte comparison of term `id` with `key`. */
   private def compareTo(id: Int, key: Array[Byte]): Int = {

@@ -169,11 +169,11 @@ object CorpusAtomSource {
   }
 }
 
-/** The reference-grammar evaluation state machine, written ONCE over
-  * [[AtomSource]] (mirrors processComplexQuery's left-deep part chain,
-  * CompleterBase.cpp:1007-1850): the accumulated result is a
-  * (doc_id, score) relation plus, for windowed separators, the positions
-  * of the previous part's MATCHED postings.
+/** The reference-grammar evaluation, written ONCE over [[AtomSource]]: the
+  * Spark interpreter of a [[QueryPlan]] (the reference's left-deep part
+  * chain, processComplexQuery, CompleterBase.cpp:1007-1850). The
+  * accumulated result is a (doc_id, score) relation plus, for windowed
+  * separators, the positions of the previous part's MATCHED postings.
   *
   * Scoring: per-part doc score = summed BM25 over the part's matched terms
   * in the doc; parts combine with Sum (docScoreAggDifferentQueryParts=Sum).
@@ -184,46 +184,32 @@ object CorpusAtomSource {
   */
 object Eval {
 
-  private def isNot(atom: Atom): Boolean = atom match {
-    case w: Word => w.not
-    case _ => false
-  }
-
-  /** The atom's scored relation with fuzzy damping applied (reference:
-    * `fd=` fuzzyDamping, CompleterBase.TopK.cpp:754 -- fuzzy-matched
-    * scores multiplied by the damping factor). The damping multiplies the
-    * SHARED cached relation's columns plan-side, so one undamped history
-    * entry serves every fd value (the reference History instead treats a
-    * differing fuzzyDamping as cache-incompatible, CompleterBase.cpp:
-    * 1125-1139 -- a whole-result re-compute we avoid).
+  /** `scored` with the plan's damping applied to its score columns. The
+    * damping multiplies the SHARED cached relation's columns plan-side, so
+    * one undamped history entry serves every fd value (the reference
+    * History instead treats a differing fuzzyDamping as
+    * cache-incompatible, CompleterBase.cpp:1125-1139 -- a whole-result
+    * re-compute we avoid).
     */
-  private def dampedScored(src: AtomSource, a: Atom, params: QueryParams): DataFrame = {
-    val base = src.atomScoredCached(a)
-    val isFuzzy = a match { case w: Word => w.fuzzy; case _ => false }
-    if (!isFuzzy || params.fuzzyDamping >= 1.0) base
-    else base.withColumn("score", col("score") * params.fuzzyDamping)
-      .withColumn("score1", col("score1") * params.fuzzyDamping)
-  }
+  private def damped(scored: DataFrame, damping: Double): DataFrame =
+    if (damping == 1.0) scored
+    else scored.withColumn("score", col("score") * damping)
+      .withColumn("score1", col("score1") * damping)
 
-  /** Evaluate to (doc_id, score), score rounded to 4dp, unordered, under
-    * the full score-aggregation algebra ([[QueryParams]]):
+  /** Evaluate `plan` to (doc_id, score), score rounded to 4dp, unordered,
+    * under the full score-aggregation algebra of `plan.params`
+    * ([[QueryParams]]):
     *  - per-term doc score: Sum over same-word occurrences = BM25(tf),
     *    Max = BM25(1) (`score1` column);
     *  - across a part's matching terms: completionsAgg (Sum/Max);
     *  - across parts: partsAgg (Sum / Max / SumWithBonus -- the latter adds
-    *    the reference's proximity bonuses on windowed separators);
-    *  - bestMatchBonus > 0 adds the reference's BEST_MATCH_BONUS
-    *    (Globals.h:233, default 0 = off) to docs whose LAST part matches
-    *    the best-match word (CompleterBase.cpp:723-732);
-    *  - params.window overrides the '..' neighbourhood per query
-    *    (QueryParameters.cpp:12-13).
+    *    the plan's proximity bonuses on windowed separators);
+    *  - the plan's best-match bonus (BEST_MATCH_BONUS, Globals.h:233) on
+    *    docs whose last part matches the best-match word
+    *    (CompleterBase.cpp:723-732).
     */
-  def evalDocs(src: AtomSource, q: ParsedQuery, params: QueryParams): DataFrame = {
-    // rel: (doc_id, score[, mpos]) -- mpos (present iff hasPos) is the most
-    // recent non-NOT part's MATCHED positions in the doc, as an array column
-    case class State(rel: DataFrame, hasPos: Boolean)
-    val lastIdx = q.parts.length - 1
-    def bmFor(i: Int): Double = if (i == lastIdx) params.bestMatchBonus else 0.0
+  def evalDocs(src: AtomSource, plan: QueryPlan): DataFrame = {
+    val params = plan.params
     // per-(doc, term) contribution under docScoreAggSameCompletion
     val termScore =
       if (params.sameCompletionAgg == QueryParams.Max) col("score1") else col("score")
@@ -237,116 +223,70 @@ object Eval {
         case QueryParams.SumWithBonus => s1 + s2 + lit(bonus)
         case _ => s1 + s2
       }
-    // the per-query neighbourhood override applies to '..' only
-    // (reference: neighbourhoodStart/End feed the NEAR separator)
-    def windowOf(sep: Sep): Option[(Int, Int)] = sep match {
-      case Near => params.window.orElse(sep.window)
-      case _ => sep.window
-    }
-    // does a later windowed separator chain from THIS part's positions?
-    // (NOT parts pass positions through, so scan past them) -- parts whose
-    // positions nothing consumes skip the array aggregation entirely
-    def nextWindowed(idx: Int): Boolean =
-      q.parts.drop(idx + 1).dropWhile(p => isNot(p.atom)).headOption.exists(p =>
-        !p.atom.isInstanceOf[JoinBlock] && p.sep.flatMap(windowOf).isDefined)
 
     /** Part relation in ONE aggregation: (doc_id, score[, mpos]) -- the doc
-      * score under the algebra plus, when a later window chains from this
-      * part, the doc's positions gathered into an array column. The array
-      * form keeps the window match inside whole-stage codegen (filter /
-      * exists higher-order functions in [[evalDocs]]'s windowed branch)
-      * instead of explode + position theta-join + two distincts -- the
-      * reference likewise walks both position lists inside one merge
-      * (intersectTwoPostingLists, CompleterBase.Intersect.cpp:477-548).
+      * score under the algebra plus, when the step gathers positions, the
+      * doc's positions in an array column. The array form keeps the window
+      * match inside whole-stage codegen (filter / exists higher-order
+      * functions below) instead of explode + position theta-join + two
+      * distincts -- the reference likewise walks both position lists
+      * inside one merge (intersectTwoPostingLists,
+      * CompleterBase.Intersect.cpp:477-548).
       */
-    def partRel(a: Atom, bm: Double, withPos: Boolean): State = a match {
-      case JoinBlock(ps) => State(evalJoinBlock(src, ps), hasPos = false)
-      case _ if src.singleTerm(a) =>
-        // one vocabulary term => already one row per doc: the part
-        // aggregation degenerates to a projection (no shuffle)
-        val base = dampedScored(src, a, params)
-        val bw = if (bm == 0.0) None else src.bestMatchWord(a)
-        val scoreEx = bw match {
-          case Some(w) => (termScore +
-            when(col("term") === w, lit(bm)).otherwise(lit(0.0))).as("score")
-          case None => termScore.as("score")
+    def partRel(s: QueryPlan.Step): DataFrame = s.atom match {
+      case _: JoinBlock => evalJoinBlock(src, s.sides)
+      case a =>
+        val base = damped(src.atomScoredCached(a), s.damping)
+        val bw = if (s.bestMatch == 0.0) None else src.bestMatchWord(a)
+        def bonus(agg: Column => Column): Column =
+          agg(when(col("term") === bw.get, lit(s.bestMatch)).otherwise(lit(0.0)))
+        if (src.singleTerm(a)) {
+          // one vocabulary term => already one row per doc: the part
+          // aggregation degenerates to a projection (no shuffle)
+          val score = (if (bw.isEmpty) termScore else termScore + bonus(identity)).as("score")
+          base.select(Seq(col("doc_id"), score) ++
+            (if (s.withPos) Seq(col("positions").as("mpos")) else Nil): _*)
+        } else {
+          val score = (if (bw.isEmpty) complAgg(termScore)
+            else complAgg(termScore) + bonus(c => max(c))).as("score")
+          base.groupBy(col("doc_id")).agg(score,
+            (if (s.withPos) Seq(flatten(collect_list(col("positions"))).as("mpos")) else Nil): _*)
         }
-        if (withPos)
-          State(base.select(col("doc_id"), scoreEx,
-            col("positions").as("mpos")), hasPos = true)
-        else State(base.select(col("doc_id"), scoreEx), hasPos = false)
-      case _ =>
-        val base = dampedScored(src, a, params)
-        val bw = if (bm == 0.0) None else src.bestMatchWord(a)
-        val scoreCol = bw match {
-          case Some(w) => (complAgg(termScore) +
-            max(when(col("term") === w, lit(bm)).otherwise(lit(0.0)))).as("score")
-          case None => complAgg(termScore).as("score")
-        }
-        if (withPos)
-          State(base.groupBy(col("doc_id")).agg(scoreCol,
-            flatten(collect_list(col("positions"))).as("mpos")), hasPos = true)
-        else State(base.groupBy(col("doc_id")).agg(scoreCol), hasPos = false)
     }
 
-    val first = q.parts.head
-    require(!isNot(first.atom), "query cannot start with a NOT part")
-    var state = partRel(first.atom, bmFor(0), nextWindowed(0))
-
-    q.parts.zipWithIndex.tail.foreach { case (part, idx) =>
-      // a windowed separator needs positions on BOTH sides; join blocks
-      // have none (their result is a doc-score relation), so a window
-      // adjacent to a join block degrades to same-doc AND (the reference
-      // likewise treats separators around enhanced queries as plain
-      // intersection) instead of crashing
-      val positionless = !state.hasPos || part.atom.isInstanceOf[JoinBlock]
-      val window = if (positionless) None else part.sep.flatMap(windowOf)
-      require(window.isEmpty || src.hasPositions,
-        "positions-off index: windowed/phrase separators need storePositions=true")
-      if (isNot(part.atom)) {
-        // NOT: anti-join on matching docs (OUTPUT_NON_MATCHES); positions
-        // (if any) ride through for a window chaining past the NOT.
-        // No distinct: an anti-join's build side dedups in its hash
-        // relation, a pre-distinct is only an extra exchange
-        val negDocs = src.atomScoredCached(part.atom).select(col("doc_id"))
-        state = state.copy(rel = state.rel.join(negDocs, Seq("doc_id"), "left_anti"))
-      } else if (window.isEmpty) {
-        // plain AND: docId equi-join, scores sum (the special-posting carry)
-        val cur = partRel(part.atom, bmFor(idx), nextWindowed(idx))
-        val keep = Seq(col("doc_id"),
-          combineParts(col("s1"), col("s2"), 0.0).as("score")) ++
-          (if (cur.hasPos) Seq(col("mpos")) else Nil)
-        val joined = state.rel.select(col("doc_id"), col("score").as("s1"))
-          .join(cur.rel.withColumnRenamed("score", "s2"), "doc_id")
-          .select(keep: _*)
-        state = State(joined, cur.hasPos)
-      } else {
-        // windowed AND: keep the current part's positions within [lo, hi]
-        // of a previously matched position, per doc, as an array filter;
-        // docs with no surviving position drop out. The next window chains
-        // ONLY from positions of this part that matched (reference:
-        // intersectTwoPostingLists emits the second list's matched
-        // postings, CompleterBase.Intersect.cpp:477-548) -- carrying all
-        // of the atom's positions would let a.b.c match docs where 'a b'
-        // and 'b c' occur at unrelated places
-        val (lo, hi) = window.get
-        val cur = partRel(part.atom, bmFor(idx), withPos = true)
-        val bonus =
-          if (params.partsAgg == QueryParams.SumWithBonus)
-            Executor.bonusFor(part.sep.get)
-          else 0.0
-        val joined = state.rel
-          .select(col("doc_id"), col("score").as("s1"), col("mpos").as("prev_pos"))
-          .join(cur.rel.withColumnRenamed("score", "s2"), "doc_id")
-          .withColumn("mpos", filter(col("mpos"), p2 =>
-            exists(col("prev_pos"), p1 => (p2 - p1).between(lo, hi))))
-          .where(size(col("mpos")) > 0)
-          .select(col("doc_id"),
-            combineParts(col("s1"), col("s2"), bonus).as("score"), col("mpos"))
-        state = State(joined, hasPos = true)
+    val rel = plan.steps.foldLeft(null: DataFrame) { (state, s) =>
+      s.op match {
+        case QueryPlan.First => partRel(s)
+        case QueryPlan.Not =>
+          // anti-join on matching docs; positions (if any) ride through.
+          // No distinct: an anti-join's build side dedups in its hash
+          // relation, a pre-distinct is only an extra exchange
+          state.join(src.atomScoredCached(s.atom).select(col("doc_id")), Seq("doc_id"), "left_anti")
+        case QueryPlan.And =>
+          // plain AND: docId equi-join, scores combine (the special-posting carry)
+          state.select(col("doc_id"), col("score").as("s1"))
+            .join(partRel(s).withColumnRenamed("score", "s2"), "doc_id")
+            .select(Seq(col("doc_id"), combineParts(col("s1"), col("s2"), 0.0).as("score")) ++
+              (if (s.withPos) Seq(col("mpos")) else Nil): _*)
+        case QueryPlan.Window(lo, hi, bonus) =>
+          // windowed AND: keep the part's positions within [lo, hi] of a
+          // previously matched position, per doc, as an array filter; docs
+          // with no surviving position drop out. The next window chains
+          // ONLY from positions of this part that matched (reference:
+          // intersectTwoPostingLists emits the second list's matched
+          // postings, CompleterBase.Intersect.cpp:477-548) -- carrying all
+          // of the atom's positions would let a.b.c match docs where 'a b'
+          // and 'b c' occur at unrelated places
+          state.select(col("doc_id"), col("score").as("s1"), col("mpos").as("prev_pos"))
+            .join(partRel(s).withColumnRenamed("score", "s2"), "doc_id")
+            .withColumn("mpos", filter(col("mpos"), p2 =>
+              exists(col("prev_pos"), p1 => (p2 - p1).between(lo, hi))))
+            .where(size(col("mpos")) > 0)
+            .select(col("doc_id"), combineParts(col("s1"), col("s2"), bonus).as("score"),
+              col("mpos"))
       }
     }
-    state.rel.select(col("doc_id"), round(col("score"), 4).as("score"))
+    rel.select(col("doc_id"), round(col("score"), 4).as("score"))
   }
 
   /** Top-k hits: total order (score desc, doc_id asc). */
@@ -366,7 +306,8 @@ object Eval {
     * firstHit + k rows -- the driver never holds more than one page extra.
     */
   def hits(src: AtomSource, query: String, k: Int, params: QueryParams): DataFrame = {
-    val docs = evalDocs(src, QueryParser.parse(query, params.normalizeWords), params)
+    val docs = evalDocs(src,
+      QueryPlan.docs(QueryParser.parse(query, params.normalizeWords), params, src.hasPositions))
     val ordered = params.rankDocs match {
       case "doc" =>
         if (params.sortDocsAsc.getOrElse(true)) docs.orderBy(col("doc_id").asc)
@@ -392,60 +333,43 @@ object Eval {
     */
   def completions(src: AtomSource, query: String, k: Int,
                   params: QueryParams): DataFrame = {
-    val parsed = QueryParser.parse(query, params.normalizeWords)
+    val within = QueryPlan.within(QueryParser.parse(query, params.normalizeWords), params,
+      src.hasPositions)
     val perDoc =
       if (params.wordSameDocAgg == QueryParams.Max) col("score1") else col("score")
     val acrossDocs =
       if (params.wordDiffDocsAgg == QueryParams.Max) max(perDoc) else sum(perDoc)
-    val base = withinDocs(src, parsed, dampedScored(src, parsed.parts.last.atom, params), params)
+    val base = withinDocs(src, within)
       .groupBy(col("term"))
       .agg(round(acrossDocs, 4).as("score"),
         count(lit(1)).as("dc"), sum(col("tf")).as("oc"))
     // `rw=` completion rank mode + sort order (RANK_WORDS_BY_*,
-    // QueryParameters.h:103-113); term asc tiebreak keeps the order total
-    val ordered = params.rankWords match {
-      case "dc" =>
-        if (params.sortWordsAsc.getOrElse(false)) base.orderBy(col("dc").asc, col("term").asc)
-        else base.orderBy(col("dc").desc, col("term").asc)
-      case "oc" =>
-        if (params.sortWordsAsc.getOrElse(false)) base.orderBy(col("oc").asc, col("term").asc)
-        else base.orderBy(col("oc").desc, col("term").asc)
-      case "word" => // dense word ids are lexicographic: word-id order IS term order
-        if (params.sortWordsAsc.getOrElse(true)) base.orderBy(col("term").asc)
-        else base.orderBy(col("term").desc)
-      case _ =>
-        if (params.sortWordsAsc.getOrElse(false)) base.orderBy(col("score").asc, col("term").asc)
-        else base.orderBy(col("score").desc, col("term").asc)
+    // QueryParameters.h:103-113); dense word ids are lexicographic, so
+    // word-id order IS term order; term asc tiebreak keeps the order total
+    val key = params.rankWords match {
+      case "dc" | "oc" => col(params.rankWords)
+      case "word" => col("term")
+      case _ => col("score")
     }
-    ordered.limit(k)
+    val asc = params.sortWordsAsc.getOrElse(params.rankWords == "word")
+    base.orderBy(if (asc) key.asc else key.desc, col("term").asc).limit(k)
   }
 
-  /** `rows` of q's last atom, restricted to the docs matching all of q.
-    * A row of the last atom already lies in that atom's docs, so when the
-    * last part joins without a window only the earlier parts restrict it,
-    * and a one-part query restricts nothing: the restriction then skips
-    * the last part's doc aggregation, or the whole evaluation. NOT and
-    * windowed last parts filter the rows themselves and keep the full
-    * evaluation (which also refuses a query that starts with NOT).
+  /** The plan's last-atom rows, damped, restricted to its docs
+    * ([[QueryPlan.Within]]). An unrestricted plan skips the evaluation.
     */
-  private def withinDocs(src: AtomSource, q: ParsedQuery, rows: DataFrame,
-                         params: QueryParams): DataFrame = {
-    val last = q.parts.last
-    val plainLast = !isNot(last.atom) && last.sep.forall(_.window.isEmpty)
-    val restrictBy =
-      if (!plainLast) Some(q)
-      else if (q.parts.length == 1) None
-      else Some(ParsedQuery(q.parts.init))
-    restrictBy.fold(rows)(r =>
-      rows.join(evalDocs(src, r, params).select(col("doc_id")), Seq("doc_id"), "left_semi"))
+  private def withinDocs(src: AtomSource, w: QueryPlan.Within): DataFrame = {
+    val rows = damped(src.atomScoredCached(w.last), w.damping)
+    w.restrict.fold(rows)(p =>
+      rows.join(evalDocs(src, p).select(col("doc_id")), Seq("doc_id"), "left_semi"))
   }
 
   /** Join block [q1#q2]: completions of the two sides' last parts that
     * occur in BOTH results (CompleterBase.Join.cpp hash join); docs of
     * either side containing a common term, scores re-aggregated.
     */
-  private def evalJoinBlock(src: AtomSource, parts: Seq[ParsedQuery]): DataFrame = {
-    val (union, commonTerms) = joinBlockSides(src, parts)
+  private def evalJoinBlock(src: AtomSource, sides: Seq[QueryPlan.Within]): DataFrame = {
+    val (union, commonTerms) = joinBlockSides(src, sides)
     union.join(broadcast(commonTerms), Seq("term"), "left_semi")
       .groupBy(col("doc_id")).agg(sum(col("score")).as("score"))
   }
@@ -456,7 +380,8 @@ object Eval {
     */
   def joinBlockTerms(src: AtomSource, block: String): DataFrame =
     QueryParser.parse(block).parts match {
-      case Seq(Part(JoinBlock(ps), _)) => joinBlockSides(src, ps)._2.orderBy(col("term"))
+      case Seq(Part(JoinBlock(ps), _)) =>
+        joinBlockSides(src, QueryPlan.joinBlock(ps, src.hasPositions))._2.orderBy(col("term"))
       case _ => throw new IllegalArgumentException(s"not a single join block: $block")
     }
 
@@ -464,22 +389,19 @@ object Eval {
     * (doc_id, term, score) rows -- the completions of the side's last part
     * within the side's docs -- and the terms present on ALL sides.
     */
-  private def joinBlockSides(src: AtomSource, parts: Seq[ParsedQuery]): (DataFrame, DataFrame) = {
-    def side(pq: ParsedQuery): DataFrame =
-      withinDocs(src, pq, src.atomScoredCached(pq.parts.last.atom), QueryParams.Default)
-        .select(col("doc_id"), col("term"), col("score"))
-    require(parts.length <= 62, "join block limited to 62 parts (side bitmask)")
-    // terms common to ALL parts: ONE side-tagged union aggregated by term
+  private def joinBlockSides(src: AtomSource,
+                             sides: Seq[QueryPlan.Within]): (DataFrame, DataFrame) = {
+    // terms common to ALL sides: ONE side-tagged union aggregated by term
     // with a presence bitmask -- the reference's pairwise semi-join fold
-    // (CompleterBase.cpp:592-609) collapsed to a single exchange. The old
-    // shape chained (n-1) term semi-joins plus a distinct; the mask agg is
-    // both the membership test and the dedup, and its output stays bounded
-    // by the vocabulary, so the final semi-join still broadcasts.
-    val tagged = parts.zipWithIndex.map { case (pq, i) =>
-      side(pq).withColumn("side_bit", lit(1L << i))
+    // (CompleterBase.cpp:592-609) collapsed to a single exchange. The mask
+    // agg is both the membership test and the dedup, and its output stays
+    // bounded by the vocabulary, so the final semi-join still broadcasts.
+    val tagged = sides.zipWithIndex.map { case (w, i) =>
+      withinDocs(src, w).select(col("doc_id"), col("term"), col("score"))
+        .withColumn("side_bit", lit(1L << i))
     }
     val union = tagged.reduce(_ unionByName _)
-    val fullMask = parts.indices.map(1L << _).sum
+    val fullMask = sides.indices.map(1L << _).sum
     val commonTerms = union.groupBy(col("term"))
       .agg(bit_or(col("side_bit")).as("mask"))
       .filter(col("mask") === fullMask)
@@ -496,8 +418,7 @@ object Eval {
     */
   def windowMatchCounts(src: AtomSource, t1: String, t2: String,
                         lo: Int, hi: Int): DataFrame = {
-    require(src.hasPositions,
-      "positions-off index: windowed/phrase separators need storePositions=true")
+    QueryPlan.requirePositions(src.hasPositions)
     def positions(t: String, d: String, p: String): DataFrame =
       src.atomScoredCached(Word(t))
         .select(col("doc_id").as(d), explode(col("positions")).as(p))

@@ -24,22 +24,6 @@ object Executor {
     */
   def fuzzyThreshold(w: String): Int = math.max(1, w.length / 4)
 
-  /** Proximity bonuses (reference: SumWithBonus aggregation,
-    * Globals.h:266-301 -- PHRASE_MATCH_BONUS=16, NEAR_MATCH_BONUS=8,
-    * EXACT_MATCH_BONUS=4).
-    */
-  def bonusFor(sep: Sep): Double = sep match {
-    case Phrase => 16.0
-    case Near => 8.0
-    case SamePos => 4.0
-    case SameDoc => 0.0
-    // flexi: adjacent (|n| = 1) scores like a phrase; within the default
-    // neighbourhood like near (SumProxAggregation, ScoreAggregators.h:99-125
-    // keys the bonus off the position distance, not the separator object)
-    case Flexi(n) =>
-      if (math.abs(n) == 1) 16.0 else if (math.abs(n) < 10) 8.0 else 0.0
-  }
-
   /** Atom source for a corpus: routed through the process serving history
     * ([[QueryHistory.default]]) so atom relations persist under ONE
     * deterministic LRU/byte-budget owner -- every facade entry point is

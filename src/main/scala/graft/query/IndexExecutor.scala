@@ -93,7 +93,15 @@ class IndexAtomSource(reader: IndexReader) extends AtomSource {
     * term and df by id from [[IndexReader.vocabulary]].
     */
   private[graft] def exactRuns(atom: Atom): Seq[(Long, Long)] =
-    IndexReader.mergeRuns(IndexAtomSource.residentRanges(reader.vocabulary, atom))
+    IndexReader.mergeRuns(IndexAtomSource.residentRanges(reader.vocabulary, atom, withinEdits))
+
+  /** [[Vocabulary.withinEdits]] ONCE per (word, threshold) per source: a
+    * fuzzy part's candidate runs ([[exactRuns]], from [[singleTerm]] and
+    * [[atomScored]]) and best-match word ([[closestVocabWord]]) share a pass.
+    */
+  private val edits = new java.util.concurrent.ConcurrentHashMap[(String, Int), (Array[Int], Int)]()
+  private def withinEdits(w: String, thr: Int): (Array[Int], Int) =
+    edits.computeIfAbsent((w, thr), _ => reader.vocabulary.withinEdits(w, thr))
 
   /** One vocabulary term iff the candidate slice has exactly one entry --
     * so the Eval fast path (projection instead of per-part groupBy) costs
@@ -118,7 +126,7 @@ class IndexAtomSource(reader: IndexReader) extends AtomSource {
   protected def vocabContains(w: String): Boolean = reader.vocabulary.idOf(w) >= 0
 
   protected def closestVocabWord(w: String, thr: Int): Option[String] = {
-    val id = reader.vocabulary.withinEdits(w, thr)._2
+    val id = withinEdits(w, thr)._2
     if (id < 0) None else Some(reader.vocabulary.term(id))
   }
 }
@@ -139,24 +147,30 @@ object IndexAtomSource {
     * `dictionary.filter(CorpusAtomSource.atomPredicate(atom))` selects (the
     * arguments are on [[graft.index.Vocabulary]]): binary searches for
     * every atom but a fuzzy word, whose ids come from one edit-distance
-    * pass over the vocabulary ([[graft.index.Vocabulary.withinEdits]]).
+    * pass over the vocabulary ([[graft.index.Vocabulary.withinEdits]], or
+    * `edits` in its place).
     */
-  private[graft] def residentRanges(v: Vocabulary, atom: Atom): Seq[(Long, Long)] = {
+  private[graft] def residentRanges(v: Vocabulary, atom: Atom,
+      edits: (String, Int) => (Array[Int], Int)): Seq[(Long, Long)] = {
     def one(id: Int): Seq[(Long, Long)] = if (id < 0) Nil else Seq((id.toLong, id.toLong))
     def block(r: Option[(Int, Int)]): Seq[(Long, Long)] =
       r.map { case (lo, hi) => (lo.toLong, hi.toLong) }.toSeq
     atom match {
       case w: Word if w.fuzzy =>
-        v.withinEdits(w.text, Executor.fuzzyThreshold(w.text))._1.toSeq.flatMap(one)
+        edits(w.text, Executor.fuzzyThreshold(w.text))._1.toSeq.flatMap(one)
       case w: Word if w.prefix => block(v.prefixRange(w.text))
       case w: Word if w.synonym => Executor.synonymsOf(w.text).toSeq.flatMap(t => one(v.idOf(t)))
       case w: Word => one(v.idOf(w.text))
       case WordRange(lo, hi) => block(v.range(lo, hi))
-      case OrAtoms(alts) => alts.flatMap(residentRanges(v, _))
+      case OrAtoms(alts) => alts.flatMap(residentRanges(v, _, edits))
       case _: JoinBlock =>
         throw new IllegalArgumentException("join block handled separately")
     }
   }
+
+  /** [[residentRanges]] scanning `v` itself (spec hook). */
+  private[graft] def residentRanges(v: Vocabulary, atom: Atom): Seq[(Long, Long)] =
+    residentRanges(v, atom, v.withinEdits)
 }
 
 /** [[IndexAtomSource]] with the serving-session history in front: atoms
@@ -203,9 +217,11 @@ object IndexExecutor {
     Eval.completions(new CachedIndexAtomSource(reader, cache), query, k, params)
 
   // ---- serving facades --------------------------------------------------
-  // The driver-resident grammar path under its guards, the distributed
-  // plans past them -- what a serving client calls (Search/CompletionServer
-  // route through these). The explicit topK/hits/completions above keep
+  // The driver-resident grammar path while a request's postings fit its
+  // budget, the distributed plans past it (LocalServe's one fallback) --
+  // what a serving client calls (Search/CompletionServer route through
+  // these). Both interpret one QueryPlan, so a refused query raises the
+  // same error on either. The explicit topK/hits/completions above keep
   // pinning the distributed plans in every gate; LocalServeSpec pins the
   // two paths' results identical.
 

@@ -26,14 +26,12 @@ import QueryParser._
   * Parity is the contract (spec: LocalServeSpec runs both paths over every
   * grammar shape): same BM25 operand order as [[Analysis.bm25Col]], same
   * 4dp HALF_UP rounding applied BEFORE ordering (Spark round semantics),
-  * same total orders, same partial/empty semantics. Join blocks
-  * `[q1#q2#...]` evaluate locally too (sub-queries recurse under default
-  * params, the distributed twin's contract). Locality is decided by
-  * posting volume alone: an atom of any term count serves here while its
-  * postings fit [[IndexReader.MaxLocalPostingsPerQuery]]. Queries past the
-  * guards ([[Fallback]]: an over-budget atom or query, completions over a
-  * trailing join block, a window on a positions-off index) return None
-  * and the caller falls back to the distributed plans, so at web scale
+  * same total orders, same partial/empty semantics; both interpret one
+  * [[QueryPlan]], which also raises the grammar's refusals for both.
+  * Locality is decided by posting volume alone, once per request and
+  * before any block read ([[localAtoms]]): a request past
+  * [[IndexReader.MaxLocalPostingsPerQuery]] returns None -- the one
+  * fallback -- and the caller runs the distributed plans, so at web scale
   * the driver never holds more than the postings budget.
   */
 object LocalServe {
@@ -86,7 +84,7 @@ object LocalServe {
     new Lru("atoms", maxWeight = IndexReader.LocalListBudgetPostings, weigher = _.weight)
 
   /** One reader's serving state: its atom, page and docs LRUs and its
-    * fallback counts. Held in a weak map keyed by reader INSTANCE: the
+    * fallback count. Held in a weak map keyed by reader INSTANCE: the
     * state dies with its reader, so rebuilds / short-lived readers cannot
     * accumulate driver memory.
     */
@@ -96,8 +94,7 @@ object LocalServe {
       maxEntries = ResultCacheMaxEntries)
     val docs = new Lru[Long, (String, String)]("docs",
       maxWeight = DocsCacheBudgetChars, weigher = v => v._1.length + v._2.length)
-    val fallbacks: Map[Fallback, java.util.concurrent.atomic.LongAdder] =
-      Fallback.all.map(_ -> new java.util.concurrent.atomic.LongAdder).toMap
+    val fallbacks = new java.util.concurrent.atomic.LongAdder
   }
 
   private val states = java.util.Collections.synchronizedMap(
@@ -109,52 +106,28 @@ object LocalServe {
   private[graft] def cachedAtomCount(reader: IndexReader): Int =
     stateOf(reader).atoms.size
 
-  /** The guard that sent a request to the distributed plans. */
-  private[graft] sealed trait Fallback
-  private[graft] object Fallback {
-    /** One atom's postings pass [[IndexReader.MaxLocalPostingsPerQuery]]. */
-    case object AtomOverBudget extends Fallback
-    /** The query's atoms together pass the same budget. */
-    case object QueryOverBudget extends Fallback
-    /** Completions over a trailing join block (the distributed path
-      * rejects them).
-      */
-    case object TrailingJoinBlock extends Fallback
-    /** A windowed separator on a positions-off index (Eval raises the
-      * error).
-      */
-    case object PositionlessWindow extends Fallback
-    val all: Seq[Fallback] = Seq(AtomOverBudget, QueryOverBudget, TrailingJoinBlock,
-      PositionlessWindow)
-  }
+  /** Requests on this reader sent to the distributed plans: their atoms
+    * passed the postings budget ([[localAtoms]]).
+    */
+  private[graft] def fallbackCount(reader: IndexReader): Long =
+    stateOf(reader).fallbacks.sum
 
-  /** Requests on this reader that `cause` sent to the distributed plans. */
-  private[graft] def fallbackCount(reader: IndexReader, cause: Fallback): Long =
-    stateOf(reader).fallbacks(cause).sum
-
-  /** Count a fallback under its cause; the None the caller returns. */
-  private def fallback(reader: IndexReader, cause: Fallback): None.type = {
-    stateOf(reader).fallbacks(cause).increment()
-    None
-  }
-
-  /** The volume guard: true iff the atom with candidate id `runs` has more
-    * postings than [[IndexReader.MaxLocalPostingsPerQuery]], summing its
-    * terms' df from the resident vocabulary (one posting per (term, doc)).
-    * An atom within the budget decodes at most that many rows on the
-    * driver, whatever its term count. Cost: every df is at least 1, so
-    * [[postingVolume]] visits at most budget + 1 ids -- a one-letter prefix
-    * over millions of terms costs no more than the budget. The term count
-    * is no guard here: [[IndexAtomSource.MaxExactIds]] bounds the
-    * distributed plans' pushed predicate and broadcast, while the driver
-    * path reads term and df by id and needs neither, so its cost follows
-    * postings, not terms.
+  /** True iff the atom with candidate id `runs` alone passes
+    * [[IndexReader.MaxLocalPostingsPerQuery]] -- the rule [[localAtoms]]
+    * applies to a whole request, for one atom (spec hook).
     */
   private[graft] def overBudget(v: Vocabulary, runs: Seq[(Long, Long)]): Boolean =
     postingVolume(v, runs, IndexReader.MaxLocalPostingsPerQuery) >
       IndexReader.MaxLocalPostingsPerQuery
 
-  /** The df sum over `runs`, or the first partial sum past `limit`. */
+  /** The df sum over `runs` from the resident vocabulary (one posting per
+    * (term, doc)), or the first partial sum past `limit`. Every df is at
+    * least 1, so it visits at most limit + 1 ids: a one-letter prefix over
+    * millions of terms costs no more than the budget. The term count is no
+    * guard here: [[IndexAtomSource.MaxExactIds]] bounds the distributed
+    * plans' pushed predicate and broadcast, while the driver path reads
+    * term and df by id and needs neither, so its cost follows postings.
+    */
   private[graft] def postingVolume(v: Vocabulary, runs: Seq[(Long, Long)],
                                    limit: Long): Long = {
     var sum = 0L
@@ -173,32 +146,47 @@ object LocalServe {
 
   // ---- atom resolution ------------------------------------------------------
 
-  /** Resolve every distinct atom of a part chain from the reader's LRU;
-    * all COLD atoms are fetched with ONE point read over the union of their
-    * block runs ([[IndexReader.points]]: the block files' filtered row
-    * groups, read on the driver with no Spark job -- the reference's block
-    * locate, HYBCompleter.cpp:661-746). The read returns exactly the rows of
-    * [[IndexReader.blocksForIdRuns]] (PointReaderSpec), an atom's exact
-    * candidate runs ([[IndexAtomSource.exactRuns]], any term count) cover
-    * every segment of its candidate term ids, and each atom keeps only the
-    * rows inside its own runs. None when any atom's postings pass the
-    * volume guard ([[overBudget]]) -- decided BEFORE any fetch, from the
-    * resident vocabulary. Any cold query thus runs no Spark job at all.
+  /** One request's resolved atoms. */
+  private type Atoms = java.util.HashMap[Atom, LocalAtom]
+
+  /** Resolve a request's distinct atoms (its plan's, join blocks
+    * flattened) ONCE: warm atoms from the reader's LRU, all COLD atoms with
+    * ONE point read over the union of their exact block runs
+    * ([[IndexReader.points]], on the driver with no Spark job -- the
+    * reference's block locate, HYBCompleter.cpp:661-746), each atom keeping
+    * the rows inside its own runs.
+    *
+    * None -- the request's one fallback, counted -- when the atoms'
+    * postings pass [[IndexReader.MaxLocalPostingsPerQuery]]: a warm atom
+    * counts its held rows, a cold one its df sum ([[postingVolume]]), so
+    * a request that falls back decodes and caches nothing. The sum is per
+    * atom, as atoms are held: a term inside two atoms (`spark` inside
+    * `s*`) is held, and counted, twice. On an index with streaming delta
+    * shards a cold atom's df undercounts the postings appended since.
     */
   private def localAtoms(reader: IndexReader, src: IndexAtomSource,
-                         wanted: Seq[Atom]): Option[java.util.HashMap[Atom, LocalAtom]] = {
-    val cache = stateOf(reader).atoms
-    val atoms = new java.util.HashMap[Atom, LocalAtom]()
+                         wanted: Seq[Atom]): Option[Atoms] = {
+    val state = stateOf(reader)
+    val budget = IndexReader.MaxLocalPostingsPerQuery
+    val atoms = new Atoms()
     val colds = new scala.collection.mutable.ArrayBuffer[(Atom, Seq[(Long, Long)])]
-    for (a <- wanted.distinct) {
-      val hit = cache.get((reader.indexEpoch, a))
-      if (hit != null) atoms.put(a, hit)
-      else {
+    var volume = 0L
+    for (a <- wanted) {
+      val hit = state.atoms.get((reader.indexEpoch, a))
+      if (hit != null) {
+        atoms.put(a, hit)
+        volume += hit.nRows
+      } else {
         val runs = src.exactRuns(a)
         if (runs.isEmpty) atoms.put(a, EmptyAtom) // unknown word: empty, local
-        else if (overBudget(reader.vocabulary, runs))
-          return fallback(reader, Fallback.AtomOverBudget) // head atom: stays distributed
-        else colds += ((a, runs))
+        else {
+          volume += postingVolume(reader.vocabulary, runs, budget - volume)
+          colds += ((a, runs))
+        }
+      }
+      if (volume > budget) { // past the budget: stays distributed
+        state.fallbacks.increment()
+        return None
       }
     }
     if (colds.nonEmpty) {
@@ -208,7 +196,7 @@ object LocalServe {
         val his = runs.map(_._2).toArray
         val own = segs.filter(s => inRuns(los, his, s.termId))
         java.util.Arrays.sort(own, SegOrder)
-        atoms.put(a, cache.putIfAbsent((reader.indexEpoch, a), buildAtom(reader, own)))
+        atoms.put(a, state.atoms.putIfAbsent((reader.indexEpoch, a), buildAtom(reader, own)))
       }
     }
     Some(atoms)
@@ -311,22 +299,9 @@ object LocalServe {
 
   /** Accumulated doc relation: doc-sorted parallel arrays; `mpos` (null
     * when the chain carries no positions) is the most recent non-NOT
-    * part's MATCHED positions per doc -- [[Eval.evalDocs]]'s State.
+    * part's MATCHED positions per doc -- the mpos column of [[Eval.evalDocs]].
     */
-  private final case class Rel(docIds: Array[Long], scores: Array[Double],
-                               mpos: Array[Array[Int]]) {
-    def hasPos: Boolean = mpos != null
-  }
-
-  private def isNot(atom: Atom): Boolean = atom match {
-    case w: Word => w.not
-    case _ => false
-  }
-
-  private def isFuzzy(atom: Atom): Boolean = atom match {
-    case w: Word => w.fuzzy
-    case _ => false
-  }
+  private final case class Rel(docIds: Array[Long], scores: Array[Double], mpos: Array[Array[Int]])
 
   /** Rows grouped by doc: `docs` holds the distinct docs ascending, and
     * row r's doc is docs(groupOf(r)).
@@ -399,17 +374,16 @@ object LocalServe {
     (x ^ (x >>> 33)).toInt
   }
 
-  /** One part's doc relation under the score algebra -- the local twin of
+  /** Step `s`'s doc relation under the score algebra -- the local twin of
     * [[Eval.evalDocs]]'s partRel: per-(doc, term) contribution under
-    * sameCompletionAgg, combined across the part's terms under
-    * completionsAgg, plus the best-match bonus on docs holding term id
-    * `bw` (none when negative); positions gathered per doc when a later
-    * window chains from this part. Rows fold in stored order, so a doc's
+    * sameCompletionAgg, damped, combined across the part's terms under
+    * completionsAgg, plus the step's best-match bonus on docs holding term
+    * id `bw` (none when negative); positions gathered per doc when the step
+    * gathers them. Rows fold in stored order, so a doc's
     * contributions combine in ascending term order and the raw scores are
     * the same bits whatever the grouping.
     */
-  private def partRel(la: LocalAtom, params: QueryParams, damping: Double,
-                      bw: Long, bm: Double, withPos: Boolean): Rel = {
+  private def partRel(la: LocalAtom, params: QueryParams, s: QueryPlan.Step, bw: Long): Rel = {
     val c = if (params.sameCompletionAgg == QueryParams.Max) la.score1s else la.scores
     val complMax = params.completionsAgg == QueryParams.Max
     val bwTerm = if (bw < 0) -1 else java.util.Arrays.binarySearch(la.termIds, bw)
@@ -422,7 +396,7 @@ object LocalServe {
     var r = 0
     while (r < la.nRows) {
       val k = g.groupOf(r)
-      val v = c(r) * damping
+      val v = c(r) * s.damping
       if (!started(k)) { started(k) = true; outS(k) = v }
       else if (complMax) { if (v > outS(k)) outS(k) = v }
       else outS(k) += v
@@ -430,8 +404,8 @@ object LocalServe {
       r += 1
     }
     var k = 0
-    while (k < m) { if (hit(k)) outS(k) += bm; k += 1 }
-    Rel(g.docs, outS, if (withPos) positionsByDoc(la, g) else null)
+    while (k < m) { if (hit(k)) outS(k) += s.bestMatch; k += 1 }
+    Rel(g.docs, outS, if (s.withPos) positionsByDoc(la, g) else null)
   }
 
   /** Each doc's positions: its rows' position lists concatenated in row
@@ -488,36 +462,56 @@ object LocalServe {
     }
   }
 
-  /** Evaluate the part chain to raw (unrounded) doc scores; None when any
-    * atom cannot be served locally. Mirrors [[Eval.evalDocs]] exactly --
-    * every branch here has its distributed twin there, and LocalServeSpec
-    * pins the two equal over every grammar shape.
+  /** Interpret `plan` over the request's resolved atoms to raw (unrounded)
+    * doc scores -- the driver twin of [[Eval.evalDocs]], which LocalServeSpec
+    * pins it equal to over every grammar shape.
     */
-  /** Local twin of [[Eval.evalJoinBlock]]: each side's sub-query evaluates
-    * under DEFAULT params (the distributed twin calls the 2-arg evalDocs),
-    * its last atom's (doc, term, score) rows are restricted to the side's
-    * result docs, terms present in ALL sides survive, and docs of any side
-    * holding a common term sum their rows' scores. None -> some side must
-    * stay distributed (whole query falls back, like every other seam).
-    */
-  private def evalJoinBlockLocal(reader: IndexReader, src: IndexAtomSource,
-                                 ps: Seq[ParsedQuery]): Option[Rel] = {
-    val sides = ps.map { pq =>
-      val rel = evalDocsLocal(reader, src, pq, QueryParams.Default) match {
-        case Some(r) => r
-        case None => return None
+  private def evalDocsLocal(reader: IndexReader, src: IndexAtomSource, atoms: Atoms,
+                            plan: QueryPlan): Rel = {
+    val params = plan.params
+    def combineParts(s1: Double, s2: Double, bonus: Double): Double =
+      params.partsAgg match {
+        case QueryParams.Max => math.max(s1, s2)
+        case QueryParams.SumWithBonus => s1 + s2 + bonus
+        case _ => s1 + s2
       }
-      val last = pq.parts.last.atom
-      val la = localAtoms(reader, src, Seq(last)) match {
-        case Some(m) => m.get(last)
-        case None => return None
-      }
-      (la, rel.docIds)
+    def part(s: QueryPlan.Step): Rel = s.atom match {
+      case _: JoinBlock => evalJoinBlockLocal(reader, src, atoms, s.sides)
+      case a =>
+        // the distributed path's best-match word as a resident term id; -1: none
+        val bw = if (s.bestMatch == 0.0) -1L
+          else src.bestMatchWord(a).fold(-1L)(reader.vocabulary.idOf(_).toLong)
+        partRel(atoms.get(a), params, s, bw)
     }
+    plan.steps.foldLeft(null: Rel) { (state, s) =>
+      s.op match {
+        case QueryPlan.First => part(s)
+        case QueryPlan.Not => antiJoin(state, atoms.get(s.atom).byDoc.docs)
+        case QueryPlan.And => merge(state, part(s), None, combineParts(_, _, 0.0))
+        case QueryPlan.Window(lo, hi, bonus) =>
+          merge(state, part(s), Some((lo, hi)), combineParts(_, _, bonus))
+      }
+    }
+  }
+
+  /** The ascending docs `w`'s last-atom rows are restricted to: its
+    * restriction's result docs, or all of the atom's own.
+    */
+  private def withinDocs(reader: IndexReader, src: IndexAtomSource, atoms: Atoms,
+                         w: QueryPlan.Within): Array[Long] =
+    w.restrict.fold(atoms.get(w.last).byDoc.docs)(evalDocsLocal(reader, src, atoms, _).docIds)
+
+  /** Local twin of [[Eval]]'s join block: each side's last-atom rows within
+    * the side's docs, terms present in ALL sides survive, and docs of any
+    * side holding a common term sum their rows' scores.
+    */
+  private def evalJoinBlockLocal(reader: IndexReader, src: IndexAtomSource, atoms: Atoms,
+                                 sides: Seq[QueryPlan.Within]): Rel = {
+    val resolved = sides.map(w => (atoms.get(w.last), withinDocs(reader, src, atoms, w), w.damping))
     // term ids common to ALL sides (the reference's hash join / our
     // bitmask agg, CompleterBase.Join.cpp) -- a side contributes a term iff
     // one of its result docs holds it; ids ascend, so the sets merge
-    val common = sides.map { case (la, docs) =>
+    val common = resolved.map { case (la, docs, _) =>
       (0 until la.nTerms).filter { t =>
         var held = false
         foreachMember(la, t, docs)(_ => held = true)
@@ -526,129 +520,24 @@ object LocalServe {
     }.reduce((a, b) => a.filter(java.util.Arrays.binarySearch(b, _) >= 0))
     // docs of any side holding a common term, their rows' scores summed in
     // side order, then row order
-    val n = sides.map(_._1.nRows).sum
+    val n = resolved.map(_._1.nRows).sum
     val docIds = new Array[Long](n)
     val scores = new Array[Double](n)
     var o = 0
-    sides.foreach { case (la, docs) =>
+    resolved.foreach { case (la, docs, damping) =>
       (0 until la.nTerms).foreach { t =>
         if (java.util.Arrays.binarySearch(common, la.termIds(t)) >= 0)
-          foreachMember(la, t, docs) { r => docIds(o) = la.docIds(r); scores(o) = la.scores(r); o += 1 }
+          foreachMember(la, t, docs) { r =>
+            docIds(o) = la.docIds(r); scores(o) = la.scores(r) * damping; o += 1
+          }
       }
     }
+    // each sum starts at 0.0, as Spark's Sum does
     val g = groupByDoc(java.util.Arrays.copyOf(docIds, o))
     val outS = new Array[Double](g.docs.length)
-    val started = new Array[Boolean](g.docs.length)
     var i = 0
-    while (i < o) {
-      val k = g.groupOf(i)
-      if (started(k)) outS(k) += scores(i) else { started(k) = true; outS(k) = scores(i) }
-      i += 1
-    }
-    Some(Rel(g.docs, outS, null))
-  }
-
-  private def evalDocsLocal(reader: IndexReader, src: IndexAtomSource,
-                            q: ParsedQuery, params: QueryParams): Option[Rel] = {
-    val parts = q.parts
-    val lastIdx = parts.length - 1
-    def bmFor(i: Int): Double = if (i == lastIdx) params.bestMatchBonus else 0.0
-    def windowOf(sep: Sep): Option[(Int, Int)] = sep match {
-      case Near => params.window.orElse(sep.window)
-      case _ => sep.window
-    }
-    def nextWindowed(idx: Int): Boolean =
-      parts.drop(idx + 1).dropWhile(p => isNot(p.atom)).headOption.exists(p =>
-        !p.atom.isInstanceOf[JoinBlock] && p.sep.flatMap(windowOf).isDefined)
-    // a windowed separator on a positions-off index must fail with Eval's
-    // error, not silently fall back -- refuse the local path, Eval throws
-    if (!reader.hasPositions &&
-        parts.exists(_.sep.flatMap(windowOf).isDefined))
-      return fallback(reader, Fallback.PositionlessWindow)
-
-    def damp(a: Atom): Double =
-      if (isFuzzy(a) && params.fuzzyDamping < 1.0) params.fuzzyDamping else 1.0
-    /** The term id of the distributed path's best-match word
-      * ([[AtomSource.bestMatchWord]], resolved from the resident
-      * vocabulary); -1 = no best match.
-      */
-    def bestMatch(a: Atom, bm: Double): Long =
-      if (bm == 0.0) -1L
-      else src.bestMatchWord(a).fold(-1L)(reader.vocabulary.idOf(_).toLong)
-    def combineParts(s1: Double, s2: Double, bonus: Double): Double =
-      params.partsAgg match {
-        case QueryParams.Max => math.max(s1, s2)
-        case QueryParams.SumWithBonus => s1 + s2 + bonus
-        case _ => s1 + s2
-      }
-
-    // flatten join-block sub-queries so ONE batched fetch covers every
-    // atom of the whole request (sub-query recursion then runs all-warm)
-    def flatAtoms(pq: ParsedQuery): Seq[Atom] = pq.parts.flatMap(_.atom match {
-      case JoinBlock(ps) => ps.flatMap(flatAtoms)
-      case a => Seq(a)
-    })
-    val atoms = localAtoms(reader, src, flatAtoms(q)) match {
-      case Some(m) => m
-      case None => return None
-    }
-    var totalRows = 0L
-    atoms.values.forEach(la => totalRows += la.nRows)
-    if (totalRows > IndexReader.MaxLocalPostingsPerQuery)
-      return fallback(reader, Fallback.QueryOverBudget)
-
-    val first = parts.head
-    require(!isNot(first.atom), "query cannot start with a NOT part")
-    def part(i: Int, withPos: Boolean): Option[Rel] = parts(i).atom match {
-      // best-match bonus is ignored for a join block, like the distributed
-      // partRel; its result carries no positions
-      case JoinBlock(ps) => evalJoinBlockLocal(reader, src, ps)
-      case a =>
-        Some(partRel(atoms.get(a), params, damp(a), bestMatch(a, bmFor(i)), bmFor(i), withPos))
-    }
-    var state = part(0, nextWindowed(0)) match {
-      case Some(r) => r
-      case None => return None
-    }
-
-    var idx = 1
-    while (idx < parts.length) {
-      val p = parts(idx)
-      // a window needs positions on BOTH sides; a join block has none, so
-      // a separator adjacent to one degrades to plain same-doc AND (the
-      // distributed loop's `positionless` rule)
-      val positionless = !state.hasPos || p.atom.isInstanceOf[JoinBlock]
-      val window = if (positionless) None else p.sep.flatMap(windowOf)
-      if (isNot(p.atom)) {
-        // NOT: anti-join; positions (if any) ride through
-        val neg = atoms.get(p.atom).docIds.clone()
-        java.util.Arrays.sort(neg)
-        state = antiJoin(state, neg)
-      } else if (window.isEmpty) {
-        // plain AND: doc equi-join, scores combined under partsAgg
-        val cur = part(idx, nextWindowed(idx)) match {
-          case Some(r) => r
-          case None => return None
-        }
-        state = mergeAnd(state, cur, combineParts(_, _, 0.0))
-      } else {
-        // windowed AND: current part's positions within [lo, hi] of a
-        // previously matched position; the next window chains only from
-        // positions that matched
-        val (lo, hi) = window.get
-        val cur = part(idx, withPos = true) match {
-          case Some(r) => r
-          case None => return None
-        }
-        val bonus =
-          if (params.partsAgg == QueryParams.SumWithBonus)
-            Executor.bonusFor(p.sep.get)
-          else 0.0
-        state = mergeWindow(state, cur, lo, hi, combineParts(_, _, bonus))
-      }
-      idx += 1
-    }
-    Some(state)
+    while (i < o) { outS(g.groupOf(i)) += scores(i); i += 1 }
+    Rel(g.docs, outS, null)
   }
 
   /** The first `n` entries of a relation's presized arrays. */
@@ -663,7 +552,7 @@ object LocalServe {
     val n = a.docIds.length
     val d = new Array[Long](n)
     val s = new Array[Double](n)
-    val m = if (a.hasPos) new Array[Array[Int]](n) else null
+    val m = if (a.mpos != null) new Array[Array[Int]](n) else null
     var o = 0
     var i = 0
     var j = 0
@@ -680,14 +569,20 @@ object LocalServe {
     trimmed(d, s, m, o)
   }
 
-  /** Sorted-array doc equi-join; keeps the RIGHT side's positions when
-    * present (the AND branch's `cur.hasPos`).
+  /** Sorted-array doc equi-join, scores combined; keeps the RIGHT side's
+    * positions when it has them. With a window (lo, hi) it keeps only b's
+    * positions p2 with some previously matched p1 of a, lo <= p2 - p1 <=
+    * hi (p1 in [p2 - hi, p2 - lo], found by binary search over a sorted
+    * copy of a's matched positions), and docs with no surviving position
+    * drop out -- [[Eval.evalDocs]]'s windowed branch.
     */
-  private def mergeAnd(a: Rel, b: Rel, combine: (Double, Double) => Double): Rel = {
+  private def merge(a: Rel, b: Rel, window: Option[(Int, Int)],
+                    combine: (Double, Double) => Double): Rel = {
+    val (lo, hi) = window.getOrElse((0, 0))
     val cap = math.min(a.docIds.length, b.docIds.length)
     val d = new Array[Long](cap)
     val s = new Array[Double](cap)
-    val m = if (b.hasPos) new Array[Array[Int]](cap) else null
+    val m = if (b.mpos != null) new Array[Array[Int]](cap) else null
     var o = 0
     var i = 0
     var j = 0
@@ -696,52 +591,26 @@ object LocalServe {
       if (cmp < 0) i += 1
       else if (cmp > 0) j += 1
       else {
-        d(o) = a.docIds(i)
-        s(o) = combine(a.scores(i), b.scores(j))
-        if (m != null) m(o) = b.mpos(j)
-        o += 1
-        i += 1
-        j += 1
-      }
-    }
-    trimmed(d, s, m, o)
-  }
-
-  /** Windowed doc join: keep b's positions p2 with some previously matched
-    * p1 satisfying lo <= p2 - p1 <= hi (i.e. p1 in [p2-hi, p2-lo], found by
-    * binary search over a sorted copy of a's matched positions); docs with
-    * no surviving position drop out -- [[Eval.evalDocs]]'s windowed branch.
-    */
-  private def mergeWindow(a: Rel, b: Rel, lo: Int, hi: Int,
-                          combine: (Double, Double) => Double): Rel = {
-    val cap = math.min(a.docIds.length, b.docIds.length)
-    val d = new Array[Long](cap)
-    val s = new Array[Double](cap)
-    val m = new Array[Array[Int]](cap)
-    var o = 0
-    var i = 0
-    var j = 0
-    while (i < a.docIds.length && j < b.docIds.length) {
-      val cmp = java.lang.Long.compare(a.docIds(i), b.docIds(j))
-      if (cmp < 0) i += 1
-      else if (cmp > 0) j += 1
-      else {
-        val prev = a.mpos(i).clone()
-        java.util.Arrays.sort(prev)
-        val kept = b.mpos(j).filter { p2 =>
-          // first prev position >= p2 - hi; matched iff it is <= p2 - lo
-          var lo2 = 0
-          var hi2 = prev.length
-          while (lo2 < hi2) {
-            val mid = (lo2 + hi2) >>> 1
-            if (prev(mid) < p2 - hi) lo2 = mid + 1 else hi2 = mid
+        val kept =
+          if (window.isEmpty) { if (m == null) null else b.mpos(j) }
+          else {
+            val prev = a.mpos(i).clone()
+            java.util.Arrays.sort(prev)
+            b.mpos(j).filter { p2 =>
+              // first prev position >= p2 - hi; matched iff it is <= p2 - lo
+              var lo2 = 0
+              var hi2 = prev.length
+              while (lo2 < hi2) {
+                val mid = (lo2 + hi2) >>> 1
+                if (prev(mid) < p2 - hi) lo2 = mid + 1 else hi2 = mid
+              }
+              lo2 < prev.length && prev(lo2) <= p2 - lo
+            }
           }
-          lo2 < prev.length && prev(lo2) <= p2 - lo
-        }
-        if (kept.nonEmpty) {
+        if (window.isEmpty || kept.length > 0) {
           d(o) = a.docIds(i)
           s(o) = combine(a.scores(i), b.scores(j))
-          m(o) = kept
+          if (m != null) m(o) = kept
           o += 1
         }
         i += 1
@@ -809,13 +678,22 @@ object LocalServe {
 
   // ---- top-k / completions facades -------------------------------------------
 
+  /** The doc-sorted raw doc scores of `query` under `params`; None when
+    * its atoms pass the postings budget.
+    */
+  private def docsLocal(reader: IndexReader, query: String, params: QueryParams): Option[Rel] = {
+    val plan = QueryPlan.docs(QueryParser.parse(query, params.normalizeWords), params,
+      reader.hasPositions)
+    val src = new IndexAtomSource(reader)
+    localAtoms(reader, src, plan.atoms).map(evalDocsLocal(reader, src, _, plan))
+  }
+
   /** spec hook: the doc-sorted raw (unrounded) doc scores of `query`, or
     * None when it falls back.
     */
   private[graft] def rawDocScores(reader: IndexReader, query: String,
                                   params: QueryParams): Option[(Array[Long], Array[Double])] =
-    evalDocsLocal(reader, new IndexAtomSource(reader),
-      QueryParser.parse(query, params.normalizeWords), params).map(r => (r.docIds, r.scores))
+    docsLocal(reader, query, params).map(r => (r.docIds, r.scores))
 
   private def round4(x: Double): Double =
     BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
@@ -842,9 +720,7 @@ object LocalServe {
 
   private def evalHits(reader: IndexReader, query: String, k: Int,
                        params: QueryParams): Option[Seq[Row]] = {
-    val parsed = QueryParser.parse(query, params.normalizeWords)
-    val src = new IndexAtomSource(reader)
-    evalDocsLocal(reader, src, parsed, params).map { rel =>
+    docsLocal(reader, query, params).map { rel =>
       val n = params.firstHit + k
       val page: Seq[(Long, Double)] = params.rankDocs match {
         case "doc" =>
@@ -923,57 +799,46 @@ object LocalServe {
 
   private def evalCompletions(reader: IndexReader, query: String, k: Int,
                               params: QueryParams): Option[Seq[Row]] = {
-    val parsed = QueryParser.parse(query, params.normalizeWords)
-    // completions over a trailing join block are not part of the grammar
-    // (the distributed path rejects the block atom); fall back so the
-    // behavior stays the distributed path's, not a silent variant
-    if (parsed.parts.last.atom.isInstanceOf[JoinBlock])
-      return fallback(reader, Fallback.TrailingJoinBlock)
+    val w = QueryPlan.within(QueryParser.parse(query, params.normalizeWords), params,
+      reader.hasPositions)
     val src = new IndexAtomSource(reader)
-    val last = parsed.parts.last.atom
-    for {
-      rel <- evalDocsLocal(reader, src, parsed, params)
-      la <- localAtoms(reader, src, Seq(last)).map(_.get(last))
-    } yield {
-      val damping = damp0(parsed.parts.last.atom, params)
+    localAtoms(reader, src, w.atoms).map { atoms =>
+      val la = atoms.get(w.last)
+      val docs = withinDocs(reader, src, atoms, w)
       val c = if (params.wordSameDocAgg == QueryParams.Max) la.score1s else la.scores
       val acrossMax = params.wordDiffDocsAgg == QueryParams.Max
-      // one term run at a time: its rows in the result docs, in doc order
-      val rows = new scala.collection.mutable.ArrayBuffer[(String, Double, Long, Long)]
+      // one term run at a time: its rows in the result docs, in doc order.
+      // A row keys its term by run index t; runs ascend by term id
+      // (LocalAtom.termIds), so ties and `rw=word` order by term id -- ids
+      // are dense in the terms' UTF-8 byte order, the order Spark sorts
+      // `term` in (Scala's String order compares UTF-16 units and differs
+      // past the BMP)
+      val rows = new scala.collection.mutable.ArrayBuffer[(Int, Double, Long, Long)]
       var t = 0
       while (t < la.nTerms) {
         var s = 0.0
         var dc = 0L
         var oc = 0L
-        foreachMember(la, t, rel.docIds) { r =>
-          val v = c(r) * damping
+        foreachMember(la, t, docs) { r =>
+          val v = c(r) * w.damping
           s = if (dc == 0) v else if (acrossMax) math.max(s, v) else s + v
           dc += 1
           oc += la.tfs(r)
         }
-        if (dc > 0) rows += ((la.terms(t), round4(s), dc, oc))
+        if (dc > 0) rows += ((t, round4(s), dc, oc))
         t += 1
       }
-      val ordered = params.rankWords match {
-        case "dc" =>
-          if (params.sortWordsAsc.getOrElse(false)) rows.sortBy(r => (r._3, r._1))
-          else rows.sortBy(r => (-r._3, r._1))
-        case "oc" =>
-          if (params.sortWordsAsc.getOrElse(false)) rows.sortBy(r => (r._4, r._1))
-          else rows.sortBy(r => (-r._4, r._1))
-        case "word" =>
-          if (params.sortWordsAsc.getOrElse(true)) rows.sortBy(_._1)
-          else rows.sortBy(_._1)(Ordering[String].reverse)
-        case _ =>
-          if (params.sortWordsAsc.getOrElse(false)) rows.sortBy(r => (r._2, r._1))
-          else rows.sortBy(r => (-r._2, r._1))
+      val key: ((Int, Double, Long, Long)) => Double = params.rankWords match {
+        case "dc" => _._3.toDouble
+        case "oc" => _._4.toDouble
+        case "word" => _._1.toDouble
+        case _ => _._2
       }
-      ordered.take(k).map { case (t, s, dc, oc) => Row(t, s, dc, oc) }.toSeq
+      val asc = params.sortWordsAsc.getOrElse(params.rankWords == "word")
+      rows.sortBy(r => (if (asc) key(r) else -key(r), r._1)).take(k)
+        .map { case (t, s, dc, oc) => Row(la.terms(t), s, dc, oc) }.toSeq
     }
   }
-
-  private def damp0(a: Atom, params: QueryParams): Double =
-    if (isFuzzy(a) && params.fuzzyDamping < 1.0) params.fuzzyDamping else 1.0
 
   // ---- driver-resident docs store (excerpt/url serving) ----------------------
   //

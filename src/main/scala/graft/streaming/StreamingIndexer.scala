@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.core.Analysis
-import graft.index.IndexBuilder
+import graft.index.{IndexBuilder, IndexMeta}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -47,35 +47,13 @@ object StreamingIndexer {
     import spark.implicits._
     if (batch.isEmpty) return
     val dict = spark.read.parquet(s"$indexDir/dictionary")
-    val statsRow = spark.read.parquet(s"$indexDir/stats").head()
-    val avgdl = statsRow.getAs[Double]("avgdl")
-    val bucketSize =
-      if (statsRow.schema.fieldNames.contains("bucket_size"))
-        statsRow.getAs[Long]("bucket_size")
-      else IndexBuilder.DefaultBucketSize.toLong
-    // delta shards must use the SAME codec the batch index committed
-    val codecId = graft.index.Codec.idOf(
-      if (statsRow.schema.fieldNames.contains("doclist_codec"))
-        statsRow.getAs[String]("doclist_codec")
-      else "varint")
-
-    // BY_PREFIXES indexes: delta shards must follow the SAME boundary
-    // buckets as the batch shards (reader pruning depends on it)
-    val cutIds: Option[Array[Long]] =
-      if (java.nio.file.Files.exists(
-          java.nio.file.Paths.get(s"$indexDir/boundaries/_SUCCESS"))) {
-        import spark.implicits._
-        Some(spark.read.parquet(s"$indexDir/boundaries")
-          .select(col("cut_id")).as[Long].collect().sorted)
-      } else None
-
-    // positions-off base index: delta shards follow (decode framing and
-    // the reader's windowed-query refusal stay consistent across shards)
-    val storePositions =
-      !statsRow.schema.fieldNames.contains("store_positions") ||
-        statsRow.getAs[Boolean]("store_positions")
+    // delta shards follow the batch index's build: the SAME codec, bucket
+    // width and BY_PREFIXES cuts (reader pruning depends on them) and, on
+    // a positions-off index, no positions (decode framing and the reader's
+    // windowed-query refusal stay consistent across shards)
+    val meta = new IndexMeta(spark, indexDir)
     val dt0 = Analysis.docTerms(batch).toDF()
-    val dt = (if (storePositions) dt0
+    val dt = (if (meta.hasPositions) dt0
       else dt0.withColumn("positions",
         expr("array_repeat(0, cast(tf as int))"))).persist()
     val joined = dt.join(broadcast(dict.select(col("term"), col("term_id"))), "term")
@@ -98,9 +76,9 @@ object StreamingIndexer {
         col("term_id"), col("doc_id"))
       .sortWithinPartitions(col("term_id"), col("doc_id"))
       .as[(Long, Long, Long, Array[Int], Long)]
-    val blocks = IndexBuilder.encodeBlocks(sorted, avgdl,
-      IndexBuilder.DefaultBlockSize, IndexBuilder.bucketFn(bucketSize, cutIds),
-      codecId)
+    val blocks = IndexBuilder.encodeBlocks(sorted, meta.avgdl,
+      IndexBuilder.DefaultBlockSize, IndexBuilder.bucketFn(meta.bucketSize, meta.prefixCuts),
+      meta.doclistCodec)
     blocks.write.mode(SaveMode.Overwrite).partitionBy("bucket")
       .parquet(s"$indexDir/blocks/shard=$shardName")
     dt.unpersist()

@@ -294,7 +294,7 @@ class IndexExecutorSpec extends AnyFunSuite {
     val dir = OverBudgetIndex.dir
     val probe = new IndexReader(spark, dir)
     assert(LocalServe.hits(probe, "wort h*", 5, QueryParams.Default).isEmpty)
-    assert(LocalServe.fallbackCount(probe, LocalServe.Fallback.AtomOverBudget) === 1)
+    assert(LocalServe.fallbackCount(probe) === 1)
     val cache = new graft.query.IndexQueryCache()
     val path = "/?q=wort%20h*&h=5"
     // the warm-up puts the `h*` and `wort` atom relations in the history;

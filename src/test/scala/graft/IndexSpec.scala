@@ -168,10 +168,11 @@ class IndexSpec extends AnyFunSuite {
       Eval.windowMatchCounts(new IndexAtomSource(r), "batch", "batch", 1, 1))
     intercept[IllegalArgumentException](
       IndexExecutor.topK(r, "batch.batch", 10).collect())
-    // the serving seam leaves them to that refusal, counting the guard
+    // the serving seam raises the same refusal in-process, no fallback
     import graft.query.{LocalServe, QueryParams}
-    assert(LocalServe.hits(r, "batch.batch", 10, QueryParams.Default).isEmpty)
-    assert(LocalServe.fallbackCount(r, LocalServe.Fallback.PositionlessWindow) === 1)
+    intercept[IllegalArgumentException](
+      LocalServe.hits(r, "batch.batch", 10, QueryParams.Default))
+    assert(LocalServe.fallbackCount(r) === 0)
   }
 
   test("every block codec serves identical postings, positions and top-k") {

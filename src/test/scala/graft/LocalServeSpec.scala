@@ -115,12 +115,10 @@ class LocalServeSpec extends AnyFunSuite {
     assert(jobs === 0 && executions === 0, s"cold fuzzy best-match ran $jobs jobs")
     assert(fuzzy.get.map(row => (row.getLong(0), row.getDouble(1))) ===
       hitsRows(IndexExecutor.topK(reader, "aachen aachan~", 10, fp)))
-    // completions over a trailing join block stay the distributed path's
-    val joinFallbacks =
-      LocalServe.fallbackCount(reader, LocalServe.Fallback.TrailingJoinBlock)
-    assert(LocalServe.completions(reader, "aal [aa*#aal*]", 10, QueryParams.Default).isEmpty)
-    assert(LocalServe.fallbackCount(reader, LocalServe.Fallback.TrailingJoinBlock) ===
-      joinFallbacks + 1)
+    // completions over a trailing join block raise the grammar's refusal
+    // in-process, as the distributed path does
+    intercept[IllegalArgumentException](
+      LocalServe.completions(reader, "aal [aa*#aal*]", 10, QueryParams.Default))
     // the serve facade answers both seams identically to the explicit path
     assert(hitsRows(IndexExecutor.serveHits(reader, "[aachen aa*#merge aa*]", 10))
       === hitsRows(IndexExecutor.topK(reader, "[aachen aa*#merge aa*]", 10)))
@@ -441,7 +439,7 @@ class LocalServeSpec extends AnyFunSuite {
     }
     assert(jobs === 0 && lookups === 0,
       s"the fallback decision ran $jobs jobs, $lookups dictionary lookups")
-    assert(LocalServe.fallbackCount(r, LocalServe.Fallback.AtomOverBudget) === 1)
+    assert(LocalServe.fallbackCount(r) === 1)
     val expected = hitsRows(IndexExecutor.topK(r, q, 5))
     val (_, fallbackLookups, _) = watch {
       assert(hitsRows(IndexExecutor.serveHits(r, q, 5)) === expected)
@@ -450,8 +448,9 @@ class LocalServeSpec extends AnyFunSuite {
     // ten atoms of 27,000 postings each: every one within the budget, the
     // query past it
     val ten = (0 to 9).map(d => s"h$d*").mkString(" ")
+    val fellBack = LocalServe.fallbackCount(r)
     assert(LocalServe.hits(r, ten, 5, QueryParams.Default).isEmpty)
-    assert(LocalServe.fallbackCount(r, LocalServe.Fallback.QueryOverBudget) === 1)
+    assert(LocalServe.fallbackCount(r) === fellBack + 1)
     assert(LocalServe.hits(r, "wort h0*", 5, QueryParams.Default).isDefined)
   }
 
@@ -475,7 +474,7 @@ class LocalServeSpec extends AnyFunSuite {
     assert(hits.isDefined && completions.isDefined, "a hull-sized candidate set must serve locally")
     assert(jobs === 0 && executions === 0,
       s"the local answer ran $jobs jobs, $executions SQL executions")
-    assert(LocalServe.Fallback.all.forall(LocalServe.fallbackCount(r, _) === 0))
+    assert(LocalServe.fallbackCount(r) === 0)
     assert(hits.get.map(row => (row.getLong(0), row.getDouble(1))) ===
       hitsRows(IndexExecutor.topK(r, q, 10)))
     assert(completions.get.map(row =>
@@ -491,7 +490,7 @@ class LocalServeSpec extends AnyFunSuite {
     assert(fuzzy.isDefined, "a hull-sized fuzzy atom must serve locally")
     assert(fuzzyJobs === 0 && fuzzyExecutions === 0,
       s"the local fuzzy answer ran $fuzzyJobs jobs, $fuzzyExecutions SQL executions")
-    assert(LocalServe.Fallback.all.forall(LocalServe.fallbackCount(r, _) === 0))
+    assert(LocalServe.fallbackCount(r) === 0)
     assert(fuzzy.get.map(row => (row.getLong(0), row.getDouble(1))) ===
       hitsRows(IndexExecutor.topK(r, fq, 10)))
   }
@@ -521,6 +520,92 @@ class LocalServeSpec extends AnyFunSuite {
     assert(LocalServe.overBudget(v, runs("c")))
     assert(LocalServe.postingVolume(v, runs("c"), budget) === budget + 1)
     assert(LocalServe.postingVolume(v, runs("c"), Long.MaxValue) === 300000L)
+  }
+
+  test("a request past the budget falls back before any block read") {
+    // ten atoms of 27,000 postings each: every one within the budget, the
+    // request past it -- decided from the vocabulary, so nothing is decoded
+    // or cached for the distributed plans to repeat
+    val r = new IndexReader(spark, OverBudgetIndex.dir)
+    LocalServe.hits(r, "wort", 5, QueryParams.Default).get.collect()
+    val rows = r.points.rowsMaterialized.get
+    val held = LocalServe.cachedAtomCount(r)
+    val ten = (0 to 9).map(d => s"h$d*").mkString(" ")
+    assert(LocalServe.hits(r, ten, 5, QueryParams.Default).isEmpty)
+    assert(r.points.rowsMaterialized.get === rows, "the fallback decoded postings")
+    assert(LocalServe.cachedAtomCount(r) === held, "the fallback cached atoms")
+  }
+
+  test("the grammar's refusals raise in-process, as the distributed path's do") {
+    // 63 join-block sides: one past the distributed side bitmask
+    val wide = Seq.fill(63)("aal").mkString("[", "#", "]")
+    intercept[IllegalArgumentException](IndexExecutor.topK(reader, wide, 10))
+    intercept[IllegalArgumentException](LocalServe.hits(reader, wide, 10, QueryParams.Default))
+    val sixtyTwo = Seq.fill(62)("aal").mkString("[", "#", "]")
+    assert(LocalServe.hits(reader, sixtyTwo, 10, QueryParams.Default).isDefined)
+    // a query that starts with NOT
+    intercept[IllegalArgumentException](IndexExecutor.topK(reader, "-aal aachen", 10))
+    intercept[IllegalArgumentException](
+      LocalServe.hits(reader, "-aal aachen", 10, QueryParams.Default))
+  }
+
+  test("positions-off index: a window next to a join block serves locally as same-doc AND") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_localserve_nopos").toString
+    IndexBuilder.build(spark, corpus, dir, numShards = 1, blockSize = 4, storePositions = false)
+    val r = new IndexReader(spark, dir)
+    r.vocabulary.size
+    LocalServe.hits(r, "zebra", 5, QueryParams.Default).get.collect()
+    for (q <- Seq("[aa*#aal*].zebra", "[aa*#aal*]..pad", "aal..[aa*#aal*]")) {
+      val expected = hitsRows(IndexExecutor.topK(r, q, 10))
+      assert(expected.nonEmpty, q)
+      var local: Option[Seq[org.apache.spark.sql.Row]] = None
+      val (jobs, _, _) = watch { local = LocalServe.hitRows(r, q, 10, QueryParams.Default) }
+      assert(local.isDefined, s"expected local serve: $q")
+      assert(jobs === 0, s"$q ran $jobs jobs")
+      assert(local.get.map(row => (row.getLong(0), row.getDouble(1))) === expected, q)
+    }
+    // a window between two word parts still refuses on both paths
+    intercept[IllegalArgumentException](IndexExecutor.topK(r, "aal.aachen", 10))
+    intercept[IllegalArgumentException](LocalServe.hits(r, "aal.aachen", 10, QueryParams.Default))
+  }
+
+  test("completions order terms as Spark does: by UTF-8 bytes, not UTF-16 units") {
+    // U+FB01 is EF AC 81 in UTF-8 but one unit 0xFB01 in UTF-16; U+1F600
+    // is F0 9F 98 80 but the surrogate pair D83D DE00: the two orders
+    // disagree. Both terms lie in the same docs, so every score ties.
+    val text = "x\uFB01 x\uD83D\uDE00"
+    val tied = Seq((1L, text), (2L, s"$text y")).toDF("doc_id", "text")
+    val dir = java.nio.file.Files.createTempDirectory("graft_localserve_utf8").toString
+    IndexBuilder.build(spark, tied, dir, numShards = 1)
+    val r = new IndexReader(spark, dir)
+    for ((p, k) <- Seq((QueryParams.Default, 1), (QueryParams.Default, 2),
+        (QueryParams(rankWords = "word"), 2),
+        (QueryParams(rankWords = "word", sortWordsAsc = Some(false)), 2))) {
+      val local = LocalServe.completions(r, "x*", k, p)
+      assert(local.isDefined)
+      assert(complRows(local.get) === complRows(IndexExecutor.completions(r, "x*", k, p)),
+        s"k=$k params: $p")
+    }
+    assert(complRows(LocalServe.completions(r, "x*", 1, QueryParams.Default).get)
+      .map(_._1) === Seq("x\uFB01"))
+  }
+
+  test("one vocabulary scan per fuzzy word per request") {
+    val v = reader.vocabulary
+    val atom = graft.query.QueryParser.parse("aachan~", false).parts.head.atom
+    // the distributed resolution: the single-term probe, the candidate
+    // runs and the best-match word share one pass
+    val src = new graft.query.IndexAtomSource(reader)
+    val before = v.editScans.get
+    src.singleTerm(atom)
+    src.atomScored(atom)
+    assert(src.bestMatchWord(atom) === Some("aachen"))
+    assert(v.editScans.get - before === 1)
+    // a cold local fuzzy atom with a best-match bonus scans once
+    val cold = coldReader()
+    val coldBefore = cold.vocabulary.editScans.get
+    assert(LocalServe.hits(cold, "aachen aachan~", 10, QueryParams(bestMatchBonus = 2.0)).isDefined)
+    assert(cold.vocabulary.editScans.get - coldBefore === 1)
   }
 
   test("warm grammar queries run ZERO Spark jobs") {

@@ -178,6 +178,30 @@ class StreamingIndexSpec extends AnyFunSuite {
     assert(hits.contains(maxDoc + 1))
   }
 
+  test("delta shards follow the batch index's BY_PREFIXES buckets, whatever the directory's scheme") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_stream_bp").toString
+    val base = Seq((1L, "apple banana spark"), (2L, "graph spark stream"), (3L, "zebra hash merge"))
+      .toDF("doc_id", "text")
+    IndexBuilder.build(spark, base, dir, numShards = 1, prefixBoundaries = Seq("g", "s"))
+    val maxDoc = 3L
+    val r0 = new IndexReader(spark, dir, cacheBlocks = false)
+    val id = r0.vocabulary.idOf("spark").toLong
+    // the boundary bucket differs from the id-width one: a delta shard
+    // bucketed by width would sit where the readers never look
+    assert(r0.bucketOf(id) === 2L)
+    assert(id / r0.bucketSize !== 2L)
+    // the delta writer addresses the index by URI, as on a cluster FS
+    StreamingIndexer.appendBatch(spark,
+      Seq((maxDoc + 1, "spark delta probe")).toDF("doc_id", "text"),
+      s"file:$dir", "stream-bp")
+    val r = new IndexReader(spark, dir, cacheBlocks = false)
+    assert(IndexExecutor.topK(r, "spark", 10000).collect().map(_.getLong(0))
+      .contains(maxDoc + 1), "the distributed plans missed the delta posting")
+    val local = graft.query.LocalServe.hitRows(r, "spark", 10000, graft.query.QueryParams.Default)
+    assert(local.isDefined && local.get.map(_.getLong(0)).contains(maxDoc + 1),
+      "the driver path missed the delta posting")
+  }
+
   test("merged-shard sidecar: sentinel-validated, torn copies fall back to the parquet commit") {
     val dir = java.nio.file.Files.createTempDirectory("graft_sidecar_ix").toString
     val base = WebCorpus.fromDocuments(spark, "/root/testdata/sf0.001")
