@@ -103,7 +103,7 @@ object Bench {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     val reader = new IndexReader(spark, dir)
-    reader.dictionary.count() // warm dictionary cache
+    reader.vocabulary.size // load the resident vocabulary
     QuerySet.foreach { case (_, q) => q(reader).collect() } // untimed warm pass
     val lat = scala.collection.mutable.ArrayBuffer.empty[Double]
     val latGrammar = scala.collection.mutable.ArrayBuffer.empty[Double]

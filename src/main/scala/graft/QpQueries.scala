@@ -60,7 +60,7 @@ object QpQueries {
     "qp_excerpts" -> ((s, d) => {
       val c = corpus(s, d)
       val hits = Executor.topK(c, "spark st*", 10)
-      Excerpts.generate(c, hits, exact = Seq("spark"), prefixes = Seq("st"), radius = 2)
+      Excerpts.generateAll(c, hits, exact = Seq("spark"), prefixes = Seq("st"), er = 2, en = 1)
     }),
     // full-fidelity excerpts: er/en params, one window PER match (up to
     // en), every match inside a window highlighted

@@ -77,7 +77,7 @@ object ScalingBench {
       spark.conf.set("spark.sql.adaptive.enabled", "false")
       spark.conf.set("spark.sql.shuffle.partitions", "8")
       val reader = new IndexReader(spark, lastDir)
-      reader.dictionary.count()
+      reader.vocabulary.size
       Bench.QuerySet.foreach { case (_, q) => q(reader).collect() }
       val lat = scala.collection.mutable.ArrayBuffer.empty[Double]
       var sig = 0L

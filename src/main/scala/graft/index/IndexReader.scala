@@ -24,9 +24,17 @@ import org.apache.spark.sql.functions._
   * cursors on docId; here it is a docId-grid join over block metadata,
   * fully distributed. theta comes from exactly scoring the densest block
   * per term (phase 1).
+  *
+  * Memory: like the reference, which keeps only its vocabulary and a
+  * bounded history in RAM and reads a word range's blocks from disk
+  * (HYBCompleter.cpp:661-746), a reader holds one copy of the index in
+  * memory -- the resident [[vocabulary]]. [[dictionary]] and [[blocks]]
+  * are plain pruned Parquet reads that nothing caches; the serving paths
+  * read blocks through [[points]], the distributed plans through
+  * [[blocks]], and only the query history ([[graft.query.IndexQueryCache]])
+  * persists the atom relations it decodes.
   */
 class IndexReader(val spark: SparkSession, val dir: String,
-                  cacheBlocks: Boolean = true,
                   /** below this block count, two-phase WAND costs more
                     * driver round trips than it saves */
                   wandMinBlocks: Int = 64) extends Serializable {
@@ -94,7 +102,10 @@ class IndexReader(val spark: SparkSession, val dir: String,
       catch { case scala.util.control.NonFatal(_) => () }
   }
 
-  lazy val dictionary: DataFrame = spark.read.parquet(s"$dir/dictionary").cache()
+  /** The dictionary relation (term_id, term, df, cf), read from Parquet
+    * on every use: lookups go to the resident [[vocabulary]] instead.
+    */
+  lazy val dictionary: DataFrame = spark.read.parquet(s"$dir/dictionary")
   /** Docs store (buildDocsDB analog) -- present when the build ran
     * [[IndexBuilder.buildDocsStore]]; serves excerpt text.
     */
@@ -155,14 +166,12 @@ class IndexReader(val spark: SparkSession, val dir: String,
     else census.visible.map(s => s"$dir/blocks/shard=$s")
   }
 
-  /** Block segments. Cached by default for a query-serving session (the
-    * in-memory relation still skips batches via min/max stats); pass
-    * cacheBlocks=false for one-shot scans. Caching auto-disables above
-    * [[IndexReader.CacheBlocksMaxBytes]] (override with spark conf
-    * `graft.index.cacheBlocksMaxBytes`) -- a 100-TB index must never be
-    * pulled through the block cache by a naive caller.
+  /** Block segments, read from the visible shard dirs ([[blockDirs]]).
+    * Never cached: a filter on `term_id` / `bucket` reaches the scan as
+    * partition-dir pruning and row-group min/max skipping, so a query
+    * reads only the blocks it needs from disk.
     */
-  lazy val blocks: DataFrame = {
+  lazy val blocks: DataFrame =
     // ALWAYS read via the explicit visible shard paths, never the dir
     // root: Spark's cache manager substitutes semantically-equal plans,
     // and a parquet relation canonicalizes by its ROOT PATHS (InMemoryFileIndex
@@ -171,28 +180,8 @@ class IndexReader(val spark: SparkSession, val dir: String,
     // PRE-append persisted relation. Explicit shard paths make the plan
     // identity follow the visible layout: same layout shares cache
     // entries, a changed layout cannot.
-    val b =
-      if (censusSnapshot.present.isEmpty) spark.read.parquet(blockDirs: _*)
-      else spark.read.option("basePath", s"$dir/blocks").parquet(blockDirs: _*)
-    val maxBytes = spark.conf.getOption("graft.index.cacheBlocksMaxBytes")
-      .map(_.toLong).getOrElse(IndexReader.CacheBlocksMaxBytes)
-    // size through the Hadoop FileSystem API, so hdfs:// and s3a:// indexes
-    // (the production case the guard exists for) are measured like local
-    // dirs; an unmeasurable size counts as TOO BIG -- never cache blind.
-    // Memoized by (dir, epoch): getContentSummary is a full recursive
-    // listing, and on an object store a serving fleet's reader churn must
-    // not pay it per construction (the epoch already fingerprints the
-    // layout, so a changed dir cannot reuse a stale size).
-    def dirBytes: Long =
-      IndexReader.dirBytesMemo.getOrCompute((dir, indexEpoch))(
-        try {
-          val p = new org.apache.hadoop.fs.Path(s"$dir/blocks")
-          java.lang.Long.valueOf(p.getFileSystem(
-            spark.sparkContext.hadoopConfiguration).getContentSummary(p).getLength)
-        } catch { case _: Throwable => java.lang.Long.valueOf(Long.MaxValue) })
-        .longValue()
-    if (cacheBlocks && dirBytes <= maxBytes) b.cache() else b
-  }
+    if (censusSnapshot.present.isEmpty) spark.read.parquet(blockDirs: _*)
+    else spark.read.option("basePath", s"$dir/blocks").parquet(blockDirs: _*)
 
   /** Driver-side point reads of the block files [[blocks]] reads and of
     * the docs store ([[PointReader]]): the serving paths' cold postings
@@ -240,21 +229,13 @@ class IndexReader(val spark: SparkSession, val dir: String,
   def prefixRange(prefix: String): Option[(Long, Long)] =
     vocabulary.prefixRange(prefix).map { case (lo, hi) => (lo.toLong, hi.toLong) }
 
-  /** Pruned block scan for a term-id range. */
-  def blocksForRange(lo: Long, hi: Long): DataFrame =
-    blocks.filter(col("bucket").between(bucketOf(lo), bucketOf(hi)) &&
-      col("term_id").between(lo, hi))
-
-  /** Pruned block scan for an explicit term-id set. */
-  def blocksForIds(ids: Seq[Long]): DataFrame =
-    blocks.filter(col("term_id").isin(ids: _*) &&
-      col("bucket").isin(ids.map(bucketOf).distinct: _*))
-
-  /** Pruned block scan for a set of contiguous term-id runs (the block
-    * locate analog for SCATTERED candidate sets -- synonym groups, fuzzy
-    * candidates, OR alternatives): the reference fetches blocks per word
-    * range / per term (HYBCompleter.cpp:661-746, INVCompleter.h:94-130),
-    * never the [min, max] hull of the whole set. Bucket predicates + the
+  /** Pruned block scan for a set of contiguous term-id runs, the one block
+    * selector (block locate analog): a prefix range is one run, a term set
+    * its [[IndexReader.mergeRuns]], a scattered candidate set -- synonym
+    * groups, fuzzy candidates, OR alternatives -- its own runs. The
+    * reference fetches blocks per word range / per term
+    * (HYBCompleter.cpp:661-746, INVCompleter.h:94-130), never the
+    * [min, max] hull of the whole set. Bucket predicates + the
     * per-run BETWEEN disjunction reach the parquet scan (partition-dir
     * pruning + row-group min/max skipping). Plan size stays bounded at any
     * span: a run covering many buckets (the hull fallback for huge
@@ -343,9 +324,10 @@ class IndexReader(val spark: SparkSession, val dir: String,
     // row (or one expression-tree node) per block. Driver round-trips are
     // bounded: one count, k phase-1 rows, one count, the k results. The
     // first count is memoized per term-id set: the blocks relation is
-    // frozen per reader (cached at first scan; delta shards appear to a
-    // NEW reader), so a warm repeated query skips the job entirely.
-    val qBlocks = blocksForIds(ids)
+    // frozen per reader (its shard dirs are fixed at construction; delta
+    // shards appear to a NEW reader), so a warm repeated query skips the
+    // job entirely.
+    val qBlocks = blocksForIdRuns(IndexReader.mergeRuns(ids.map(id => (id, id))))
     // the count job runs outside the memo's monitor: a cold multi-second
     // count must not stall unrelated queries
     val totalBlocks = blockCountMemo.getOrCompute(ids.sorted)(
@@ -429,13 +411,6 @@ class IndexReader(val spark: SparkSession, val dir: String,
 }
 
 object IndexReader {
-  /** Above this on-disk size the block cache auto-disables even when the
-    * caller asked for it (serving-session convenience must not become a
-    * cache-thrash at production scale). 16 GiB default fits the sandbox
-    * heap; production sets `graft.index.cacheBlocksMaxBytes`.
-    */
-  val CacheBlocksMaxBytes: Long = 16L << 30
-
   /** Process-unique NEGATIVE epochs for readers whose layout could not be
     * fingerprinted (filesystem error): such a reader never shares cache
     * entries -- see [[IndexReader.indexEpoch]].
@@ -537,13 +512,6 @@ object IndexReader {
     */
   private val mergedMemo = new Lru[(String, String), Seq[String]]("merged shards",
     maxEntries = 1024)
-
-  /** blocks-dir byte size by (dir, epoch) -- see the cache-guard comment in
-    * [[IndexReader.blocks]]. Entries are 2 machine words; the 1,024-entry
-    * cap (least recently used out) only matters for pathological dir churn.
-    */
-  private[index] val dirBytesMemo =
-    new Lru[(String, Long), java.lang.Long]("blocks dir bytes", maxEntries = 1024)
 
   private[graft] def mergedShardsOf(spark: SparkSession, commitDir: String): Seq[String] = {
     val conf = spark.sparkContext.hadoopConfiguration

@@ -44,36 +44,14 @@ object Excerpts {
   private def toksCol: Column =
     filter(split(lower(col("text")), SepRegex), t => t =!= "")
 
-  /** For each doc in `hits` (must have doc_id), produce a +-radius-token
-    * window around the FIRST matching token, matches wrapped in <hl>.
-    * Output: (doc_id, excerpt); docs with no match (shouldn't happen for
-    * real hits) get an empty excerpt.
-    */
-  def generate(corpus: DataFrame, hits: DataFrame,
-               exact: Seq[String], prefixes: Seq[String],
-               radius: Int = 2): DataFrame = {
-    val toks = toksCol
-    val big = lit(Int.MaxValue)
-    // first matching 0-based token index
-    val firstIdx = array_min(transform(toks,
-      (t, i) => when(matchPred(t, exact, prefixes), i).otherwise(big)))
-    val start0 = greatest(firstIdx - radius, lit(0)) // 0-based window start
-    // window is [max(m-r,0), m+r]: length shrinks when clamped at the left
-    val win = slice(toks, start0 + 1, firstIdx + radius - start0 + 1)
-    val highlighted = transform(win, t =>
-      when(matchPred(t, exact, prefixes), concat(lit("<hl>"), t, lit("</hl>"))).otherwise(t))
-    corpus
-      .join(hits.select(col("doc_id")), Seq("doc_id"), "left_semi")
-      .select(col("doc_id"),
-        when(firstIdx === big, lit(""))
-          .otherwise(array_join(highlighted, " ")).as("excerpt"))
-  }
-
-  /** Full-fidelity variant (reference parameters `er` = window radius,
-    * `en` = max excerpts per doc, Globals.h / ExcerptsGenerator): one
-    * excerpt per match position, up to `en` of them (in document order),
-    * EVERY matching token inside each window highlighted, windows joined
-    * with " ... ".
+  /** Excerpts of the docs in `hits` (must have doc_id), reference
+    * parameters `er` = window radius and `en` = max excerpts per doc
+    * (Globals.h / ExcerptsGenerator): one window `[max(m - er, 0), m + er]`
+    * per match position m, up to `en` of them (in document order), EVERY
+    * matching token inside each window wrapped in <hl>, windows joined
+    * with " ... ". Output: (doc_id, excerpt); a doc with no match (not a
+    * real hit) gets "". `en = 1` is the single window around the first
+    * match.
     */
   def generateAll(corpus: DataFrame, hits: DataFrame,
                   exact: Seq[String], prefixes: Seq[String],

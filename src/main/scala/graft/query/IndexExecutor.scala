@@ -264,6 +264,6 @@ object IndexExecutor {
                exact: Seq[String], prefixes: Seq[String],
                radius: Int = 2): DataFrame = {
     val hits = topK(reader, query, k)
-    Excerpts.generate(reader.docs, hits, exact, prefixes, radius)
+    Excerpts.generateAll(reader.docs, hits, exact, prefixes, er = radius, en = 1)
   }
 }

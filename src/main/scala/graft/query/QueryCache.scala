@@ -304,8 +304,8 @@ class IndexQueryCache(maxEntries: Int = 200,
         // size measurement)
         val plan0 = planOpt.getOrElse(compute(atom))
         // shape the persisted relation to the session's query parallelism:
-        // atom relations inherit the block scan's partitioning (32 cached
-        // partitions locally), but every WARM query re-reads them, paying
+        // atom relations inherit the block scan's partitioning (its file
+        // splits), but every WARM query re-reads them, paying
         // per-partition task overhead each time. coalesce to
         // spark.sql.shuffle.partitions -- the latency-phase setting (8)
         // locally, a no-op at production partition counts (coalesce never

@@ -146,7 +146,7 @@ object CodecBenchMain {
     println(f"${"codec"}%-10s ${"build_docs_s"}%12s ${"block_bytes"}%12s ${"bytes/post"}%10s ${"decode_ms"}%10s ${"wand_ms"}%8s")
     for (codec <- codecs) {
       val dir = lastDir(codec)
-      val r = new IndexReader(spark, dir, cacheBlocks = false)
+      val r = new IndexReader(spark, dir)
       val enc = spark.read.parquet(s"$dir/blocks")
         .agg(org.apache.spark.sql.functions.sum(
           org.apache.spark.sql.functions.length(org.apache.spark.sql.functions.col("doc_deltas")) +
@@ -240,7 +240,7 @@ object AnswerQueriesMain {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     val reader = new IndexReader(spark, indexDir)
-    reader.dictionary.count()
+    reader.vocabulary.size
     val cache =
       if (flags("-H")) None else Some(new graft.query.IndexQueryCache())
     def answer(q: String): Long = graft.query.IndexExecutor.topK(reader, q, k,

@@ -30,6 +30,11 @@ import org.apache.spark.sql.SparkSession
   * ([[graft.query.IndexQueryCache]]), where a typing stream of prefixes
   * extends cached relations instead of re-scanning blocks.
   *
+  * Memory: the server holds the reader's resident vocabulary and these
+  * bounded histories, not the index. A local request reads its blocks
+  * from disk through the reader's point reads, a fallback through its
+  * own pruned scan, and start-up reads no block file.
+  *
   * Replies go out with TCP_NODELAY. The JDK server writes a reply's headers
   * and body as two TCP segments; under Nagle's algorithm the body waits
   * for the client's delayed ACK of the headers, about 40 ms on Linux, on
@@ -100,13 +105,9 @@ object CompletionServer {
             normalizeWords: Boolean = false)
       : com.sun.net.httpserver.HttpServer = {
     val reader = new IndexReader(spark, indexDir)
-    // load the resident vocabulary (caching the dictionary on the way)
-    // before the first request
+    // load the resident vocabulary before the first request; start-up
+    // reads no block file (see the object doc)
     reader.vocabulary.size
-    // fill the blocks cache the distributed fallbacks read: local requests
-    // read the block files directly and never fill it, so the first
-    // fallback would otherwise pay the fill inside its query timeout
-    if (reader.blocks.storageLevel.useMemory) reader.blocks.count()
     def preRun(qs: Seq[String], what: String): Unit = qs.foreach { q =>
       // a bad startup query must not keep the server from starting; warm
       // under the SERVER's params (normalize-words changes the parsed

@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.{Bench, SparkEntry}
 import graft.index.{IndexBuilder, IndexReader}
-import graft.query.IndexExecutor
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{ExplainMode, QueryExecution}
@@ -33,8 +32,10 @@ import scala.collection.mutable.ArrayBuffer
   *     docs/s of `rounds` (default 4) builds; `SPARK_GRAFT_BUILD_TIMING=1`
   *     adds IndexBuilder's own `BUILD_PHASE` lines.
   *   sbt "runMain graft.tools.Measure serve"
-  *     Bench's query index behind [[CompletionServer]], 192 distinct
-  *     queries over HTTP at 1 / 4 / 16 / 32 clients: qps, p50, p95, errors.
+  *     Bench's query index behind [[CompletionServer]], 192 queries over
+  *     HTTP at each of 1 / 4 / 16 / 32 clients, a query never sent twice:
+  *     qps, p50, p95, errors and how many of the rung's queries were sent
+  *     before in the run (0).
   */
 object Measure {
 
@@ -276,30 +277,30 @@ object Measure {
     out.lines.toSeq
   }
 
-  /** Serve mode (see the object doc). The pool holds `total` distinct
-    * queries from the index's own dictionary (exact words, 3-letter
-    * prefixes and AND pairs, round-robin); each rung sends all of them,
-    * split across its clients (strong scaling: qps = total / wall).
+  /** Serve mode (see the object doc). The pool holds distinct queries from
+    * the index's own dictionary (exact words, 3-letter prefixes and AND
+    * pairs, round-robin): a warm slice of [[ServeWarm]] queries, sent over
+    * HTTP before the ladder, then one disjoint slice of `total` per rung,
+    * split across its clients (strong scaling: qps = total / wall). No
+    * rung meets the server's result history, so each times execution.
     */
   def serve(spark: SparkSession, sfDir: String, repl: Int,
             clients: Seq[Int] = Seq(1, 4, 16, 32), total: Int = 192): Seq[String] = {
     val out = new Report
     withBenchIndex(spark, sfDir, repl) { (dir, _) =>
-      val reader = new IndexReader(spark, dir)
-      val words = reader.dictionary
+      val words = new IndexReader(spark, dir).dictionary
         .filter(!col("term").contains(":"))
         .orderBy(col("term").asc)
         .limit(600).select(col("term")).collect().map(_.getString(0)).toSeq
       val prefixes = words.map(w => w.substring(0, math.min(3, w.length)) + "*").distinct
       val pairs = for (a <- words; b <- words if a < b) yield s"$a $b"
       val shapes = Seq(words, prefixes, pairs)
+      val size = ServeWarm + total * clients.length
       val pool: IndexedSeq[String] = Iterator.from(0)
         .map(i => shapes(i % shapes.length).lift(i / shapes.length))
         .take(3 * (words.length + prefixes.length + pairs.length))
-        .flatten.distinct.take(total).toIndexedSeq
-      require(pool.length == total, s"pool not distinct enough: ${pool.length}/$total")
-      // warms codegen paths; the server's own reader and history stay cold
-      pool.take(4).foreach(q => IndexExecutor.topK(reader, q, 10).collect())
+        .flatten.distinct.take(size).toIndexedSeq
+      require(pool.length == size, s"pool not distinct enough: ${pool.length}/$size")
       val server = CompletionServer.start(spark, dir, port = 0, handlerThreads = 32)
       // reads the whole reply; a 4xx / 5xx reply throws
       def get(q: String): Unit = {
@@ -307,31 +308,41 @@ object Measure {
           s"?q=${java.net.URLEncoder.encode(q, "UTF-8")}&h=10", "UTF-8")
         try reply.mkString finally reply.close()
       }
-      try for (n <- clients) {
-        val next = new java.util.concurrent.atomic.AtomicInteger(0)
-        val errors = new java.util.concurrent.atomic.AtomicInteger(0)
-        val lats = new java.util.concurrent.ConcurrentLinkedQueue[Double]()
-        val (_, wallMs) = ms {
-          val threads = (1 to n).map(_ => new Thread(() => {
-            var i = next.getAndIncrement()
-            while (i < total) {
-              val (_, t) = ms {
-                try get(pool(i))
-                catch { case _: Exception => errors.incrementAndGet() }
+      val sent = scala.collection.mutable.Set.empty[String]
+      try {
+        // warms the server's own request path (JIT, reader memos)
+        pool.take(ServeWarm).foreach { q => get(q); sent += q }
+        for ((n, slice) <- clients.zip(pool.drop(ServeWarm).grouped(total))) {
+          val sentBefore = slice.count(sent)
+          sent ++= slice
+          val next = new java.util.concurrent.atomic.AtomicInteger(0)
+          val errors = new java.util.concurrent.atomic.AtomicInteger(0)
+          val lats = new java.util.concurrent.ConcurrentLinkedQueue[Double]()
+          val (_, wallMs) = ms {
+            val threads = (1 to n).map(_ => new Thread(() => {
+              var i = next.getAndIncrement()
+              while (i < total) {
+                val (_, t) = ms {
+                  try get(slice(i))
+                  catch { case _: Exception => errors.incrementAndGet() }
+                }
+                lats.add(t)
+                i = next.getAndIncrement()
               }
-              lats.add(t)
-              i = next.getAndIncrement()
-            }
-          }))
-          threads.foreach(_.start())
-          threads.foreach(_.join())
+            }))
+            threads.foreach(_.start())
+            threads.foreach(_.join())
+          }
+          val xs = scala.jdk.CollectionConverters.CollectionHasAsScala(lats).asScala.toSeq
+          out += f"[serve] clients=$n%2d qps=${total / (wallMs / 1000)}%.1f wall=${wallMs / 1000}%.1f s " +
+            f"p50=${Bench.percentile(xs, 0.5)}%.1f ms p95=${Bench.percentile(xs, 0.95)}%.1f ms " +
+            s"errors=${errors.get} sent_before=$sentBefore"
         }
-        val xs = scala.jdk.CollectionConverters.CollectionHasAsScala(lats).asScala.toSeq
-        out += f"[serve] clients=$n%2d qps=${total / (wallMs / 1000)}%.1f wall=${wallMs / 1000}%.1f s " +
-          f"p50=${Bench.percentile(xs, 0.5)}%.1f ms p95=${Bench.percentile(xs, 0.95)}%.1f ms " +
-          s"errors=${errors.get}"
       } finally server.stop(0)
     }
     out.lines.toSeq
   }
+
+  /** Queries [[serve]] sends before its ladder. */
+  private val ServeWarm = 4
 }

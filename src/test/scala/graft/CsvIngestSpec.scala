@@ -239,7 +239,7 @@ class CsvIngestSpec extends AnyFunSuite {
     val (words, _) = CsvIngest.parse(spark, path, fields)
     val dir = java.nio.file.Files.createTempDirectory("graft_wix").toString
     graft.index.IndexBuilder.buildFromWords(spark, words, dir)
-    val r = new graft.index.IndexReader(spark, dir, cacheBlocks = false)
+    val r = new graft.index.IndexReader(spark, dir)
     // the BM25 length model sees only real tokens (two 2-token titles);
     // doc 0 carries only :info: words and does not count
     assert(r.nDocs === 2L && r.avgdl === 2.0)

@@ -31,7 +31,7 @@ class ExtensionsSpec extends AnyFunSuite {
         |FROM blocks
         |LATERAL VIEW graft_postings_decode(n_docs, doc_deltas, tfs, dls, 'pfor') p
         |""".stripMargin)
-    val viaScala = new graft.index.IndexReader(spark, dir, cacheBlocks = false)
+    val viaScala = new graft.index.IndexReader(spark, dir)
     val a = viaSql.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val b = viaScala.decode(viaScala.blocks)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
@@ -48,7 +48,7 @@ class ExtensionsSpec extends AnyFunSuite {
         |FROM blocks_v
         |LATERAL VIEW graft_postings_decode(n_docs, doc_deltas, tfs, dls) p
         |""".stripMargin)
-    val viaScala = new graft.index.IndexReader(spark, dir, cacheBlocks = false)
+    val viaScala = new graft.index.IndexReader(spark, dir)
     val a = viaSql.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val b = viaScala.decode(viaScala.blocks)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet

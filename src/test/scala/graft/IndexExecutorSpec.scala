@@ -44,7 +44,7 @@ class IndexExecutorSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft_rebuild_ix").toString
     val c1 = Seq((1L, "alpha beta"), (2L, "alpha gamma")).toDF("doc_id", "text")
     IndexBuilder.build(spark, c1, dir, numShards = 1)
-    val r1 = new IndexReader(spark, dir) // cacheBlocks default: true
+    val r1 = new IndexReader(spark, dir)
     val h1 = IndexExecutor.topK(r1, "alpha", 10).collect().map(_.getLong(0)).toSet
     assert(h1 === Set(1L, 2L))
 
@@ -320,6 +320,86 @@ class IndexExecutorSpec extends AnyFunSuite {
     } finally normal.stop(0)
   }
 
+  test("completion server: start-up reads no block file, and no index relation is cached") {
+    import graft.query.{IndexQueryCache, QueryParams}
+    import graft.tools.CompletionServer
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    import org.apache.spark.storage.StorageLevel
+    // a fresh index: no other test can have read (or cached) its relations
+    val dir = java.nio.file.Files.createTempDirectory("graft_serve_memory").toString
+    IndexBuilder.build(spark, corpus, dir, numShards = 1, blockSize = 4)
+    // the root paths of every file scan a plan runs, through adaptive
+    // stages, reused exchanges and cached plans
+    def roots(p: SparkPlan): Seq[String] = p.collect {
+      case s: FileSourceScanExec => s.relation.location.rootPaths.map(_.toString)
+      case m: InMemoryTableScanExec => roots(m.relation.cachedPlan)
+      case a: AdaptiveSparkPlanExec => roots(a.executedPlan)
+      case q: QueryStageExec => roots(q.plan)
+      case r: ReusedExchangeExec => roots(r.child)
+    }.flatten
+    val scanned = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val marker = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
+        roots(qe.executedPlan).foreach(scanned.add)
+        if (qe.analyzed.output.exists(_.name == "graft_listener_marker")) marker.set(true)
+      }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        roots(qe.executedPlan).foreach(scanned.add)
+    }
+    // the listener bus is asynchronous but ordered: once a marker action's
+    // event arrives, every earlier action's event has arrived too
+    def drained(): Seq[String] = {
+      marker.set(false)
+      spark.range(1).toDF("graft_listener_marker").collect()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!marker.get() && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(marker.get(), "listener bus did not drain")
+      val xs = scala.jdk.CollectionConverters.CollectionHasAsScala(scanned).asScala.toSeq
+      scanned.clear()
+      xs
+    }
+    def readsBlocks(paths: Seq[String], d: String): Boolean = paths.exists(_.contains(s"$d/blocks"))
+    spark.listenerManager.register(listener)
+    try {
+      drained()
+      val server = CompletionServer.start(spark, dir, port = 0)
+      try {
+        val startup = drained()
+        assert(!readsBlocks(startup, dir), s"start-up read block files: $startup")
+        val (code, body) = httpGet(server, "/?q=aal&h=5")
+        assert(code === 200 && body.contains("\"id\":"), body)
+      } finally server.stop(0)
+      val second = new IndexReader(spark, dir)
+      assert(second.blocks.storageLevel === StorageLevel.NONE)
+      assert(second.dictionary.storageLevel === StorageLevel.NONE)
+      // the detector sees a block scan when one runs
+      IndexExecutor.topK(second, "aal", 5).collect()
+      assert(readsBlocks(drained(), dir), "a distributed query's block scan went unseen")
+    } finally spark.listenerManager.unregister(listener)
+
+    // a request past the postings budget: the distributed fallback reads
+    // the blocks through its own pruned scan and answers as the
+    // distributed plan does on a second reader
+    val ob = CompletionServer.start(spark, OverBudgetIndex.dir, port = 0)
+    try {
+      val (code, body) = httpGet(ob, "/?q=h*&h=10")
+      assert(code === 200, body)
+      val got = scala.jdk.CollectionConverters.IteratorHasAsScala(
+        new com.fasterxml.jackson.databind.ObjectMapper().readTree(body)
+          .path("result").path("hits").path("hit").elements()).asScala
+        .map(h => (h.path("id").asLong(), h.path("score").asDouble())).toSeq
+      val want = IndexExecutor.hits(new IndexReader(spark, OverBudgetIndex.dir), "h*", 10,
+        QueryParams.Default, new IndexQueryCache()).collect()
+        .map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      assert(want.size === 10)
+      assert(got === want)
+    } finally ob.stop(0)
+  }
+
   test("completion server: warm-history queries pre-fill the cache; CORS on request") {
     import graft.tools.CompletionServer
     val warmed = new graft.query.IndexQueryCache()
@@ -471,8 +551,8 @@ class IndexExecutorSpec extends AnyFunSuite {
     val pruned = src.prunedBlocks(atom).get
     val ids = reader.dictionary.filter(col("term").isin("aachen", "zebra"))
       .select("term_id").as[Long].collect()
-    assert(pruned.count() === reader.blocksForIds(ids.toSeq).count())
-    assert(pruned.count() < reader.blocksForRange(ids.min, ids.max).count())
+    assert(pruned.count() === reader.blocksForIdRuns(ids.toSeq.sorted.map(id => (id, id))).count())
+    assert(pruned.count() < reader.blocksForIdRuns(Seq((ids.min, ids.max))).count())
     assert(pruned.select("term_id").distinct().as[Long].collect().toSet === ids.toSet)
     // and the grammar result is unchanged
     assert(ix("aachen|zebra") === lg("aachen|zebra"))

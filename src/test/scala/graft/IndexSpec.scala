@@ -53,8 +53,8 @@ class IndexSpec extends AnyFunSuite {
   }
 
   test("prefix scan via pruned range equals dictionary filter") {
-    val Some((lo, hi)) = reader.prefixRange("s")
-    val viaRange = reader.decode(reader.blocksForRange(lo, hi))
+    val Some(run) = reader.prefixRange("s")
+    val viaRange = reader.decode(reader.blocksForIdRuns(Seq(run)))
       .select(col("term_id")).distinct().collect().map(_.getLong(0)).toSet
     val viaDict = reader.dictionary.filter(col("term").startsWith("s"))
       .collect().map(_.getAs[Long]("term_id")).toSet
@@ -82,10 +82,10 @@ class IndexSpec extends AnyFunSuite {
   test("custom bucketSize round-trips through stats (queries stay correct)") {
     val d = java.nio.file.Files.createTempDirectory("graft_ix_bsz").toString
     IndexBuilder.build(spark, corpus, d, numShards = 1, bucketSize = 7)
-    val r = new IndexReader(spark, d, cacheBlocks = false)
+    val r = new IndexReader(spark, d)
     assert(r.bucketSize === 7L)
     // pruned scans must use the persisted width, not the default
-    val viaRange = r.decode(r.blocksForRange(0L, 1000L)).count()
+    val viaRange = r.decode(r.blocksForIdRuns(Seq((0L, 1000L)))).count()
     val all = r.decode(r.blocks).count()
     assert(viaRange === all)
     val hits = IndexExecutor.topK(r, "spark join", 10).count()
@@ -96,7 +96,7 @@ class IndexSpec extends AnyFunSuite {
     val d = java.nio.file.Files.createTempDirectory("graft_ix_bp").toString
     IndexBuilder.build(spark, corpus, d, numShards = 1, blockSize = 256,
       prefixBoundaries = Seq("g", "s"))
-    val r = new IndexReader(spark, d, cacheBlocks = false)
+    val r = new IndexReader(spark, d)
     assert(r.prefixCuts.isDefined && r.prefixCuts.get.length === 2)
     // bucket = number of boundaries <= term: exactly groups {0: < g, 1: [g, s), 2: >= s}
     val byBucket = r.blocks
@@ -136,7 +136,7 @@ class IndexSpec extends AnyFunSuite {
     val d = java.nio.file.Files.createTempDirectory("graft_ix_bps").toString
     IndexBuilder.build(spark, corpus, d, numShards = 1, blockSize = 256,
       prefixBoundaries = bs)
-    val r = new IndexReader(spark, d, cacheBlocks = false)
+    val r = new IndexReader(spark, d)
     val a = IndexExecutor.topK(r, "s*", 10).collect()
       .map(x => (x.getLong(0), x.getDouble(1))).toSeq
     val b = IndexExecutor.topK(reader, "s*", 10).collect()
@@ -148,7 +148,7 @@ class IndexSpec extends AnyFunSuite {
     val d = java.nio.file.Files.createTempDirectory("graft_ix_nopos").toString
     IndexBuilder.build(spark, corpus, d, numShards = 1, blockSize = 256,
       storePositions = false)
-    val r = new IndexReader(spark, d, cacheBlocks = false)
+    val r = new IndexReader(spark, d)
     assert(!r.hasPositions)
     // WAND / AND / completions byte-identical to the full index
     val a = r.topKOrWand(Seq("spark", "hash"), 10).collect()
@@ -182,7 +182,7 @@ class IndexSpec extends AnyFunSuite {
       val d = java.nio.file.Files.createTempDirectory(s"graft_ix_$codec").toString
       IndexBuilder.build(spark, corpus, d, numShards = 1, blockSize = 256,
         doclistCodec = codec)
-      val r = new IndexReader(spark, d, cacheBlocks = false)
+      val r = new IndexReader(spark, d)
       assert(r.doclistCodec === graft.index.Codec.idOf(codec))
       val dec = r.decodeWithPositions(r.blocks)
         .select(col("term_id"), col("doc_id"), col("tf"), col("positions"))
@@ -206,7 +206,7 @@ class IndexSpec extends AnyFunSuite {
     IndexBuilder.build(spark, corpus, d, numShards = 1, doclistCodec = "gamma")
     // second call asks for pfor; the committed stats say gamma and win
     IndexBuilder.build(spark, corpus, d, numShards = 1, doclistCodec = "pfor")
-    val r = new IndexReader(spark, d, cacheBlocks = false)
+    val r = new IndexReader(spark, d)
     assert(r.doclistCodec === graft.index.Codec.Gamma)
     assert(r.decode(r.blocks).count() > 0)
   }

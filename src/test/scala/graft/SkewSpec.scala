@@ -24,7 +24,7 @@ class SkewSpec extends AnyFunSuite {
     val manifest = IndexBuilder.build(spark, docs, dir,
       numShards = 1, blockSize = 512, buildPartitions = 8)
 
-    val reader = new IndexReader(spark, dir, cacheBlocks = false)
+    val reader = new IndexReader(spark, dir)
     val theId = reader.dictionary.filter(col("term") === "the")
       .head().getAs[Long]("term_id")
     val theBlocks = reader.blocks.filter(col("term_id") === theId)

@@ -20,9 +20,9 @@ class StreamingIndexSpec extends AnyFunSuite {
     val base = WebCorpus.fromDocuments(spark, "/root/testdata/sf0.001")
     IndexBuilder.build(spark, base, dir, numShards = 1)
 
-    val before = new IndexReader(spark, dir, cacheBlocks = false)
-    val Some((lo, hi)) = before.prefixRange("spark")
-    val nBefore = before.decode(before.blocksForRange(lo, hi)).count()
+    val before = new IndexReader(spark, dir)
+    val Some(run) = before.prefixRange("spark")
+    val nBefore = before.decode(before.blocksForIdRuns(Seq(run))).count()
 
     // two streamed micro-batches of new docs using existing vocabulary
     val maxDoc = base.agg(max(col("doc_id"))).head().getLong(0)
@@ -36,8 +36,8 @@ class StreamingIndexSpec extends AnyFunSuite {
     val q = StreamingIndexer.start(spark, srcDir, newDocs.schema, dir, Trigger.AvailableNow())
     q.awaitTermination(60000)
 
-    val after = new IndexReader(spark, dir, cacheBlocks = false)
-    val decoded = after.decode(after.blocksForRange(lo, hi))
+    val after = new IndexReader(spark, dir)
+    val decoded = after.decode(after.blocksForIdRuns(Seq(run)))
     assert(decoded.count() === nBefore + 3) // 3 new docs contain "spark"
     val topDocs = IndexExecutor.topK(after, "spark", 100).collect().map(_.getLong(0)).toSet
     assert(topDocs.contains(maxDoc + 1) && topDocs.contains(maxDoc + 2) && topDocs.contains(maxDoc + 3))
@@ -64,7 +64,7 @@ class StreamingIndexSpec extends AnyFunSuite {
       Seq((maxDoc + 3, "merge stream")).toDF("doc_id", "text"), dir, "stream-2")
 
     def snapshot(): (Seq[(Long, Long, Long)], Seq[(Long, Double)]) = {
-      val r = new IndexReader(spark, dir, cacheBlocks = false)
+      val r = new IndexReader(spark, dir)
       val dec = r.decode(r.blocks).select(col("term_id"), col("doc_id"), col("tf"))
         .collect().map(x => (x.getLong(0), x.getLong(1), x.getLong(2))).toSeq.sorted
       val top = IndexExecutor.topK(r, "spark|merge", 20)
@@ -102,7 +102,7 @@ class StreamingIndexSpec extends AnyFunSuite {
     assert(IndexBuilder.compact(spark, dir) === Some("compact-1"))
     val after = snapshot()
     assert(after._1.size === before._1.size + 2) // spark + stream postings
-    val r2 = new IndexReader(spark, dir, cacheBlocks = false)
+    val r2 = new IndexReader(spark, dir)
     assert(IndexExecutor.topK(r2, "spark", 100).collect().map(_.getLong(0)).toSet
       .contains(maxDoc + 4))
 
@@ -125,7 +125,7 @@ class StreamingIndexSpec extends AnyFunSuite {
     IndexBuilder.build(spark, base, dir, numShards = 1)
     val maxDoc = base.agg(max(col("doc_id"))).head().getLong(0)
 
-    val r0 = new IndexReader(spark, dir, cacheBlocks = false)
+    val r0 = new IndexReader(spark, dir)
     // warm the process history under the pre-append epoch (the stale key)
     val hits0 = graft.query.IndexExecutor.topK(r0, "spark", 10000)
       .collect().map(_.getLong(0)).toSet
@@ -138,11 +138,11 @@ class StreamingIndexSpec extends AnyFunSuite {
     // the appended shard changes the reader identity: a dictionary-only
     // epoch would let the (dir, epoch, atom) cache serve the PRE-append
     // relation to the post-append reader
-    val r1 = new IndexReader(spark, dir, cacheBlocks = false)
+    val r1 = new IndexReader(spark, dir)
     assert(r1.indexEpoch !== r0.indexEpoch)
     // unchanged layout -> readers agree on the epoch (shared-cache hits
     // between readers depend on it)
-    assert(new IndexReader(spark, dir, cacheBlocks = false).indexEpoch === r1.indexEpoch)
+    assert(new IndexReader(spark, dir).indexEpoch === r1.indexEpoch)
 
     val hits1 = graft.query.IndexExecutor.topK(r1, "spark", 10000)
       .collect().map(_.getLong(0)).toSet
@@ -154,7 +154,7 @@ class StreamingIndexSpec extends AnyFunSuite {
       Seq((maxDoc + 2, "spark epoch probe two")).toDF("doc_id", "text"),
       dir, "stream-epoch-test-2")
     assert(IndexBuilder.compact(spark, dir).nonEmpty)
-    val r2 = new IndexReader(spark, dir, cacheBlocks = false)
+    val r2 = new IndexReader(spark, dir)
     assert(r2.indexEpoch !== r1.indexEpoch)
     assert(graft.query.IndexExecutor.topK(r2, "spark", 10000)
       .collect().map(_.getLong(0)).toSet.contains(maxDoc + 2))
@@ -172,7 +172,7 @@ class StreamingIndexSpec extends AnyFunSuite {
       dir, "stream-codec-test")
     // the appended shard's bytes decode correctly under the index codec --
     // a default-encoded shard would decode to garbage or throw
-    val r = new IndexReader(spark, dir, cacheBlocks = false)
+    val r = new IndexReader(spark, dir)
     assert(r.doclistCodec === graft.index.Codec.Gamma)
     val hits = IndexExecutor.topK(r, "spark", 10000).collect().map(_.getLong(0)).toSet
     assert(hits.contains(maxDoc + 1))
@@ -184,7 +184,7 @@ class StreamingIndexSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
     IndexBuilder.build(spark, base, dir, numShards = 1, prefixBoundaries = Seq("g", "s"))
     val maxDoc = 3L
-    val r0 = new IndexReader(spark, dir, cacheBlocks = false)
+    val r0 = new IndexReader(spark, dir)
     val id = r0.vocabulary.idOf("spark").toLong
     // the boundary bucket differs from the id-width one: a delta shard
     // bucketed by width would sit where the readers never look
@@ -194,7 +194,7 @@ class StreamingIndexSpec extends AnyFunSuite {
     StreamingIndexer.appendBatch(spark,
       Seq((maxDoc + 1, "spark delta probe")).toDF("doc_id", "text"),
       s"file:$dir", "stream-bp")
-    val r = new IndexReader(spark, dir, cacheBlocks = false)
+    val r = new IndexReader(spark, dir)
     assert(IndexExecutor.topK(r, "spark", 10000).collect().map(_.getLong(0))
       .contains(maxDoc + 1), "the distributed plans missed the delta posting")
     val local = graft.query.LocalServe.hitRows(r, "spark", 10000, graft.query.QueryParams.Default)

@@ -28,7 +28,7 @@ class WandSpec extends AnyFunSuite {
     IndexBuilder.build(spark, docs, dir, numShards = 1, blockSize = 64,
       buildPartitions = 8)
     // wandMinBlocks = 1 forces the two-phase path for this test
-    val reader = new IndexReader(spark, dir, cacheBlocks = false, wandMinBlocks = 1)
+    val reader = new IndexReader(spark, dir, wandMinBlocks = 1)
 
     val (wandDf, total, scanned) = reader.topKOrWandStats(Seq("gold", "filler"), 5)
     val wand = wandDf.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
@@ -60,7 +60,7 @@ class WandSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft_wand_skew").toString
     IndexBuilder.build(spark, docs, dir, numShards = 1, blockSize = 8,
       buildPartitions = 8)
-    val reader = new IndexReader(spark, dir, cacheBlocks = false, wandMinBlocks = 1)
+    val reader = new IndexReader(spark, dir, wandMinBlocks = 1)
 
     val (wandDf, total, scanned) = reader.topKOrWandStats(Seq("gold", "web"), 5)
     val wand = wandDf.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
