@@ -34,8 +34,7 @@ import scala.collection.mutable.ArrayBuffer
   *   sbt "runMain graft.tools.Measure serve"
   *     Bench's query index behind [[CompletionServer]], 192 queries over
   *     HTTP at each of 1 / 4 / 16 / 32 clients, a query never sent twice:
-  *     qps, p50, p95, errors and how many of the rung's queries were sent
-  *     before in the run (0).
+  *     qps, p50, p95, errors.
   */
 object Measure {
 
@@ -308,13 +307,10 @@ object Measure {
           s"?q=${java.net.URLEncoder.encode(q, "UTF-8")}&h=10", "UTF-8")
         try reply.mkString finally reply.close()
       }
-      val sent = scala.collection.mutable.Set.empty[String]
       try {
         // warms the server's own request path (JIT, reader memos)
-        pool.take(ServeWarm).foreach { q => get(q); sent += q }
+        pool.take(ServeWarm).foreach(get)
         for ((n, slice) <- clients.zip(pool.drop(ServeWarm).grouped(total))) {
-          val sentBefore = slice.count(sent)
-          sent ++= slice
           val next = new java.util.concurrent.atomic.AtomicInteger(0)
           val errors = new java.util.concurrent.atomic.AtomicInteger(0)
           val lats = new java.util.concurrent.ConcurrentLinkedQueue[Double]()
@@ -336,7 +332,7 @@ object Measure {
           val xs = scala.jdk.CollectionConverters.CollectionHasAsScala(lats).asScala.toSeq
           out += f"[serve] clients=$n%2d qps=${total / (wallMs / 1000)}%.1f wall=${wallMs / 1000}%.1f s " +
             f"p50=${Bench.percentile(xs, 0.5)}%.1f ms p95=${Bench.percentile(xs, 0.95)}%.1f ms " +
-            s"errors=${errors.get} sent_before=$sentBefore"
+            s"errors=${errors.get}"
         }
       } finally server.stop(0)
     }

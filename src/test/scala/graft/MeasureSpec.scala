@@ -64,6 +64,6 @@ class MeasureSpec extends AnyFunSuite {
     val lines = Measure.serve(spark, sfDir, repl = 1, clients = Seq(1), total = 6)
     assert(lines.size === 1)
     assert(lines.head.matches(s"""\\[serve\\] clients= 1 qps=$Num wall=$Num s p50=$Num ms """ +
-      s"""p95=$Num ms errors=0 sent_before=0"""), lines.head)
+      s"""p95=$Num ms errors=0"""), lines.head)
   }
 }
